@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, IvfIndex, Knn, Metric}
@@ -21,6 +26,20 @@ import graft.store.VfsStore
   * combined line didn't, and the round's perf number parsed to null);
   * the combined object also lands in BENCH_full.json
   * ($SPARK_GRAFT_BENCH_FULL overrides the path) for the judge.
+  *
+  * WARM PASS: the suite is ONE function of its data directory
+  * ([[suite]]), run twice. The first, untimed pass runs every entry's
+  * body once over the `sf0.001` sibling of the data dir (the data dir
+  * itself when it has no such sibling), so each kernel family is
+  * JIT-compiled before anything is measured: one cold JVM run of the
+  * suite demands ~230 CPU-s of compilation, and paid inside the
+  * timed reps it starved the compiler at 32 cores and collapsed the
+  * medians (OPTIMIZATION_r19.md §1). Deriving the warm-up from the
+  * entries means a new entry is warmed without a hand-kept mirror.
+  * The headline reports what the pass cost and whether it ran clean:
+  * `warmup_sec` (its wall time) and `warm_failed` (entries whose warm
+  * run threw; their names go to stderr). The second pass over the
+  * data dir is the measured one.
   *
   * SELF-CALIBRATING (round 16): six rounds of driver benches needed a
   * judge-side same-host rerun to separate host contention from code
@@ -44,10 +63,159 @@ import graft.store.VfsStore
   * build, each dependent entry records the same root cause and the
   * rest of the suite still runs.
   *
+  * Every directory a run creates (warm pass, calibration, stores,
+  * index fixtures) lives under one temp root, deleted on exit.
+  *
   * Reference baseline for the same shapes (SURVEY §6): exact search
   * 3545 ms and approximate 21136 ms per query at N=3155, dim=16.
   */
 object Bench {
+  // median-of-3: single runs at this scale have a measured 20-25%
+  // run-to-run variance band (JIT, GC, first-use codegen), which made
+  // round-over-round deltas unreadable; the median kills the outlier
+  // without hiding a real regression
+  private val Reps = 3
+
+  private def time(f: => Unit): Double = {
+    val t0 = System.nanoTime()
+    f
+    (System.nanoTime() - t0) / 1e9
+  }
+  // process CPU time (all threads) — published per rep alongside
+  // wall time: an entry whose wall inflates while its CPU does not
+  // is the HOST stalling the process (IO contention, co-tenant
+  // load), not the code regressing. Six rounds of phantom bench-host
+  // regressions (r04/r08/r09/r11/r12/r13/r15 adjudications in
+  // BENCHREPORT.md) were exactly this signature.
+  private def processCpuSec: Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean =>
+        b.getProcessCpuTime / 1e9
+      case _ => -1.0
+    }
+  // cumulative stop-the-world GC time (all collectors) — published
+  // per rep so a CPU-heavy rep can be attributed: cpu ≫ gc = the
+  // query itself burned it; cpu ≈ gc·(GC threads) = a collection
+  // storm, i.e. allocation pressure, not operator work (r18: the
+  // full-suite run showed identical entries alternating 18 vs 84
+  // CPU-s, invisible in wall/cpu alone)
+  private def gcSec: Double = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala
+    .map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
+  // cumulative JIT compilation time — the OTHER intermittent-CPU
+  // attributor: a rep whose cpu spike rides a jit spike ran its hot
+  // loops interpreted while the C2 queue churned (fresh generated
+  // classes), which is JVM scheduling, not operator work (r18
+  // diagnosis: identical minhash reps at 18 vs 290 CPU-s, gc flat,
+  // spike gone under -XX:TieredStopAtLevel=1)
+  private def jitSec: Double = {
+    val b = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (b != null && b.isCompilationTimeMonitoringSupported)
+      b.getTotalCompilationTime / 1e3
+    else -1.0
+  }
+  /** (wall, process cpu, gc, jit) seconds spent in `f`. */
+  private def timed(f: => Unit): (Double, Double, Double, Double) = {
+    val c0 = processCpuSec
+    val g0 = gcSec
+    val j0 = jitSec
+    val w = time(f)
+    (w, processCpuSec - c0, gcSec - g0, jitSec - j0)
+  }
+
+  /** Unpersists every RDD persisted since `before` was taken. */
+  private def unpersistSince(spark: SparkSession, before: collection.Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    }
+
+  /** One pass over the suite. A timed pass runs each `median` body
+    * `runs` times and records the results; a warm pass runs it once
+    * and records only failures. `calibrate` takes the suite-middle
+    * calibration sample (a no-op when warming). */
+  private final class Pass(spark: SparkSession, val warm: Boolean,
+      val calibrate: () => Unit) {
+    /** how often [[median]] runs its body: one discarded warmup rep
+      * plus `Reps` measured ones, or once on the warm pass */
+    val runs: Int = if (warm) 1 else Reps + 1
+    val results = mutable.LinkedHashMap.empty[String, Double]
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    // raw per-rep wall times in RUN ORDER, published as "rep_times" in
+    // the DETAIL line + side file: the medians alone keep forcing
+    // whole-round A/B adjudications of bench-host contention
+    // (r09/r11/r12/r13 all closed such deltas as environmental) —
+    // with the reps visible, an entry whose within-run spread already
+    // covers a cross-round delta is readable as noise from the
+    // artifact itself. rep_times[0] is the DISCARDED warmup rep (see
+    // `median`); the median is computed over rep_times[1..].
+    val repLog = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // per-rep process-CPU deltas, same run order as rep_times — the
+    // wall≫cpu test that classifies a slow rep as host-side
+    val cpuLog = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // per-rep stop-the-world GC deltas (seconds), same run order
+    val gcLog = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    // per-rep JIT compilation-time deltas (seconds), same run order
+    val jitLog = mutable.LinkedHashMap.empty[String, Seq[Double]]
+    private var cur = Vector.empty[(Double, Double, Double, Double)]
+
+    // one discarded warmup rep per entry, ahead of the measured reps:
+    // the r14 rep arrays showed 44/52 entries with rep 1 more than 25%
+    // above the later reps (first-use codegen + block-cache fill), so
+    // the median itself was contaminated whenever rep 2 was also cold.
+    // The warmup time still lands in rep_times[0] for visibility — it
+    // just never reaches the median.
+    def median(f: => Unit): Double =
+      if (warm) { f; 0.0 }
+      else {
+        val all = Vector.fill(runs)(timed(f))
+        cur ++= all
+        val s = all.tail.map(_._1).sorted
+        s(s.length / 2)
+      }
+
+    def entry(name: String)(f: => Double): Unit = {
+      // SCOPE any cache the entry's operators create to the entry:
+      // composition operators persist internally (curateAndPack's
+      // gated set, by design — released only when the plan becomes
+      // unreachable), so without this the blocks of every measured
+      // plan linger until the ContextCleaner notices, pressuring
+      // later entries and spamming the tail with "Asked to cache
+      // already cached data" on every rep. Deliberate cross-entry
+      // fixtures (the cached langid model, the persisted DSIR counts)
+      // are forced OUTSIDE entry bodies via preBuild, so the diff
+      // never touches them.
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      cur = Vector.empty
+      try {
+        val v = f
+        if (!warm) {
+          results(name) = v
+          if (cur.nonEmpty) {
+            repLog(name) = cur.map(_._1)
+            cpuLog(name) = cur.map(_._2)
+            gcLog(name) = cur.map(_._3)
+            jitLog(name) = cur.map(_._4)
+          }
+        }
+      }
+      catch { case e: Throwable =>
+        // exception HEAD, shared with Verify so both artifacts
+        // describe a failure identically
+        errors(name) = Verify.errHead(e)
+        val pass = if (warm) "warm pass: " else ""
+        System.err.println(s"[bench] $pass$name FAILED: ${errors(name)}")
+      } finally unpersistSince(spark, before)
+    }
+
+    // pre-force a lazy fixture OUTSIDE the timed block (the first
+    // median sample must not pay an index/corpus build); failures are
+    // swallowed here — the entry's own access re-attempts the lazy
+    // init and records the root cause, preserving crash isolation
+    def preBuild(fixture: => Any): Unit =
+      try { fixture; () }
+      catch { case NonFatal(_) => () }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -60,54 +228,18 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.registerAll(spark)
+    val root = Files.createTempDirectory("bench-").toFile
+    try run(spark, sfDir, root.getPath)
+    finally {
+      FileUtils.deleteQuietly(root)
+      // exit 0 even with failed entries: the `errors` field carries the
+      // signal — a non-zero rc would make the bench runner discard the whole
+      // published line (round 6 failure mode)
+      spark.stop()
+    }
+  }
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    // process CPU time (all threads) — published per rep alongside
-    // wall time: an entry whose wall inflates while its CPU does not
-    // is the HOST stalling the process (IO contention, co-tenant
-    // load), not the code regressing. Six rounds of phantom driver
-    // regressions (r04/r08/r09/r11/r12/r13/r15 adjudications in
-    // BENCHREPORT.md) were exactly this signature.
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-    def processCpuSec: Double = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean =>
-        b.getProcessCpuTime / 1e9
-      case _ => -1.0
-    }
-    // cumulative stop-the-world GC time (all collectors) — published
-    // per rep so a CPU-heavy rep can be attributed: cpu ≫ gc = the
-    // query itself burned it; cpu ≈ gc·(GC threads) = a collection
-    // storm, i.e. allocation pressure, not operator work (r18: the
-    // full-suite run showed identical entries alternating 18 vs 84
-    // CPU-s, invisible in wall/cpu alone)
-    import scala.jdk.CollectionConverters._
-    def gcSec: Double = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
-    // cumulative JIT compilation time — the OTHER intermittent-CPU
-    // attributor: a rep whose cpu spike rides a jit spike ran its hot
-    // loops interpreted while the C2 queue churned (fresh generated
-    // classes), which is JVM scheduling, not operator work (r18
-    // diagnosis: identical minhash reps at 18 vs 290 CPU-s, gc flat,
-    // spike gone under -XX:TieredStopAtLevel=1)
-    val compBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitSec: Double =
-      if (compBean != null && compBean.isCompilationTimeMonitoringSupported)
-        compBean.getTotalCompilationTime / 1e3
-      else -1.0
-    def timed(f: => Unit): (Double, Double, Double, Double) = {
-      val c0 = processCpuSec
-      val g0 = gcSec
-      val j0 = jitSec
-      val w = time(f)
-      (w, processCpuSec - c0, gcSec - g0, jitSec - j0)
-    }
-
+  private def run(spark: SparkSession, sfDir: String, root: String): Unit = {
     // ---- self-calibration (the host-contention referee) ----
     // Two fixed-work probes, run at suite START, MIDDLE, and END and
     // published in the headline as `calib`: a single-threaded pure-CPU
@@ -127,11 +259,10 @@ object Bench {
       // defeat dead-code elimination; never true for this seed
       if (acc == 42L) System.err.println("[bench] calib sentinel")
     }
-    lazy val calibDir = Files.createTempDirectory("bench-calib").toString
     var calibRuns = 0
     def calibIoSec(): Double = {
       calibRuns += 1
-      val d = s"$calibDir/io$calibRuns"
+      val d = s"$root/calib/io$calibRuns"
       time {
         spark.range(0L, 2000000L, 1L, 8)
           .selectExpr("id", "id * 7 AS v")
@@ -139,8 +270,8 @@ object Bench {
         spark.read.parquet(d).agg(sum(col("v"))).collect()
       }
     }
-    val calibCpu = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val calibIo = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val calibCpu = mutable.ArrayBuffer.empty[Double]
+    val calibIo = mutable.ArrayBuffer.empty[Double]
     def calibrate(): Unit =
       try {
         // the first io probe pays one-time parquet committer/codegen
@@ -153,409 +284,104 @@ object Bench {
         System.err.println(s"[bench] calibration FAILED: ${Verify.errHead(e)}")
       }
 
-    // median-of-3: single runs at this scale have a measured 20-25%
-    // run-to-run variance band (JIT, GC, first-use codegen), which made
-    // round-over-round deltas unreadable; the median kills the outlier
-    // without hiding a real regression
-    val Reps = 3
-    // raw per-rep wall times in RUN ORDER, published as "rep_times" in
-    // the DETAIL line + side file: the medians alone keep forcing
-    // whole-round A/B adjudications of driver-host contention
-    // (r09/r11/r12/r13 all closed driver deltas as environmental) —
-    // with the reps visible, an entry whose within-run spread already
-    // covers a cross-round delta is readable as noise from the
-    // artifact itself. rep_times[0] is the DISCARDED warmup rep (see
-    // `median`); the median is computed over rep_times[1..].
-    var curReps = List.empty[Double]
-    var curCpuReps = List.empty[Double]
-    var curGcReps = List.empty[Double]
-    var curJitReps = List.empty[Double]
-    val repLog = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // per-rep process-CPU deltas, same run order as rep_times — the
-    // wall≫cpu test that classifies a slow rep as host-side
-    val cpuLog = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // per-rep stop-the-world GC deltas (seconds), same run order
-    val gcLog = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // per-rep JIT compilation-time deltas (seconds), same run order
-    val jitLog = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // one discarded warmup rep per entry, ahead of the measured reps:
-    // the r14 rep arrays showed 44/52 entries with rep 1 more than 25%
-    // above the later reps (first-use codegen + block-cache fill), so
-    // the median itself was contaminated whenever rep 2 was also cold.
-    // The warmup time still lands in rep_times[0] for visibility — it
-    // just never reaches the median.
-    def median(f: => Unit): Double = {
-      val warm = timed(f)
-      val ts = List.fill(Reps)(timed(f))
-      curReps = curReps ++ ((warm :: ts).map(_._1))
-      curCpuReps = curCpuReps ++ ((warm :: ts).map(_._2))
-      curGcReps = curGcReps ++ ((warm :: ts).map(_._3))
-      curJitReps = curJitReps ++ ((warm :: ts).map(_._4))
-      val s = ts.map(_._1).sorted
-      s(s.length / 2)
-    }
+    // ---- the warm pass: every entry once, untimed, over sf0.001 ----
+    val warmData = SparkEntry.siblingSf(sfDir, "sf0.001")
+    val warmRoot = s"$root/warm"
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val warm = new Pass(spark, warm = true, () => ())
+    val warmupSec = time(suite(spark, warm, warmData, warmRoot))
+    // drop what the warm pass's fixtures cached, and its directories
+    spark.catalog.clearCache()
+    unpersistSince(spark, persistedBefore)
+    FileUtils.deleteQuietly(new java.io.File(warmRoot))
+    System.err.println(f"[bench] warm pass over $warmData done in " +
+      f"$warmupSec%.1f s, ${warm.errors.size} failed" +
+      (if (warm.errors.isEmpty) "" else warm.errors.keys.mkString(": ", ",", "")))
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // exception HEAD, shared with Verify so both artifacts describe a
-    // failure identically
-    def errMsg(e: Throwable): String = Verify.errHead(e)
-    def entry(name: String)(f: => Double): Unit = {
-      // SCOPE any cache the entry's operators create to the entry:
-      // composition operators persist internally (curateAndPack's
-      // gated set, by design — released only when the plan becomes
-      // unreachable), so without this the blocks of every measured
-      // plan linger until the ContextCleaner notices, pressuring
-      // later entries and spamming the tail with "Asked to cache
-      // already cached data" on every rep. Deliberate cross-entry
-      // fixtures (the cached langid model, the persisted DSIR counts)
-      // are forced OUTSIDE entry bodies via preBuild, so the diff
-      // never touches them.
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      // opt-in stderr trace (GRAFT_BENCH_TRACE=1): entry-start epoch
-      // millis, for correlating an external profiler (JFR/perf)
-      // recording with a specific entry's reps — diagnostics only,
-      // never part of the published JSON
-      if (sys.env.contains("GRAFT_BENCH_TRACE"))
-        System.err.println(s"[bench-trace] ${System.currentTimeMillis()} $name")
-      curReps = Nil
-      curCpuReps = Nil
-      curGcReps = Nil
-      curJitReps = Nil
-      try {
-        results(name) = f
-        if (curReps.nonEmpty) repLog(name) = curReps
-        if (curCpuReps.nonEmpty) cpuLog(name) = curCpuReps
-        if (curGcReps.nonEmpty) gcLog(name) = curGcReps
-        if (curJitReps.nonEmpty) jitLog(name) = curJitReps
-      }
-      catch { case e: Throwable =>
-        errors(name) = errMsg(e)
-        System.err.println(s"[bench] $name FAILED: ${errors(name)}")
-      } finally {
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id)) rdd.unpersist(blocking = false)
-        }
-      }
-    }
-    // pre-force a lazy fixture OUTSIDE the timed block (the first
-    // median sample must not pay an index/corpus build); failures are
-    // swallowed here — the entry's own access re-attempts the lazy
-    // init and records the root cause, preserving crash isolation
-    def preBuild(fixture: => Any): Unit =
-      try { fixture; () }
-      catch { case scala.util.control.NonFatal(_) => () }
-
-    // warm up the JVM/codegen/parquet paths before measuring (failure
-    // here is non-fatal: the entries re-surface it individually)
-    try {
-      spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup FAILED: ${errMsg(e)}")
-    }
-    // ---- suite-level KERNEL warm-up (round 19, the r18-verdict item 1
-    // fix). r18 ground truth: 13 queries ran 2-9x slower at 32 cores
-    // than at 8 on the same binary (minhash_dedup 11.18 s vs 1.18 s
-    // medians). Measured mechanism (OPTIMIZATION_r19.md §1): one cold
-    // JVM run of this suite demands ~230 CPU-s of JIT compilation
-    // (CompilationMXBean; C2 alone compiled 3,489 methods = 47.8 CPU-s
-    // for a single-entry probe, ~95% of it Spark/JDK framework methods,
-    // not generated code), and that demand is paid DURING each entry's
-    // first reps. A method's uncompiled path costs 4-10x its compiled
-    // cost (minhash rep 0: 61 CPU-s vs 16 steady; jpeg: 63 vs 5), so
-    // 32 worker threads saturating every core starve the compiler
-    // exactly when its output is needed — on a quiet host the per-entry
-    // warmup rep absorbs most of it, on a contended host the queue lags
-    // into the MEASURED reps and the medians collapse. This block runs
-    // every kernel family once on tiny slices (64-2048 rows) BEFORE any
-    // timed region so the C1/C2 queue fills and drains while nothing is
-    // being measured. It computes nothing any entry reuses: results are
-    // discarded, every RDD it persists is unpersisted, the temp store
-    // is its own. Timed bodies, rep counts, the per-entry warmup rep
-    // and the median methodology are all UNCHANGED.
-    // GRAFT_BENCH_NO_KERNEL_WARMUP=1 skips the block — the A/B lever
-    // for measuring exactly what the warm-up buys (diagnostics only;
-    // the driver never sets it)
-    if (!sys.env.contains("GRAFT_BENCH_NO_KERNEL_WARMUP")) locally {
-      import graft.operators._
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      def warm(name: String)(f: => Unit): Unit =
-        try {
-          val t0 = System.nanoTime()
-          f
-          if (sys.env.contains("GRAFT_BENCH_TRACE"))
-            System.err.println(f"[bench-trace] warmup $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] kernel-warmup $name skipped: ${errMsg(e)}")
-        }
-      val w0 = System.nanoTime()
-      warm("all") {
-        val docsW = spark.read.parquet(s"$sfDir/documents.parquet")
-          .limit(256).cache()
-        docsW.count()
-        val docs64 = docsW.limit(64)
-        // media codec family (per-partition encode+decode kernels: the
-        // worst uncompiled-to-compiled ratios in the suite)
-        warm("media") {
-          Seq[DataFrame => org.apache.spark.sql.Dataset[graft.operators.MediaRecord]](
-            d => Multimodal.synthesizeMedia(d),
-            d => Multimodal.synthesizePng(d),
-            d => Multimodal.synthesizeTiff(d, packBits = true),
-            d => Multimodal.synthesizeWebp(d),
-            d => Multimodal.synthesizeGif(d),
-            d => Multimodal.synthesizeJpeg(d),
-            d => Multimodal.synthesizeJpegColor(d),
-            d => Multimodal.synthesizeFlac(d)
-          ).foreach(s => warm("decode")(
-            Multimodal.decodeStats(spark, s(docs64)).toDF().count()))
-          warm("resize") {
-            Multimodal.decodeStats(spark, Multimodal.resizeMedia(spark,
-              Multimodal.synthesizePng(docs64), 2, 3)).toDF().count()
-          }
-          warm("frames") {
-            Multimodal.sampleFrames(spark,
-              Multimodal.synthesizeVideo(docs64, frameRows = 2),
-              everyN = 4).toDF().count()
-          }
-          warm("mp4") {
-            Mp4.trackMeta(spark,
-              Mp4.synthesizeMp4(docs64.select(col("doc_id")))).count()
-          }
-          // the synthesized format is doc_id-keyed: *3 lands on the
-          // PCM stratum, *3+2 on a raster one (same mapping the
-          // audio/image_neardup entries use)
-          warm("audio_fp") {
-            Multimodal.audioNearDupPairs(spark,
-              Multimodal.synthesizeMedia(docs64
-                .select((col("doc_id") * 3).as("doc_id"), col("text"))),
-              maxHamming = 3, window = 4).count()
-          }
-          warm("image_fp") {
-            Multimodal.imageNearDupPairs(spark,
-              Multimodal.synthesizeMedia(docs64
-                .select((col("doc_id") * 3 + 2).as("doc_id"), col("text"))),
-              maxHamming = 3).count()
-          }
-        }
-        // dedup family (wordSet/MinHashSig/banding/pair-verify merge,
-        // gram hash + span fold, simhash fold) + the standing-index
-        // artifact paths (build/probe/append each compile their own
-        // codegen units; the 100-entry codegen class cache evicts
-        // across entries, so a family never touched before its entry
-        // pays the whole window inside the entry)
-        warm("minhash")(Dedup.minHashLsh(docsW, threshold = 0.8).count())
-        warm("substr")(Dedup.stripDuplicateSpans(docsW, k = 4)
-          .agg(sum(col("dup_tokens"))).collect())
-        warm("simhash")(Dedup.simHashPairs(docsW, maxHamming = 3).count())
-        val warmDir = Files.createTempDirectory("bench-warm").toString
-        warm("lsh_index") {
-          val d = s"$warmDir/lsh"
-          LshTextIndex.build(docsW.filter(col("doc_id") >= 128), d)
-          LshTextIndex.probe(spark, d,
-            docsW.filter(col("doc_id") < 128),
-            docsW.filter(col("doc_id") >= 128), threshold = 0.9).count()
-          LshTextIndex.append(docsW.filter(col("doc_id") < 128), d)
-        }
-        warm("gram_index") {
-          val d = s"$warmDir/gram"
-          GramIndex.build(docsW.filter(col("doc_id") >= 128), d, k = 4)
-          GramIndex.probeSpans(spark, d, docsW.filter(col("doc_id") < 128))
-            .agg(sum(col("span_tokens"))).collect()
-        }
-        warm("sig_index") {
-          val d = s"$warmDir/sig"
-          val fp = Multimodal.audioFingerprint(spark,
-            Multimodal.synthesizeMedia(docs64
-              .select((col("doc_id") * 3).as("doc_id"), col("text"))),
-            window = 4).select(col("doc_id").as("id"), col("sig"))
-          SigIndex.build(fp, d, "audio-energy-w4")
-          SigIndex.probe(spark, d, fp, "audio-energy-w4").count()
-        }
-        // text-analysis family
-        warm("langid") {
-          import spark.implicits._
-          val m = TextAnalysis.trainLangId(
-            TextAnalysis.LangIdSeedCorpus.toDF("lang", "text"))
-          TextAnalysis.scoreLangId(docsW, m)
-            .agg(sum(col("score_milli"))).collect()
-        }
-        warm("curate") {
-          import spark.implicits._
-          val m = TextAnalysis.trainLangId(
-            TextAnalysis.LangIdSeedCorpus.toDF("lang", "text"))
-          Curation.curateAndPack(docsW, m).count()
-        }
-        warm("bm25")(TextAnalysis.bm25Scores(docsW,
-          Seq("vector", "join", "spark")).count())
-        warm("bm25_topk") {
-          import spark.implicits._
-          TextAnalysis.bm25TopK(docsW,
-            Seq((1L, "vector"), (1L, "join"), (2L, "spark"))
-              .toDF("qid", "term"), k = 10).count()
-        }
-        warm("lm")(TextAnalysis.lmScore(docsW).count())
-        warm("dsir") {
-          val t = TextAnalysis.wordModel(docsW.filter(col("source") === "src0"))
-          val r = TextAnalysis.wordModel(docsW)
-          TextAnalysis.importanceMilli(docsW, t, r)
-            .agg(sum(col("imp_milli"))).collect()
-        }
-        warm("bpe") {
-          val m = Bpe.trainBpe(docsW, nMerges = 20)
-          Bpe.bpeEncode(docsW, m).count()
-        }
-        warm("classifier") {
-          val m = TextAnalysis.trainTokenClassifier(docsW,
-            col("lang") === "en", vocab = 8)
-          TextAnalysis.scoreTokenClassifier(docsW, m).count()
-        }
-        warm("gopher")(TextAnalysis.gopherSignals(docsW).count())
-        // web front end (warc framing + gzip, html, pdf, url kernels)
-        warm("warc") {
-          val pages = docsW.select(col("doc_id"),
-            concat(lit("https://w"), col("doc_id") % 5,
-              lit(".example/p/"), col("doc_id")).as("uri"),
-            SparkEntry.htmlPageOf(col("doc_id"), col("text")).as("html"))
-          Warc.records(spark, Warc.synthesizeWarc(pages)).toDF().count()
-        }
-        warm("html") {
-          val html = SparkEntry.htmlPageOf(col("doc_id"), col("text"))
-          docsW.select(md5(graft.functions.vfs_html_text(html)),
-              graft.functions.vfs_html_title(html))
-            .agg(count(lit(1))).collect()
-        }
-        warm("pdf") {
-          Pdf.synthesizePdf(docsW)
-            .select(md5(graft.functions.vfs_pdf_text(col("pdf"))))
-            .agg(count(lit(1))).collect()
-        }
-        warm("url") {
-          val urls = docsW.select(col("doc_id"), col("n_chars"),
-            concat(lit("https://w"), col("doc_id") % 7,
-              lit(".example/p/"), col("doc_id"), lit("?utm_source=x&b=2&a=1"))
-              .as("url"))
-          val norm = urls.select(col("doc_id"), col("n_chars"),
-            WebCuration.normalizeUrl(col("url")).as("url"))
-          WebCuration.urlDedup(norm).agg(sum(col("cnt"))).collect()
-          WebCuration.capPerDomain(norm, "url",
-            negate(col("n_chars")), col("doc_id"), n = 3).count()
-        }
-        // vector family + the store codec paths
-        warm("vectors") {
-          val e2k = spark.read.parquet(s"$sfDir/embeddings.parquet")
-            .select(col("vec_id").as("id"), col("embedding").as("values"))
-            .limit(2048).cache()
-          val qs = e2k.filter(col("id") === 1L)
-            .head().getSeq[Float](1)
-          val qv = qs.toArray
-          Knn.exact(e2k, qv, 5, Metric.Cosine).collect()
-          val qp = graft.functions.vfs_binary_quantize(typedLit(qs))
-          e2k.select(graft.functions.vfs_hamming(
-              graft.functions.vfs_binary_quantize(col("values")), qp))
-            .agg(count(lit(1))).collect()
-          warm("mining")(Mining.marginPairs(spark,
-            e2k.filter(col("id") % 2 === 0),
-            e2k.filter(col("id") % 2 === 1), k = 2).count())
-          warm("semantic")(Dedup.semanticDedup(
-            spark.read.parquet(s"$sfDir/embeddings.parquet").limit(1024),
-            Dedup.seedCentroids(
-              spark.read.parquet(s"$sfDir/embeddings.parquet").limit(1024),
-              4), tauMilli = 600L).count())
-          warm("ivf") {
-            val d = Files.createTempDirectory("bench-warm-ivf").toString
-            val ivf = s"$d/ivf"
-            IvfIndex.build(e2k, ivf, 8, Metric.Cosine)
-            IvfIndex.search(spark, ivf, qv, 5, nProbe = 2).collect()
-            val queries = e2k.limit(32)
-              .select(col("id").as("qid"), col("values").as("qvalues"))
-            IvfIndex.searchBatch(spark, ivf, queries, 5, nProbe = 2).count()
-            val pq = s"$d/ivfpq"
-            IvfPq.build(spark, ivf, pq, m = 8, ks = 16)
-            IvfPq.searchBatch(spark, ivf, pq, queries, 5,
-              nProbe = 4, overfetch = 4).count()
-            IvfPq.searchRefined(spark, ivf, pq, qv, 5,
-              nProbe = 4, overfetch = 4).count()
-          }
-          warm("binary_index") {
-            val d = Files.createTempDirectory("bench-warm-bin").toString
-            val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-              .limit(1024)
-            graft.operators.BinaryIndex.build(raw, s"$d/bin")
-            graft.operators.BinaryIndex.search(spark, s"$d/bin", raw,
-              qv, k = 5, nCandidates = 20).collect()
-          }
-          warm("store") {
-            val d = Files.createTempDirectory("bench-warm-store").toString
-            val st = VfsStore.create(spark, d, "warm", dim = qv.length,
-              quantize = true)
-            st.appendBatch(e2k.limit(256).select(col("values"),
-              concat(lit("w"), col("id")).as("name"),
-              array(lit("warm")).as("tags")))
-            st.snapshot("w0")
-            st.getById(1L)
-            Knn.search(st, qv, 5, Metric.Cosine).collect()
-          }
-          e2k.unpersist(blocking = false)
-        }
-        // analytics family (window/rolling/sketch/profile/sampling)
-        warm("events") {
-          val ev = SparkEntry.events(spark, sfDir).limit(20000).cache()
-          ev.count()
-          warm("rolling")(TimeSeries.rolling(ev, col("event_id"),
-              col("user_id"), col("ts"), col("value"), windowSec = 3600L)
-            .agg(sum(col("sum_win_c"))).collect())
-          warm("window")(graft.streaming.Ingest
-            .windowedEventCounts(ev, batchMode = true).count())
-          warm("hll")(Sketches.hllRegisters(ev,
-            col("user_id").cast("string"), p = 12).count())
-          ev.unpersist(blocking = false)
-        }
-        warm("profile")(Profile.profile(docsW,
-          Seq("doc_id", "lang", "source", "n_chars")).count())
-        warm("mixture")(Sampling.mixtureSample(docsW, col("source"),
-          col("text"), col("doc_id"),
-          Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.15,
-            "src3" -> 0.10)).count())
-        docsW.unpersist(blocking = false)
-      }
-      // drop anything the warm-up's composition operators persisted
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!persistedBefore.contains(id)) rdd.unpersist(blocking = false)
-      }
-      System.err.println(
-        f"[bench] kernel-warmup done in ${(System.nanoTime() - w0) / 1e9}%.1f s")
-    }
     calibrate() // suite-START calibration sample
+    val p = new Pass(spark, warm = false, () => calibrate())
+    suite(spark, p, sfDir, s"$root/run")
+    calibrate() // suite-END calibration sample
 
+    val qs = p.results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val errs = p.errors.map { case (k, v) =>
+      Verify.jsonStr(k) + ":" + Verify.jsonStr(v) }.mkString("{", ",", "}")
+    def secsArr(ts: Iterable[Double]): String =
+      ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+    def perEntry(log: mutable.LinkedHashMap[String, Seq[Double]]): String =
+      log.map { case (k, ts) => "\"" + k + "\":" + secsArr(ts) }
+        .mkString("{", ",", "}")
+    val repsJson = perEntry(p.repLog)
+    val cpuJson = perEntry(p.cpuLog)
+    val gcJson = perEntry(p.gcLog)
+    val jitJson = perEntry(p.jitLog)
+    // min of the MEASURED reps (warmup excluded): far more robust to
+    // one-sided contention than the median — a cross-round delta that
+    // vanishes in the mins is the host, not the code
+    val minsJson = p.repLog.map { case (k, ts) =>
+      "\"" + k + "\":" + f"${ts.drop(1).min}%.3f"
+    }.mkString("{", ",", "}")
+    // start/middle/end fixed-work probes: flat cpu+io across the three
+    // samples certifies a quiet host from the artifact alone
+    val calibJson = s"""{"cpu":${secsArr(calibCpu)},"io":${secsArr(calibIo)}}"""
+    val total = p.results.values.sum
+    // n_ok/n_failed make partial runs self-describing: with per-entry
+    // crash isolation, "total" sums only the entries that succeeded —
+    // a consumer comparing totals across rounds must not read a
+    // partial (smaller) total as a speedup; warmup_sec/warm_failed
+    // report the untimed warm pass (its failing names go to stderr)
+    val headline = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"n_ok":${p.results.size},"n_failed":${p.errors.size},"sf":"$sfDir","reps":$Reps,"agg":"median","warmup":1,"warmup_sec":$warmupSec%.1f,"warm_failed":${warm.errors.size},"calib":$calibJson}"""
+    // TWO lines, headline LAST and COMPACT: the bench runner captures only a
+    // fixed-size TAIL of stdout (2000 chars, measured from
+    // BENCH_r14.json), and r14's single combined medians+rep_times
+    // line outgrew it — the captured tail started mid-array and the
+    // round's official perf number parsed to null. The rep detail
+    // (with the discarded warmup at index 0) goes on its own EARLIER
+    // line and into a side file, so the headline the runner parses
+    // stays ~1.8 KB no matter how many entries the suite grows.
+    val detail = f"""{"metric":"rep_detail","unit":"sec","sf":"$sfDir","reps":$Reps,"warmup":1,"note":"rep_times[0] is the discarded warmup rep; median is over rep_times[1..]; cpu_times are per-rep process-CPU deltas (wall >> cpu on a rep = host stall, not code); gc_times are per-rep stop-the-world GC seconds (cpu spike with gc spike = collection storm, not operator work); mins are min over rep_times[1..]","rep_times":$repsJson,"cpu_times":$cpuJson,"gc_times":$gcJson,"jit_times":$jitJson,"mins":$minsJson}"""
+    try {
+      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json")
+      Files.write(java.nio.file.Paths.get(out),
+        (headline.dropRight(1) + ",\"rep_times\":" + repsJson +
+          ",\"cpu_times\":" + cpuJson + ",\"gc_times\":" + gcJson + ",\"jit_times\":" + jitJson +
+          ",\"mins\":" + minsJson + "}\n")
+          .getBytes("UTF-8"))
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] side-file write failed: ${Verify.errHead(e)}")
+    }
+    println(detail)
+    println(headline)
+  }
+
+  /** The suite: its fixtures and its 66 entries over the data in
+    * `sfDir`, every fixture directory under `dir`. Run once warm and
+    * once timed (see [[Pass]]); the entry names, bodies and order are
+    * the published benchmark. */
+  private def suite(spark: SparkSession, p: Pass, sfDir: String,
+      dir: String): Unit = {
+    import p.{entry, median, preBuild}
     lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("values"))
     lazy val q: Array[Float] = emb.filter(col("id") === 1L)
       .head().getSeq[Float](1).toArray
 
     // ---- reference-shape benchmarks ----
-    // insert_bulk is STATEFUL (append grows the store): one warmup
-    // store (discarded, like `median`'s warmup rep) + median over 3
-    // fresh stores, then the LAST one serves the read-only entries.
-    // Store creation happens inside the entry (untimed: only
-    // appendBatch sits under the timer) so a creation failure is
-    // recorded, not fatal.
-    lazy val storeDirs = Seq.fill(Reps + 1)(
-      Files.createTempDirectory("bench-store").toString)
-    lazy val stores = storeDirs.map(d =>
-      VfsStore.create(spark, d, "bench", dim = q.length, quantize = true))
+    // insert_bulk is STATEFUL (append grows the store): one fresh
+    // store per `median` run (the first is its discarded warmup rep),
+    // then the LAST one serves the read-only entries. Store creation
+    // happens inside the entry (untimed: only appendBatch sits under
+    // the timer) so a creation failure is recorded, not fatal.
+    lazy val stores = Seq.tabulate(p.runs)(i => VfsStore.create(spark,
+      s"$dir/store$i", "bench", dim = q.length, quantize = true))
     entry("insert_bulk") {
-      val insertTimes = stores.map { st =>
-        timed {
-          st.appendBatch(emb.select(col("values"),
-            concat(lit("v"), col("id")).as("name"),
-            array(lit("bench")).as("tags")))
-        }
+      val fresh = stores.iterator
+      median {
+        fresh.next().appendBatch(emb.select(col("values"),
+          concat(lit("v"), col("id")).as("name"),
+          array(lit("bench")).as("tags")))
       }
-      curReps = curReps ++ insertTimes.map(_._1) // run order, warmup first
-      curCpuReps = curCpuReps ++ insertTimes.map(_._2)
-      val sorted = insertTimes.tail.map(_._1).sorted // drop the warmup store
-      sorted(sorted.length / 2)
     }
     lazy val store = stores.last
     entry("get_by_id") { median { store.getById(100L) } }
@@ -573,7 +399,7 @@ object Bench {
     entry("search_exact_dense_view") { median {
       Knn.exact(store.read(), q, 5, Metric.Cosine).collect()
     } }
-    lazy val ivfDir = s"${storeDirs.last}/ivf"
+    lazy val ivfDir = s"$dir/ivf"
     lazy val nCent = math.max(2, math.sqrt(emb.count().toDouble).toInt)
     // overwrite-mode build is idempotent: a plain median-of-3 works
     entry("index_build") { median {
@@ -597,7 +423,7 @@ object Bench {
     // batch IVF-PQ (compressed ANN at the documented pruned-probe
     // operating point): ADC over cluster-scoped codes + exact refine
     lazy val ivfpqDir = {
-      val d = s"${storeDirs.last}/ivfpq"
+      val d = s"$dir/ivfpq"
       graft.operators.IvfPq.build(spark, ivfDir, d, m = 32, ks = 64)
       d
     }
@@ -623,7 +449,7 @@ object Bench {
     // incremental cost, which is the operator's whole point
     lazy val benchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
     lazy val lshIdxDir = {
-      val d = s"${storeDirs.last}/lshidx"
+      val d = s"$dir/lshidx"
       graft.operators.LshTextIndex.build(
         benchDocs.filter(col("doc_id") >= 500), d)
       d
@@ -640,7 +466,7 @@ object Bench {
     // into a dedicated index copy: repeated appends would otherwise
     // leave probe's corpus polluted with probe-side ids.
     entry("lsh_index_append") {
-      val d = s"${storeDirs.last}/lshappend"
+      val d = s"$dir/lshappend"
       graft.operators.LshTextIndex.build(
         benchDocs.filter(col("doc_id") >= 500), d)
       median {
@@ -652,7 +478,7 @@ object Bench {
     // persisted once (built outside the timer), the delta decoded +
     // fingerprinted + band-joined per rep — cost ∝ |delta|
     lazy val sigIdxDir = {
-      val d = s"${storeDirs.last}/sigidx"
+      val d = s"$dir/sigidx"
       graft.operators.SigIndex.build(
         graft.operators.Multimodal.audioFingerprint(spark,
             graft.operators.Multimodal.synthesizeMedia(
@@ -700,7 +526,7 @@ object Bench {
     // outside the timer — the entry publishes the nightly delta-vet
     // cost, the incremental ExactSubstr path's whole point
     lazy val gramIdxDir = {
-      val d = s"${storeDirs.last}/gramidx"
+      val d = s"$dir/gramidx"
       graft.operators.GramIndex.build(
         benchDocs.filter(col("doc_id") >= 500), d, k = 4)
       d
@@ -733,7 +559,7 @@ object Bench {
     // is paid once outside the timer, the coarse scan reads 1-bit
     // words instead of re-packing floats per query
     lazy val binIdxDir = {
-      val d = s"${storeDirs.last}/binidx"
+      val d = s"$dir/binidx"
       graft.operators.BinaryIndex.build(
         spark.read.parquet(s"$sfDir/embeddings.parquet"), d)
       d
@@ -762,7 +588,7 @@ object Bench {
         Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.15,
           "src3" -> 0.10)).count()
     } }
-    calibrate() // suite-MIDDLE calibration sample
+    p.calibrate() // suite-MIDDLE calibration sample
     entry("media_decode") { median {
       SparkEntry.queries("multimodal_features")(spark, sfDir).count()
     } }
@@ -959,7 +785,7 @@ object Bench {
     // normalize -> one hash-agg dedup, then the per-domain
     // rankedTopN cap (rank = -n_chars)
     lazy val urlFixtureDir = {
-      val d = s"${storeDirs.last}/urls"
+      val d = s"$dir/urls"
       SparkEntry.queries("web_url_normalize")(spark, sfDir)
         .join(benchDocs.select(col("doc_id"), col("n_chars")), "doc_id")
         .select(col("doc_id"), col("n_chars"), col("norm_url").as("url"))
@@ -1059,66 +885,5 @@ object Bench {
         emb.filter(col("id") % 2 === 0),
         emb.filter(col("id") % 2 === 1), k = 4).count()
     } }
-
-    calibrate() // suite-END calibration sample
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) =>
-      Verify.jsonStr(k) + ":" + Verify.jsonStr(v) }.mkString("{", ",", "}")
-    def secsArr(ts: Iterable[Double]): String =
-      ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    val repsJson = repLog.map { case (k, ts) =>
-      "\"" + k + "\":" + secsArr(ts)
-    }.mkString("{", ",", "}")
-    val cpuJson = cpuLog.map { case (k, ts) =>
-      "\"" + k + "\":" + secsArr(ts)
-    }.mkString("{", ",", "}")
-    val gcJson = gcLog.map { case (k, ts) =>
-      "\"" + k + "\":" + secsArr(ts)
-    }.mkString("{", ",", "}")
-    val jitJson = jitLog.map { case (k, ts) =>
-      "\"" + k + "\":" + secsArr(ts)
-    }.mkString("{", ",", "}")
-    // min of the MEASURED reps (warmup excluded): far more robust to
-    // one-sided contention than the median — a cross-round delta that
-    // vanishes in the mins is the host, not the code
-    val minsJson = repLog.map { case (k, ts) =>
-      "\"" + k + "\":" + f"${ts.drop(1).min}%.3f"
-    }.mkString("{", ",", "}")
-    // start/middle/end fixed-work probes: flat cpu+io across the three
-    // samples certifies a quiet host from the artifact alone
-    val calibJson = s"""{"cpu":${secsArr(calibCpu)},"io":${secsArr(calibIo)}}"""
-    val total = results.values.sum
-    // n_ok/n_failed make partial runs self-describing: with per-entry
-    // crash isolation, "total" sums only the entries that succeeded —
-    // a consumer comparing totals across rounds must not read a
-    // partial (smaller) total as a speedup
-    val headline = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"n_ok":${results.size},"n_failed":${errors.size},"sf":"$sfDir","reps":$Reps,"agg":"median","warmup":1,"calib":$calibJson}"""
-    // TWO lines, headline LAST and COMPACT: the driver captures only a
-    // fixed-size TAIL of stdout (2000 chars, measured from
-    // BENCH_r14.json), and r14's single combined medians+rep_times
-    // line outgrew it — the captured tail started mid-array and the
-    // round's official perf number parsed to null. The rep detail
-    // (with the discarded warmup at index 0) goes on its own EARLIER
-    // line and into a side file, so the headline the driver parses
-    // stays ~1.4 KB no matter how many entries the suite grows.
-    val detail = f"""{"metric":"rep_detail","unit":"sec","sf":"$sfDir","reps":$Reps,"warmup":1,"note":"rep_times[0] is the discarded warmup rep; median is over rep_times[1..]; cpu_times are per-rep process-CPU deltas (wall >> cpu on a rep = host stall, not code); gc_times are per-rep stop-the-world GC seconds (cpu spike with gc spike = collection storm, not operator work); mins are min over rep_times[1..]","rep_times":$repsJson,"cpu_times":$cpuJson,"gc_times":$gcJson,"jit_times":$jitJson,"mins":$minsJson}"""
-    try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json")
-      Files.write(java.nio.file.Paths.get(out),
-        (headline.dropRight(1) + ",\"rep_times\":" + repsJson +
-          ",\"cpu_times\":" + cpuJson + ",\"gc_times\":" + gcJson + ",\"jit_times\":" + jitJson +
-          ",\"mins\":" + minsJson + "}\n")
-          .getBytes("UTF-8"))
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] side-file write failed: ${errMsg(e)}")
-    }
-    println(detail)
-    println(headline)
-    // exit 0 even with failed entries: the `errors` field carries the
-    // signal — a non-zero rc would make the driver discard the whole
-    // published line (round 6 failure mode)
-    spark.stop()
   }
 }

@@ -52,7 +52,7 @@ object SparkEntry {
   /** Resolve a sibling scale-factor directory of `dir` (e.g. the
     * sf0.1 twin of .../sf0.01); falls back to `dir` itself when the
     * sibling is absent so the query still runs standalone. */
-  private def siblingSf(dir: String, sf: String): String = {
+  private[graft] def siblingSf(dir: String, sf: String): String = {
     val sib = java.nio.file.Paths.get(dir).toAbsolutePath
       .resolveSibling(sf)
     if (java.nio.file.Files.isDirectory(sib)) sib.toString else dir
@@ -3453,7 +3453,7 @@ object SparkEntry {
     // clusters), closure-assigned multiprobe parent (nAssign=3,
     // assignEps=0.5 — secondary copies only within 1.5× the nearest
     // squared centroid distance), m=32 residual codes, overfetch=8.
-    // Measured decomposition (PrunedRecallProbe, this corpus): the PQ
+    // Measured decomposition (BENCHREPORT.md, this corpus): the PQ
     // refine tracks the parent IVF's exact-scored ceiling EXACTLY at
     // every operating point (codebooks are not the constraint — probe
     // pruning is), and closure assignment moves that ceiling:

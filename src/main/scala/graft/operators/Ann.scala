@@ -388,21 +388,12 @@ object IvfIndex {
     // ---- pass 1: count-free bounded sample (per-partition top-m by
     // hash priority; the global trainCap smallest hashes are always a
     // subset of the union as long as m >= min(trainCap, needed)) ----
-    val dbg = sys.env.contains("GRAFT_BUILD_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(name: String): Unit = if (dbg) {
-      println(f"[build-debug] $name%-20s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
     val parts = math.max(1, prepared.rdd.getNumPartitions)
-    lap("plan+parts")
     val train = sampleVectors(prepared, trainCap, seed,
       minPerPart = nCentroids, normalize = spherical)
-    lap("sample")
     val dim = train.head.length
     // ---- pass 2 (driver-local): Lloyd on the sample, all cores ----
     val centsD = lloyd(train, nCentroids, maxIter, seed)
-    lap("lloyd")
     val centArr = centsD.zipWithIndex.map { case (c, i) =>
       (i, c.map(_.toFloat))
     }
@@ -438,7 +429,6 @@ object IvfIndex {
       .repartition(col("cluster"))
       .write.mode("overwrite").partitionBy("cluster")
       .parquet(assignTarget)
-    lap("assign+write")
     spark.createDataFrame(centArr.toSeq).toDF("cluster", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(centTarget)
     if (rebuilding) {

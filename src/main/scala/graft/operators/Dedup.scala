@@ -65,13 +65,19 @@ object Dedup {
     * escape — one viral passage would pull all its occurrences into
     * a single task). Partial combine collapses hyper-duplicated
     * boilerplate map-side before the shuffle; reassembly is one
-    * aggregation keyed by document id. Measured (PassageProbeR19,
+    * aggregation keyed by document id. Measured (OPTIMIZATION_r19.md,
     * 500k docs x 4 passages, ~20 occurrences per distinct passage,
     * plus a corpus-wide 500k-occurrence viral passage): 11.8-17.5 s
     * shipping shape -> 5.7-6.6 s keepers-only, row-identical output
     * on both corpora (exceptAll both directions = 0); the
     * row_number-window form ties on time but loses the skew
     * defense, so the aggregate stays.
+    *
+    * Assumes unique ids: a document row repeated verbatim (same id,
+    * same text) yields each of its passage occurrences twice, but only
+    * one of them can be the keeper, so kept_passages counts every
+    * passage once and each copy of the row reports that same count
+    * (PipelineSpec pins this).
     */
   def passageDedup(docs: DataFrame, windowWords: Int = 50,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {

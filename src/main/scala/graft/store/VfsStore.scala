@@ -41,16 +41,18 @@ case class VfsManifest(name: String, dim: Int, quantize: Boolean,
 object VfsManifest {
   // minimal flat-JSON parser (no deps); format is engine-controlled
   def fromJson(s: String): VfsManifest = {
-    def str(k: String): String = {
-      val m = ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(s).getOrElse(throw new StoreStateException(s"bad manifest: $k"))
-      m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-    }
-    def num(k: String): Long = ("\"" + k + "\":(-?\\d+)").r
-      .findFirstMatchIn(s).get.group(1).toLong
-    def bool(k: String): Boolean = ("\"" + k + "\":(true|false)").r
-      .findFirstMatchIn(s).get.group(1).toBoolean
-    val commits = "\"commits\":\\[([^\\]]*)\\]".r.findFirstMatchIn(s).get.group(1)
+    // the first capture group of `"k":<value>`; a missing or malformed
+    // key is a typed store-state error, never a bare None.get
+    def field(k: String, value: String): String =
+      ("\"" + k + "\":" + value).r.findFirstMatchIn(s)
+        .getOrElse(throw new StoreStateException(s"bad manifest: $k"))
+        .group(1)
+    def str(k: String): String =
+      field(k, "\"((?:[^\"\\\\]|\\\\.)*)\"")
+        .replace("\\\"", "\"").replace("\\\\", "\\")
+    def num(k: String): Long = field(k, "(-?\\d+)").toLong
+    def bool(k: String): Boolean = field(k, "(true|false)").toBoolean
+    val commits = field("commits", "\\[([^\\]]*)\\]")
     val dirs = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(commits)
       .map(_.group(1)).toSeq
     VfsManifest(str("name"), num("dim").toInt, bool("quantize"),
@@ -113,8 +115,11 @@ class VfsStore private (val spark: SparkSession, val root: String,
   private def manifestPath = Paths.get(root, "manifest.json")
 
   /** The raw physical frame over every committed directory. */
-  private def committedRaw(): DataFrame = spark.read
-    .parquet(manifest.commits.map(c => s"$root/data/$c"): _*)
+  private def committedRaw(): DataFrame = readDirs(manifest.commits)
+
+  /** The raw physical frame over the given commit directories. */
+  private def readDirs(dirs: Seq[String]): DataFrame =
+    spark.read.parquet(dirs.map(c => s"$root/data/$c"): _*)
 
   /** Provenance: the immediate parent dir of each row's file IS its
     * commit dir (commit names are engine-generated, slash-free). ONE
@@ -269,8 +274,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
           if (colliding.isEmpty) (manifest.commits, None)
           else {
             val hit = manifest.commits.filter(colliding)
-            val keep = spark.read
-              .parquet(hit.map(c => s"$root/data/$c"): _*)
+            val keep = readDirs(hit)
               .join(inNames, Seq("name"), "left_anti")
             val keepDir = commitDirName("upsert-keep")
             keep.sortWithinPartitions("id").write.mode("overwrite")
@@ -373,9 +377,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
   def read(): DataFrame = synchronized {
     val committed: DataFrame =
       if (manifest.commits.isEmpty) emptyDense(spark)
-      else VfsStore.denseView(spark.read
-        .parquet(manifest.commits.map(c => s"$root/data/$c"): _*),
-        manifest.quantize)
+      else VfsStore.denseView(committedRaw(), manifest.quantize)
     if (memtable.isEmpty) committed
     else committed.unionByName(
       spark.createDataFrame(memtable.values.toSeq)
@@ -387,7 +389,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
   def readRaw(): DataFrame = synchronized {
     if (manifest.commits.isEmpty) {
       if (manifest.quantize) emptyQuant(spark) else emptyDense(spark)
-    } else spark.read.parquet(manifest.commits.map(c => s"$root/data/$c"): _*)
+    } else committedRaw()
   }
 
   /** Point lookup P1 (storage_manager.rs:235-296): memtable probe, then
@@ -416,12 +418,9 @@ class VfsStore private (val spark: SparkSession, val root: String,
     * becomes invisible (its directories are simply not in the restored
     * commit list); the memtable is discarded. */
   def restore(snapName: String = "vfs_state"): Unit = synchronized {
-    val p = Paths.get(root, "snapshots", s"$snapName.json")
-    if (!Files.exists(p))
-      throw new StoreStateException(s"[GRAFT] no snapshot named $snapName")
+    val snap = loadSnapshot(snapName)
     memtable.clear()
-    commitManifest(VfsManifest.fromJson(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    commitManifest(snap)
   }
 
   /** Compact all committed data into a single commit directory (the
@@ -433,8 +432,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
   def compact(): Unit = synchronized {
     flush()
     if (manifest.commits.size > 1) {
-      val all = spark.read
-        .parquet(manifest.commits.map(c => s"$root/data/$c"): _*)
+      val all = committedRaw()
       val dir = commitDirName("compact")
       all.sortWithinPartitions("id").write.mode("overwrite")
         .parquet(s"$root/data/$dir")
@@ -495,7 +493,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
     val matching = matchedPerDir.map(_.getString(0)).toSet
     val deleted = matchedPerDir.map(_.getLong(1)).sum
     val hit = manifest.commits.filter(matching)
-    val keep = spark.read.parquet(hit.map(c => s"$root/data/$c"): _*)
+    val keep = readDirs(hit)
       .filter(!coalesce(cond, lit(false)))
     val dir = commitDirName("delete")
     keep.sortWithinPartitions("id").write.mode("overwrite")
@@ -602,9 +600,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
     val old = snap.commits.toSet
     val newDirs = manifest.commits.filterNot(old)
     if (newDirs.isEmpty) VfsStore.emptyDense(spark)
-    else VfsStore.denseView(
-      spark.read.parquet(newDirs.map(c => s"$root/data/$c"): _*),
-      manifest.quantize)
+    else VfsStore.denseView(readDirs(newDirs), manifest.quantize)
   }
 
   /** Exact row-level diff vs a snapshot: the dense rows plus a
@@ -670,15 +666,9 @@ class VfsStore private (val spark: SparkSession, val root: String,
   /** Time-travel read: the dense view AS OF a named snapshot, without
     * mutating live state (restore() is the mutating twin). */
   def readSnapshot(snapName: String): DataFrame = synchronized {
-    val p = Paths.get(root, "snapshots", s"$snapName.json")
-    if (!Files.exists(p))
-      throw new StoreStateException(s"[GRAFT] no snapshot named $snapName")
-    val snap = VfsManifest.fromJson(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    val snap = loadSnapshot(snapName)
     if (snap.commits.isEmpty) VfsStore.emptyDense(spark)
-    else VfsStore.denseView(
-      spark.read.parquet(snap.commits.map(c => s"$root/data/$c"): _*),
-      snap.quantize)
+    else VfsStore.denseView(readDirs(snap.commits), snap.quantize)
   }
 
   /** Reset per ResetOptions (storage_manager.rs:30-57, 83-124). */

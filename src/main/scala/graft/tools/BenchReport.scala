@@ -479,7 +479,7 @@ object BenchReport {
       |operating point in the correctness suite — the production
       |configuration is oracle-gated, not just the full-probe ceiling.
       |
-      |## Closure assignment (round 6, PrunedRecallProbe @ sf0.01)
+      |## Closure assignment (round 6, recorded @ sf0.01)
       |
       |Decomposition at the pruned operating point (45 centroids,
       |nProbe=16, m=32, overfetch=8, 20 queries): the PQ refine tracks

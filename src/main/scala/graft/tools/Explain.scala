@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.io.{File, FileOutputStream, PrintStream}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -7,10 +9,17 @@ import graft.operators.{Dedup, Knn, Metric}
 
 /** Prints formatted physical plans for the engine's key operators so
   * plan regressions (lost pushdown, missing broadcast, codegen breaks)
-  * are visible: `sbt "runMain graft.tools.Explain"`. */
+  * are visible: `sbt "runMain graft.tools.Explain [sfDir] [outDir]"`.
+  *
+  * Given `outDir`, nothing goes to stdout: each section's plan is
+  * written to `outDir/<section>.txt` (the section title up to its
+  * "(expect" note, lower-cased, non-alphanumerics as `_`) and the plan
+  * of every `SparkEntry.queries` entry to `outDir/query_<name>.txt`,
+  * so plan-shape claims stay checkable without running Spark. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val outDir = args.lift(1).map(new File(_))
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -23,9 +32,25 @@ object Explain {
       .select(col("vec_id").as("id"), col("embedding").as("values"))
     val q = emb.filter(col("id") === 1L).head().getSeq[Float](1).toArray
 
-    def show(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      println(s"\n========== $name ==========")
-      df.explain("formatted")
+    outDir.foreach(_.mkdirs())
+    val written = scala.collection.mutable.Set.empty[String]
+    // `body`'s output under a banner on stdout, or alone in
+    // outDir/<name>.txt
+    def emit(name: String, banner: String)(body: => Unit): Unit =
+      outDir match {
+        case None =>
+          println(s"\n========== $banner ==========")
+          body
+        case Some(d) =>
+          require(written.add(name), s"two plans named $name")
+          val ps = new PrintStream(
+            new FileOutputStream(new File(d, s"$name.txt")), true, "UTF-8")
+          try Console.withOut(ps)(body) finally ps.close()
+      }
+    def show(title: String)(df: org.apache.spark.sql.DataFrame): Unit = {
+      val name = title.takeWhile(_ != '(').trim.toLowerCase
+        .replaceAll("[^a-z0-9]+", "_").stripSuffix("_")
+      emit(name, title)(df.explain("formatted"))
     }
 
     show("exact knn (expect: scan->project->TakeOrderedAndProject, codegen)") {
@@ -776,6 +801,18 @@ object Explain {
         "exchanges)") {
       graft.SparkEntry.queries("pipeline_recrawl")(spark, dir)
     }
+    // the declared queries, in output-dir mode only (a failure to plan
+    // one is written in its place, the rest still run)
+    if (outDir.isDefined)
+      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach {
+        case (name, query) =>
+          emit(s"query_$name", name) {
+            try query(spark, dir).explain("formatted")
+            catch { case scala.util.control.NonFatal(e) =>
+              println(s"EXPLAIN FAILED: ${graft.Verify.errHead(e)}")
+            }
+          }
+      }
     spark.stop()
   }
 }

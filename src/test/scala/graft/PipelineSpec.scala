@@ -612,6 +612,23 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("passage dedup: a repeated (doc_id, idx, passage) row counts once") {
+    // the operator assumes unique ids; this pins what a verbatim
+    // duplicate row yields today: one keeper per passage, so
+    // kept_passages counts each passage once, reported on both copies
+    val d = Seq(
+      (1L, "a b c d e f"),
+      (1L, "a b c d e f"),          // same id, same passages, again
+      (2L, "a b c x y z"))
+      .toDF("doc_id", "text")
+    val r = Dedup.passageDedup(d, windowWords = 3)
+      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
+    assert(r === Seq(
+      (1L, 2L, 2L, "a b c d e f"),
+      (1L, 2L, 2L, "a b c d e f"),
+      (2L, 2L, 1L, "x y z")))
+  }
+
   test("boilerplate lines: corpus-frequent lines drop from every doc") {
     // "NAV" reaches doc-frequency 5 (doc 2 only via trim — the key is
     // the trimmed line), so it drops from ALL docs including repeats

@@ -209,6 +209,27 @@ class VfsStoreSpec extends AnyFunSuite {
     intercept[StoreStateException](s.readSnapshot("nope"))
   }
 
+  test("a manifest or snapshot missing a key fails with a typed error") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val root = tmp()
+    val s = VfsStore.create(spark, root, "bad", dim = 2)
+    s.insert(Array(1f, 1f), "a", Nil)
+    s.snapshot("s1")
+    def strip(rel: String, key: String): Unit = {
+      val p = java.nio.file.Paths.get(root, rel)
+      val json = new String(Files.readAllBytes(p), UTF_8)
+      val cut = json.replaceFirst(",\"" + key + "\":[^,\\]]*\\]?", "")
+      assert(cut !== json, s"fixture: $key not stripped")
+      Files.write(p, cut.getBytes(UTF_8))
+    }
+    strip("snapshots/s1.json", "commits")
+    val restoreErr = intercept[StoreStateException](s.restore("s1"))
+    assert(restoreErr.getMessage === "bad manifest: commits")
+    strip("manifest.json", "nextId")
+    val openErr = intercept[StoreStateException](VfsStore.open(spark, root))
+    assert(openErr.getMessage === "bad manifest: nextId")
+  }
+
   test("concurrent inserts assign unique contiguous ids (C6 single-writer)") {
     val s = VfsStore.create(spark, tmp(), "cc", dim = 2, flushThreshold = 1000)
     val ids = (1 to 40).par.map { i =>
