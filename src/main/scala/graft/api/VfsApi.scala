@@ -218,7 +218,7 @@ class VfsApi(spark: SparkSession, rootDir: String) {
 }
 
 object VfsApi {
-  val mapper = new ObjectMapper()
+  val mapper: ObjectMapper = graft.operators.ArtifactIo.mapper
 
   private def obj(f: ObjectNode => Unit): JsonNode = {
     val o = mapper.createObjectNode()

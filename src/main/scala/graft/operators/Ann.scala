@@ -29,18 +29,11 @@ object IvfIndex {
   case class Meta(nCentroids: Int, metric: String, dim: Int, seed: Long,
       nAssign: Int = 1, generation: Int = 1, assignEpsMilli: Long = -1L)
 
-  private def metaJson(m: Meta): String =
-    s"""{"nCentroids":${m.nCentroids},"metric":"${m.metric}","dim":${m.dim},"seed":${m.seed},"nAssign":${m.nAssign},"generation":${m.generation},"assignEpsMilli":${m.assignEpsMilli}}"""
-  private def parseMeta(s: String): Meta = {
-    def num(k: String) = ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s).get.group(1).toLong
-    def opt(k: String, default: Long) =
-      ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s)
-        .map(_.group(1).toLong).getOrElse(default)
-    val metric = "\"metric\":\"(\\w+)\"".r.findFirstMatchIn(s).get.group(1)
-    Meta(num("nCentroids").toInt, metric, num("dim").toInt, num("seed"),
-      opt("nAssign", 1L).toInt, opt("generation", 1L).toInt,
-      opt("assignEpsMilli", -1L))
-  }
+  private def writeMeta(path: String, m: Meta): Unit =
+    ArtifactIo.writeSidecar(path, "ivf.json", "nCentroids" -> m.nCentroids,
+      "metric" -> m.metric, "dim" -> m.dim, "seed" -> m.seed,
+      "nAssign" -> m.nAssign, "generation" -> m.generation,
+      "assignEpsMilli" -> m.assignEpsMilli)
 
   /** Sentinel marking a REBUILD's live-mutation window ([[build]]'s
     * dir swaps + meta write). Present = an in-progress or crashed
@@ -63,8 +56,12 @@ object IvfIndex {
 
   /** Sentinel-blind read — [[build]]'s own recovery path needs the
     * old generation even while the sentinel stands. */
-  private def readMetaRaw(path: String): Meta =
-    parseMeta(ArtifactIo.readSmallFile(path, "ivf.json"))
+  private def readMetaRaw(path: String): Meta = {
+    val m = ArtifactIo.readSidecar(path, "ivf.json")
+    Meta(m.int("nCentroids"), m.str("metric"), m.int("dim"), m.long("seed"),
+      m.intOr("nAssign", 1), m.intOr("generation", 1),
+      m.longOr("assignEpsMilli", -1L))
+  }
 
   /** The closure-assignment eps an index was built with (< 0 =
     * unconditional replication), decoded from the persisted milli. */
@@ -439,12 +436,11 @@ object IvfIndex {
       ArtifactIo.swapIn(fs, path, "assignments")
       ArtifactIo.swapIn(fs, path, "centroids")
     }
-    ArtifactIo.writeSmallFileAtomic(path, "ivf.json",
-      metaJson(Meta(nCentroids, metric match {
+    writeMeta(path, Meta(nCentroids, metric match {
         case Metric.Cosine => "cosine"
         case Metric.Euclidean => "euclidean"
       }, dim, seed, math.min(nAssign, nCentroids), gen,
-        if (assignEps < 0) -1L else math.round(assignEps * 1000.0))))
+      if (assignEps < 0) -1L else math.round(assignEps * 1000.0)))
     ArtifactIo.deleteFile(path, RebuildSentinel)
   }
 
@@ -908,8 +904,7 @@ object IvfIndex {
         fs.delete(oldPath, true)
       }
     }
-    ArtifactIo.writeSmallFileAtomic(path, "ivf.json",
-      metaJson(meta.copy(generation = meta.generation + 1)))
+    writeMeta(path, meta.copy(generation = meta.generation + 1))
     removed
   }
 
@@ -1155,9 +1150,8 @@ object IvfIndex {
     replaced.keys.foreach { c =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$c"), true)
     }
-    ArtifactIo.writeSmallFileAtomic(path, "ivf.json",
-      metaJson(meta.copy(nCentroids = newCents.length,
-        generation = meta.generation + 1)))
+    writeMeta(path, meta.copy(nCentroids = newCents.length,
+      generation = meta.generation + 1))
     replaced.values.map(_.length).sum
   }
 

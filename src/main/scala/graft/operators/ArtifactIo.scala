@@ -2,16 +2,21 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-/** Shared filesystem machinery for the standing artifacts that keep
-  * their metadata INSIDE the swapped data directory ([[GramIndex]]'s
-  * `grams/_gram.json`, [[LshTextIndex]]'s `bands/_lsh.json`,
-  * [[BinaryIndex]]'s `packed/_binary.json`): Hadoop-FS metadata I/O
-  * (java.nio would resolve remote hdfs:// / s3a:// artifacts against
-  * the driver's local cwd), the staged two-rename publish, and the
-  * PARKED-crash detection. ONE copy — a crash-contract fix applied
-  * here reaches every artifact, instead of silently missing one of
-  * three near-identical twins (the stale-twin hazard the oracle CTE
-  * helpers already guard against on the SQL side).
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+import graft.store.StoreStateException
+
+/** Shared filesystem machinery for every persisted artifact: the ONE
+  * sidecar codec, Hadoop-FS metadata I/O (java.nio would resolve
+  * remote hdfs:// / s3a:// artifacts against the driver's local cwd),
+  * the staged two-rename publish, the PARKED-crash detection, and the
+  * ONE standing-index lifecycle ([[StandingIndex]]) shared by
+  * [[LineIndex]], [[SigIndex]], [[UrlIndex]], [[BinaryIndex]],
+  * [[GramIndex]] and [[LshTextIndex]]. One copy — a crash-contract fix
+  * applied here reaches every artifact, instead of silently missing
+  * one of six near-identical twins.
   *
   * PARKED state: a crash between the swap's two renames leaves the
   * live directory ABSENT with the complete old artifact at
@@ -24,87 +29,159 @@ import java.nio.charset.StandardCharsets
   * counters never reset. Readers never heal (a reader renaming dirs
   * would race the writer mid-swap). */
 private[graft] object ArtifactIo {
-  def hconf(): org.apache.hadoop.conf.Configuration =
+  /** The one shared Jackson instance. It is thread-safe because no
+    * user changes its configuration: every caller relies on the
+    * defaults. */
+  val mapper = new ObjectMapper()
+
+  /** Encode a flat sidecar record — ints, longs, booleans, strings and
+    * string sequences — as compact JSON, keys in the given order. */
+  def encode(fields: (String, Any)*): String = {
+    val o = mapper.createObjectNode()
+    fields.foreach {
+      case (k, v: Int) => o.put(k, v)
+      case (k, v: Long) => o.put(k, v)
+      case (k, v: Boolean) => o.put(k, v)
+      case (k, v: String) => o.put(k, v)
+      case (k, v: Seq[_]) =>
+        val a = o.putArray(k)
+        v.foreach(s => a.add(s.asInstanceOf[String]))
+      case (k, v) => throw new IllegalArgumentException(
+        s"[GRAFT] sidecar field $k: unsupported value $v")
+    }
+    mapper.writeValueAsString(o)
+  }
+
+  /** A decoded sidecar with typed accessors: a missing or mistyped key
+    * throws `StoreStateException("bad <label>: <key>")`, never a bare
+    * `None.get`. */
+  final class Sidecar private[ArtifactIo] (label: String,
+      private[ArtifactIo] val node: ObjectNode) {
+    private def field(k: String, ok: JsonNode => Boolean): JsonNode = {
+      val v = node.get(k)
+      if (v == null || !ok(v)) throw new StoreStateException(s"bad $label: $k")
+      v
+    }
+    def int(k: String): Int =
+      field(k, v => v.isIntegralNumber && v.canConvertToInt).intValue
+    def long(k: String): Long =
+      field(k, v => v.isIntegralNumber && v.canConvertToLong).longValue
+    def bool(k: String): Boolean = field(k, _.isBoolean).booleanValue
+    def str(k: String): String = field(k, _.isTextual).textValue
+    def strs(k: String): Seq[String] = {
+      val a = field(k, v => v.isArray &&
+        (0 until v.size).forall(i => v.get(i).isTextual))
+      (0 until a.size).map(a.get(_).textValue)
+    }
+    /** Optional keys (fields added after an artifact format shipped). */
+    def intOr(k: String, default: Int): Int =
+      if (node.has(k)) int(k) else default
+    def longOr(k: String, default: Long): Long =
+      if (node.has(k)) long(k) else default
+  }
+
+  def decode(label: String, json: String): Sidecar = {
+    val node = try mapper.readTree(json) catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException => null
+    }
+    node match {
+      case o: ObjectNode => new Sidecar(label, o)
+      case _ => throw new StoreStateException(s"bad $label: not a JSON object")
+    }
+  }
+
+  /** Path-level sidecar read / atomic write (`ivf.json`, `lm.json`, …). */
+  def readSidecar(path: String, name: String): Sidecar =
+    decode(name, readSmallFile(path, name))
+
+  def writeSidecar(path: String, name: String, fields: (String, Any)*): Unit =
+    writeSmallFileAtomic(path, name, encode(fields: _*))
+
+  private def hconf(): org.apache.hadoop.conf.Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(hconf())
+  def fsOf(path: String): FileSystem = new Path(path).getFileSystem(hconf())
 
-  def readFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  private def readFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
 
-  /** Write a small file into `dir` (creating it) — used for the
-    * `_<name>.json` metadata that rides inside a stage directory, so
-    * the publish rename moves data and metadata together. */
-  def writeFileInto(dir: String, name: String, content: String): Unit = {
+  /** Write a small file into `dir` (creating it) — the `_<name>.json`
+    * metadata that rides inside a stage directory, so the publish
+    * rename moves data and metadata together. */
+  private def writeFileInto(dir: String, name: String, content: String): Unit = {
     val fs = fsOf(dir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
+    fs.mkdirs(new Path(dir))
+    val out = fs.create(new Path(dir, name), true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
   /** Small-file helpers for PATH-LEVEL metadata and sentinel files
     * (the IVF/PQ family's ivf.json/pq.json/ivfpq.json + rebuild
-    * sentinels, the LM model's lm.json) — Hadoop FS for the same
-    * remote-path reason as the dir-internal metadata: java.nio would
-    * resolve an hdfs:// or s3a:// artifact's metadata against the
-    * driver's LOCAL cwd. Writes go through tmp + atomic
-    * overwrite-rename, so a crash never leaves a truncated file. */
+    * sentinels, the LM model's lm.json, the append watermark). Writes
+    * go through tmp + atomic overwrite-rename, so a crash never leaves
+    * a truncated file. */
   def fileExists(path: String, name: String): Boolean =
-    fsOf(path).exists(new org.apache.hadoop.fs.Path(path, name))
+    fsOf(path).exists(new Path(path, name))
 
   def readSmallFile(path: String, name: String): String =
-    readFile(fsOf(path), new org.apache.hadoop.fs.Path(path, name))
+    readFile(fsOf(path), new Path(path, name))
 
   def writeSmallFileAtomic(path: String, name: String,
       content: String): Unit = {
     val fs = fsOf(path)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    val tmp = new org.apache.hadoop.fs.Path(path, name + ".tmp")
+    fs.mkdirs(new Path(path))
+    val tmp = new Path(path, name + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(path, name)
     org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, hconf())
-      .rename(fs.makeQualified(tmp), fs.makeQualified(dst),
+      .rename(fs.makeQualified(tmp), fs.makeQualified(new Path(path, name)),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   private val WatermarkFile = "_append_batch"
 
-  /** THE append-watermark protocol — one copy shared by every
-    * artifact with idempotent batch appends (SigIndex, BinaryIndex,
-    * LineIndex), GENERATION-BOUND: the value commits as
-    * `<generation>:<batchId>`, and a reader under a different
-    * generation sees -1 (a fresh batch sequence). Binding replaces
-    * the old delete-inside-build-stage retirement, which had a real
-    * crash window: a rebuild that died after the delete but before
-    * the publish rename left the OLD artifact live with its
-    * replay protection GONE, so a stale stream replay re-landed an
-    * already-compacted batch (for LineIndex that double-counts df —
-    * a wrong answer with no downstream dedup to absorb it). With the
-    * binding there is no delete step at all: the stale watermark
-    * invalidates exactly when the new generation PUBLISHES, and
-    * every crash before that leaves the old artifact with its old,
-    * still-matching watermark. A legacy unbound value (plain
-    * `<batchId>`) reads as valid for any generation — the
-    * pre-binding behavior, rewritten on the next commit. */
-  def readWatermark(path: String, generation: Int): Long = {
-    if (!fileExists(path, WatermarkFile)) return -1L
-    val txt = readSmallFile(path, WatermarkFile).trim
-    val i = txt.indexOf(':')
-    if (i < 0) txt.toLong
-    else if (txt.take(i).toInt == generation) txt.drop(i + 1).toLong
-    else -1L
-  }
+  /** THE append-watermark protocol, GENERATION-BOUND: the value
+    * commits as `<generation>:<batchId>`, and a reader under a
+    * different generation sees -1 (a fresh batch sequence). Used by
+    * every [[StandingIndex]] — [[LineIndex]], [[SigIndex]],
+    * [[UrlIndex]] and [[BinaryIndex]] land batches through it;
+    * [[GramIndex]] and [[LshTextIndex]] never write one, so it reads
+    * -1 for them. Binding replaces an older delete-inside-build-stage
+    * retirement, which had a real crash window: a rebuild that died
+    * after the delete but before the publish rename left the OLD
+    * artifact live with its replay protection GONE, so a stale stream
+    * replay re-landed an already-compacted batch (for LineIndex that
+    * double-counts df — a wrong answer with no downstream dedup to
+    * absorb it). With the binding there is no delete step at all: the
+    * stale watermark invalidates exactly when the new generation
+    * PUBLISHES, and every crash before that leaves the old artifact
+    * with its old, still-matching watermark. A legacy unbound value
+    * (plain `<batchId>`) reads as valid for any generation — the
+    * pre-binding behavior, rebound by [[migrateLegacyWatermark]]. */
+  private def readWatermark(path: String, generation: Int): Long =
+    watermark(path) match {
+      case Some((None, b)) => b
+      case Some((Some(g), b)) if g == generation => b
+      case _ => -1L
+    }
+
+  /** The raw marker: (bound generation, batch id), if present. */
+  private def watermark(path: String): Option[(Option[Int], Long)] =
+    if (!fileExists(path, WatermarkFile)) None
+    else {
+      val txt = readSmallFile(path, WatermarkFile).trim
+      val i = txt.indexOf(':')
+      Some(if (i < 0) (None, txt.toLong)
+        else (Some(txt.take(i).toInt), txt.drop(i + 1).toLong))
+    }
 
   /** Commit the watermark for `generation` (tmp + atomic
     * overwrite-rename — there is never an instant without a marker
@@ -115,49 +192,33 @@ private[graft] object ArtifactIo {
     writeSmallFileAtomic(path, WatermarkFile, s"$generation:$batchId")
 
   /** The generation a BOUND watermark names — 0 for absent or
-    * legacy-unbound markers. Exists for one caller: every build()
-    * derives its new generation as `max(meta.generation, this) + 1`.
-    * A takedown delete commits its carried watermark bound to
-    * generation m+1 BEFORE its staged swap (the carry-then-swap
-    * window analysis); if that delete crashes pre-publish, meta still
-    * says m while the watermark names m+1 — and a build() that
-    * derived m+1 from meta alone would publish under EXACTLY the
-    * generation the stale watermark is bound to, silently refusing
-    * the rebuilt artifact's fresh batches 0..last (the data-loss mode
-    * the binding exists to eliminate; [[migrateLegacyWatermark]] only
-    * rescues UNbound markers). Reading the bound generation lets
-    * build always publish PAST any generation the marker file has
-    * ever named. */
-  def watermarkGeneration(path: String): Int = {
-    if (!fileExists(path, WatermarkFile)) return 0
-    val txt = readSmallFile(path, WatermarkFile).trim
-    val i = txt.indexOf(':')
-    if (i < 0) 0 else txt.take(i).toInt
-  }
+    * legacy-unbound markers. A takedown commits its carried watermark
+    * bound to generation m+1 BEFORE its staged swap; if it crashes
+    * pre-publish, meta still says m while the watermark names m+1 —
+    * and a build that derived m+1 from meta alone would publish under
+    * EXACTLY the generation the stale watermark is bound to, silently
+    * refusing the rebuilt artifact's fresh batches 0..last. Reading
+    * the bound generation lets build always publish PAST any
+    * generation the marker file has ever named. */
+  private def watermarkGeneration(path: String): Int =
+    watermark(path).flatMap(_._1).getOrElse(0)
 
-  /** Rebind a LEGACY unbound watermark (plain `<batchId>`) to
-    * `generation` — called by every artifact's build() BEFORE its
-    * staged swap. Without this, rebuilding a pre-binding artifact
-    * leaves the legacy value live, and since a legacy value reads as
-    * valid for EVERY generation, the rebuilt artifact's fresh batch
-    * sequence is silently refused up to the stale high-watermark
-    * (for LineIndex that's missing counts, for the id-bearing
-    * artifacts missing rows). Rebinding to the CURRENT (pre-bump)
-    * generation is a semantic no-op for the live artifact — same
-    * value, now bound to its own generation — so a crash anywhere
-    * around it changes nothing; after the rebuild publishes its
-    * bumped generation, the bound value invalidates exactly as a
-    * post-binding watermark would. No-op for bound or absent
+  /** Rebind a LEGACY unbound watermark (plain `<batchId>`) to the
+    * live `generation` before a rebuild publishes. Without this the
+    * legacy value — valid for EVERY generation — stays live and
+    * silently refuses the rebuilt artifact's fresh batch sequence up
+    * to the stale high-watermark. Rebinding to the CURRENT (pre-bump)
+    * generation is a semantic no-op for the live artifact, so a crash
+    * anywhere around it changes nothing. No-op for bound or absent
     * markers. */
-  def migrateLegacyWatermark(path: String, generation: Int): Unit = {
-    if (!fileExists(path, WatermarkFile)) return
-    val txt = readSmallFile(path, WatermarkFile).trim
-    if (txt.indexOf(':') < 0)
-      commitWatermark(path, generation, txt.toLong)
-  }
+  private def migrateLegacyWatermark(path: String, generation: Int): Unit =
+    watermark(path) match {
+      case Some((None, b)) => commitWatermark(path, generation, b)
+      case _ =>
+    }
 
   def deleteFile(path: String, name: String): Unit = {
-    fsOf(path).delete(new org.apache.hadoop.fs.Path(path, name), false)
+    fsOf(path).delete(new Path(path, name), false)
     ()
   }
 
@@ -171,9 +232,9 @@ private[graft] object ArtifactIo {
   /** (count, totalBytes) of the DATA files under `dir` — same single
     * recursive listing as [[dataFileCount]], with sizes summed so
     * compaction can be sized to DATA rather than to core count. */
-  def dataFileStats(dir: String): (Long, Long) = {
+  private def dataFileStats(dir: String): (Long, Long) = {
     val fs = fsOf(dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     if (!fs.exists(p)) return (0L, 0L)
     var n = 0L
     var bytes = 0L
@@ -222,17 +283,15 @@ private[graft] object ArtifactIo {
   }
 
   /** Crash residue check: live dir gone, complete old parked. */
-  def isParked(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      liveDir: String): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(s"$path/$liveDir")
-    val old = new org.apache.hadoop.fs.Path(s"$path/${liveDir}_old")
-    !fs.exists(live) && fs.exists(old)
-  }
+  private def isParked(fs: FileSystem, path: String,
+      liveDir: String): Boolean =
+    !fs.exists(new Path(s"$path/$liveDir")) &&
+      fs.exists(new Path(s"$path/${liveDir}_old"))
 
   /** Reader-side guard: fail loudly on the parked state instead of
     * reporting "no artifact" (which callers would treat as a
     * build-from-scratch invitation). */
-  def requireNotParked(path: String, liveDir: String,
+  private def requireNotParked(path: String, liveDir: String,
       what: String): Unit = {
     if (isParked(fsOf(path), path, liveDir))
       throw new IllegalArgumentException(
@@ -246,32 +305,30 @@ private[graft] object ArtifactIo {
   /** Writer-side recovery (single-writer contract): rename the parked
     * old dir back so the operation proceeds against the complete
     * pre-crash artifact — generation counters never reset. */
-  def healParked(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      liveDir: String, what: String): Unit = {
-    if (isParked(fs, path, liveDir)) {
-      require(fs.rename(
-        new org.apache.hadoop.fs.Path(s"$path/${liveDir}_old"),
-        new org.apache.hadoop.fs.Path(s"$path/$liveDir")),
+  def healParked(fs: FileSystem, path: String, liveDir: String,
+      what: String): Unit = {
+    if (isParked(fs, path, liveDir))
+      require(fs.rename(new Path(s"$path/${liveDir}_old"),
+        new Path(s"$path/$liveDir")),
         s"[GRAFT] $what: cannot heal parked ${liveDir}_old at $path")
-    }
   }
 
   /** Staged two-rename publish: `writeStage` fills `<liveDir>_stage`
     * (parquet + its `_*.json` metadata), the live dir parks at
     * `<liveDir>_old`, the stage moves in, `_old` is dropped. A crash
     * between the renames leaves the PARKED state (see class doc). */
-  def stagedSwap(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      liveDir: String, what: String)(
-      writeStage: String => Unit): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$path/$liveDir")
-    val stage = new org.apache.hadoop.fs.Path(s"$path/${liveDir}_stage")
-    val old = new org.apache.hadoop.fs.Path(s"$path/${liveDir}_old")
-    writeStage(stage.toString)
+  def stagedSwap[A](fs: FileSystem, path: String, liveDir: String,
+      what: String)(writeStage: String => A): A = {
+    val live = new Path(s"$path/$liveDir")
+    val stage = new Path(s"$path/${liveDir}_stage")
+    val old = new Path(s"$path/${liveDir}_old")
+    val out = writeStage(stage.toString)
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(live, old), s"[GRAFT] $what: cannot stage $live")
     require(fs.rename(stage, live),
       s"[GRAFT] $what: swap failed — recover by renaming $old back")
     fs.delete(old, true)
+    out
   }
 
   /** Rerun-tolerant swap-in for sentinel-guarded rebuilds
@@ -281,11 +338,10 @@ private[graft] object ArtifactIo {
     * replaced) — the stage then just moves in. Runs only inside a
     * rebuild-sentinel window (the caller's readMeta refuses while it
     * stands). */
-  def swapIn(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      what: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$path/$what")
-    val stage = new org.apache.hadoop.fs.Path(s"$path/${what}_stage")
-    val old = new org.apache.hadoop.fs.Path(s"$path/${what}_old")
+  def swapIn(fs: FileSystem, path: String, what: String): Unit = {
+    val live = new Path(s"$path/$what")
+    val stage = new Path(s"$path/${what}_stage")
+    val old = new Path(s"$path/${what}_old")
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(live))
       require(fs.rename(live, old),
@@ -296,13 +352,161 @@ private[graft] object ArtifactIo {
   }
 
   /** Fresh publish: stage → one rename to live (no existing dir). */
-  def publishFresh(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      liveDir: String, what: String)(
-      writeStage: String => Unit): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$path/$liveDir")
-    val stage = new org.apache.hadoop.fs.Path(s"$path/${liveDir}_stage")
+  private def publishFresh(fs: FileSystem, path: String, liveDir: String,
+      what: String)(writeStage: String => Unit): Unit = {
+    val stage = new Path(s"$path/${liveDir}_stage")
     writeStage(stage.toString)
-    require(fs.rename(stage, live),
+    require(fs.rename(stage, new Path(s"$path/$liveDir")),
       s"[GRAFT] $what: cannot publish $stage")
+  }
+
+  /** The artifact lifecycle of one standing index: data under
+    * `<path>/<dir>` with its sidecar `<dir>/<metaFile>` riding INSIDE
+    * the swapped directory, so every publish moves data and metadata
+    * in one atomic rename — no crash state mixes old and new rows or
+    * shows new data under old metadata. `legacyMeta` names an older
+    * path-level sidecar (`gram.json`, `lsh.json`) that is still read
+    * as a fallback and retired by the next publish. The append
+    * watermark lives at the artifact root, OUTSIDE `<dir>`, so a swap
+    * preserves it.
+    *
+    * The ordering rules every writer must follow live here once:
+    *   - build: heal a parked swap, rebind a legacy watermark to the
+    *     live generation, publish as `max(meta, watermark) + 1`
+    *     (PAST any generation a crashed takedown's carried watermark
+    *     names — [[watermarkGeneration]]), then retire the legacy
+    *     meta (the internal copy wins reads from the publish on, so a
+    *     crash before the delete is benign);
+    *   - takedown: commit the carried watermark for generation + 1
+    *     BEFORE the swap. A crash in between leaves the OLD generation
+    *     live with a mismatched watermark, so stale replays re-append
+    *     duplicates to the old artifact (absorbed by presence / the
+    *     probes' post-join dedup) — never deleted rows to the new one,
+    *     which swap-then-carry could resurrect;
+    *   - appends: land, then commit the watermark — a replay of a
+    *     committed batch is a no-op;
+    *   - compact: physical rewrite, metadata unchanged, watermark
+    *     untouched, so a stale replay of a folded batch stays refused.
+    */
+  final case class StandingIndex(dir: String, metaFile: String,
+      label: String, legacyMeta: Option[String] = None) {
+    /** The live data directory. */
+    def data(path: String): String = s"$path/$dir"
+
+    private def metaPaths(path: String): Seq[Path] =
+      new Path(data(path), metaFile) +: legacyMeta.toSeq.map(new Path(path, _))
+
+    private def generation(m: Sidecar): Int = m.int("generation")
+
+    private def retireLegacy(fs: FileSystem, path: String): Unit =
+      legacyMeta.foreach(f => fs.delete(new Path(path, f), false))
+
+    /** Does an artifact exist at `path`? A parked crash state throws
+      * instead of answering false ("false" invites an ingest loop to
+      * rebuild from one micro-batch). */
+    def exists(path: String): Boolean = {
+      requireNotParked(path, dir, label)
+      val fs = fsOf(path)
+      metaPaths(path).exists(fs.exists)
+    }
+
+    /** Writer-side recovery for ingest loops, run at the top of every
+      * batch (a parked state would otherwise make [[exists]] throw on
+      * every batch and the stream could never recover). */
+    def healParked(path: String): Unit =
+      ArtifactIo.healParked(fsOf(path), path, dir, label)
+
+    /** ONE guarded probe chain (parked check → locate → read), so a
+      * remote artifact pays one round of metadata RPCs. */
+    def readMetaOpt(path: String): Option[Sidecar] = {
+      requireNotParked(path, dir, label)
+      val fs = fsOf(path)
+      metaPaths(path).find(fs.exists)
+        .map(p => decode(p.getName, readFile(fs, p)))
+    }
+
+    def readMeta(path: String): Sidecar =
+      readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
+        s"requirement failed: [GRAFT] no $label at $path " +
+          s"(expected $dir/$metaFile)"))
+
+    /** Build or REBUILD: `fill` writes the data into the stage dir; the
+      * sidecar is `params` followed by the new generation. */
+    def build(path: String, params: (String, Any)*)(
+        fill: String => Unit): Unit = {
+      val fs = fsOf(path)
+      ArtifactIo.healParked(fs, path, dir, label)
+      val live = readMetaOpt(path).fold(0)(generation)
+      migrateLegacyWatermark(path, live)
+      val meta = encode(params :+ ("generation" -> (math.max(live,
+        watermarkGeneration(path)) + 1)): _*)
+      def writeStage(stage: String): Unit = {
+        fill(stage)
+        writeFileInto(stage, metaFile, meta)
+      }
+      if (fs.exists(new Path(data(path))))
+        stagedSwap(fs, path, dir, s"$label build")(writeStage)
+      else publishFresh(fs, path, dir, s"$label build")(writeStage)
+      retireLegacy(fs, path)
+    }
+
+    /** Rewrite with the metadata unchanged except `generation`, bumped
+      * by `bump` — the shared body of [[takedown]] and [[compact]]. */
+    private def rewrite[A](path: String, op: String, bump: Int)(
+        fill: String => A): A = {
+      val fs = fsOf(path)
+      ArtifactIo.healParked(fs, path, dir, label)
+      val m = readMeta(path)
+      val gen = generation(m)
+      if (bump > 0) {
+        val last = readWatermark(path, gen)
+        if (last >= 0L) commitWatermark(path, gen + bump, last)
+      }
+      val node = m.node.deepCopy()
+      node.put("generation", gen + bump)
+      val out = stagedSwap(fs, path, dir, s"$label $op") { stage =>
+        val r = fill(stage)
+        writeFileInto(stage, metaFile, mapper.writeValueAsString(node))
+        r
+      }
+      retireLegacy(fs, path)
+      out
+    }
+
+    /** Takedown rewrite: generation + 1 with the watermark CARRIED
+      * (carry-then-swap — see the class doc). Returns `fill`'s result. */
+    def takedown[A](path: String)(fill: String => A): A =
+      rewrite(path, "delete", 1)(fill)
+
+    /** Meta-preserving physical rewrite (small files, folded rows). */
+    def compact(path: String)(fill: String => Unit): Unit =
+      rewrite(path, "compact", 0)(fill)
+
+    /** Watermark-guarded append: `land` runs only for a batch id past
+      * the current generation's watermark, which then commits. Returns
+      * whether the batch was applied. */
+    def appendIdempotent(path: String, batchId: Long)(land: => Unit): Boolean = {
+      val gen = generation(readMeta(path))
+      if (batchId <= readWatermark(path, gen)) false
+      else {
+        land
+        commitWatermark(path, gen, batchId)
+        true
+      }
+    }
+
+    /** Has `batchId` been committed under the CURRENT generation? */
+    def isCommitted(path: String, batchId: Long): Boolean =
+      batchId <= readWatermark(path, generation(readMeta(path)))
+
+    /** Should an ingest loop schedule a compaction? One namenode
+      * listing (no data read) under the [[shouldCompact]] convergence
+      * contract — cheap enough to run per batch. */
+    def needsCompaction(path: String, maxDataFiles: Int): Boolean = {
+      require(maxDataFiles > 0,
+        s"[GRAFT] $label needsCompaction: maxDataFiles must be positive")
+      requireNotParked(path, dir, label)
+      shouldCompact(data(path), maxDataFiles)
+    }
   }
 }

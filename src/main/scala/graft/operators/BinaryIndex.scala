@@ -36,25 +36,13 @@ import graft.functions.{vfs_binary_quantize, vfs_euclidean, vfs_hamming}
 object BinaryIndex {
   case class Meta(dim: Int, generation: Int)
 
-  private def metaJson(m: Meta): String =
-    s"""{"dim":${m.dim},"generation":${m.generation}}"""
-
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
+  private val Life = ArtifactIo.StandingIndex("packed", "_binary.json",
+    "binary index")
 
   private[graft] def readMeta(path: String): Meta = {
-    ArtifactIo.requireNotParked(path, "packed", "binary index")
-    val fs = fsOf(path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/packed", "_binary.json")
-    require(fs.exists(p), s"[GRAFT] no binary index at $path")
-    val s = ArtifactIo.readFile(fs, p)
-    def num(key: String) =
-      ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(s).get.group(1).toInt
-    Meta(num("dim"), num("generation"))
+    val m = Life.readMeta(path)
+    Meta(m.int("dim"), m.int("generation"))
   }
-
-  private def writeMetaInto(dir: String, m: Meta): Unit =
-    ArtifactIo.writeFileInto(dir, "_binary.json", metaJson(m))
 
   /** The sidecar row shape — ONE derivation shared by [[build]] and
     * [[append]], so stored words can never diverge from the probe's
@@ -87,8 +75,6 @@ object BinaryIndex {
     * build — mixed-dim Hamming would compare different paddings). */
   def build(df: DataFrame, path: String, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val spark = df.sparkSession
-    val fs = fsOf(path)
     // probe dims over NON-NULL vectors only: packedRows deliberately
     // stores packed=NULL for whole-NULL vectors, and under
     // spark.sql.legacy.sizeOfNull=true size(NULL) is -1, which would
@@ -102,43 +88,8 @@ object BinaryIndex {
       s"[GRAFT] binary index: non-uniform dims ${d.getInt(0)}..${d.getInt(1)}")
     val dim = d.getInt(0)
     require(dim > 0, "[GRAFT] binary index: empty vectors")
-    // writer-side recovery: heal a parked crash state first, so the
-    // generation read sees the old artifact and never resets to 1
-    ArtifactIo.healParked(fs, path, "packed", "binary index build")
-    val live = new org.apache.hadoop.fs.Path(s"$path/packed")
-    // publish PAST any generation the watermark file names, not just
-    // meta's: a takedown delete parked pre-publish leaves meta at m
-    // with the carried watermark bound to m+1 — a meta-only bump
-    // would publish under that exact generation and silently refuse
-    // the fresh batch sequence ([[ArtifactIo.watermarkGeneration]])
-    val gen =
-      if (fs.exists(new org.apache.hadoop.fs.Path(live, "_binary.json")))
-        math.max(readMeta(path).generation,
-          ArtifactIo.watermarkGeneration(path)) + 1
-      else ArtifactIo.watermarkGeneration(path) + 1
-    // bind a pre-binding (unbound) watermark to the LIVE generation
-    // first ([[ArtifactIo.migrateLegacyWatermark]])
-    ArtifactIo.migrateLegacyWatermark(path, gen - 1)
-    def writeStage(stage: String): Unit = {
-      packedRows(df, idCol, vecCol, dim).write.mode("overwrite")
-        .parquet(stage)
-      writeMetaInto(stage, Meta(dim, gen))
-      // NO watermark retirement step: the watermark is bound to the
-      // generation ([[ArtifactIo.readWatermark]]), so the rebuilt
-      // artifact's fresh batch sequence starts exactly when this
-      // stage's bumped generation publishes. The old delete-here
-      // protocol had to thread a needle (delete after swap = data
-      // loss under the old watermark; delete before stage write =
-      // protection stripped on a failed rebuild) and STILL left a
-      // crash window (delete done, rename not) with the old artifact
-      // live and unprotected; the binding removes the needle.
-    }
-    if (!fs.exists(live))
-      ArtifactIo.publishFresh(fs, path, "packed",
-        "binary index build")(writeStage)
-    else
-      ArtifactIo.stagedSwap(fs, path, "packed",
-        "binary index build")(writeStage)
+    Life.build(path, "dim" -> dim)(
+      packedRows(df, idCol, vecCol, dim).write.mode("overwrite").parquet(_))
   }
 
   /** Pack and append the delta's rows — ONE pass, cost ∝ delta; the
@@ -156,71 +107,45 @@ object BinaryIndex {
       vecCol: String = "embedding"): Unit = {
     val m = readMeta(path)
     packedRows(df, idCol, vecCol, m.dim)
-      .write.mode("append").parquet(s"$path/packed")
+      .write.mode("append").parquet(Life.data(path))
   }
 
-  /** [[append]] guarded by the shared generation-bound watermark
-    * ([[ArtifactIo.readWatermark]] — ONE protocol for SigIndex /
-    * BinaryIndex / LineIndex): a replay of an already-committed
+  /** [[append]] guarded by the shared append watermark
+    * ([[ArtifactIo.StandingIndex]]): a replay of an already-committed
     * `batchId` is an exact no-op, so at-least-once drivers never
-    * double-store a vector. The atomic overwrite-rename commit means
-    * there is NEVER an instant without a marker on disk. Only a crash
-    * INSIDE the append→marker window can still duplicate (and
-    * [[candidates]]' post-cut collapse keeps even that from
-    * corrupting results). [[build]] bumps the generation, which
-    * starts a fresh batch sequence at publish time with no
-    * delete-step crash window. Returns whether the batch was
-    * applied. */
+    * double-store a vector. Only a crash INSIDE the append→marker
+    * window can still duplicate (and [[candidates]]' post-cut
+    * collapse keeps even that from corrupting results). Returns
+    * whether the batch was applied. */
   def appendIdempotent(df: DataFrame, path: String, batchId: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
-    val gen = readMeta(path).generation
-    if (batchId <= ArtifactIo.readWatermark(path, gen)) return false
-    append(df, path, idCol, vecCol)
-    ArtifactIo.commitWatermark(path, gen, batchId)
-    true
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Boolean =
+    Life.appendIdempotent(path, batchId)(append(df, path, idCol, vecCol))
 
   /** Hard-delete vectors from the sidecar — the takedown/GDPR path
     * ([[IvfIndex.deleteIds]]'s binary-tier twin): a deleted vector's
     * packed signs must never surface it as a Hamming candidate again.
     * One anti-join rewrite against the (driver-sized, by contract)
-    * deletion batch, republished with the staged two-rename swap
-    * ([[ArtifactIo.stagedSwap]]) so a crash leaves either the old
-    * sidecar or the new one, never a partial mix. The sidecar is one
+    * deletion batch through the shared takedown
+    * ([[ArtifactIo.StandingIndex]]: a crash leaves either the old
+    * sidecar or the new one, generation bumps, watermark carried, so
+    * replays can never resurrect a deleted id). The sidecar is one
     * flat table (not id-partitioned — it exists to be scanned whole
     * by every coarse cut), so a delete is a full physical rewrite;
-    * batch deletions amortize like compactions. `generation` bumps
-    * and `dim` stays frozen. The generation-bound watermark is
-    * CARRIED into the new generation, so replays of already-committed
-    * batches still no-op and can never resurrect a deleted id.
-    * Single-writer maintenance op. Returns the number of
-    * sidecar rows removed (can exceed |ids| after plain-append
-    * replays — every stored duplicate goes). */
+    * batch deletions amortize like compactions. `dim` stays frozen.
+    * Single-writer maintenance op. Returns the number of sidecar rows
+    * removed (can exceed |ids| after plain-append replays — every
+    * stored duplicate goes). */
   def deleteIds(spark: SparkSession, path: String,
       ids: Seq[Long]): Long = {
     if (ids.isEmpty) return 0L
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, "packed", "binary index delete")
-    val m = readMeta(path)
     val idSeq = ids.distinct
-    val packed = spark.read.parquet(s"$path/packed")
-    val removed = packed.filter(col("id").isin(idSeq: _*)).count()
-    val kept = packed.filter(!col("id").isin(idSeq: _*))
-    // carry the watermark into the new generation BEFORE the swap
-    // (the [[SigIndex.deleteIds]] window analysis: carry-then-swap
-    // degrades a crash to duplicate re-appends on the OLD artifact —
-    // absorbed by candidates()' post-cut collapse — while swap-then-
-    // carry could let a stale replay RESURRECT the deleted ids into
-    // the new generation)
-    val last = ArtifactIo.readWatermark(path, m.generation)
-    if (last >= 0L)
-      ArtifactIo.commitWatermark(path, m.generation + 1, last)
-    ArtifactIo.stagedSwap(fs, path, "packed",
-      "binary index delete") { stage =>
-      kept.write.mode("overwrite").parquet(stage)
-      writeMetaInto(stage, Meta(m.dim, m.generation + 1))
+    Life.takedown(path) { stage =>
+      val packed = spark.read.parquet(Life.data(path))
+      val removed = packed.filter(col("id").isin(idSeq: _*)).count()
+      packed.filter(!col("id").isin(idSeq: _*))
+        .write.mode("overwrite").parquet(stage)
+      removed
     }
-    removed
   }
 
   /** Coarse tier: (id, ham) of the `n` nearest sidecar rows by
@@ -249,7 +174,7 @@ object BinaryIndex {
     // resets it). Duplicate-free stores are unchanged: top-2n
     // distinct re-cut to n ≡ top-n.
     val overFetch = math.min(2L * n, Int.MaxValue.toLong).toInt
-    spark.read.parquet(s"$path/packed")
+    spark.read.parquet(Life.data(path))
       .select(col("id"),
         vfs_hamming(col("packed"), typedLit(qPacked.toSeq)).as("ham"))
       .filter(col("ham").isNotNull)
@@ -284,33 +209,21 @@ object BinaryIndex {
     * duplicate ids (keeping one packed row per id — stored duplicates
     * only ever come from replayed appends of the SAME vector, so any
     * survivor is correct): every [[append]] adds files and the
-    * coarse cut scans them all. Physical rewrite via the staged
-    * two-rename swap, metadata unchanged ([[SigIndex.compact]]'s
-    * sidecar twin); the `_append_batch` high-watermark survives (it
-    * is monotonic — compaction changes no batch semantics). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, "packed", "binary index compact")
-    val m = readMeta(path)
-    val folded = spark.read.parquet(s"$path/packed")
-      .groupBy(col("id")).agg(min(col("packed")).as("packed"))
-      .repartition(ArtifactIo.compactWidth(s"$path/packed"))
-    ArtifactIo.stagedSwap(fs, path, "packed",
-      "binary index compact") { stage =>
-      folded.write.mode("overwrite").parquet(stage)
-      writeMetaInto(stage, m)
+    * coarse cut scans them all. Physical rewrite, metadata unchanged
+    * ([[SigIndex.compact]]'s sidecar twin). */
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      spark.read.parquet(Life.data(path))
+        .groupBy(col("id")).agg(min(col("packed")).as("packed"))
+        .repartition(ArtifactIo.compactWidth(Life.data(path)))
+        .write.mode("overwrite").parquet(stage)
     }
-  }
 
   /** Should an ingest loop schedule [[compact]]? Keys on ONE namenode
     * listing of the sidecar's data files (no data read), so the check
     * is cheap enough to run per batch — the
     * [[IvfIndex.needsRebalance]] self-scheduling pattern applied to
     * small-files growth. */
-  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean = {
-    require(maxDataFiles > 0,
-      "[GRAFT] binary index needsCompaction: maxDataFiles must be positive")
-    ArtifactIo.requireNotParked(path, "packed", "binary index")
-    ArtifactIo.shouldCompact(s"$path/packed", maxDataFiles)
-  }
+  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean =
+    Life.needsCompaction(path, maxDataFiles)
 }

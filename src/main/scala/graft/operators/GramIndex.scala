@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   *   - build: distinct gram hashes of the corpus → `grams/` parquet
   *     (8 bytes per DISTINCT gram — presence is the whole verdict, so
-  *     nothing else is stored) + `gram.json` (k, generation).
+  *     nothing else is stored) + `_gram.json` (k, generation).
   *   - append: distinct gram hashes of the new batch appended — cost
   *     ∝ batch; the standing table is not read (duplicate hashes
   *     across file sets are harmless under presence semantics, and
@@ -37,67 +37,24 @@ import org.apache.spark.sql.functions._
 object GramIndex {
   case class Meta(k: Int, generation: Int)
 
-  private def metaJson(m: Meta): String =
-    s"""{"k":${m.k},"generation":${m.generation}}"""
-
-  // Metadata I/O goes through [[ArtifactIo]] (Hadoop FileSystem, NOT
-  // java.nio — a remote hdfs:// or s3a:// artifact would otherwise
-  // resolve gram.json against the driver's LOCAL cwd, and the
-  // frozen-k guard would silently re-stamp k per driver node).
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
-
   /** Metadata lives at ONE of two locations. Artifacts written by
     * [[build]]/[[compact]] keep it INSIDE the grams directory as
     * `_gram.json` (underscore-prefixed, so Spark's file index skips
-    * it like `_SUCCESS`): the staged-swap rename then publishes data
-    * and metadata in the SAME atomic step — a k-changing rebuild has
-    * no instant where new-k hashes sit under old-k metadata. Layouts
-    * that manage their own gram files but reuse this metadata via
-    * [[ensureMeta]] (the streaming ingest loop's batch-addressed
-    * dirs) keep the original path-level `gram.json` — they never
-    * swap, so they never had the window. Readers check the
-    * grams-internal location first. */
-  private def metaPaths(path: String): Seq[org.apache.hadoop.fs.Path] =
-    Seq(new org.apache.hadoop.fs.Path(s"$path/grams", "_gram.json"),
-      new org.apache.hadoop.fs.Path(path, "gram.json"))
+    * it like `_SUCCESS`), published with the data in one rename.
+    * Layouts that manage their own gram files but reuse this
+    * metadata via [[ensureMeta]] (the streaming ingest loop's
+    * batch-addressed dirs) keep the original path-level `gram.json` —
+    * they never swap, so they never had the window. Readers check the
+    * grams-internal location first; every publish retires the
+    * path-level copy. */
+  private val Life = ArtifactIo.StandingIndex("grams", "_gram.json",
+    "gram index", legacyMeta = Some("gram.json"))
 
-  // Readers refuse loudly on the PARKED crash state (grams/ absent,
-  // grams_old complete): reporting "no gram index" there would invite
-  // a silent rebuild-from-one-batch or a fresh-k re-stamp — exactly
-  // the states the frozen-k contract forbids ([[ArtifactIo]] doc).
-  /** ONE guarded probe chain (parked check → locate → read), shared
-    * by every reader so an s3a:// artifact pays one round of metadata
-    * RPCs, not two back-to-back (metaExists-then-readMeta would
-    * re-run the guard and the location probes). */
-  private def readMetaOpt(path: String): Option[Meta] = {
-    ArtifactIo.requireNotParked(path, "grams", "gram index")
-    val fs = fsOf(path)
-    metaPaths(path).find(fs.exists).map { p =>
-      val s = ArtifactIo.readFile(fs, p)
-      def num(key: String) =
-        ("\"" + key + "\":(-?\\d+)").r.findFirstMatchIn(s).get.group(1).toInt
-      Meta(num("k"), num("generation"))
-    }
-  }
+  private def metaOf(m: ArtifactIo.Sidecar): Meta =
+    Meta(m.int("k"), m.int("generation"))
 
   private[graft] def readMeta(path: String): Meta =
-    readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
-      s"requirement failed: [GRAFT] no gram index at $path"))
-
-  private def writeMetaInto(dir: String, m: Meta): Unit =
-    ArtifactIo.writeFileInto(dir, "_gram.json", metaJson(m))
-
-  /** Path-level metadata write for [[ensureMeta]]-managed layouts.
-    * Staged write + ATOMIC overwrite-rename (FileContext supports
-    * Rename.OVERWRITE where plain FileSystem.rename does not): there
-    * is never an instant with no gram.json on disk — a
-    * delete-then-rename window would let a crash erase the frozen-k
-    * record over a live gram table, and the next ensureMeta would
-    * silently re-stamp a different k (the exact hazard the guard
-    * exists to prevent). */
-  private def writeMeta(path: String, m: Meta): Unit =
-    ArtifactIo.writeSmallFileAtomic(path, "gram.json", metaJson(m))
+    metaOf(Life.readMeta(path))
 
   /** Pin `k` against an existing artifact dir, or stamp it on a fresh
     * one (generation 1). The loud-failure half of the frozen-k
@@ -107,13 +64,18 @@ object GramIndex {
     * silently match nothing and mix window widths forever. */
   def ensureMeta(path: String, k: Int): Unit = {
     require(k > 0, "[GRAFT] gram index: k must be positive")
-    readMetaOpt(path) match {
+    Life.readMetaOpt(path).map(metaOf) match {
       case Some(m) =>
         require(m.k == k,
           s"[GRAFT] gram index at $path is frozen at k=${m.k}; " +
             s"got k=$k — mixing window widths silently matches nothing. " +
             "Rebuild the artifact to change k.")
-      case None => writeMeta(path, Meta(k, generation = 1))
+      // staged write + ATOMIC overwrite-rename: there is never an
+      // instant with no gram.json on disk, so a crash cannot erase
+      // the frozen-k record over a live gram table
+      case None =>
+        ArtifactIo.writeSidecar(path, "gram.json", "k" -> k,
+          "generation" -> 1)
     }
   }
 
@@ -126,65 +88,21 @@ object GramIndex {
     Dedup.gramOccurrences(docs, k, textCol, idCol)
       .select(col("__g").as("g")).distinct()
 
-  /** Staged two-rename swap shared by [[build]] rebuilds and
-    * [[compact]] — [[ArtifactIo.stagedSwap]] over `grams/`. A crash
-    * between the renames leaves the PARKED state: readers refuse,
-    * the next build/compact auto-heals. Single-writer is the caller
-    * contract. */
-  private def stagedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, what: String)(
-      writeStage: String => Unit): Unit =
-    ArtifactIo.stagedSwap(fs, path, "grams", what)(writeStage)
-
   /** Build (or REBUILD — generation bumps) the gram set at `path`.
     * One pass: tokenize → slide → hash → distinct. The distinct is a
     * hash agg with map-side partials, so hyper-duplicated boilerplate
     * collapses before the exchange.
     *
-    * Both fresh builds and rebuilds write the gram parquet AND its
-    * `_gram.json` metadata into a stage directory first, then publish
-    * with a rename ([[stagedSwap]] for rebuilds, one stage→live
-    * rename for fresh builds): data and metadata move in the SAME
-    * atomic step, so a rebuild that CHANGES k has no crash window
-    * where new-k hashes sit under old-k metadata (spec-pinned crash
-    * simulation in PipelineSpec). A crash mid-rebuild leaves either
-    * the complete old artifact or — between the two swap renames —
-    * no live dir at all with the complete old one parked at
-    * `grams_old` (recover by renaming back); never a mixed state. */
+    * The gram parquet AND its `_gram.json` metadata are staged
+    * together and published with a rename
+    * ([[ArtifactIo.StandingIndex]]): a rebuild that CHANGES k has no
+    * crash window where new-k hashes sit under old-k metadata
+    * (spec-pinned crash simulation in PipelineSpec). */
   def build(docs: DataFrame, path: String, k: Int = 5,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
     require(k > 0, "[GRAFT] gram index: k must be positive")
     val grams = distinctGrams(docs, k, textCol, idCol)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    // writer-side recovery: a parked crash state heals here (rename
-    // grams_old back), so the generation read below sees the old
-    // artifact and the counter never resets
-    ArtifactIo.healParked(fs, path, "grams", "gram index build")
-    val gen = readMetaOpt(path).map(_.generation + 1).getOrElse(1)
-    val live = new org.apache.hadoop.fs.Path(s"$path/grams")
-    if (!fs.exists(live)) {
-      // fresh build: stage parquet + metadata, publish with ONE rename
-      ArtifactIo.publishFresh(fs, path, "grams", "gram build") { stage =>
-        grams.write.mode("overwrite").parquet(stage)
-        writeMetaInto(stage, Meta(k, gen))
-      }
-      // retire a legacy path-level gram.json even on the fresh-publish
-      // branch: ensureMeta may have stamped it without any batch ever
-      // landing, and its k can differ from the new grams/_gram.json —
-      // readers prefer the internal copy, but a stale shadowed file
-      // must not outlive the publish
-      fs.delete(new org.apache.hadoop.fs.Path(path, "gram.json"), false)
-    } else {
-      stagedSwap(fs, path, "build") { stage =>
-        grams.write.mode("overwrite").parquet(stage)
-        writeMetaInto(stage, Meta(k, gen))
-      }
-      // retire a legacy path-level gram.json AFTER the swap (the
-      // grams-internal copy wins reads from the instant of the swap,
-      // so a crash before this delete is benign)
-      fs.delete(new org.apache.hadoop.fs.Path(path, "gram.json"), false)
-    }
+    Life.build(path, "k" -> k)(grams.write.mode("overwrite").parquet(_))
   }
 
   /** Hash the batch with the index's frozen k and append its distinct
@@ -193,7 +111,7 @@ object GramIndex {
       idCol: String = "doc_id"): Unit = {
     val m = readMeta(path)
     distinctGrams(docs, m.k, textCol, idCol)
-      .write.mode("append").parquet(s"$path/grams")
+      .write.mode("append").parquet(Life.data(path))
   }
 
   /** Maximal duplicated spans of `delta` documents against the indexed
@@ -210,7 +128,7 @@ object GramIndex {
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val m = readMeta(path)
     probeSpansAgainst(delta,
-      spark.read.parquet(s"$path/grams").select(col("g")), m.k,
+      spark.read.parquet(Life.data(path)).select(col("g")), m.k,
       textCol, idCol)
   }
 
@@ -278,15 +196,14 @@ object GramIndex {
     * own sink if a takedown must hit it. */
   def retire(spark: SparkSession, path: String, survivors: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, "grams", "gram index retire")
+    Life.healParked(path)
     val m = readMeta(path)
     // an ensureMeta-stamped artifact may have no grams/ yet (metadata
     // stamped, no batch landed): nothing stored means nothing to
     // retire — the rebuild below just publishes fresh at frozen k
-    val live = new org.apache.hadoop.fs.Path(s"$path/grams")
-    if (fs.exists(live))
-      require(!spark.read.parquet(s"$path/grams").columns
+    if (ArtifactIo.fsOf(path).exists(
+        new org.apache.hadoop.fs.Path(Life.data(path))))
+      require(!spark.read.parquet(Life.data(path)).columns
           .contains("batch"),
         "[GRAFT] retire: this is a BATCH-ADDRESSED streaming layout " +
           "(grams/batch=<id>) — its standing set is owned by the " +
@@ -296,29 +213,21 @@ object GramIndex {
   }
 
   /** Fold duplicate hashes from appended file sets into one compact
-    * table — the [[stagedSwap]] path, mirroring
-    * [[LshTextIndex.compact]]. The unchanged metadata rides INSIDE
-    * the stage dir (same k, same generation — compaction is a
-    * physical rewrite, not a semantic change), which also migrates a
-    * legacy path-level gram.json into the swap-safe layout. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ArtifactIo.healParked(fs, path, "grams", "gram index compact")
-    val m = readMeta(path)
-    val grams = spark.read.parquet(s"$path/grams")
-    require(!grams.columns.contains("batch"),
-      "[GRAFT] compact: this is a BATCH-ADDRESSED streaming layout " +
-        "(grams/batch=<id>) — use compactBatched(), which preserves " +
-        "the replay-prune provenance; a flat rewrite here would mix " +
-        "bare files with partition dirs and wedge the stream")
-    val folded = grams.distinct()
-    stagedSwap(fs, path, "compact") { stage =>
-      folded.write.mode("overwrite").parquet(stage)
-      writeMetaInto(stage, m)
+    * table, mirroring [[LshTextIndex.compact]]. The unchanged metadata
+    * rides INSIDE the stage dir (same k, same generation — compaction
+    * is a physical rewrite, not a semantic change), which also
+    * migrates a legacy path-level gram.json into the swap-safe
+    * layout. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      val grams = spark.read.parquet(Life.data(path))
+      require(!grams.columns.contains("batch"),
+        "[GRAFT] compact: this is a BATCH-ADDRESSED streaming layout " +
+          "(grams/batch=<id>) — use compactBatched(), which preserves " +
+          "the replay-prune provenance; a flat rewrite here would mix " +
+          "bare files with partition dirs and wedge the stream")
+      grams.distinct().write.mode("overwrite").parquet(stage)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(path, "gram.json"), false)
-  }
 
   /** Compaction for the BATCH-ADDRESSED streaming layout
     * (`grams/batch=<id>` —
@@ -341,23 +250,15 @@ object GramIndex {
     * replayed batch's recomputed grams overwrite its own partition;
     * grams it shares with older batches become presence-duplicates
     * (harmless — presence is the whole verdict) that the next
-    * compaction folds away. Crash-safe via the same [[stagedSwap]]
+    * compaction folds away. Crash-safe via the same staged
     * two-rename recovery as [[build]] rebuilds. */
-  def compactBatched(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ArtifactIo.healParked(fs, path, "grams", "gram index compactBatched")
-    val m = readMeta(path)
-    val grams = spark.read.parquet(s"$path/grams")
-    require(grams.columns.contains("batch"),
-      "[GRAFT] compactBatched: no batch partition column — this is a " +
-        "flat-layout artifact; use compact() instead")
-    val folded = grams.groupBy(col("g"))
-      .agg(min(col("batch")).as("batch"))
-    stagedSwap(fs, path, "compactBatched") { stage =>
-      folded.write.mode("overwrite").partitionBy("batch").parquet(stage)
-      writeMetaInto(stage, m)
+  def compactBatched(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      val grams = spark.read.parquet(Life.data(path))
+      require(grams.columns.contains("batch"),
+        "[GRAFT] compactBatched: no batch partition column — this is a " +
+          "flat-layout artifact; use compact() instead")
+      grams.groupBy(col("g")).agg(min(col("batch")).as("batch"))
+        .write.mode("overwrite").partitionBy("batch").parquet(stage)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(path, "gram.json"), false)
-  }
 }

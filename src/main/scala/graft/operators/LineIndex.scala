@@ -36,126 +36,59 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * with no read-modify-write of the standing table, the merge is a
   * read-side aggregate, and [[compact]] folds everything into the
   * base partition at data-sized width ([[ArtifactIo.compactWidth]]).
-  * The monotonic `_append_batch` watermark makes a STALE replay (an
-  * already-folded batch id re-arriving after a compact) a refused
-  * no-op, so the folded base can never be overwritten; the watermark
-  * lives at the artifact root, OUTSIDE `lines/`, so compaction's
-  * staged swap of the data dir preserves it.
+  * The append watermark ([[ArtifactIo.StandingIndex]]) makes a STALE
+  * replay (an already-folded batch id re-arriving after a compact) a
+  * refused no-op, so the folded base can never be overwritten.
   *
   * Takedown: per-line df carries no per-doc provenance, so
   * SUBTRACTING a document is undefined on this layout (the
   * [[GramIndex.retire]] rationale) — rebuild from the surviving
-  * corpus ([[build]] bumps the generation, which starts a fresh
-  * batch sequence — the watermark is generation-bound, so it
-  * invalidates exactly at publish with no delete-step crash
-  * window). A rebuilt artifact is
-  * indistinguishable from a freshly built one BY DESIGN: incremental
-  * callers ([[graft.streaming.Ingest.boilerplateIngestStream]])
+  * corpus. A rebuilt artifact is indistinguishable from a freshly
+  * built one BY DESIGN: incremental callers
+  * ([[graft.streaming.Ingest.boilerplateIngestStream]])
   * create the artifact EMPTY ([[create]]) and land every batch
   * through [[appendIdempotent]], so they never need a
   * residue-vs-rebuilt heuristic that could misread a legitimate
   * takedown rebuild as batch-0 crash residue.
   *
   * Metadata rides INSIDE `lines/` as `_lines.json`; every rewrite
-  * publishes via [[ArtifactIo.stagedSwap]] — no crash state mixes old
-  * and new rows.
+  * follows the shared [[ArtifactIo.StandingIndex]] lifecycle — no
+  * crash state mixes old and new rows.
   *
   * Reference anchor: none (vfs/src/vfs is vectors-only) — part of the
   * training-data-pipeline surface built beyond the reference. */
 object LineIndex {
   case class Meta(generation: Int)
 
-  private val Dir = "lines"
+  private val Life = ArtifactIo.StandingIndex("lines", "_lines.json",
+    "line index")
 
   /** The base partition: [[build]]'s corpus counts and [[compact]]'s
     * folded rows live here; [[appendIdempotent]] requires batch ids
     * ≥ 0, so the base can never collide with a landed batch. */
   private val BaseBatch = -1L
 
-  private def metaJson(m: Meta): String =
-    s"""{"generation":${m.generation}}"""
-
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
-
-  private def metaPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/$Dir", "_lines.json")
-
   /** Does an artifact exist at `path`? A parked crash state throws
-    * instead of answering false (the [[SigIndex.exists]] stance). */
-  def exists(path: String): Boolean = {
-    ArtifactIo.requireNotParked(path, Dir, "line index")
-    fsOf(path).exists(metaPath(path))
-  }
+    * instead of answering false. */
+  def exists(path: String): Boolean = Life.exists(path)
 
   /** Heal a crash parked mid-swap (compact or rebuild died between
     * its two renames): rename the complete old table back live. The
-    * streaming loop calls this at the top of every batch — without
-    * it, a parked state makes [[exists]] throw on every subsequent
-    * batch and the stream can never recover on its own. */
-  def healParked(path: String): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "line index heal")
-    ()
-  }
-
-  private def readMetaOpt(path: String): Option[Meta] = {
-    ArtifactIo.requireNotParked(path, Dir, "line index")
-    val fs = fsOf(path)
-    val p = metaPath(path)
-    if (!fs.exists(p)) None
-    else {
-      val txt = ArtifactIo.readFile(fs, p)
-      val gen = "\"generation\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"[GRAFT] line index: corrupt _lines.json at $path"))
-      Some(Meta(gen))
-    }
-  }
+    * streaming loop calls this at the top of every batch. */
+  def healParked(path: String): Unit = Life.healParked(path)
 
   private[graft] def readMeta(path: String): Meta =
-    readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
-      s"[GRAFT] no line index at $path (expected $Dir/_lines.json)"))
+    Meta(Life.readMeta(path).int("generation"))
 
-  private def writeBase(rows: DataFrame, path: String,
-      gen: Int): Unit = {
-    val fs = fsOf(path)
-    val live = new org.apache.hadoop.fs.Path(s"$path/$Dir")
-    def writeStage(stage: String): Unit = {
-      rows.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
-      ArtifactIo.writeFileInto(stage, "_lines.json",
-        metaJson(Meta(gen)))
-      // NO watermark retirement step: the watermark is bound to the
-      // generation ([[ArtifactIo.readWatermark]]), so it invalidates
-      // exactly when this stage's bumped generation PUBLISHES — a
-      // delete here had a crash window (delete done, rename not)
-      // that left the OLD artifact live with replay protection gone,
-      // letting a stale replay re-land an already-compacted batch
-      // and double-count df
-    }
-    if (!fs.exists(live))
-      ArtifactIo.publishFresh(fs, path, Dir, "line build")(writeStage)
-    else
-      ArtifactIo.stagedSwap(fs, path, Dir, "line build")(writeStage)
-  }
+  private def writeBase(rows: DataFrame, path: String): Unit =
+    Life.build(path)(stage =>
+      rows.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch"))
 
-  /** Build (or REBUILD — generation bumps, append watermark retires)
-    * the line table at `path` from `docs`. */
+  /** Build (or REBUILD — generation bumps, which starts a fresh batch
+    * sequence at publish) the line table at `path` from `docs`. */
   def build(docs: DataFrame, path: String, textCol: String = "text",
-      idCol: String = "doc_id"): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "line build")
-    // bind a pre-binding (unbound) watermark to the LIVE generation
-    // first ([[ArtifactIo.migrateLegacyWatermark]])
-    ArtifactIo.migrateLegacyWatermark(path,
-      readMetaOpt(path).map(_.generation).getOrElse(0))
-    // publish PAST any generation the watermark file names (uniform
-    // with the takedown-bearing artifacts — LineIndex has no delete
-    // today, but the protocol is shared; see
-    // [[ArtifactIo.watermarkGeneration]])
-    val gen = math.max(readMetaOpt(path).map(_.generation).getOrElse(0),
-      ArtifactIo.watermarkGeneration(path)) + 1
-    writeBase(Dedup.lineDocFreqs(docs, textCol, idCol), path, gen)
-  }
+      idCol: String = "doc_id"): Unit =
+    writeBase(Dedup.lineDocFreqs(docs, textCol, idCol), path)
 
   /** Create an EMPTY artifact (schema-bearing base partition, no
     * counts) — the incremental entry point: a streaming loop creates
@@ -164,13 +97,12 @@ object LineIndex {
     * whether a standing table is residue or a legitimate rebuild.
     * Idempotent: an existing artifact is left untouched. */
   def create(spark: SparkSession, path: String): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "line create")
-    if (readMetaOpt(path).isDefined) return
-    val empty = spark.createDataFrame(
+    Life.healParked(path)
+    if (Life.exists(path)) return
+    writeBase(spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(Seq(StructField("line", StringType),
-        StructField("df", LongType))))
-    writeBase(empty, path, 1)
+        StructField("df", LongType)))), path)
   }
 
   /** Land the batch's partial (line, df) rows at `lines/batch=<id>`
@@ -187,19 +119,17 @@ object LineIndex {
       textCol: String = "text", idCol: String = "doc_id"): Boolean = {
     require(batchId >= 0L,
       "[GRAFT] line index append: batchId must be >= 0")
-    val gen = readMeta(path).generation
-    if (batchId <= ArtifactIo.readWatermark(path, gen)) return false
-    Dedup.lineDocFreqs(docs, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$path/$Dir/batch=$batchId")
-    ArtifactIo.commitWatermark(path, gen, batchId)
-    true
+    Life.appendIdempotent(path, batchId) {
+      Dedup.lineDocFreqs(docs, textCol, idCol)
+        .write.mode("overwrite").parquet(s"${Life.data(path)}/batch=$batchId")
+    }
   }
 
   /** The MERGED corpus-wide (line, df) view — base + batch partials
     * folded by one read-side hash aggregate over slim rows. */
   def counts(spark: SparkSession, path: String): DataFrame = {
     readMeta(path)
-    spark.read.parquet(s"$path/$Dir")
+    spark.read.parquet(Life.data(path))
       .groupBy(col("line")).agg(sum(col("df")).as("df"))
   }
 
@@ -223,34 +153,23 @@ object LineIndex {
     Dedup.stripBoilerplateWith(docs,
       boilerplate(spark, path, minDocFreq), textCol, idCol)
 
-  /** Should an ingest loop schedule [[compact]]? One namenode listing
-    * with the [[ArtifactIo.shouldCompact]] convergence contract. (A
-    * triggering batch lists once here and once inside [[compact]] —
-    * one extra LIST per compaction EVENT, not per batch; accepted.) */
-  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean = {
-    require(maxDataFiles > 0,
-      "[GRAFT] line index needsCompaction: maxDataFiles must be positive")
-    ArtifactIo.requireNotParked(path, Dir, "line index")
-    ArtifactIo.shouldCompact(s"$path/$Dir", maxDataFiles)
-  }
+  /** Should an ingest loop schedule [[compact]]? (A triggering batch
+    * lists once here and once inside [[compact]] — one extra LIST per
+    * compaction EVENT, not per batch; accepted.) */
+  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean =
+    Life.needsCompaction(path, maxDataFiles)
 
   /** Fold base + batch partials into one (line, df) row per line in
     * the BASE partition AND fix small-files growth (data-sized
     * width). Physical rewrite, metadata unchanged — read results are
     * identical before and after ([[counts]] merges on read;
-    * compaction just pre-folds). The watermark survives (it lives at
-    * the artifact root, outside the swapped dir), so a stale replay
-    * of a folded batch is still refused. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "line compact")
-    val m = readMeta(path)
-    val folded = spark.read.parquet(s"$path/$Dir")
-      .groupBy(col("line")).agg(sum(col("df")).as("df"))
-      .repartition(ArtifactIo.compactWidth(s"$path/$Dir"))
-    ArtifactIo.stagedSwap(fs, path, Dir, "line compact") { stage =>
-      folded.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
-      ArtifactIo.writeFileInto(stage, "_lines.json", metaJson(m))
+    * compaction just pre-folds). The watermark survives, so a stale
+    * replay of a folded batch is still refused. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      spark.read.parquet(Life.data(path))
+        .groupBy(col("line")).agg(sum(col("df")).as("df"))
+        .repartition(ArtifactIo.compactWidth(Life.data(path)))
+        .write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
     }
-  }
 }

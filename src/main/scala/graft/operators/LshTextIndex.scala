@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,16 +35,11 @@ import org.apache.spark.sql.functions._
   * params at call sites). `generation` bumps on rebuild so derived
   * artifacts can detect staleness, mirroring [[IvfIndex]]. Metadata
   * rides INSIDE `bands/` as `_lsh.json` (underscore-prefixed, skipped
-  * by scans like `_SUCCESS`) and goes through the Hadoop FileSystem
-  * of the artifact path (NOT java.nio — a remote hdfs:// or s3a://
-  * artifact would otherwise resolve against the driver's local cwd),
-  * so every publish — fresh build, params-changing rebuild, compact —
-  * moves data and its frozen params in ONE atomic rename: there is no
-  * crash state with new-params triples under old-params metadata, and
-  * no in-place overwrite that could leave a PARTIAL band table under
-  * live metadata (the [[GramIndex]] crash-atomicity stance). A legacy
-  * path-level `lsh.json` is read as a fallback and migrated into the
-  * swap-safe layout by the next rebuild/compact.
+  * by scans like `_SUCCESS`), so every publish — fresh build,
+  * params-changing rebuild, delete, compact — moves data and its
+  * frozen params in ONE atomic rename ([[ArtifactIo.StandingIndex]]).
+  * A legacy path-level `lsh.json` is read as a fallback and migrated
+  * into the swap-safe layout by the next publish.
   *
   * Reference anchor: the reference has no incremental text dedup at
   * all (vfs/src/vfs has no text pipeline) — this is part of the
@@ -54,15 +47,8 @@ import org.apache.spark.sql.functions._
 object LshTextIndex {
   case class Meta(bands: Int, rowsPerBand: Int, generation: Int)
 
-  private def metaJson(m: Meta): String =
-    s"""{"bands":${m.bands},"rowsPerBand":${m.rowsPerBand},"generation":${m.generation}}"""
-
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
-
-  private def metaPaths(path: String): Seq[org.apache.hadoop.fs.Path] =
-    Seq(new org.apache.hadoop.fs.Path(s"$path/bands", "_lsh.json"),
-      new org.apache.hadoop.fs.Path(path, "lsh.json"))
+  private val Life = ArtifactIo.StandingIndex("bands", "_lsh.json",
+    "LSH index", legacyMeta = Some("lsh.json"))
 
   /** Does an index artifact exist at `path`? The hook callers use to
     * pick build-vs-append (the streaming ingest loop) — location-
@@ -70,43 +56,13 @@ object LshTextIndex {
     * PARKED crash state (bands/ absent, bands_old complete) throws
     * instead of answering false: "false" would invite the ingest
     * loop to silently REBUILD from one micro-batch, discarding the
-    * whole corpus band table ([[ArtifactIo]] doc). */
-  def exists(path: String): Boolean = {
-    ArtifactIo.requireNotParked(path, "bands", "LSH index")
-    val fs = fsOf(path)
-    metaPaths(path).exists(fs.exists)
+    * whole corpus band table. */
+  def exists(path: String): Boolean = Life.exists(path)
+
+  private[graft] def readMeta(path: String): Meta = {
+    val m = Life.readMeta(path)
+    Meta(m.int("bands"), m.int("rowsPerBand"), m.int("generation"))
   }
-
-  /** ONE guarded probe chain (parked check → locate → read) — see
-    * [[GramIndex]]'s readMetaOpt for the remote-RPC rationale. */
-  private def readMetaOpt(path: String): Option[Meta] = {
-    ArtifactIo.requireNotParked(path, "bands", "LSH index")
-    val fs = fsOf(path)
-    metaPaths(path).find(fs.exists).map { p =>
-      val s = ArtifactIo.readFile(fs, p)
-      def num(k: String) =
-        ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s).get.group(1).toInt
-      Meta(num("bands"), num("rowsPerBand"), num("generation"))
-    }
-  }
-
-  private[graft] def readMeta(path: String): Meta =
-    readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
-      s"requirement failed: [GRAFT] no LSH index at $path"))
-
-  private def writeMetaInto(dir: String, m: Meta): Unit =
-    ArtifactIo.writeFileInto(dir, "_lsh.json", metaJson(m))
-
-  /** Staged two-rename swap shared by rebuilds and [[compact]] (the
-    * [[GramIndex]] shape): write the replacement (parquet + staged
-    * `_lsh.json`) under `_stage`, park the live dir at `_old`, move
-    * the stage in, drop `_old`. A crash between the renames leaves
-    * `_old` complete — rename back to recover. Single-writer is the
-    * caller contract. */
-  private def stagedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, what: String)(
-      writeStage: String => Unit): Unit =
-    ArtifactIo.stagedSwap(fs, path, "bands", what)(writeStage)
 
   /** Build (or REBUILD — generation bumps) the band table at `path`.
     * One pass over the corpus: tokenize → portable minhash signature →
@@ -119,29 +75,10 @@ object LshTextIndex {
       idCol: String = "doc_id"): Unit = {
     require(bands > 0 && rowsPerBand > 0,
       "[GRAFT] lsh index: bands and rowsPerBand must be positive")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    // writer-side recovery: heal a parked crash state first, so the
-    // generation read sees the old artifact and never resets to 1
-    ArtifactIo.healParked(fs, path, "bands", "lsh build")
-    val gen = readMetaOpt(path).map(_.generation + 1).getOrElse(1)
     val banded = Dedup.bandedRelation(docs, "id", textCol, idCol,
       bands, rowsPerBand)
-    val live = new org.apache.hadoop.fs.Path(s"$path/bands")
-    if (!fs.exists(live)) {
-      ArtifactIo.publishFresh(fs, path, "bands", "lsh build") { stage =>
-        banded.write.mode("overwrite").parquet(stage)
-        writeMetaInto(stage, Meta(bands, rowsPerBand, gen))
-      }
-    } else {
-      stagedSwap(fs, path, "lsh build") { stage =>
-        banded.write.mode("overwrite").parquet(stage)
-        writeMetaInto(stage, Meta(bands, rowsPerBand, gen))
-      }
-    }
-    // retire a legacy path-level lsh.json AFTER the publish (the
-    // bands-internal copy wins reads from the instant of the rename)
-    fs.delete(new org.apache.hadoop.fs.Path(path, "lsh.json"), false)
+    Life.build(path, "bands" -> bands, "rowsPerBand" -> rowsPerBand)(
+      banded.write.mode("overwrite").parquet(_))
   }
 
   /** Band `docs` with the index's frozen params and append their
@@ -152,7 +89,7 @@ object LshTextIndex {
     val m = readMeta(path)
     Dedup.bandedRelation(docs, "id", textCol, idCol, m.bands,
       m.rowsPerBand)
-      .write.mode("append").parquet(s"$path/bands")
+      .write.mode("append").parquet(Life.data(path))
   }
 
   /** Near-dups of `delta` docs against the indexed corpus:
@@ -186,7 +123,7 @@ object LshTextIndex {
     val stored = storedBands match {
       case Some(view) => Dedup.capBuckets(view, maxBucket)
       case None => Dedup.capBucketsAnti(
-        spark.read.parquet(s"$path/bands")
+        spark.read.parquet(Life.data(path))
           .withColumnRenamed("id", "corpus_id"), maxBucket)
     }
     val candidates = Dedup.bandedRelation(delta, "probe_id", textCol,
@@ -223,21 +160,15 @@ object LshTextIndex {
   def deleteIds(spark: SparkSession, path: String,
       ids: Seq[Any]): Long = {
     if (ids.isEmpty) return 0L
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, "bands", "lsh delete")
-    val m = readMeta(path)
-    val bands = spark.read.parquet(s"$path/bands")
-    // removed count from a pushed-down IN scan (tiny), priced before
-    // the swap so the rewrite itself stays a single pass
-    val removed = bands.filter(col("id").isin(ids: _*)).count()
-    val kept = bands.filter(!col("id").isin(ids: _*))
-      .repartition(col("band"))
-    stagedSwap(fs, path, "lsh delete") { stage =>
-      kept.write.mode("overwrite").parquet(stage)
-      writeMetaInto(stage, m.copy(generation = m.generation + 1))
+    Life.takedown(path) { stage =>
+      val bands = spark.read.parquet(Life.data(path))
+      // removed count from a pushed-down IN scan (tiny), priced before
+      // the rewrite so the rewrite itself stays a single pass
+      val removed = bands.filter(col("id").isin(ids: _*)).count()
+      bands.filter(!col("id").isin(ids: _*)).repartition(col("band"))
+        .write.mode("overwrite").parquet(stage)
+      removed
     }
-    fs.delete(new org.apache.hadoop.fs.Path(path, "lsh.json"), false)
-    removed
   }
 
   /** Rewrite the band table into one file per shuffle partition —
@@ -245,32 +176,20 @@ object LshTextIndex {
     * files listed (the classic small-files problem). The unchanged
     * metadata rides INSIDE the stage dir (compaction is a physical
     * rewrite, not a semantic change), which also migrates a legacy
-    * path-level lsh.json into the swap-safe layout. Same staged
-    * two-rename swap and single-writer stance as
-    * [[IvfIndex.compactAssignments]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ArtifactIo.healParked(fs, path, "bands", "lsh compact")
-    val m = readMeta(path)
-    val folded = spark.read.parquet(s"$path/bands")
-      .repartition(ArtifactIo.compactWidth(s"$path/bands"), col("band"))
-    stagedSwap(fs, path, "lsh compact") { stage =>
-      folded.write.mode("overwrite").parquet(stage)
-      writeMetaInto(stage, m)
+    * path-level lsh.json into the swap-safe layout. Same single-writer
+    * stance as [[IvfIndex.compactAssignments]]. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      spark.read.parquet(Life.data(path))
+        .repartition(ArtifactIo.compactWidth(Life.data(path)), col("band"))
+        .write.mode("overwrite").parquet(stage)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(path, "lsh.json"), false)
-  }
 
   /** Should an ingest loop schedule [[compact]]? Keys on ONE namenode
     * listing of the band table's data files (no data read), so the
     * check is cheap enough to run per batch — the
     * [[IvfIndex.needsRebalance]] self-scheduling pattern applied to
     * small-files growth. */
-  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean = {
-    require(maxDataFiles > 0,
-      "[GRAFT] lsh needsCompaction: maxDataFiles must be positive")
-    ArtifactIo.requireNotParked(path, "bands", "LSH index")
-    ArtifactIo.shouldCompact(s"$path/bands", maxDataFiles)
-  }
+  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean =
+    Life.needsCompaction(path, maxDataFiles)
 }

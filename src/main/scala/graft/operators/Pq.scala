@@ -39,15 +39,6 @@ import org.apache.spark.sql.functions._
 object PqIndex {
   case class Meta(m: Int, ks: Int, dim: Int, metric: String, seed: Long)
 
-  private def metaJson(meta: Meta): String =
-    s"""{"m":${meta.m},"ks":${meta.ks},"dim":${meta.dim},"metric":"${meta.metric}","seed":${meta.seed}}"""
-  private def parseMeta(s: String): Meta = {
-    def num(k: String) = ("\"" + k + "\":(-?\\d+)").r
-      .findFirstMatchIn(s).get.group(1).toLong
-    val metric = "\"metric\":\"(\\w+)\"".r.findFirstMatchIn(s).get.group(1)
-    Meta(num("m").toInt, num("ks").toInt, num("dim").toInt, metric,
-      num("seed"))
-  }
   /** Same rebuild-sentinel contract as [[IvfIndex]]: a rebuild's
     * live-mutation window (dir swaps + meta write) is marked; a crash
     * inside it makes every probe refuse loudly (derived data — the
@@ -59,7 +50,9 @@ object PqIndex {
     require(!ArtifactIo.fileExists(path, RebuildSentinel),
       s"[GRAFT] PQ artifact at $path has an in-progress or crashed " +
         "rebuild (pq.rebuilding present) — rerun PqIndex.build")
-    parseMeta(ArtifactIo.readSmallFile(path, "pq.json"))
+    val m = ArtifactIo.readSidecar(path, "pq.json")
+    Meta(m.int("m"), m.int("ks"), m.int("dim"), m.str("metric"),
+      m.long("seed"))
   }
 
   /** codebooks(j)(k) = centroid k of subspace j (dim/m floats). */
@@ -147,11 +140,11 @@ object PqIndex {
       ArtifactIo.swapIn(fs, path, "codebooks")
       ArtifactIo.swapIn(fs, path, "codes")
     }
-    ArtifactIo.writeSmallFileAtomic(path, "pq.json",
-      metaJson(Meta(m, ks, dim, metric match {
+    ArtifactIo.writeSidecar(path, "pq.json", "m" -> m, "ks" -> ks,
+      "dim" -> dim, "metric" -> (metric match {
         case Metric.Cosine => "cosine"
         case Metric.Euclidean => "euclidean"
-      }, seed)))
+      }), "seed" -> seed)
     ArtifactIo.deleteFile(path, RebuildSentinel)
   }
 
@@ -403,9 +396,8 @@ object IvfPq {
     // generation and every probe of this artifact refuses until
     // [[refresh]] re-heals + re-stamps
     val parent = IvfIndex.readMeta(ivfPath)
-    ArtifactIo.writeSmallFileAtomic(path, "ivfpq.json",
-      metaJson(PqMeta(m, ks, dim, seed, parent.nAssign,
-        parent.generation)))
+    writeMeta(path, PqMeta(m, ks, dim, seed, parent.nAssign,
+      parent.generation))
     ArtifactIo.deleteFile(path, RebuildSentinel)
   }
 
@@ -528,30 +520,27 @@ object IvfPq {
     newCodes.unpersist()
     // ---- healed: re-stamp to the parent's current generation ----
     val parent = IvfIndex.readMeta(ivfPath)
-    ArtifactIo.writeSmallFileAtomic(path, "ivfpq.json",
-      metaJson(meta.copy(nAssign = parent.nAssign,
-        gen = parent.generation)))
+    writeMeta(path, meta.copy(nAssign = parent.nAssign,
+      gen = parent.generation))
     n
   }
 
   private[operators] case class PqMeta(m: Int, ks: Int, dim: Int,
       seed: Long, nAssign: Int, gen: Int)
 
-  private def metaJson(meta: PqMeta): String =
-    s"""{"m":${meta.m},"ks":${meta.ks},"dim":${meta.dim},"seed":${meta.seed},"nAssign":${meta.nAssign},"gen":${meta.gen}}"""
+  private def writeMeta(path: String, meta: PqMeta): Unit =
+    ArtifactIo.writeSidecar(path, "ivfpq.json", "m" -> meta.m,
+      "ks" -> meta.ks, "dim" -> meta.dim, "seed" -> meta.seed,
+      "nAssign" -> meta.nAssign, "gen" -> meta.gen)
 
   private def readMeta(path: String): PqMeta = {
     require(!ArtifactIo.fileExists(path, RebuildSentinel),
       s"[GRAFT] IVF-PQ artifact at $path has an in-progress or " +
         "crashed rebuild (ivfpq.rebuilding present) — rerun " +
         "IvfPq.build")
-    val s = ArtifactIo.readSmallFile(path, "ivfpq.json")
-    def num(k: String) = ("\"" + k + "\":(-?\\d+)").r
-      .findFirstMatchIn(s).get.group(1).toLong
-    def opt(k: String, default: Int) = ("\"" + k + "\":(-?\\d+)").r
-      .findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(default)
-    PqMeta(num("m").toInt, num("ks").toInt, num("dim").toInt,
-      num("seed"), opt("nAssign", 1), opt("gen", 1))
+    val m = ArtifactIo.readSidecar(path, "ivfpq.json")
+    PqMeta(m.int("m"), m.int("ks"), m.int("dim"), m.long("seed"),
+      m.intOr("nAssign", 1), m.intOr("gen", 1))
   }
 
   /** Refuse to probe with a stale artifact: the parent's clustering

@@ -38,9 +38,8 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.Multimodal.audioNearDupPairs]] /
   * [[Dedup.simHashPairs]] on the delta) — matching the text probe's
   * semantics. Metadata rides INSIDE `sigs/` as `_sig.json` and every
-  * rewrite (delete, compact) publishes via [[ArtifactIo.stagedSwap]]
-  * — no crash state mixes old and new rows, the [[GramIndex]]
-  * atomicity stance.
+  * rewrite follows the shared [[ArtifactIo.StandingIndex]] lifecycle
+  * — no crash state mixes old and new rows.
   *
   * Reference anchor: the reference has no media pipeline at all
   * (vfs/src/vfs is vectors-only) — part of the training-data-pipeline
@@ -48,51 +47,21 @@ import org.apache.spark.sql.functions._
 object SigIndex {
   case class Meta(family: String, generation: Int)
 
-  private val Dir = "sigs"
+  private val Life = ArtifactIo.StandingIndex("sigs", "_sig.json",
+    "sig index")
 
   private def requireFamilyToken(family: String): Unit =
     require(family.nonEmpty && family.matches("[A-Za-z0-9._-]+"),
       s"[GRAFT] sig index: family must be a simple token, got '$family'")
 
-  private def metaJson(m: Meta): String =
-    s"""{"family":"${m.family}","generation":${m.generation}}"""
-
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
-
-  private def metaPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/$Dir", "_sig.json")
-
   /** Does an artifact exist at `path`? A parked crash state throws
-    * instead of answering false ([[ArtifactIo]] doc: "false" invites
-    * an ingest loop to rebuild from one micro-batch). */
-  def exists(path: String): Boolean = {
-    ArtifactIo.requireNotParked(path, Dir, "sig index")
-    fsOf(path).exists(metaPath(path))
-  }
+    * instead of answering false. */
+  def exists(path: String): Boolean = Life.exists(path)
 
-  private def readMetaOpt(path: String): Option[Meta] = {
-    ArtifactIo.requireNotParked(path, Dir, "sig index")
-    val fs = fsOf(path)
-    val p = metaPath(path)
-    if (!fs.exists(p)) None
-    else {
-      val txt = ArtifactIo.readFile(fs, p)
-      val fam = "\"family\"\\s*:\\s*\"([^\"]*)\"".r
-        .findFirstMatchIn(txt).map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(
-          s"[GRAFT] sig index: corrupt _sig.json at $path"))
-      val gen = "\"generation\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"[GRAFT] sig index: corrupt _sig.json at $path"))
-      Some(Meta(fam, gen))
-    }
+  private[graft] def readMeta(path: String): Meta = {
+    val m = Life.readMeta(path)
+    Meta(m.str("family"), m.int("generation"))
   }
-
-  private[graft] def readMeta(path: String): Meta =
-    readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
-      s"[GRAFT] no sig index at $path (expected $Dir/_sig.json)"))
 
   private def requireFamily(m: Meta, family: String, op: String): Unit =
     require(m.family == family,
@@ -112,37 +81,9 @@ object SigIndex {
     * `path` from (id, sig) rows, freezing `family`. */
   def build(sigs: DataFrame, path: String, family: String): Unit = {
     requireFamilyToken(family)
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "sig build")
-    // bind a pre-binding (unbound) watermark to the LIVE generation
-    // first — otherwise it would stay valid for the rebuilt
-    // generation and silently refuse its fresh batch sequence
-    ArtifactIo.migrateLegacyWatermark(path,
-      readMetaOpt(path).map(_.generation).getOrElse(0))
-    // publish PAST any generation the watermark file names, not just
-    // meta's: a takedown delete parked pre-publish leaves meta at m
-    // with the carried watermark bound to m+1 — a meta-only bump
-    // would publish under that exact generation and silently refuse
-    // the fresh batch sequence ([[ArtifactIo.watermarkGeneration]])
-    val gen = math.max(readMetaOpt(path).map(_.generation).getOrElse(0),
-      ArtifactIo.watermarkGeneration(path)) + 1
     val rows = slim(sigs)
-    val live = new org.apache.hadoop.fs.Path(s"$path/$Dir")
-    def writeStage(stage: String): Unit = {
-      rows.write.mode("overwrite").parquet(stage)
-      ArtifactIo.writeFileInto(stage, "_sig.json",
-        metaJson(Meta(family, gen)))
-      // NO watermark retirement step: the watermark is bound to the
-      // generation ([[ArtifactIo.readWatermark]]), so the rebuilt
-      // artifact's fresh batch sequence starts exactly when this
-      // stage's bumped generation publishes — the old delete-here
-      // protocol had a crash window (delete done, rename not) that
-      // left the OLD artifact live without replay protection.
-    }
-    if (!fs.exists(live))
-      ArtifactIo.publishFresh(fs, path, Dir, "sig build")(writeStage)
-    else
-      ArtifactIo.stagedSwap(fs, path, Dir, "sig build")(writeStage)
+    Life.build(path, "family" -> family)(
+      rows.write.mode("overwrite").parquet(_))
   }
 
   /** Append delta (id, sig) rows. Cost ∝ batch; the standing table is
@@ -160,39 +101,27 @@ object SigIndex {
   def append(sigs: DataFrame, path: String, family: String): Unit = {
     requireFamilyToken(family)
     requireFamily(readMeta(path), family, "append")
-    slim(sigs).write.mode("append").parquet(s"$path/$Dir")
+    slim(sigs).write.mode("append").parquet(Life.data(path))
   }
 
-  /** [[append]] guarded by the shared generation-bound watermark
-    * ([[ArtifactIo.readWatermark]] — ONE protocol for SigIndex /
-    * BinaryIndex / LineIndex): a replay of an already-committed
+  /** [[append]] guarded by the shared append watermark
+    * ([[ArtifactIo.StandingIndex]]): a replay of an already-committed
     * `batchId` is an exact no-op, so at-least-once drivers never
     * double-store a print. Only a crash INSIDE the append→marker
     * window can still duplicate (and the probe's post-join dedup
-    * keeps even that from corrupting results). [[build]] bumps the
-    * generation, which starts a fresh batch sequence at publish time
-    * with no delete-step crash window. Returns whether the batch was
-    * applied. */
+    * keeps even that from corrupting results). Returns whether the
+    * batch was applied. */
   def appendIdempotent(sigs: DataFrame, path: String, family: String,
-      batchId: Long): Boolean = {
-    val gen = readMeta(path).generation
-    if (batchId <= ArtifactIo.readWatermark(path, gen)) return false
-    append(sigs, path, family)
-    ArtifactIo.commitWatermark(path, gen, batchId)
-    true
-  }
+      batchId: Long): Boolean =
+    Life.appendIdempotent(path, batchId)(append(sigs, path, family))
 
   /** Should an ingest loop schedule [[compact]]? Every [[append]]
     * adds a file set and probe latency grows with files listed; this
     * keys on ONE namenode listing (no data read) so the check is
     * cheap enough to run per batch — the [[IvfIndex.needsRebalance]]
     * self-scheduling pattern applied to small-files growth. */
-  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean = {
-    require(maxDataFiles > 0,
-      "[GRAFT] sig index needsCompaction: maxDataFiles must be positive")
-    ArtifactIo.requireNotParked(path, Dir, "sig index")
-    ArtifactIo.shouldCompact(s"$path/$Dir", maxDataFiles)
-  }
+  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean =
+    Life.needsCompaction(path, maxDataFiles)
 
   /** Near-dups of `delta` prints against the indexed corpus:
     * (probe_id, corpus_id, hamming ≤ `maxHamming`). Both sides go
@@ -222,7 +151,7 @@ object SigIndex {
           .withColumnRenamed("sig", "__cs"),
         maxBucket, Seq("band", "bval"))
       case None => Dedup.capBucketsAnti(
-        Dedup.sigBands(spark.read.parquet(s"$path/$Dir"), "corpus_id")
+        Dedup.sigBands(spark.read.parquet(Life.data(path)), "corpus_id")
           .withColumnRenamed("sig", "__cs"),
         maxBucket, Seq("band", "bval"))
     }
@@ -245,51 +174,29 @@ object SigIndex {
     * ([[IvfIndex.deleteIds]] / [[LshTextIndex.deleteIds]] /
     * [[BinaryIndex.deleteIds]] / [[GramIndex.retire]]): a deleted
     * asset's print must never surface it as a probe candidate again.
-    * One anti-join rewrite via the staged swap (a crash leaves the
-    * old table or the new one, never a mix); `generation` bumps.
-    * `ids` are driver-sized by contract. Returns rows removed. */
+    * One anti-join rewrite through the shared takedown
+    * ([[ArtifactIo.StandingIndex]]: generation bumps, watermark
+    * carried). `ids` are driver-sized by contract. Returns rows
+    * removed. */
   def deleteIds(spark: SparkSession, path: String,
       ids: Seq[Any]): Long = {
     if (ids.isEmpty) return 0L
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "sig delete")
-    val m = readMeta(path)
-    val rows = spark.read.parquet(s"$path/$Dir")
-    val removed = rows.filter(col("id").isin(ids: _*)).count()
-    val kept = rows.filter(!col("id").isin(ids: _*))
-    // carry the generation-bound watermark into the new generation
-    // BEFORE the swap: a takedown must not restart the batch sequence
-    // (a stale replay would re-append — and could RESURRECT the very
-    // ids this delete removes). Carry-then-swap means a crash in
-    // between leaves the OLD generation live with a mismatched
-    // watermark — stale replays then re-append DUPLICATES to the old
-    // artifact (absorbed by the probe's post-join dedup), never
-    // deleted rows to the new one; and a delete re-run after that
-    // crash publishes a new generation whose watermark is already the
-    // carried value.
-    val last = ArtifactIo.readWatermark(path, m.generation)
-    if (last >= 0L)
-      ArtifactIo.commitWatermark(path, m.generation + 1, last)
-    ArtifactIo.stagedSwap(fs, path, Dir, "sig delete") { stage =>
-      kept.write.mode("overwrite").parquet(stage)
-      ArtifactIo.writeFileInto(stage, "_sig.json",
-        metaJson(m.copy(generation = m.generation + 1)))
+    Life.takedown(path) { stage =>
+      val rows = spark.read.parquet(Life.data(path))
+      val removed = rows.filter(col("id").isin(ids: _*)).count()
+      rows.filter(!col("id").isin(ids: _*))
+        .write.mode("overwrite").parquet(stage)
+      removed
     }
-    removed
   }
 
   /** Rewrite the table into one file set — each [[append]] adds
     * files and probe latency grows with files listed. Physical
     * rewrite, metadata unchanged ([[LshTextIndex.compact]]). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "sig compact")
-    val m = readMeta(path)
-    val folded = spark.read.parquet(s"$path/$Dir")
-      .repartition(ArtifactIo.compactWidth(s"$path/$Dir"))
-    ArtifactIo.stagedSwap(fs, path, Dir, "sig compact") { stage =>
-      folded.write.mode("overwrite").parquet(stage)
-      ArtifactIo.writeFileInto(stage, "_sig.json", metaJson(m))
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      spark.read.parquet(Life.data(path))
+        .repartition(ArtifactIo.compactWidth(Life.data(path)))
+        .write.mode("overwrite").parquet(stage)
     }
-  }
 }

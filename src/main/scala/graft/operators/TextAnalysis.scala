@@ -830,18 +830,13 @@ object TextAnalysis {
     model.contexts.write.mode("overwrite").parquet(s"$path/contexts")
     // ArtifactIo: Hadoop-FS metadata write (a remote artifact path
     // would otherwise land lm.json on the driver's local disk)
-    ArtifactIo.writeSmallFileAtomic(path, "lm.json",
-      s"""{"vocabSize":${model.vocabSize}}""")
+    ArtifactIo.writeSidecar(path, "lm.json", "vocabSize" -> model.vocabSize)
   }
 
   /** Load a [[saveLmModel]] artifact. */
   def loadLmModel(spark: org.apache.spark.sql.SparkSession,
       path: String): LmModel = {
-    val meta = ArtifactIo.readSmallFile(path, "lm.json")
-    val v = """"vocabSize":(\d+)""".r.findFirstMatchIn(meta)
-      .getOrElse(throw new IllegalStateException(
-        s"[GRAFT] $path/lm.json has no vocabSize"))
-      .group(1).toLong
+    val v = ArtifactIo.readSidecar(path, "lm.json").long("vocabSize")
     LmModel(spark.read.parquet(s"$path/bigrams"),
       spark.read.parquet(s"$path/contexts"), v)
   }
@@ -1073,19 +1068,16 @@ object TextAnalysis {
     * loads once, like [[saveLmModel]]. */
   def saveWordModel(model: WordModel, path: String): Unit = {
     model.counts.write.mode("overwrite").parquet(s"$path/counts")
-    ArtifactIo.writeSmallFileAtomic(path, "words.json",
-      s"""{"nWords":${model.nWords},"vocab":${model.vocab}}""")
+    ArtifactIo.writeSidecar(path, "words.json",
+      "nWords" -> model.nWords, "vocab" -> model.vocab)
   }
 
   /** Load a [[saveWordModel]] artifact. */
   def loadWordModel(spark: org.apache.spark.sql.SparkSession,
       path: String): WordModel = {
-    val meta = ArtifactIo.readSmallFile(path, "words.json")
-    def l(k: String): Long = (k + """":(\d+)""").r
-      .findFirstMatchIn(meta).getOrElse(throw new IllegalStateException(
-        s"[GRAFT] $path/words.json has no $k")).group(1).toLong
-    WordModel(spark.read.parquet(s"$path/counts"), l("nWords"),
-      l("vocab"))
+    val m = ArtifactIo.readSidecar(path, "words.json")
+    WordModel(spark.read.parquet(s"$path/counts"), m.long("nWords"),
+      m.long("vocab"))
   }
 
   /** DSIR selection: deterministic Bernoulli keep with probability

@@ -27,129 +27,70 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * append, so a key seen in an earlier batch may recur in a later
   * partition; presence semantics absorb that, and [[compact]] folds
   * the partitions to one distinct set). A replay at ANY crash point
-  * rewrites the same partition with identical content; the
-  * generation-bound monotonic watermark ([[ArtifactIo.readWatermark]])
-  * refuses STALE batch ids so an already-compacted batch can never
-  * re-land; the watermark lives at the artifact root, OUTSIDE
-  * `urls/`, so compaction's staged swap preserves it.
+  * rewrites the same partition with identical content; the append
+  * watermark refuses STALE batch ids so an already-compacted batch
+  * can never re-land.
   *
   * Takedown ([[deleteUrls]]): keys ARE the rows, so subtraction is
   * well-defined here (unlike [[LineIndex]]'s counted lines) — an
-  * anti-join staged-swap rewrite folding to the base partition, with
-  * the generation bumped and the watermark carried (the
-  * [[SigIndex.deleteIds]] stance: a takedown must not restart the
-  * batch sequence). After a takedown the removed pages are NEW again
-  * by design — a re-crawl re-admits them.
+  * anti-join rewrite folding to the base partition. After a takedown
+  * the removed pages are NEW again by design — a re-crawl re-admits
+  * them.
   *
   * Metadata rides INSIDE `urls/` as `_urls.json`; every rewrite
-  * publishes via [[ArtifactIo.stagedSwap]] — no crash state mixes old
-  * and new rows.
+  * follows the shared [[ArtifactIo.StandingIndex]] lifecycle — no
+  * crash state mixes old and new rows.
   *
   * Reference anchor: none (vfs/src/vfs is vectors-only) — part of the
   * training-data-pipeline surface built beyond the reference. */
 object UrlIndex {
   case class Meta(generation: Int)
 
-  private val Dir = "urls"
+  private val Life = ArtifactIo.StandingIndex("urls", "_urls.json",
+    "url index")
 
   /** [[build]]'s corpus keys and [[compact]]'s folded rows live here;
     * [[appendIdempotent]] requires batch ids ≥ 0, so the base can
     * never collide with a landed batch. */
   private val BaseBatch = -1L
 
-  private def metaJson(m: Meta): String =
-    s"""{"generation":${m.generation}}"""
-
-  private def fsOf(path: String): org.apache.hadoop.fs.FileSystem =
-    ArtifactIo.fsOf(path)
-
-  private def metaPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/$Dir", "_urls.json")
-
   /** Does an artifact exist at `path`? A parked crash state throws
-    * instead of answering false (the [[SigIndex.exists]] stance). */
-  def exists(path: String): Boolean = {
-    ArtifactIo.requireNotParked(path, Dir, "url index")
-    fsOf(path).exists(metaPath(path))
-  }
+    * instead of answering false. */
+  def exists(path: String): Boolean = Life.exists(path)
 
   /** Heal a crash parked mid-swap (compact, delete, or rebuild died
     * between its two renames): rename the complete old table back
     * live. Ingest loops call this at the top of every batch. */
-  def healParked(path: String): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "url index heal")
-    ()
-  }
-
-  private def readMetaOpt(path: String): Option[Meta] = {
-    ArtifactIo.requireNotParked(path, Dir, "url index")
-    val fs = fsOf(path)
-    val p = metaPath(path)
-    if (!fs.exists(p)) None
-    else {
-      val txt = ArtifactIo.readFile(fs, p)
-      val gen = "\"generation\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"[GRAFT] url index: corrupt _urls.json at $path"))
-      Some(Meta(gen))
-    }
-  }
+  def healParked(path: String): Unit = Life.healParked(path)
 
   private[graft] def readMeta(path: String): Meta =
-    readMetaOpt(path).getOrElse(throw new IllegalArgumentException(
-      s"[GRAFT] no url index at $path (expected $Dir/_urls.json)"))
+    Meta(Life.readMeta(path).int("generation"))
 
   /** The batch's distinct NORMALIZED keys (null keys dropped). */
   private def keysOf(docs: DataFrame, urlCol: String): DataFrame =
     docs.select(WebCuration.normalizeUrl(col(urlCol)).as("url"))
       .filter(col("url").isNotNull).distinct()
 
-  private def writeBase(rows: DataFrame, path: String,
-      gen: Int): Unit = {
-    val fs = fsOf(path)
-    val live = new org.apache.hadoop.fs.Path(s"$path/$Dir")
-    def writeStage(stage: String): Unit = {
-      rows.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
-      ArtifactIo.writeFileInto(stage, "_urls.json",
-        metaJson(Meta(gen)))
-      // no watermark retirement step — generation-bound, invalidates
-      // at publish ([[ArtifactIo.readWatermark]])
-    }
-    if (!fs.exists(live))
-      ArtifactIo.publishFresh(fs, path, Dir, "url build")(writeStage)
-    else
-      ArtifactIo.stagedSwap(fs, path, Dir, "url build")(writeStage)
-  }
+  private def writeBase(rows: DataFrame, path: String): Unit =
+    Life.build(path)(stage =>
+      rows.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch"))
 
   /** Build (or REBUILD — generation bumps, which starts a fresh batch
     * sequence at publish) the seen set from a corpus. */
   def build(docs: DataFrame, path: String,
-      urlCol: String = "url"): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "url build")
-    // bind a pre-binding (unbound) watermark to the LIVE generation
-    // first ([[ArtifactIo.migrateLegacyWatermark]])
-    ArtifactIo.migrateLegacyWatermark(path,
-      readMetaOpt(path).map(_.generation).getOrElse(0))
-    // publish PAST any generation the watermark file names — a
-    // takedown delete parked pre-publish binds the carried watermark
-    // to m+1 while meta still says m ([[ArtifactIo.watermarkGeneration]])
-    val gen = math.max(readMetaOpt(path).map(_.generation).getOrElse(0),
-      ArtifactIo.watermarkGeneration(path)) + 1
-    writeBase(keysOf(docs, urlCol), path, gen)
-  }
+      urlCol: String = "url"): Unit =
+    writeBase(keysOf(docs, urlCol), path)
 
   /** Create an EMPTY artifact — the incremental entry point
     * ([[LineIndex.create]] rationale: a loop that creates empty and
     * lands every batch through [[appendIdempotent]] never needs a
     * residue-vs-rebuilt heuristic). Idempotent. */
   def create(spark: SparkSession, path: String): Unit = {
-    ArtifactIo.healParked(fsOf(path), path, Dir, "url create")
-    if (readMetaOpt(path).isDefined) return
-    val empty = spark.createDataFrame(
+    Life.healParked(path)
+    if (Life.exists(path)) return
+    writeBase(spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("url", StringType))))
-    writeBase(empty, path, 1)
+      StructType(Seq(StructField("url", StringType)))), path)
   }
 
   /** Land the batch's distinct keys at `urls/batch=<id>` with
@@ -163,12 +104,10 @@ object UrlIndex {
       urlCol: String = "url"): Boolean = {
     require(batchId >= 0L,
       "[GRAFT] url index append: batchId must be >= 0")
-    val gen = readMeta(path).generation
-    if (batchId <= ArtifactIo.readWatermark(path, gen)) return false
-    keysOf(docs, urlCol).write.mode("overwrite")
-      .parquet(s"$path/$Dir/batch=$batchId")
-    ArtifactIo.commitWatermark(path, gen, batchId)
-    true
+    Life.appendIdempotent(path, batchId) {
+      keysOf(docs, urlCol).write.mode("overwrite")
+        .parquet(s"${Life.data(path)}/batch=$batchId")
+    }
   }
 
   /** Has `batchId` already been committed under the CURRENT
@@ -180,13 +119,12 @@ object UrlIndex {
     * batch's OWN keys (the `excludeBatch` mask no longer covers them)
     * and overwrite the landed docs with an empty set. */
   def isCommitted(path: String, batchId: Long): Boolean =
-    batchId <= ArtifactIo.readWatermark(path,
-      readMeta(path).generation)
+    Life.isCommitted(path, batchId)
 
   /** The stored key set (with its `batch` address column). */
   def stored(spark: SparkSession, path: String): DataFrame = {
     readMeta(path)
-    spark.read.parquet(s"$path/$Dir")
+    spark.read.parquet(Life.data(path))
   }
 
   /** `docs` whose normalized URL is NOT in the seen set — ONE LEFT
@@ -208,67 +146,42 @@ object UrlIndex {
   }
 
   /** Remove keys (matched AFTER normalizing both sides) — the
-    * takedown rewrite: fold every partition minus the removed keys
-    * into the base, staged swap, generation bump, watermark CARRIED
-    * into the new generation. Returns rows removed (> |urls| when
-    * cross-batch recurrences existed — every copy goes). */
+    * takedown rewrite ([[ArtifactIo.StandingIndex]]: generation bump,
+    * watermark carried): fold every partition minus the removed keys
+    * into the base. Returns rows removed (> |urls| when cross-batch
+    * recurrences existed — every copy goes). */
   def deleteUrls(spark: SparkSession, path: String,
       urls: Seq[String]): Long = {
     require(urls.nonEmpty, "[GRAFT] url index delete: empty url list")
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "url delete")
-    val m = readMeta(path)
     import spark.implicits._
     val gone = keysOf(urls.toDF("u"), "u")
       .select(col("url").as("__gone"))
-    val rows = spark.read.parquet(s"$path/$Dir")
-    val removed = rows.join(gone, col("url") === col("__gone"),
-      "left_semi").count()
-    val kept = rows.join(gone, col("url") === col("__gone"),
-        "left_anti")
-      .select(col("url")).distinct()
-      .repartition(ArtifactIo.compactWidth(s"$path/$Dir"))
-    // carry the watermark into the new generation BEFORE the swap
-    // (the [[SigIndex.deleteIds]] window analysis: swap-then-carry
-    // could let a stale batch replay RE-SEED the just-deleted keys
-    // into the new generation, silently refusing their re-crawl;
-    // carry-then-swap degrades a crash to presence-absorbed duplicate
-    // keys on the OLD artifact)
-    val last = ArtifactIo.readWatermark(path, m.generation)
-    if (last >= 0L)
-      ArtifactIo.commitWatermark(path, m.generation + 1, last)
-    ArtifactIo.stagedSwap(fs, path, Dir, "url delete") { stage =>
-      kept.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
-      ArtifactIo.writeFileInto(stage, "_urls.json",
-        metaJson(m.copy(generation = m.generation + 1)))
+    Life.takedown(path) { stage =>
+      val rows = spark.read.parquet(Life.data(path))
+      val removed = rows.join(gone, col("url") === col("__gone"),
+        "left_semi").count()
+      rows.join(gone, col("url") === col("__gone"), "left_anti")
+        .select(col("url")).distinct()
+        .repartition(ArtifactIo.compactWidth(Life.data(path)))
+        .write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
+      removed
     }
-    removed
   }
 
-  /** Should an ingest loop schedule [[compact]]? One namenode listing
-    * with the [[ArtifactIo.shouldCompact]] convergence contract. */
-  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean = {
-    require(maxDataFiles > 0,
-      "[GRAFT] url index needsCompaction: maxDataFiles must be positive")
-    ArtifactIo.requireNotParked(path, Dir, "url index")
-    ArtifactIo.shouldCompact(s"$path/$Dir", maxDataFiles)
-  }
+  /** Should an ingest loop schedule [[compact]]? */
+  def needsCompaction(path: String, maxDataFiles: Int = 64): Boolean =
+    Life.needsCompaction(path, maxDataFiles)
 
   /** Fold all partitions into one DISTINCT key set in the base
     * partition at data-sized width. Physical rewrite, metadata
     * unchanged — probe results identical before and after; the
-    * watermark survives (artifact root), so a stale replay of a
-    * folded batch is still refused. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(path)
-    ArtifactIo.healParked(fs, path, Dir, "url compact")
-    val m = readMeta(path)
-    val folded = spark.read.parquet(s"$path/$Dir")
-      .select(col("url")).distinct()
-      .repartition(ArtifactIo.compactWidth(s"$path/$Dir"))
-    ArtifactIo.stagedSwap(fs, path, Dir, "url compact") { stage =>
-      folded.write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
-      ArtifactIo.writeFileInto(stage, "_urls.json", metaJson(m))
+    * watermark survives, so a stale replay of a folded batch is still
+    * refused. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Life.compact(path) { stage =>
+      spark.read.parquet(Life.data(path))
+        .select(col("url")).distinct()
+        .repartition(ArtifactIo.compactWidth(Life.data(path)))
+        .write.mode("overwrite").parquet(s"$stage/batch=$BaseBatch")
     }
-  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{vfs_dequantize, vfs_quantize}
+import graft.operators.ArtifactIo
 
 /** Error taxonomy mirroring the reference's `VFSError`
   * (vfs/src/vfs/err.rs:10-17): Io / Memtable / InvalidVector /
@@ -31,32 +32,17 @@ case class VfsRecord(id: Long, values: Array[Float], name: String,
   * store. */
 case class VfsManifest(name: String, dim: Int, quantize: Boolean,
     nextId: Long, commits: Seq[String]) {
-  def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    s"""{"name":${q(name)},"dim":$dim,"quantize":$quantize,"nextId":$nextId,""" +
-      s""""commits":[${commits.map(q).mkString(",")}]}"""
-  }
+  def toJson: String = ArtifactIo.encode("name" -> name, "dim" -> dim,
+    "quantize" -> quantize, "nextId" -> nextId, "commits" -> commits)
 }
 
 object VfsManifest {
-  // minimal flat-JSON parser (no deps); format is engine-controlled
+  /** A missing or malformed key is a typed store-state error:
+    * `bad manifest: <key>`. */
   def fromJson(s: String): VfsManifest = {
-    // the first capture group of `"k":<value>`; a missing or malformed
-    // key is a typed store-state error, never a bare None.get
-    def field(k: String, value: String): String =
-      ("\"" + k + "\":" + value).r.findFirstMatchIn(s)
-        .getOrElse(throw new StoreStateException(s"bad manifest: $k"))
-        .group(1)
-    def str(k: String): String =
-      field(k, "\"((?:[^\"\\\\]|\\\\.)*)\"")
-        .replace("\\\"", "\"").replace("\\\\", "\\")
-    def num(k: String): Long = field(k, "(-?\\d+)").toLong
-    def bool(k: String): Boolean = field(k, "(true|false)").toBoolean
-    val commits = field("commits", "\\[([^\\]]*)\\]")
-    val dirs = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(commits)
-      .map(_.group(1)).toSeq
-    VfsManifest(str("name"), num("dim").toInt, bool("quantize"),
-      num("nextId"), dirs)
+    val m = ArtifactIo.decode("manifest", s)
+    VfsManifest(m.str("name"), m.int("dim"), m.bool("quantize"),
+      m.long("nextId"), m.strs("commits"))
   }
 }
 
@@ -134,11 +120,19 @@ class VfsStore private (val spark: SparkSession, val root: String,
     rows.select(col("__dir")).distinct()
       .collect().map(_.getString(0)).toSet
 
-  private def commitManifest(m: VfsManifest): Unit = synchronized {
-    val tmp = Paths.get(root, "manifest.json.tmp")
+  /** Write `m` to `target` via a sibling tmp file + atomic rename, so
+    * a crash mid-write leaves the previous file, never a truncated
+    * one. */
+  private def writeManifestAtomic(target: java.nio.file.Path,
+      m: VfsManifest): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
     Files.write(tmp, m.toJson.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath, StandardCopyOption.REPLACE_EXISTING,
+    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def commitManifest(m: VfsManifest): Unit = synchronized {
+    writeManifestAtomic(manifestPath, m)
     manifest = m
   }
 
@@ -409,8 +403,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
     flush()
     val p = Paths.get(root, "snapshots")
     Files.createDirectories(p)
-    Files.write(p.resolve(s"$snapName.json"),
-      manifest.toJson.getBytes(StandardCharsets.UTF_8))
+    writeManifestAtomic(p.resolve(s"$snapName.json"), manifest)
   }
 
   /** Restore: overwrite live state from a snapshot

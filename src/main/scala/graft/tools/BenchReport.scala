@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 /** Markdown benchmark report — the analog of the reference's
   * benchmarks.py plot generation (/root/reference/benchmarks/
   * benchmarks.py:33-95), emitted as a table instead of matplotlib
@@ -16,7 +14,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * numbers (SURVEY §6). Run:
   * `sbt "runMain graft.tools.BenchReport [repoDir]"`. */
 object BenchReport {
-  private val mapper = new ObjectMapper()
+  private val mapper = graft.operators.ArtifactIo.mapper
 
   /** Extract the bench JSON object from either format: the driver
     * wraps the sbt output (the line lives inside a "tail" string);

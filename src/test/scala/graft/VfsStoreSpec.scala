@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.store._
 import scala.collection.parallel.CollectionConverters._
+import scala.jdk.CollectionConverters._
 
 class VfsStoreSpec extends AnyFunSuite {
   lazy val spark = GraftTest.spark
@@ -207,6 +208,24 @@ class VfsStoreSpec extends AnyFunSuite {
     assert(s.readSnapshot("s1").count() === 1L)
     assert(s.read().count() === 2L) // live state untouched
     intercept[StoreStateException](s.readSnapshot("nope"))
+  }
+
+  test("a snapshot retaken under the same name replaces it atomically") {
+    val root = tmp()
+    val s = VfsStore.create(spark, root, "tre", dim = 2)
+    s.insert(Array(1f, 1f), "a", Nil)
+    s.snapshot("same")
+    s.insert(Array(2f, 2f), "b", Nil)
+    s.snapshot("same") // overwrites through tmp + atomic rename
+    s.insert(Array(3f, 3f), "c", Nil)
+    s.flush()
+    s.restore("same")
+    assert(s.read().select($"name").as[String].collect().sorted ===
+      Array("a", "b"))
+    val left = Files.list(java.nio.file.Paths.get(root, "snapshots"))
+    try assert(left.iterator().asScala.map(_.getFileName.toString)
+      .toSeq.sorted === Seq("same.json"))
+    finally left.close()
   }
 
   test("a manifest or snapshot missing a key fails with a typed error") {
