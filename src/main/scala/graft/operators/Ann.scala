@@ -29,38 +29,34 @@ object IvfIndex {
   case class Meta(nCentroids: Int, metric: String, dim: Int, seed: Long,
       nAssign: Int = 1, generation: Int = 1, assignEpsMilli: Long = -1L)
 
+  /** The shared lifecycle: a sentinel guards a rebuild's swap of both
+    * dirs, and a parked `assignments`/`centroids` (a crash inside
+    * [[compactAssignments]] or [[rebalance]]'s swap) makes readers
+    * refuse and writers heal first. */
+  private val Artifact = ArtifactIo.VectorIndex("ivf.json", "IVF index",
+    "IvfIndex.build", Seq("assignments", "centroids"))
+
+  private def metaFields(m: Meta): Seq[(String, Any)] = Seq(
+    "nCentroids" -> m.nCentroids, "metric" -> m.metric, "dim" -> m.dim,
+    "seed" -> m.seed, "nAssign" -> m.nAssign, "generation" -> m.generation,
+    "assignEpsMilli" -> m.assignEpsMilli)
+
   private def writeMeta(path: String, m: Meta): Unit =
-    ArtifactIo.writeSidecar(path, "ivf.json", "nCentroids" -> m.nCentroids,
-      "metric" -> m.metric, "dim" -> m.dim, "seed" -> m.seed,
-      "nAssign" -> m.nAssign, "generation" -> m.generation,
-      "assignEpsMilli" -> m.assignEpsMilli)
+    Artifact.writeMeta(path, metaFields(m): _*)
 
-  /** Sentinel marking a REBUILD's live-mutation window ([[build]]'s
-    * dir swaps + meta write). Present = an in-progress or crashed
-    * rebuild: any probe could silently mix the old and new clustering
-    * (partial assignments under live metadata — the hazard class the
-    * staged artifacts eliminate by construction), so every operation
-    * that goes through [[readMeta]] refuses LOUDLY instead. The index
-    * is DERIVED data, so the honest crash contract is loud-fail +
-    * rerun-build (which clears the sentinel), not store-grade
-    * multi-directory atomicity. */
-  private val RebuildSentinel = "ivf.rebuilding"
-
-  private[operators] def readMeta(path: String): Meta = {
-    require(!ArtifactIo.fileExists(path, RebuildSentinel),
-      s"[GRAFT] IVF index at $path has an in-progress or crashed " +
-        "REBUILD (ivf.rebuilding present) — rerun IvfIndex.build to " +
-        "complete it; probing now could mix the old and new clustering")
-    readMetaRaw(path)
-  }
-
-  /** Sentinel-blind read — [[build]]'s own recovery path needs the
-    * old generation even while the sentinel stands. */
-  private def readMetaRaw(path: String): Meta = {
-    val m = ArtifactIo.readSidecar(path, "ivf.json")
+  private def decodeMeta(m: ArtifactIo.Sidecar): Meta =
     Meta(m.int("nCentroids"), m.str("metric"), m.int("dim"), m.long("seed"),
       m.intOr("nAssign", 1), m.intOr("generation", 1),
       m.longOr("assignEpsMilli", -1L))
+
+  private[operators] def readMeta(path: String): Meta =
+    decodeMeta(Artifact.readMeta(path))
+
+  /** Writer entry (single-writer contract): heal a parked dir, then
+    * the guarded read. */
+  private def metaForWrite(path: String): Meta = {
+    Artifact.healParked(path)
+    readMeta(path)
   }
 
   /** The closure-assignment eps an index was built with (< 0 =
@@ -124,11 +120,8 @@ object IvfIndex {
     ok
   }
 
-  /** The `cluster=<c>` directories that exist under `base` (empty
-    * k-means clusters have none; reading them would fail with
-    * PATH_NOT_FOUND) — O(|clusters|) paths listed, never
-    * O(nCentroids). Shared by the IVF probe and IVF-PQ. */
-  /** Existing `cluster=<c>` dirs among `clusters` — and the recovery
+  /** Existing `cluster=<c>` dirs among `clusters` (empty k-means
+    * clusters have none; O(|clusters|) paths probed) — and the recovery
     * point for a crashed rename-swap ([[deleteIds]] / IvfPq.refresh's
     * scrub): a crash between "live → _old" and "stage → live" leaves
     * no live dir, only `cluster=<c>_old` holding the data. Silently
@@ -152,6 +145,42 @@ object IvfIndex {
     }
   }
 
+  /** The existing dirs among `clusters` under `base` as one frame
+    * (basePath keeps the INT `cluster` partition column); None when no
+    * listed dir exists. */
+  private[operators] def readClusters(spark: SparkSession, base: String,
+      clusters: Seq[Int]): Option[DataFrame] = {
+    val dirs = existingClusterDirs(spark, base, clusters)
+    if (dirs.isEmpty) None
+    else Some(spark.read.option("basePath", base).parquet(dirs: _*))
+  }
+
+  /** WRITER-side listing of the integer `cluster=<c>` dirs under `base`
+    * (single-writer contract). Swap debris is settled first: a lone
+    * `cluster=<c>_old` (a crash between a per-cluster swap's renames)
+    * is healed back, and an `_old`/`_stage` beside its live twin is
+    * dropped. Scans of the listed dirs therefore infer `cluster` as
+    * INT — a full-directory read infers a STRING once any `0_old`
+    * name is present. */
+  private[operators] def clusterDirsForWrite(base: String): Seq[Int] = {
+    val fs = ArtifactIo.fsOf(base)
+    val dir = new org.apache.hadoop.fs.Path(base)
+    val Live = "cluster=(-?\\d+)".r
+    val Debris = "(cluster=-?\\d+)_(old|stage)".r
+    def names() =
+      if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSet
+      else Set.empty[String]
+    val before = names()
+    before.foreach {
+      case Debris(live, "old") if !before.contains(live) =>
+        ArtifactIo.healParked(fs, base, live, "IVF cluster")
+      case n @ Debris(_, _) =>
+        fs.delete(new org.apache.hadoop.fs.Path(dir, n), true)
+      case _ =>
+    }
+    names().toSeq.collect { case Live(c) => c.toInt }.sorted
+  }
+
   /** Centroid table → driver memory, BYTE-GATED. The whole IVF design
     * leans on the centroid table being tiny relative to the corpus
     * (class doc: "tiny, driver-side"), and every probe/append/
@@ -170,9 +199,8 @@ object IvfIndex {
     * the centroid table itself, so the driver holds √nCentroids) —
     * out of scope here, and silently OOMing instead of saying so is
     * the failure mode this gate removes. */
-  private[operators] def loadCentroids(spark: SparkSession,
-      path: String): Array[(Int, Array[Float])] = {
-    val m = readMetaRaw(path)
+  private[operators] def loadCentroids(spark: SparkSession, path: String,
+      m: Meta): Array[(Int, Array[Float])] = {
     BroadcastGate.requireCollectFits(m.nCentroids.toLong, m.dim,
       s"centroid table of IVF index at $path",
       "An index this wide needs two-level routing (a coarse " +
@@ -195,12 +223,35 @@ object IvfIndex {
     * `cluster` partition column via basePath. */
   private[operators] def liveAssignments(spark: SparkSession,
       path: String): DataFrame = {
-    val centIds = spark.read.parquet(s"$path/centroids")
-      .select(col("cluster")).collect().map(_.getInt(0)).sorted
     val existing = existingClusterDirs(spark, s"$path/assignments",
-      centIds.toIndexedSeq)
+      clusterIds(spark, path))
     spark.read.option("basePath", s"$path/assignments")
-      .parquet(existing.toIndexedSeq: _*)
+      .parquet(existing: _*)
+  }
+
+  /** The routed cluster ids — an UNGATED read of the centroid table's
+    * id column only (no vectors reach the driver). */
+  private def clusterIds(spark: SparkSession, path: String): Seq[Int] =
+    spark.read.parquet(s"$path/centroids").select(col("cluster"))
+      .collect().map(_.getInt(0)).sorted.toIndexedSeq
+
+  /** Stored bytes per live cluster dir — one content summary each, no
+    * Spark job. Bytes are a faithful row proxy: every row of one index
+    * stores the same dim (plus a few-byte id). */
+  private def clusterBytes(spark: SparkSession, path: String): Seq[Long] = {
+    val fs = ArtifactIo.fsOf(path)
+    existingClusterDirs(spark, s"$path/assignments", clusterIds(spark, path))
+      .map(p => fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength)
+  }
+
+  /** Spread a scan of few partitions across every core before a
+    * compute-bound per-row kernel (the argmin/encode passes cost
+    * |rows|·k·dim muladds; one 500k-row file measured 100 s vs 12 s
+    * spread). */
+  private[operators] def spreadToCores(df: DataFrame): DataFrame = {
+    val width = df.sparkSession.sparkContext.defaultParallelism
+    if (math.max(1, df.rdd.getNumPartitions) < width) df.repartition(width)
+    else df
   }
 
   /** In-place-free L2 normalization on the JVM side. Normalization as
@@ -223,6 +274,67 @@ object IvfIndex {
     }
   }
 
+  /** Per-row dimension guard of the assign/encode kernels. */
+  private[operators] def requireDim(id: Long, v: Array[Float],
+      dim: Int): Unit =
+    if (v.length != dim)
+      throw new graft.store.InvalidVectorException(
+        s"[GRAFT] vector dimension mismatch at id=$id: expected $dim, " +
+          s"got ${v.length}")
+
+  /** THE nearest-centroid rule, shared by assignment ([[assignRows]])
+    * and probe selection ([[nearestClusters]]): squared distance in
+    * double, candidates ascending; ties break to the lower position —
+    * the lower cluster id, since `cs` is sorted by id — and an all-NaN
+    * row (NaN compares false against everything; `best == -1 ||`)
+    * lands on the lowest ids instead of a phantom cluster -1. A finite
+    * `eps` >= 0 stops after the first pick once the next candidate is
+    * outside (1 + eps) × the nearest distance (NaN stops too). Writes
+    * up to `n` positions into `out` and returns how many; `ds`/`used`
+    * are caller scratch of `cs.length` (per-row allocation of
+    * |centroids|-sized arrays is GBs of churn at 500k rows). */
+  private def nearest(cs: Array[(Int, Array[Float])], v: Array[Float],
+      n: Int, eps: Double, ds: Array[Double], used: Array[Boolean],
+      out: Array[Int]): Int = {
+    var c = 0
+    while (c < cs.length) {
+      val cent = cs(c)._2
+      var d = 0.0; var i = 0
+      while (i < v.length) {
+        val diff = v(i).toDouble - cent(i); d += diff * diff; i += 1
+      }
+      ds(c) = d; used(c) = false; c += 1
+    }
+    var s = 0
+    var stop = false
+    while (s < n && !stop) {
+      var best = -1; var bestD = Double.MaxValue
+      var j = 0
+      while (j < cs.length) {
+        if (!used(j) && (best == -1 || ds(j) < bestD)) {
+          bestD = ds(j); best = j
+        }
+        j += 1
+      }
+      if (s > 0 && eps >= 0.0 && !(ds(best) <= (1.0 + eps) * ds(out(0))))
+        stop = true
+      else { used(best) = true; out(s) = best; s += 1 }
+    }
+    s
+  }
+
+  /** Driver-side probe selection: the `nProbe` nearest clusters to `q`
+    * by [[nearest]] — the rule [[assignRows]] applies per query row in
+    * the batch probes, so single-query and batch searches probe the
+    * same clusters. Ascending distance order. */
+  private[operators] def nearestClusters(cs: Array[(Int, Array[Float])],
+      q: Array[Float], nProbe: Int): Seq[Int] = {
+    val out = new Array[Int](math.max(0, math.min(nProbe, cs.length)))
+    val s = nearest(cs, q, out.length, -1.0, new Array[Double](cs.length),
+      new Array[Boolean](cs.length), out)
+    out.take(s).map(cs(_)._1).toSeq
+  }
+
   /** Broadcast-argmin cluster assignment: one tight partition loop per
     * row against the (tiny) centroid array — the same shape MLlib's
     * transform uses. A relational phrasing (cross join + min aggregate)
@@ -237,8 +349,7 @@ object IvfIndex {
     * boundary vectors (the ones pruned probes actually miss) replicate,
     * interior vectors don't, so storage grows with boundary density
     * instead of a flat nAssign×. eps < 0 (the default) = unconditional.
-    * Ties break to the lowest cluster id (strict < scan in ascending
-    * order), deterministically. `normalize` = spherical (cosine) mode:
+    * Selection is [[nearest]]. `normalize` = spherical (cosine) mode:
     * rows are L2-normalized in the kernel and STORED normalized.
     * Output: (id, values, cluster). */
   private[operators] def assignRows(prepared: DataFrame,
@@ -251,85 +362,21 @@ object IvfIndex {
       .mapPartitions { it =>
         val cs = bc.value
         val dim = cs(0)._2.length
-        // ragged rows must fail HERE, not later: a wrong-dimension
-        // vector that escaped the bounded training sample would
-        // otherwise be indexed with a truncated distance (shorter) or
-        // crash the argmin loop (longer), and then break every future
-        // search of its cluster at query time
-        def checkDim(id: Long, v: Array[Float]): Unit =
-          if (v.length != dim)
-            throw new graft.store.InvalidVectorException(
-              s"[GRAFT] vector dimension mismatch at id=$id:" +
-                s" expected $dim, got ${v.length}")
         val n = math.min(nAssign, cs.length)
-        if (n == 1) {
-          // zero-allocation hot path: direct argmin per row. `best ==
-          // -1 ||` guards the all-NaN row (NaN compares false against
-          // everything): it deterministically lands in the lowest
-          // cluster id instead of a phantom cluster=-1 directory no
-          // probe would ever read.
-          it.map { case (id, v0) =>
-            checkDim(id, v0)
-            val v = if (normalize) l2normalize(v0) else v0
-            var best = -1; var bestD = Double.MaxValue
-            var c = 0
-            while (c < cs.length) {
-              val cent = cs(c)._2
-              var d = 0.0; var i = 0
-              while (i < v.length) {
-                val diff = v(i).toDouble - cent(i); d += diff * diff; i += 1
-              }
-              if (best == -1 || d < bestD) { bestD = d; best = cs(c)._1 }
-              c += 1
-            }
-            (id, v, best)
-          }
-        } else {
-          // per-PARTITION scratch buffers (per-row allocation of a
-          // |centroids|-sized array is GBs of churn at 500k rows)
-          val ds = new Array[Double](cs.length)
-          val used = new Array[Boolean](cs.length)
-          it.flatMap { case (id, v0) =>
-            checkDim(id, v0)
-            val v = if (normalize) l2normalize(v0) else v0
-            var c = 0
-            while (c < cs.length) {
-              val cent = cs(c)._2
-              var d = 0.0; var i = 0
-              while (i < v.length) {
-                val diff = v(i).toDouble - cent(i); d += diff * diff; i += 1
-              }
-              ds(c) = d; used(c) = false; c += 1
-            }
-            // n smallest; ascending cluster-id scan + strict < keeps
-            // ties deterministic. Rows are BUILT EAGERLY before the
-            // next input row reuses the scratch buffers.
-            val out = new Array[(Long, Array[Float], Int)](n)
-            var s = 0
-            var d1 = Double.NaN // nearest distance, set at s = 0
-            var stop = false
-            while (s < n && !stop) {
-              var best = -1; var bestD = Double.MaxValue
-              var j = 0
-              while (j < cs.length) {
-                if (!used(j) && (best == -1 || ds(j) < bestD)) {
-                  bestD = ds(j); best = j // best == -1 case: NaN rows
-                }
-                j += 1
-              }
-              if (s == 0) d1 = ds(best)
-              // closure cut: secondary copies only inside the epsilon
-              // ball (candidates come out in ascending distance, so
-              // the first miss ends the row; NaN distances compare
-              // false and also stop after the mandatory first copy)
-              if (s > 0 && eps >= 0.0 && !(ds(best) <= (1.0 + eps) * d1))
-                stop = true
-              else {
-                used(best) = true; out(s) = (id, v, cs(best)._1); s += 1
-              }
-            }
-            if (s == n) out else out.take(s)
-          }
+        val ds = new Array[Double](cs.length)
+        val used = new Array[Boolean](cs.length)
+        val picks = new Array[Int](n)
+        it.flatMap { case (id, v0) =>
+          // ragged rows must fail HERE, not later: a wrong-dimension
+          // vector that escaped the bounded training sample would
+          // otherwise be indexed with a truncated distance (shorter) or
+          // crash the argmin loop (longer), and then break every future
+          // search of its cluster at query time
+          requireDim(id, v0, dim)
+          val v = if (normalize) l2normalize(v0) else v0
+          // built EAGERLY: the next row reuses the scratch buffers
+          val s = nearest(cs, v, n, eps, ds, used, picks)
+          Array.tabulate(s)(i => (id, v, cs(picks(i))._1))
         }
       }
       .toDF("id", "values", "cluster")
@@ -374,7 +421,6 @@ object IvfIndex {
     require(nCentroids > 0, "nCentroids must be positive")
     require(nAssign >= 1, "nAssign must be >= 1")
     val spark = base.sparkSession
-    import spark.implicits._
     // spherical k-means for cosine: vectors are L2-normalized INSIDE
     // the sample/assign kernels ([[l2normalize]] — not as a Catalyst
     // HOF, see its scaladoc) and stored normalized; euclidean NN on
@@ -385,7 +431,6 @@ object IvfIndex {
     // ---- pass 1: count-free bounded sample (per-partition top-m by
     // hash priority; the global trainCap smallest hashes are always a
     // subset of the union as long as m >= min(trainCap, needed)) ----
-    val parts = math.max(1, prepared.rdd.getNumPartitions)
     val train = sampleVectors(prepared, trainCap, seed,
       minPerPart = nCentroids, normalize = spherical)
     val dim = train.head.length
@@ -394,54 +439,29 @@ object IvfIndex {
     val centArr = centsD.zipWithIndex.map { case (c, i) =>
       (i, c.map(_.toFloat))
     }
-    // ---- pass 3: assign every row, write partitioned by cluster.
-    // The argmin pass is compute-bound (|rows|·k·dim muladds): a corpus
-    // read as a few large files would run it on as few cores (measured
-    // 100 s vs 12 s for 500k rows in one file) — spread to all cores
-    // first. repartition by cluster BEFORE partitionBy: otherwise every
-    // shuffle partition writes a sliver into every cluster directory
-    // (partitions × clusters small files — 22k files at 500k rows) ----
-    val assignInput =
-      if (parts < spark.sparkContext.defaultParallelism)
-        prepared.repartition(spark.sparkContext.defaultParallelism)
-      else prepared
     // a REBUILD over an existing index is a new generation: any PQ /
     // IVF-PQ artifact derived from the old clustering is stale and its
     // probes must refuse until refreshed/rebuilt (same stance as
-    // [[rebalance]]). Rebuilds must never overwrite the live dirs in
-    // place (a crash would leave a PARTIAL index under live metadata,
-    // silently wrong): both dirs are staged first — the live index
-    // stays fully consistent while the expensive writes run — and the
-    // live mutation (two dir swaps + the meta write) happens inside
-    // the [[rebuildSentinel]] window, where any crash turns every
-    // probe into a loud refusal until build is rerun.
-    val rebuilding = ArtifactIo.fileExists(path, "ivf.json")
-    val gen = if (rebuilding) readMetaRaw(path).generation + 1 else 1
-    val assignTarget =
-      if (rebuilding) s"$path/assignments_stage" else s"$path/assignments"
-    val centTarget =
-      if (rebuilding) s"$path/centroids_stage" else s"$path/centroids"
-    assignRows(assignInput, centArr, math.min(nAssign, nCentroids),
-      normalize = spherical, eps = assignEps)
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(assignTarget)
-    spark.createDataFrame(centArr.toSeq).toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centTarget)
-    if (rebuilding) {
-      ArtifactIo.writeSmallFileAtomic(path, RebuildSentinel,
-        gen.toString)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      ArtifactIo.swapIn(fs, path, "assignments")
-      ArtifactIo.swapIn(fs, path, "centroids")
+    // [[rebalance]]); the shared lifecycle stages both dirs and swaps
+    // them inside the sentinel window
+    val gen = Artifact.readMetaRaw(path).fold(1)(decodeMeta(_).generation + 1)
+    Artifact.rebuild(path) { target =>
+      // ---- pass 3: assign every row (spread to all cores first),
+      // write partitioned by cluster. repartition by cluster BEFORE
+      // partitionBy: otherwise every shuffle partition writes a sliver
+      // into every cluster directory (partitions × clusters small
+      // files — 22k files at 500k rows) ----
+      assignRows(spreadToCores(prepared), centArr,
+        math.min(nAssign, nCentroids), normalize = spherical, eps = assignEps)
+        .repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(target("assignments"))
+      spark.createDataFrame(centArr.toSeq).toDF("cluster", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(target("centroids"))
+      metaFields(Meta(nCentroids, metric.name, dim, seed,
+        math.min(nAssign, nCentroids), gen,
+        if (assignEps < 0) -1L else math.round(assignEps * 1000.0)))
     }
-    writeMeta(path, Meta(nCentroids, metric match {
-        case Metric.Cosine => "cosine"
-        case Metric.Euclidean => "euclidean"
-      }, dim, seed, math.min(nAssign, nCentroids), gen,
-      if (assignEps < 0) -1L else math.round(assignEps * 1000.0)))
-    ArtifactIo.deleteFile(path, RebuildSentinel)
   }
 
   /** Deterministic k-means++ init (seeded D²-sampling) over a bounded
@@ -615,7 +635,7 @@ object IvfIndex {
       query: Array[Float], k: Int, nProbe: Int = 4): DataFrame = {
     val meta = readMeta(path)
     val metric = Metric.parse(meta.metric)
-    val q = normalizeQuery(meta, metric, query)
+    val q = prepareQuery(query, meta.dim, metric)
     probedCandidates(spark, path, meta, q, nProbe) match {
       case None =>
         spark.emptyDataFrame
@@ -650,7 +670,7 @@ object IvfIndex {
       allowedRows: Long = -1L): DataFrame = {
     val meta = readMeta(path)
     val metric = Metric.parse(meta.metric)
-    val q = normalizeQuery(meta, metric, query)
+    val q = prepareQuery(query, meta.dim, metric)
     val allowSide = BroadcastGate.allowedSide(allowed, allowedRows,
       "searchFiltered")
     probedCandidates(spark, path, meta, q, nProbe) match {
@@ -664,19 +684,16 @@ object IvfIndex {
     }
   }
 
-  /** Cosine queries are normalized to match the spherically-stored
-    * vectors; a zero vector passes through (NaN distances sort last). */
-  private def normalizeQuery(meta: Meta, metric: Metric,
-      query: Array[Float]): Array[Float] = {
-    if (query.length != meta.dim)
+  /** Dimension-checked query in the stored space: cosine queries are
+    * normalized to match the spherically-stored vectors (a zero vector
+    * passes through; NaN distances sort last). Shared by every IVF, PQ
+    * and IVF-PQ probe. */
+  private[operators] def prepareQuery(query: Array[Float], dim: Int,
+      metric: Metric): Array[Float] = {
+    if (query.length != dim)
       throw new graft.store.InvalidVectorException(
-        s"[GRAFT] vector dimension mismatch: expected ${meta.dim}, got ${query.length}")
-    metric match {
-      case Metric.Cosine =>
-        val n = math.sqrt(query.map(x => x.toDouble * x).sum)
-        if (n == 0.0) query else query.map(x => (x / n).toFloat)
-      case Metric.Euclidean => query
-    }
+        s"[GRAFT] vector dimension mismatch: expected $dim, got ${query.length}")
+    if (metric == Metric.Cosine) l2normalize(query) else query
   }
 
   /** The probed, multiprobe-deduped candidate rows (id, values,
@@ -684,18 +701,11 @@ object IvfIndex {
     * exists on disk. Shared by [[searchHydrated]] / [[searchFiltered]]. */
   private def probedCandidates(spark: SparkSession, path: String,
       meta: Meta, q: Array[Float], nProbe: Int): Option[DataFrame] = {
-    // centroid table is tiny: pick probe clusters driver-side
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cluster"),
-        Metric.Euclidean.dist(col("centroid"), typedLit(q)).as("d"))
-      .orderBy(col("d").asc, col("cluster").asc)
-      .limit(nProbe)
-      .collect().map(_.getInt(0))
     // read ONLY the probed cluster directories — skips the full
     // partition-discovery listing (O(nProbe) paths instead of
     // O(nCentroids) at probe time)
     val existing = existingClusterDirs(spark, s"$path/assignments",
-      cents.toIndexedSeq)
+      nearestClusters(loadCentroids(spark, path, meta), q, nProbe))
     if (existing.isEmpty) None
     else {
       val pruned0 = spark.read.parquet(existing.toIndexedSeq: _*)
@@ -713,10 +723,10 @@ object IvfIndex {
     * twin). Shape:
     *
     *   1. queries are assigned to their `nProbe` nearest clusters with
-    *      the same broadcast-argmin kernel (and the same
-    *      normalize-for-cosine + lowest-cluster tiebreak rules) the
-    *      index itself was built with, so probe selection matches
-    *      [[searchHydrated]] exactly;
+    *      the broadcast-argmin kernel the index itself was built with
+    *      ([[assignRows]] over [[nearest]], normalized for cosine) —
+    *      the same rule [[searchHydrated]] applies driver-side, so
+    *      probe selection matches it exactly;
     *   2. the UNION of touched cluster directories is scanned ONCE
     *      (O(touched) path listing, untouched clusters never read);
     *   3. each data row joins only the queries probing ITS cluster —
@@ -743,34 +753,20 @@ object IvfIndex {
     import TopKByDistance.topk
     val meta = readMeta(path)
     val metric = Metric.parse(meta.metric)
-    val cents = loadCentroids(spark, path)
+    val cents = loadCentroids(spark, path, meta)
     // cache once: the batch is read by the sizing count AND the
     // assignment kernel — caching keeps them consistent for a
     // nondeterministic source and makes the sizing pass cheap
     val q = queries.persist()
-    // same assignment rule as build/append: kernel normalization for
-    // cosine, euclidean argmin over the raw centroids, ties to the
-    // lowest cluster id
-    val assigned = assignRows(
-      q.select(col(qidCol).cast("long").as("id"),
-        col(qvecCol).cast("array<float>").as("values")),
-      cents, math.min(nProbe, cents.length),
-      normalize = metric == Metric.Cosine)
-      .select(col("id").as("qid"), col("values").as("qv"),
-        col("cluster"))
-    // touched clusters: ≤ |queries|·nProbe ints — driver-sized
-    val touched = assigned.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0))
-    val existing = existingClusterDirs(spark, s"$path/assignments",
-      touched.toIndexedSeq.sorted)
-    if (existing.isEmpty)
-      return CacheScope.releaseWith(spark.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("id"),
-          lit(0.0).as("distance"), lit(0).as("rank")).limit(0), q)
-    // basePath keeps the cluster partition column for the scoped join
-    val rows0 = spark.read.option("basePath", s"$path/assignments")
-      .parquet(existing.toIndexedSeq: _*)
-      .select(col("id"), col("values"), col("cluster"))
+    val (assigned, touched) =
+      assignQueries(q, qidCol, qvecCol, cents, nProbe, metric)
+    val rows0 = readClusters(spark, s"$path/assignments", touched) match {
+      case Some(r) => r.select(col("id"), col("values"), col("cluster"))
+      case None =>
+        return CacheScope.releaseWith(spark.emptyDataFrame
+          .select(lit(0L).as("qid"), lit(0L).as("id"),
+            lit(0.0).as("distance"), lit(0).as("rank")).limit(0), q)
+    }
     // pre-filter: thin CANDIDATES before scoring (see scaladoc)
     val rows = allowed match {
       case Some(a) =>
@@ -808,6 +804,24 @@ object IvfIndex {
       q)
   }
 
+  /** Batch probe selection: every query row → its `nProbe` nearest
+    * clusters by [[assignRows]] (the build/append rule, normalized for
+    * cosine). Returns (qid, qv, cluster) rows and the sorted touched
+    * cluster ids (≤ |queries|·nProbe ints — driver-sized). Shared by
+    * both batch searches. */
+  private[operators] def assignQueries(q: DataFrame, qidCol: String,
+      qvecCol: String, cents: Array[(Int, Array[Float])], nProbe: Int,
+      metric: Metric): (DataFrame, Seq[Int]) = {
+    val assigned = assignRows(
+      q.select(col(qidCol).cast("long").as("id"),
+        col(qvecCol).cast("array<float>").as("values")),
+      cents, math.min(nProbe, cents.length),
+      normalize = metric == Metric.Cosine)
+      .select(col("id").as("qid"), col("values").as("qv"), col("cluster"))
+    (assigned, assigned.select(col("cluster")).distinct()
+      .collect().map(_.getInt(0)).sorted.toIndexedSeq)
+  }
+
   /** Metric string of a persisted index (for routing guards). */
   def metricOf(path: String): String = readMeta(path).metric
 
@@ -820,9 +834,7 @@ object IvfIndex {
 
   /** Cheap drift check — does any live cluster hold more than
     * `maxClusterFraction` of the stored bytes? Pure filesystem
-    * arithmetic (one content summary per live cluster dir, no Spark
-    * job): bytes are a faithful row proxy because every row in one
-    * index stores the same dim (plus a few-byte id). Wire this after
+    * arithmetic ([[clusterBytes]], no Spark job). Wire this after
     * [[append]] traffic (e.g. every N streaming batches) and call
     * [[rebalance]] when it fires — the probe-latency drift ScaleProbe
     * measures (15.3 s → 3.6 s post-rebalance) builds up silently
@@ -831,27 +843,20 @@ object IvfIndex {
       maxClusterFraction: Double = 0.2): Boolean = {
     require(maxClusterFraction > 0 && maxClusterFraction <= 1,
       "[GRAFT] needsRebalance: maxClusterFraction must be in (0, 1]")
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val centIds = spark.read.parquet(s"$path/centroids")
-      .select(col("cluster")).collect().map(_.getInt(0)).sorted
-    val sizes = existingClusterDirs(spark, s"$path/assignments",
-      centIds.toIndexedSeq).map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hadoopConf).getContentSummary(hp).getLength
-    }
+    readMeta(path)
+    val sizes = clusterBytes(spark, path)
     val total = sizes.sum
     total > 0L && sizes.max.toDouble > maxClusterFraction * total
   }
 
   /** Hard-delete vectors from the index — the GDPR path
     * ([[graft.store.VfsStore.deleteWhere]]'s index-side twin): rewrite
-    * ONLY the cluster partitions containing a requested id, with the
-    * same stage + rename-swap discipline as [[compactAssignments]]
-    * (a crash mid-cluster leaves either the old dir or the new dir,
-    * never a partial mix; `cluster=<c>_old` left by a crash between
-    * the two renames is auto-healed by [[existingClusterDirs]] on the
-    * next read — renamed back, so no probe ever silently loses the
-    * cluster). Cost is
+    * ONLY the cluster partitions containing a requested id, each
+    * through [[ArtifactIo.stagedSwap]] (a crash mid-cluster leaves
+    * either the old dir or the new dir, never a partial mix;
+    * `cluster=<c>_old` left by a crash between the two renames is
+    * auto-healed by [[existingClusterDirs]] on the next read — renamed
+    * back, so no probe ever silently loses the cluster). Cost is
     * O(touched clusters), not O(index): the locate scan prunes to a
     * pushed-down `id IN` filter and untouched partitions are never
     * read or written. Derived PQ/IVF-PQ artifacts still hold codes for
@@ -862,7 +867,7 @@ object IvfIndex {
     * a vector once per assigned cluster). */
   def deleteIds(spark: SparkSession, path: String, ids: Seq[Long]): Long = {
     if (ids.isEmpty) return 0L
-    val meta = readMeta(path)
+    val meta = metaForWrite(path)
     val idSeq = ids.distinct
     // locate pass: which LIVE clusters hold these ids (pushed-down IN
     // filter; |ids| is a deletion batch, driver-sized by contract)
@@ -871,37 +876,23 @@ object IvfIndex {
       .select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return 0L
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ArtifactIo.fsOf(path)
     var removed = 0L
     touched.foreach { c =>
-      val liveDir = s"$path/assignments/cluster=$c"
-      val rows = spark.read.parquet(liveDir)
+      val rows = spark.read.parquet(s"$path/assignments/cluster=$c")
         .select(col("id"), col("values"))
       val kept = rows.filter(!col("id").isin(idSeq: _*))
       removed += rows.filter(col("id").isin(idSeq: _*)).count()
-      val livePath = new org.apache.hadoop.fs.Path(liveDir)
-      val oldPath = new org.apache.hadoop.fs.Path(liveDir + "_old")
       if (kept.isEmpty) {
         // partition emptied: drop the dir — probes skip missing dirs
         // ([[existingClusterDirs]]), same as an empty k-means cluster
-        fs.delete(livePath, true)
+        fs.delete(new org.apache.hadoop.fs.Path(
+          s"$path/assignments/cluster=$c"), true)
       } else {
-        val stageDir = s"$path/assignments_delete_$c"
         // partition-layout files carry no cluster column (the dir name
         // is the partition value) — write (id, values) only
-        kept.write.mode("overwrite").parquet(stageDir)
-        val stagePath = new org.apache.hadoop.fs.Path(stageDir)
-        if (fs.exists(oldPath)) fs.delete(oldPath, true)
-        if (!fs.rename(livePath, oldPath))
-          throw new java.io.IOException(
-            s"[GRAFT] deleteIds: cannot move $liveDir")
-        if (!fs.rename(stagePath, livePath)) {
-          fs.rename(oldPath, livePath) // roll back
-          throw new java.io.IOException(
-            s"[GRAFT] deleteIds: cannot move $stageDir")
-        }
-        fs.delete(oldPath, true)
+        ArtifactIo.stagedSwap(fs, s"$path/assignments", s"cluster=$c",
+          "IVF deleteIds")(kept.write.mode("overwrite").parquet(_))
       }
     }
     writeMeta(path, meta.copy(generation = meta.generation + 1))
@@ -929,7 +920,7 @@ object IvfIndex {
   def append(newRows: DataFrame, path: String,
       vecCol: String = "values", idCol: String = "id"): Unit = {
     val spark = newRows.sparkSession
-    val meta = readMeta(path)
+    val meta = metaForWrite(path)
     val metric = Metric.parse(meta.metric)
     val raw = newRows.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("values"))
@@ -943,7 +934,7 @@ object IvfIndex {
     // kernel-side normalization for cosine indexes), honoring the
     // index's multiprobe factor so appended rows keep the
     // boundary-coverage guarantee of the original build
-    assignRows(prepared, loadCentroids(spark, path), meta.nAssign,
+    assignRows(prepared, loadCentroids(spark, path, meta), meta.nAssign,
       normalize = metric == Metric.Cosine, eps = metaEps(meta))
       .repartition(col("cluster"))
       .write.mode("append").partitionBy("cluster")
@@ -955,37 +946,26 @@ object IvfIndex {
     * nCentroids in the hundreds that is the classic small-files
     * problem — probe latency grows with files listed, not bytes read.
     * Rewrites every cluster partition into one file per shuffle
-    * partition, staged in a sibling directory and swapped in with two
-    * renames.
+    * partition through [[ArtifactIo.stagedSwap]].
     *
     * SINGLE-WRITER maintenance op (the same stance as the reference's
     * global write mutex): appends racing a compact can land between
     * the stage read and the swap and be deleted with the old layout —
-    * stop streaming ingest for the swap window. Crash recovery: a
-    * crash between the two renames leaves `assignments_old` complete
-    * and `assignments` absent; rename `assignments_old` back to
-    * recover (the stage directory is overwritten by the next run). */
+    * stop streaming ingest for the swap window. A crash between the
+    * two renames leaves `assignments` PARKED: readers refuse, and the
+    * next writer ([[build]], [[append]], compact, [[deleteIds]],
+    * [[rebalance]]) renames it back first. */
   def compactAssignments(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live = new org.apache.hadoop.fs.Path(s"$path/assignments")
-    val stage = new org.apache.hadoop.fs.Path(s"$path/assignments_stage")
-    val old = new org.apache.hadoop.fs.Path(s"$path/assignments_old")
+    metaForWrite(path)
     // centroid-scoped read: orphan dirs from a crashed rebalance are
     // NOT copied into the new layout and die with the old dir in the
-    // swap below — compact doubles as the orphan cleaner
-    liveAssignments(spark, path)
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(stage.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"[GRAFT] compact: cannot move $live")
-    if (!fs.rename(stage, live)) {
-      fs.rename(old, live) // roll back
-      throw new java.io.IOException(s"[GRAFT] compact: cannot move $stage")
+    // swap — compact doubles as the orphan cleaner
+    ArtifactIo.stagedSwap(ArtifactIo.fsOf(path), path, "assignments",
+      "IVF compact") { stage =>
+      liveAssignments(spark, path)
+        .repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster").parquet(stage)
     }
-    fs.delete(old, true)
   }
 
   /** Split every cluster holding more than `maxClusterFraction` of the
@@ -1001,8 +981,8 @@ object IvfIndex {
     * The stored vector SET is unchanged — only the partitioning moves —
     * so a full probe (nProbe = nCentroids) returns bit-identical
     * results before and after (KnnSpec pins this). Sequence per
-    * oversized cluster: sample→Lloyd split→assign→write new
-    * `cluster=<fresh-id>` dirs, move them into `assignments/`; then ONE
+    * oversized cluster: sample→Lloyd split→assign→append new
+    * `cluster=<fresh-id>` dirs into `assignments/`; then ONE
     * centroid-table swap covers all splits; old dirs are deleted last,
     * so a crash leaves either the old routing (centroids not yet
     * swapped — old dirs still live) or the new one (orphaned old dirs,
@@ -1028,19 +1008,13 @@ object IvfIndex {
       maxClusterFraction: Double = 0.2, trainCap: Long = 100000L,
       maxIter: Int = 10, seed: Long = 43L, maxPasses: Int = 6): Int = {
     require(maxPasses >= 1, "[GRAFT] rebalance: maxPasses must be >= 1")
+    metaForWrite(path)
     // cheap FS-level skew reading between passes: if a pass created
     // clusters but the largest share did not shrink, the oversized
     // cluster is unsplittable (identical vectors) — stop churning
     // generations instead of burning the remaining passes
     def maxShare(): Double = {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val centIds = spark.read.parquet(s"$path/centroids")
-        .select(col("cluster")).collect().map(_.getInt(0)).sorted
-      val sizes = existingClusterDirs(spark, s"$path/assignments",
-        centIds.toIndexedSeq).map { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hadoopConf).getContentSummary(hp).getLength
-      }
+      val sizes = clusterBytes(spark, path)
       val total = sizes.sum
       if (total == 0L) 0.0 else sizes.max.toDouble / total
     }
@@ -1068,30 +1042,27 @@ object IvfIndex {
     require(maxClusterFraction > 0 && maxClusterFraction <= 1,
       "[GRAFT] rebalance: maxClusterFraction must be in (0, 1]")
     val meta = readMeta(path)
-    val centsOld = loadCentroids(spark, path)
+    val centsOld = loadCentroids(spark, path, meta)
     val centIds = centsOld.map(_._1).toSet
-    val onDisk = spark.read.parquet(s"$path/assignments")
+    val fs = ArtifactIo.fsOf(path)
+    // orphan dirs from a crashed prior rebalance (appended but never
+    // routed to): DELETED here so their ids cannot collide with the
+    // fresh ids this run hands out
+    val onDisk = clusterDirsForWrite(s"$path/assignments")
+    onDisk.filterNot(centIds).foreach { c =>
+      fs.delete(
+        new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$c"), true)
+    }
+    val sizes = liveAssignments(spark, path)
       .groupBy(col("cluster")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // orphan dirs from a crashed prior rebalance (moved in but never
-    // routed to): excluded from sizing, DELETED here so their ids
-    // cannot collide with the fresh ids this run hands out
-    onDisk.collect { case (c, _) if !centIds.contains(c) => c }
-      .foreach { c =>
-        fs.delete(
-          new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$c"),
-          true)
-      }
-    val sizes = onDisk.filter { case (c, _) => centIds.contains(c) }
+      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val total = sizes.map(_._2).sum
     val cap = math.max(1L, (maxClusterFraction * total).toLong)
     val oversized = sizes.filter(_._2 > cap)
     if (oversized.isEmpty) return 0
-    // fresh ids start past EVERYTHING ever seen on disk, not just the
-    // centroid-listed ids
-    var nextId = onDisk.map(_._1).max + 1
+    // fresh ids start past EVERYTHING ever seen on disk or routed (an
+    // empty cluster has a centroid but no dir)
+    var nextId = (onDisk ++ centIds).max + 1
     val replaced = scala.collection.mutable.Map.empty[Int, Array[(Int, Array[Float])]]
     oversized.foreach { case (c, cnt) =>
       val rows = spark.read
@@ -1107,46 +1078,28 @@ object IvfIndex {
       val centArr = centsD.zipWithIndex.map { case (cd, i) =>
         (nextId + i, cd.map(_.toFloat))
       }
-      val stage = s"$path/assignments_rebalance_$c"
       // honor the index's multiprobe storage: a copy living in the
       // split cluster keeps nAssign-nearest coverage against the NEW
       // subcentroids, preserving the boundary-pair visibility that
-      // similarityJoin/probes were built with
+      // similarityJoin/probes were built with. Fresh ids cannot collide
+      // with live dirs, so the split appends straight into
+      // `assignments/` — unrouted until the centroid swap below
       assignRows(rows, centArr, math.min(meta.nAssign, centArr.length),
         normalize = false, eps = metaEps(meta))
         .repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster").parquet(stage)
-      // fresh ids cannot collide with live dirs — plain renames
-      centArr.foreach { case (nc, _) =>
-        val src = new org.apache.hadoop.fs.Path(s"$stage/cluster=$nc")
-        if (fs.exists(src) &&
-            !fs.rename(src,
-              new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$nc")))
-          throw new java.io.IOException(
-            s"[GRAFT] rebalance: cannot move $src")
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+        .write.mode("append").partitionBy("cluster")
+        .parquet(s"$path/assignments")
       replaced(c) = centArr
       nextId += splitK
     }
-    // ONE centroid swap for all splits (stage + double rename, the
-    // compactAssignments pattern), then drop the old dirs
+    // ONE centroid swap for all splits, then drop the old dirs
     val newCents = centsOld.filterNot(e => replaced.contains(e._1)) ++
       replaced.values.flatten
-    val cLive = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val cStage = new org.apache.hadoop.fs.Path(s"$path/centroids_stage")
-    val cOld = new org.apache.hadoop.fs.Path(s"$path/centroids_old")
-    spark.createDataFrame(newCents.toSeq.sortBy(_._1))
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(cStage.toString)
-    if (fs.exists(cOld)) fs.delete(cOld, true)
-    if (!fs.rename(cLive, cOld))
-      throw new java.io.IOException("[GRAFT] rebalance: cannot move centroids")
-    if (!fs.rename(cStage, cLive)) {
-      fs.rename(cOld, cLive)
-      throw new java.io.IOException("[GRAFT] rebalance: centroid swap failed")
+    ArtifactIo.stagedSwap(fs, path, "centroids", "IVF rebalance") { stage =>
+      spark.createDataFrame(newCents.toSeq.sortBy(_._1))
+        .toDF("cluster", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(stage)
     }
-    fs.delete(cOld, true)
     replaced.keys.foreach { c =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$c"), true)
     }

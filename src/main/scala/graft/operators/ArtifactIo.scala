@@ -11,12 +11,14 @@ import graft.store.StoreStateException
 /** Shared filesystem machinery for every persisted artifact: the ONE
   * sidecar codec, Hadoop-FS metadata I/O (java.nio would resolve
   * remote hdfs:// / s3a:// artifacts against the driver's local cwd),
-  * the staged two-rename publish, the PARKED-crash detection, and the
+  * the staged two-rename publish, the PARKED-crash detection, the
   * ONE standing-index lifecycle ([[StandingIndex]]) shared by
   * [[LineIndex]], [[SigIndex]], [[UrlIndex]], [[BinaryIndex]],
-  * [[GramIndex]] and [[LshTextIndex]]. One copy — a crash-contract fix
-  * applied here reaches every artifact, instead of silently missing
-  * one of six near-identical twins.
+  * [[GramIndex]] and [[LshTextIndex]], and the ONE vector-index
+  * lifecycle ([[VectorIndex]]: sentinel-guarded rebuild) shared by
+  * [[IvfIndex]], [[PqIndex]] and [[IvfPq]]. One copy — a
+  * crash-contract fix applied here reaches every artifact, instead of
+  * silently missing one of nine near-identical twins.
   *
   * PARKED state: a crash between the swap's two renames leaves the
   * live directory ABSENT with the complete old artifact at
@@ -315,8 +317,12 @@ private[graft] object ArtifactIo {
 
   /** Staged two-rename publish: `writeStage` fills `<liveDir>_stage`
     * (parquet + its `_*.json` metadata), the live dir parks at
-    * `<liveDir>_old`, the stage moves in, `_old` is dropped. A crash
-    * between the renames leaves the PARKED state (see class doc). */
+    * `<liveDir>_old`, the stage moves in, `_old` is dropped. A failed
+    * second rename rolls the parked dir back; a crash between the
+    * renames leaves the PARKED state (see class doc). Every in-place
+    * rewrite goes through here: the standing indexes, and the vector
+    * indexes' `assignments` compaction, rebalance centroid swap and
+    * per-cluster delete/scrub rewrites (`liveDir` = `cluster=<c>`). */
   def stagedSwap[A](fs: FileSystem, path: String, liveDir: String,
       what: String)(writeStage: String => A): A = {
     val live = new Path(s"$path/$liveDir")
@@ -325,20 +331,21 @@ private[graft] object ArtifactIo {
     val out = writeStage(stage.toString)
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(live, old), s"[GRAFT] $what: cannot stage $live")
-    require(fs.rename(stage, live),
-      s"[GRAFT] $what: swap failed — recover by renaming $old back")
+    if (!fs.rename(stage, live)) {
+      fs.rename(old, live)
+      throw new IllegalArgumentException(
+        s"requirement failed: [GRAFT] $what: cannot move $stage in")
+    }
     fs.delete(old, true)
     out
   }
 
-  /** Rerun-tolerant swap-in for sentinel-guarded rebuilds
-    * ([[IvfIndex]]/[[PqIndex]]/IvfPq): move `<what>_stage` into
-    * place, parking any live dir at `<what>_old` first. After a
-    * crash the live dir may already be gone (parked but never
-    * replaced) — the stage then just moves in. Runs only inside a
-    * rebuild-sentinel window (the caller's readMeta refuses while it
-    * stands). */
-  def swapIn(fs: FileSystem, path: String, what: String): Unit = {
+  /** Rerun-tolerant swap-in, used only by [[VectorIndex.rebuild]]
+    * inside its sentinel window: move `<what>_stage` into place,
+    * parking any live dir at `<what>_old` first. After a crash the
+    * live dir may already be gone (parked but never replaced) — the
+    * stage then just moves in. */
+  private def swapIn(fs: FileSystem, path: String, what: String): Unit = {
     val live = new Path(s"$path/$what")
     val stage = new Path(s"$path/${what}_stage")
     val old = new Path(s"$path/${what}_old")
@@ -507,6 +514,63 @@ private[graft] object ArtifactIo {
         s"[GRAFT] $label needsCompaction: maxDataFiles must be positive")
       requireNotParked(path, dir, label)
       shouldCompact(data(path), maxDataFiles)
+    }
+  }
+
+  /** The lifecycle of a vector index — [[IvfIndex]] (`ivf.json`;
+    * `assignments`, `centroids`), [[PqIndex]] (`pq.json`) and [[IvfPq]]
+    * (`ivfpq.json`; both `codebooks`, `codes`). Unlike a
+    * [[StandingIndex]] the sidecar sits at the artifact ROOT and a
+    * rebuild replaces SEVERAL dirs, so no one rename publishes it.
+    * Instead a rebuild writes every dir to `<dir>_stage` while the old
+    * index keeps serving, then marks its live-mutation window (swap
+    * each dir in, write the meta) with `<name>.rebuilding`. Present =
+    * an in-progress or crashed rebuild: [[readMeta]] refuses, since a
+    * probe could mix the old and new artifact. The index is DERIVED
+    * data, so the crash contract is loud-fail + rerun-build, which
+    * swaps every dir in ([[swapIn]] tolerates each intermediate state)
+    * and clears the sentinel. The swapped dirs follow the PARKED rule
+    * too (class doc): readers refuse, writers [[healParked]] first. */
+  final case class VectorIndex(metaFile: String, label: String,
+      builder: String, dirs: Seq[String]) {
+    private val sentinel = metaFile.stripSuffix(".json") + ".rebuilding"
+
+    /** Sentinel-blind read — a rebuild needs the old generation while
+      * the sentinel stands. None when no index exists at `path`. */
+    def readMetaRaw(path: String): Option[Sidecar] =
+      if (fileExists(path, metaFile)) Some(readSidecar(path, metaFile))
+      else None
+
+    /** The guarded read behind every probe and maintenance op. */
+    def readMeta(path: String): Sidecar = {
+      require(!fileExists(path, sentinel),
+        s"[GRAFT] $label at $path has an in-progress or crashed " +
+          s"rebuild ($sentinel present) — rerun $builder to complete " +
+          "it; reading now could mix the old and new artifact")
+      dirs.foreach(requireNotParked(path, _, label))
+      readSidecar(path, metaFile)
+    }
+
+    def writeMeta(path: String, fields: (String, Any)*): Unit =
+      writeSidecar(path, metaFile, fields: _*)
+
+    def healParked(path: String): Unit =
+      dirs.foreach(ArtifactIo.healParked(fsOf(path), path, _, label))
+
+    /** Build or REBUILD: `write` fills every dir at the target the
+      * resolver names (the live dir on a first build, `<dir>_stage` on
+      * a rebuild) and returns the new sidecar fields. */
+    def rebuild(path: String)(
+        write: (String => String) => Seq[(String, Any)]): Unit = {
+      healParked(path)
+      val staged = fileExists(path, metaFile)
+      val fields = write(d => if (staged) s"$path/${d}_stage" else s"$path/$d")
+      if (staged) {
+        writeSmallFileAtomic(path, sentinel, "1")
+        dirs.foreach(swapIn(fsOf(path), path, _))
+      }
+      writeMeta(path, fields: _*)
+      deleteFile(path, sentinel)
     }
   }
 }

@@ -14,13 +14,17 @@ import graft.store.VfsStore
   */
 sealed trait Metric {
   def dist(a: Column, b: Column): Column
+  /** The name persisted in index sidecars; [[Metric.parse]] reads it. */
+  def name: String
 }
 object Metric {
   case object Euclidean extends Metric {
     def dist(a: Column, b: Column): Column = vfs_euclidean(a, b)
+    def name: String = "euclidean"
   }
   case object Cosine extends Metric {
     def dist(a: Column, b: Column): Column = vfs_cosine(a, b)
+    def name: String = "cosine"
   }
   /** default euclidean, matching tcp.rs:388-394 */
   def parse(s: String): Metric = s.toLowerCase match {

@@ -39,20 +39,44 @@ import org.apache.spark.sql.functions._
 object PqIndex {
   case class Meta(m: Int, ks: Int, dim: Int, metric: String, seed: Long)
 
-  /** Same rebuild-sentinel contract as [[IvfIndex]]: a rebuild's
-    * live-mutation window (dir swaps + meta write) is marked; a crash
-    * inside it makes every probe refuse loudly (derived data — the
-    * recovery is rerunning build) instead of silently scoring against
-    * a partial code table. */
-  private val RebuildSentinel = "pq.rebuilding"
+  /** The shared vector-index lifecycle (sentinel-guarded rebuild). */
+  private val Artifact = ArtifactIo.VectorIndex("pq.json", "PQ artifact",
+    "PqIndex.build", Seq("codebooks", "codes"))
 
   private def readMeta(path: String): Meta = {
-    require(!ArtifactIo.fileExists(path, RebuildSentinel),
-      s"[GRAFT] PQ artifact at $path has an in-progress or crashed " +
-        "rebuild (pq.rebuilding present) — rerun PqIndex.build")
-    val m = ArtifactIo.readSidecar(path, "pq.json")
+    val m = Artifact.readMeta(path)
     Meta(m.int("m"), m.int("ks"), m.int("dim"), m.str("metric"),
       m.long("seed"))
+  }
+
+  private[operators] def requireCodeShape(m: Int, ks: Int): Unit =
+    require(m > 0 && ks > 1 && ks <= 256,
+      "[GRAFT] PQ needs 0 < m and 1 < ks <= 256 (one byte per code)")
+
+  /** Per-subspace codebooks over a training sample: each vector splits
+    * into `m` subvectors of dim/m lanes and Lloyd runs per subspace for
+    * `ks` centroids (subspace j seeded `seed + j`, so codebooks are
+    * independent draws). codebooks(j)(k) = centroid k of subspace j. */
+  private[operators] def trainCodebooks(train: Array[Array[Float]], m: Int,
+      ks: Int, maxIter: Int, seed: Long): Array[Array[Array[Float]]] = {
+    val dim = train.head.length
+    require(dim % m == 0,
+      s"[GRAFT] dim $dim not divisible by m=$m subspaces")
+    val dsub = dim / m
+    Array.tabulate(m) { j =>
+      val sub = train.map(v => java.util.Arrays.copyOfRange(v, j * dsub,
+        (j + 1) * dsub))
+      IvfIndex.lloyd(sub, ks, maxIter, seed + j).map(_.map(_.toFloat))
+    }
+  }
+
+  /** `codebooks/` (subspace, centroid_id, centroid) — one file. */
+  private[operators] def writeCodebooks(spark: SparkSession,
+      books: Array[Array[Array[Float]]], target: String): Unit = {
+    val rows = for (j <- books.indices; k <- books(j).indices)
+      yield (j, k, books(j)(k))
+    spark.createDataFrame(rows).toDF("subspace", "centroid_id", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(target)
   }
 
   /** codebooks(j)(k) = centroid k of subspace j (dim/m floats). */
@@ -75,77 +99,38 @@ object PqIndex {
       metric: Metric = Metric.Cosine, seed: Long = 42L,
       vecCol: String = "values", idCol: String = "id",
       trainCap: Long = 100000L, maxIter: Int = 10): Unit = {
-    require(m > 0 && ks > 1 && ks <= 256,
-      "[GRAFT] PQ needs 0 < m and 1 < ks <= 256 (one byte per code)")
+    requireCodeShape(m, ks)
     val spark = base.sparkSession
     import spark.implicits._
     val spherical = metric == Metric.Cosine
     val prepared = base.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("values"))
-    val parts = math.max(1, prepared.rdd.getNumPartitions)
     val train = IvfIndex.sampleVectors(prepared, trainCap, seed,
       minPerPart = ks, normalize = spherical)
     val dim = train.head.length
-    require(dim % m == 0,
-      s"[GRAFT] dim $dim not divisible by m=$m subspaces")
+    val books = trainCodebooks(train, m, ks, maxIter, seed)
     val dsub = dim / m
-    // per-subspace Lloyd on the shared sample (subspace j gets its own
-    // seed so codebooks are independent draws)
-    val books: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
-      val sub = train.map(v => java.util.Arrays.copyOfRange(v, j * dsub,
-        (j + 1) * dsub))
-      IvfIndex.lloyd(sub, ks, maxIter, seed + j)
-        .map(_.map(_.toFloat))
-    }
-    val bookRows = for (j <- 0 until m; k <- 0 until ks)
-      yield (j, k, books(j)(k))
-    // rebuilds stage both dirs and swap inside the sentinel window
-    // (the [[IvfIndex.build]] discipline) — never an in-place
-    // overwrite of a live artifact
-    val rebuilding = ArtifactIo.fileExists(path, "pq.json")
-    val bookTarget =
-      if (rebuilding) s"$path/codebooks_stage" else s"$path/codebooks"
-    val codesTarget =
-      if (rebuilding) s"$path/codes_stage" else s"$path/codes"
-    spark.createDataFrame(bookRows).toDF("subspace", "centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(bookTarget)
-    // ---- encode pass: broadcast codebooks, argmin per subspace.
-    // Compute-bound (|rows|·ks·dim muladds) — spread like IvfIndex's
-    // assignment pass when the scan has too few partitions.
-    val encodeInput =
-      if (parts < spark.sparkContext.defaultParallelism)
-        prepared.repartition(spark.sparkContext.defaultParallelism)
-      else prepared
-    val bc = spark.sparkContext.broadcast(books)
-    encodeInput.as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val bks = bc.value
-        it.map { case (id, v0) =>
-          // ragged rows that escaped the bounded sample must fail
-          // loudly here, not crash the argmin or truncate silently
-          if (v0.length != dim)
-            throw new graft.store.InvalidVectorException(
-              s"[GRAFT] vector dimension mismatch at id=$id:" +
-                s" expected $dim, got ${v0.length}")
-          val v = if (spherical) IvfIndex.l2normalize(v0) else v0
-          (id, encodeOne(v, bks, dsub))
+    Artifact.rebuild(path) { target =>
+      writeCodebooks(spark, books, target("codebooks"))
+      // ---- encode pass (spread to all cores): broadcast codebooks,
+      // argmin per subspace
+      val bc = spark.sparkContext.broadcast(books)
+      IvfIndex.spreadToCores(prepared).as[(Long, Array[Float])]
+        .mapPartitions { it =>
+          val bks = bc.value
+          it.map { case (id, v0) =>
+            // ragged rows that escaped the bounded sample must fail
+            // loudly here, not crash the argmin or truncate silently
+            IvfIndex.requireDim(id, v0, dim)
+            val v = if (spherical) IvfIndex.l2normalize(v0) else v0
+            (id, encodeOne(v, bks, dsub))
+          }
         }
-      }
-      .toDF("id", "code")
-      .write.mode("overwrite").parquet(codesTarget)
-    if (rebuilding) {
-      ArtifactIo.writeSmallFileAtomic(path, RebuildSentinel, "1")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      ArtifactIo.swapIn(fs, path, "codebooks")
-      ArtifactIo.swapIn(fs, path, "codes")
+        .toDF("id", "code")
+        .write.mode("overwrite").parquet(target("codes"))
+      Seq("m" -> m, "ks" -> ks, "dim" -> dim, "metric" -> metric.name,
+        "seed" -> seed)
     }
-    ArtifactIo.writeSidecar(path, "pq.json", "m" -> m, "ks" -> ks,
-      "dim" -> dim, "metric" -> (metric match {
-        case Metric.Cosine => "cosine"
-        case Metric.Euclidean => "euclidean"
-      }), "seed" -> seed)
-    ArtifactIo.deleteFile(path, RebuildSentinel)
   }
 
   /** One vector → m bytes (argmin per subspace; `best == -1 ||` guards
@@ -211,12 +196,8 @@ object PqIndex {
       k: Int): DataFrame = {
     import spark.implicits._
     val meta = readMeta(path)
-    if (query.length != meta.dim)
-      throw new graft.store.InvalidVectorException(
-        s"[GRAFT] vector dimension mismatch: expected ${meta.dim}, got ${query.length}")
+    val q = IvfIndex.prepareQuery(query, meta.dim, Metric.parse(meta.metric))
     val dsub = meta.dim / meta.m
-    val q = if (meta.metric == "cosine") IvfIndex.l2normalize(query)
-      else query
     val books = loadCodebooks(spark, path, meta.m, meta.ks)
     val table = adcTable(q, books, dsub)
     val bt = spark.sparkContext.broadcast(table)
@@ -280,20 +261,19 @@ object PqIndex {
   * Deterministic given the parent index (hash-priority sample +
   * seeded Lloyd per subspace, the U2 determinism stance). */
 object IvfPq {
-  /** Parent centroid table → driver map, via [[IvfIndex]]'s
-    * byte-gated loadCentroids (same driver-OOM hazard, same
-    * two-level-routing escape hatch — see that scaladoc; one gate,
-    * one collect, one hint string to maintain). The sentinel-checking
-    * readMeta runs FIRST: loadCentroids reads meta sentinel-blind
-    * (probe paths re-check via requireFresh), but build/refresh's
-    * first parent read must refuse a mid-rebuild parent UP FRONT —
-    * otherwise they train/encode against a mix of old and new
-    * clusters and, if the rebuild's sentinel clears before the final
-    * re-stamp, publish codes stamped with the new generation. */
-  private def centroidMap(spark: SparkSession,
-      ivfPath: String): Map[Int, Array[Float]] = {
-    IvfIndex.readMeta(ivfPath)
-    IvfIndex.loadCentroids(spark, ivfPath).toMap
+  /** The shared vector-index lifecycle (sentinel-guarded rebuild). */
+  private val Artifact = ArtifactIo.VectorIndex("ivfpq.json",
+    "IVF-PQ artifact", "IvfPq.build", Seq("codebooks", "codes"))
+
+  /** The parent's guarded meta and its byte-gated centroid table
+    * ([[IvfIndex.loadCentroids]] — one gate, one collect, one hint
+    * string). The guarded read comes first, so build/refresh refuse a
+    * mid-rebuild parent UP FRONT instead of training/encoding against
+    * a mix of old and new clusters. */
+  private def parent(spark: SparkSession,
+      ivfPath: String): (IvfIndex.Meta, Array[(Int, Array[Float])]) = {
+    val meta = IvfIndex.readMeta(ivfPath)
+    (meta, IvfIndex.loadCentroids(spark, ivfPath, meta))
   }
 
   private def sub(v: Array[Float], c: Array[Float]): Array[Float] = {
@@ -303,19 +283,6 @@ object IvfPq {
     out
   }
 
-  /** nProbe nearest clusters to q, ties to the lowest cluster id. */
-  private def probeClusters(cents: Map[Int, Array[Float]],
-      q: Array[Float], nProbe: Int): Seq[Int] =
-    cents.toSeq
-      .map { case (c, cent) =>
-        var d = 0.0; var i = 0
-        while (i < q.length) {
-          val diff = q(i).toDouble - cent(i); d += diff * diff; i += 1
-        }
-        (d, c)
-      }
-      .sorted.take(nProbe).map(_._2)
-
   /** Train residual codebooks over `ivfPath`'s assignments and encode
     * every indexed vector at `path`: `codebooks/`, `codes/cluster=<c>/`
     * (id, code BINARY), `ivfpq.json`. The parent index is read-only
@@ -324,24 +291,17 @@ object IvfPq {
   def build(spark: SparkSession, ivfPath: String, path: String,
       m: Int = 8, ks: Int = 256, seed: Long = 42L,
       trainCap: Long = 100000L, maxIter: Int = 10): Unit = {
-    require(m > 0 && ks > 1 && ks <= 256,
-      "[GRAFT] PQ needs 0 < m and 1 < ks <= 256 (one byte per code)")
+    PqIndex.requireCodeShape(m, ks)
     import spark.implicits._
-    val cents = centroidMap(spark, ivfPath)
-    val bcCents = spark.sparkContext.broadcast(cents)
+    val (parentMeta, centArr) = parent(spark, ivfPath)
+    val bcCents = spark.sparkContext.broadcast(centArr.toMap)
     // centroid-scoped read: orphan dirs from a crashed parent rebalance
     // hold duplicate copies of split vectors — encoding them would
-    // write duplicate codes
-    val assign = IvfIndex.liveAssignments(spark, ivfPath)
-      .select(col("id"), col("values"), col("cluster"))
-    // compute-bound passes (ks·dim muladds per row): spread a
-    // few-partition layout across the cores first, same stance as
-    // [[IvfIndex.build]]'s assignment pass
-    val parts = math.max(1, assign.rdd.getNumPartitions)
-    val spreadAssign =
-      if (parts < spark.sparkContext.defaultParallelism)
-        assign.repartition(spark.sparkContext.defaultParallelism)
-      else assign
+    // write duplicate codes. Compute-bound passes (ks·dim muladds per
+    // row) — spread across the cores first
+    val spreadAssign = IvfIndex.spreadToCores(
+      IvfIndex.liveAssignments(spark, ivfPath)
+        .select(col("id"), col("values"), col("cluster")))
     // residual stream (id, v − centroid): the training distribution
     val residuals = spreadAssign.as[(Long, Array[Float], Int)]
       .mapPartitions { it =>
@@ -351,60 +311,34 @@ object IvfPq {
     val train = IvfIndex.sampleVectors(residuals, trainCap, seed,
       minPerPart = ks, normalize = false)
     val dim = train.head.length
-    require(dim % m == 0,
-      s"[GRAFT] dim $dim not divisible by m=$m subspaces")
+    val books = PqIndex.trainCodebooks(train, m, ks, maxIter, seed)
     val dsub = dim / m
-    val books: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
-      val subTrain = train.map(v => java.util.Arrays.copyOfRange(v,
-        j * dsub, (j + 1) * dsub))
-      IvfIndex.lloyd(subTrain, ks, maxIter, seed + j).map(_.map(_.toFloat))
-    }
-    val bookRows = for (j <- 0 until m; k <- 0 until ks)
-      yield (j, k, books(j)(k))
-    // same staged-rebuild + sentinel discipline as [[PqIndex.build]]
-    val rebuilding = ArtifactIo.fileExists(path, "ivfpq.json")
-    val bookTarget =
-      if (rebuilding) s"$path/codebooks_stage" else s"$path/codebooks"
-    val codesTarget =
-      if (rebuilding) s"$path/codes_stage" else s"$path/codes"
-    spark.createDataFrame(bookRows).toDF("subspace", "centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(bookTarget)
-    val bcBooks = spark.sparkContext.broadcast(books)
-    spreadAssign.as[(Long, Array[Float], Int)]
-      .mapPartitions { it =>
-        val cm = bcCents.value; val bks = bcBooks.value
-        it.map { case (id, v, c) =>
-          (id, PqIndex.encodeOne(sub(v, cm(c)), bks, dsub), c)
+    Artifact.rebuild(path) { target =>
+      PqIndex.writeCodebooks(spark, books, target("codebooks"))
+      val bcBooks = spark.sparkContext.broadcast(books)
+      spreadAssign.as[(Long, Array[Float], Int)]
+        .mapPartitions { it =>
+          val cm = bcCents.value; val bks = bcBooks.value
+          it.map { case (id, v, c) =>
+            (id, PqIndex.encodeOne(sub(v, cm(c)), bks, dsub), c)
+          }
         }
-      }
-      .toDF("id", "code", "cluster")
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(codesTarget)
-    if (rebuilding) {
-      ArtifactIo.writeSmallFileAtomic(path, RebuildSentinel, "1")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      ArtifactIo.swapIn(fs, path, "codebooks")
-      ArtifactIo.swapIn(fs, path, "codes")
+        .toDF("id", "code", "cluster")
+        .repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(target("codes"))
+      // record the parent's nAssign (a single-assignment parent can
+      // never produce duplicate ids across probed partitions, so search
+      // skips the dedup shuffle entirely — same distinction
+      // [[IvfIndex.searchHydrated]] makes) AND the clustering
+      // generation the codes were encoded against: a later
+      // rebalance/rebuild/delete bumps the parent's generation and
+      // every probe of this artifact refuses until [[refresh]]
+      // re-heals + re-stamps
+      metaFields(PqMeta(m, ks, dim, seed, parentMeta.nAssign,
+        parentMeta.generation))
     }
-    // record the parent's nAssign (a single-assignment parent can
-    // never produce duplicate ids across probed partitions, so search
-    // skips the dedup shuffle entirely — same distinction
-    // [[IvfIndex.searchHydrated]] makes) AND the parent's clustering
-    // generation: a later rebalance/rebuild/delete bumps the parent's
-    // generation and every probe of this artifact refuses until
-    // [[refresh]] re-heals + re-stamps
-    val parent = IvfIndex.readMeta(ivfPath)
-    writeMeta(path, PqMeta(m, ks, dim, seed, parent.nAssign,
-      parent.generation))
-    ArtifactIo.deleteFile(path, RebuildSentinel)
   }
-
-  /** Same rebuild-sentinel contract as [[IvfIndex]]/[[PqIndex]] —
-    * present = an in-progress or crashed rebuild; probes and refresh
-    * refuse loudly until [[build]] is rerun. */
-  private val RebuildSentinel = "ivfpq.rebuilding"
 
   /** Incremental maintenance — heals the artifact against the parent's
     * CURRENT state, then re-stamps the generation. Three repairs, each
@@ -433,69 +367,52 @@ object IvfPq {
     import spark.implicits._
     val meta = readMeta(path)
     val dsub = meta.dim / meta.m
-    val cents = centroidMap(spark, ivfPath)
+    val (parentMeta, centArr) = parent(spark, ivfPath)
+    val cents = centArr.toMap
     val bcCents = spark.sparkContext.broadcast(cents)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // ---- 1. drop code dirs keyed by dead cluster ids ----
-    val codesBase = new org.apache.hadoop.fs.Path(s"$path/codes")
-    if (fs.exists(codesBase)) {
-      fs.listStatus(codesBase).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("cluster=") &&
-            !cents.contains(name.stripPrefix("cluster=").toInt))
-          fs.delete(st.getPath, true)
-      }
+    val fs = ArtifactIo.fsOf(path)
+    val codesBase = s"$path/codes"
+    // ---- 1. drop code dirs keyed by dead cluster ids. The writer-side
+    // listing settles swap debris first, so every scan below reads
+    // integer cluster dirs only ----
+    val (liveCodes, deadCodes) =
+      IvfIndex.clusterDirsForWrite(codesBase).partition(cents.contains)
+    deadCodes.foreach { c =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$codesBase/cluster=$c"), true)
     }
+    // (id, cluster) of the stored codes, RE-LISTED per call: a scan
+    // that snapshotted its file listing before step 2's swaps would
+    // chase renamed-away part files
+    def coded(): Option[DataFrame] =
+      IvfIndex.readClusters(spark, codesBase, liveCodes)
+        .map(_.select(col("id"), col("cluster")))
     val assign = IvfIndex.liveAssignments(spark, ivfPath)
       .select(col("id"), col("values"), col("cluster"))
-    val codes = spark.read.parquet(s"$path/codes")
-      .select(col("id"), col("cluster"))
     // ---- 2. scrub codes for ids deleted from the parent. Affected
     // partitions only: a surviving code's vector keeps its cluster key
     // across deletes (deleteIds moves nothing), so the semi-join can
     // stay cluster-scoped. ----
-    val deadClusters = codes
-      .join(assign.select(col("id")), Seq("id"), "left_anti")
-      .select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val deadClusters = coded().fold(Array.empty[Int])(
+      _.join(assign.select(col("id")), Seq("id"), "left_anti")
+        .select(col("cluster")).distinct()
+        .collect().map(_.getInt(0)).sorted)
     deadClusters.foreach { c =>
-      val dirC = s"$path/codes/cluster=$c"
-      val keep = spark.read.parquet(dirC)
+      val keep = spark.read.parquet(s"$codesBase/cluster=$c")
         .join(assign.filter(col("cluster") === c).select(col("id")),
           Seq("id"), "left_semi")
-      val livePath = new org.apache.hadoop.fs.Path(dirC)
-      if (keep.isEmpty) {
-        fs.delete(livePath, true)
-      } else {
-        val stageDir = s"$path/codes_scrub_$c"
-        keep.write.mode("overwrite").parquet(stageDir)
-        val stagePath = new org.apache.hadoop.fs.Path(stageDir)
-        val oldPath = new org.apache.hadoop.fs.Path(dirC + "_old")
-        if (fs.exists(oldPath)) fs.delete(oldPath, true)
-        if (!fs.rename(livePath, oldPath))
-          throw new java.io.IOException(
-            s"[GRAFT] refresh: cannot move $dirC")
-        if (!fs.rename(stagePath, livePath)) {
-          fs.rename(oldPath, livePath) // roll back
-          throw new java.io.IOException(
-            s"[GRAFT] refresh: cannot move $stageDir")
-        }
-        fs.delete(oldPath, true)
-      }
+      if (keep.isEmpty)
+        fs.delete(new org.apache.hadoop.fs.Path(s"$codesBase/cluster=$c"), true)
+      else
+        ArtifactIo.stagedSwap(fs, codesBase, s"cluster=$c",
+          "IVF-PQ refresh")(keep.write.mode("overwrite").parquet(_))
     }
     // ---- 3. encode ASSIGNMENT ROWS that have no code yet — keyed on
     // (id, cluster), not id: a multiprobe vector (nAssign > 1) evicted
     // from a split cluster can keep a code in a surviving co-assigned
     // cluster, and an id-only anti-join would then never encode it
-    // into the new clusters — silent recall loss stamped as fresh.
-    // RE-LIST the code table: `codes` snapshotted its file listing
-    // before step 2's swaps, so reusing it would chase renamed-away
-    // part files ----
-    val codedNow = spark.read.parquet(s"$path/codes")
-      .select(col("id"), col("cluster"))
-    val missing = assign.join(codedNow, Seq("id", "cluster"),
-        "left_anti")
+    // into the new clusters — silent recall loss stamped as fresh ----
+    val missing = coded().fold(assign)(
+        assign.join(_, Seq("id", "cluster"), "left_anti"))
       .select(col("id"), col("values"), col("cluster"))
     val books = PqIndex.loadCodebooks(spark, path, meta.m, meta.ks)
     val bcBooks = spark.sparkContext.broadcast(books)
@@ -503,10 +420,7 @@ object IvfPq {
       .mapPartitions { it =>
         val cm = bcCents.value; val bks = bcBooks.value
         it.map { case (id, v, c) =>
-          if (v.length != meta.dim)
-            throw new graft.store.InvalidVectorException(
-              s"[GRAFT] vector dimension mismatch at id=$id:" +
-                s" expected ${meta.dim}, got ${v.length}")
+          IvfIndex.requireDim(id, v, meta.dim)
           (id, PqIndex.encodeOne(sub(v, cm(c)), bks, dsub), c)
         }
       }
@@ -518,27 +432,21 @@ object IvfPq {
         .write.mode("append").partitionBy("cluster")
         .parquet(s"$path/codes")
     newCodes.unpersist()
-    // ---- healed: re-stamp to the parent's current generation ----
-    val parent = IvfIndex.readMeta(ivfPath)
-    writeMeta(path, meta.copy(nAssign = parent.nAssign,
-      gen = parent.generation))
+    // ---- healed: re-stamp to the generation the repairs read ----
+    Artifact.writeMeta(path, metaFields(meta.copy(
+      nAssign = parentMeta.nAssign, gen = parentMeta.generation)): _*)
     n
   }
 
   private[operators] case class PqMeta(m: Int, ks: Int, dim: Int,
       seed: Long, nAssign: Int, gen: Int)
 
-  private def writeMeta(path: String, meta: PqMeta): Unit =
-    ArtifactIo.writeSidecar(path, "ivfpq.json", "m" -> meta.m,
-      "ks" -> meta.ks, "dim" -> meta.dim, "seed" -> meta.seed,
-      "nAssign" -> meta.nAssign, "gen" -> meta.gen)
+  private def metaFields(meta: PqMeta): Seq[(String, Any)] = Seq(
+    "m" -> meta.m, "ks" -> meta.ks, "dim" -> meta.dim, "seed" -> meta.seed,
+    "nAssign" -> meta.nAssign, "gen" -> meta.gen)
 
   private def readMeta(path: String): PqMeta = {
-    require(!ArtifactIo.fileExists(path, RebuildSentinel),
-      s"[GRAFT] IVF-PQ artifact at $path has an in-progress or " +
-        "crashed rebuild (ivfpq.rebuilding present) — rerun " +
-        "IvfPq.build")
-    val m = ArtifactIo.readSidecar(path, "ivfpq.json")
+    val m = Artifact.readMeta(path)
     PqMeta(m.int("m"), m.int("ks"), m.int("dim"), m.long("seed"),
       m.intOr("nAssign", 1), m.intOr("gen", 1))
   }
@@ -548,8 +456,7 @@ object IvfPq {
     * out-of-date code table silently returns degraded or deleted
     * candidates (codes keyed by dead cluster ids are simply never
     * scanned; deleted vectors still score). Fail loudly instead. */
-  private def requireFresh(meta: PqMeta, ivfPath: String): Unit = {
-    val parentGen = IvfIndex.generationOf(ivfPath)
+  private def requireFresh(meta: PqMeta, parentGen: Int): Unit = {
     if (meta.gen != parentGen)
       throw new IllegalStateException(
         s"[GRAFT] stale IVF-PQ artifact: built against index generation " +
@@ -567,16 +474,13 @@ object IvfPq {
   private def probe(spark: SparkSession, ivfPath: String, path: String,
       query: Array[Float], nProbe: Int): Probe = {
     val meta = readMeta(path)
-    requireFresh(meta, ivfPath)
-    if (query.length != meta.dim)
-      throw new graft.store.InvalidVectorException(
-        s"[GRAFT] vector dimension mismatch: expected ${meta.dim}, got ${query.length}")
-    val metric = Metric.parse(IvfIndex.metricOf(ivfPath))
-    val q = if (metric == Metric.Cosine) IvfIndex.l2normalize(query)
-      else query
-    val cents = centroidMap(spark, ivfPath)
-    Probe(meta.m, meta.ks, meta.dim, meta.nAssign, metric, q, cents,
-      probeClusters(cents, q, nProbe))
+    val parentMeta = IvfIndex.readMeta(ivfPath)
+    requireFresh(meta, parentMeta.generation)
+    val metric = Metric.parse(parentMeta.metric)
+    val q = IvfIndex.prepareQuery(query, meta.dim, metric)
+    val cents = IvfIndex.loadCentroids(spark, ivfPath, parentMeta)
+    Probe(meta.m, meta.ks, meta.dim, meta.nAssign, metric, q, cents.toMap,
+      IvfIndex.nearestClusters(cents, q, nProbe))
   }
 
   /** ADC top-k over the nProbe nearest clusters only: (id, adist)
@@ -609,14 +513,11 @@ object IvfPq {
     val tables: Map[Int, Array[Array[Double]]] = p.probed.map { c =>
       c -> PqIndex.adcTable(sub(p.q, p.cents(c)), books, dsub)
     }.toMap
-    val existing = IvfIndex.existingClusterDirs(spark, s"$path/codes",
-      p.probed)
-    if (existing.isEmpty)
-      return spark.range(0).select(col("id"), lit(0.0).as("adist"))
-    val bt = spark.sparkContext.broadcast(tables)
-    val codeRows0 = spark.read.option("basePath", s"$path/codes")
-      .parquet(existing: _*)
+    val codeRows0 = IvfIndex.readClusters(spark, s"$path/codes", p.probed)
+      .getOrElse(
+        return spark.range(0).select(col("id"), lit(0.0).as("adist")))
       .select(col("id"), col("code"), col("cluster"))
+    val bt = spark.sparkContext.broadcast(tables)
     // pre-filter: thin code rows before the ADC kernel (see search())
     val codeRows = allowSide match {
       case Some(side) => codeRows0.join(side, Seq("id"), "left_semi")
@@ -676,13 +577,11 @@ object IvfPq {
         allowed.map(BroadcastGate.allowedSide(_, allowedRows,
           "searchRefined")))
       .select(col("id")).as[Long].collect()
-    val existing = IvfIndex.existingClusterDirs(spark,
-      s"$ivfPath/assignments", p.probed)
-    if (existing.isEmpty || candIds.isEmpty)
+    val rows = IvfIndex.readClusters(spark, s"$ivfPath/assignments",
+      p.probed)
+    if (rows.isEmpty || candIds.isEmpty)
       return spark.range(0).select(col("id"), lit(0.0).as("distance"))
-    val pruned = spark.read
-      .option("basePath", s"$ivfPath/assignments")
-      .parquet(existing: _*)
+    val pruned = rows.get
       .filter(col("id").isin(candIds.toIndexedSeq: _*))
       // a multiprobe parent stores a vector once per assigned cluster;
       // identical copies, so the id-dedup is deterministic
@@ -733,11 +632,11 @@ object IvfPq {
     import spark.implicits._
     import TopKByDistance.topk
     val meta = readMeta(path)
-    requireFresh(meta, ivfPath)
-    val metric = Metric.parse(IvfIndex.metricOf(ivfPath))
+    val parentMeta = IvfIndex.readMeta(ivfPath)
+    requireFresh(meta, parentMeta.generation)
+    val metric = Metric.parse(parentMeta.metric)
     val dsub = meta.dim / meta.m
-    val cents = centroidMap(spark, ivfPath)
-    val centArr = cents.toArray.sortBy(_._1)
+    val centArr = IvfIndex.loadCentroids(spark, ivfPath, parentMeta)
     val emptyOut = () => spark.range(0)
       .select(col("id").as("qid"), col("id"),
         lit(0.0).as("distance"), lit(0).as("rank"))
@@ -745,21 +644,11 @@ object IvfPq {
     // assignment kernel — caching keeps them consistent for a
     // nondeterministic source and makes the sizing pass cheap
     val q = queries.persist()
-    // same probe-selection rule as the parent (normalize for cosine,
-    // euclidean argmin, ties to the lowest cluster id)
-    val assigned = IvfIndex.assignRows(
-      q.select(col(qidCol).cast("long").as("id"),
-        col(qvecCol).cast("array<float>").as("values")),
-      centArr, math.min(nProbe, centArr.length),
-      normalize = metric == Metric.Cosine)
-      .select(col("id").as("qid"), col("values").as("qv"),
-        col("cluster"))
-    val touched = assigned.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existingCodes = IvfIndex.existingClusterDirs(spark,
-      s"$path/codes", touched.toIndexedSeq)
-    if (existingCodes.isEmpty)
-      return CacheScope.releaseWith(emptyOut(), q)
+    val (assigned, touched) = IvfIndex.assignQueries(q, qidCol, qvecCol,
+      centArr, nProbe, metric)
+    val codeRows0 = IvfIndex.readClusters(spark, s"$path/codes", touched)
+      .getOrElse(return CacheScope.releaseWith(emptyOut(), q))
+      .select(col("id"), col("code"), col("cluster"))
     // one count sizes all three broadcast gates (the searchBatch
     // stance: hint only what plausibly fits executor memory, leave the
     // rest to the planner); bytes, not rows — dim from the index meta
@@ -770,10 +659,7 @@ object IvfPq {
       qCount * math.min(nProbe, centArr.length), meta.dim)
     val books = PqIndex.loadCodebooks(spark, path, meta.m, meta.ks)
     val bcBooks = spark.sparkContext.broadcast(books)
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val codeRows0 = spark.read.option("basePath", s"$path/codes")
-      .parquet(existingCodes: _*)
-      .select(col("id"), col("code"), col("cluster"))
+    val bcCents = spark.sparkContext.broadcast(centArr.toMap)
     // pre-filter: thin code rows before the query join + ADC kernel
     val codeRows = allowed match {
       case Some(a) =>
@@ -827,13 +713,8 @@ object IvfPq {
     // ---- refine: raw vectors for candidates only, from the touched
     // parent partitions (candidates are |Q|·k·overfetch rows — the
     // broadcast side of the id join by construction) ----
-    val existingAssign = IvfIndex.existingClusterDirs(spark,
-      s"$ivfPath/assignments", touched.toIndexedSeq)
-    if (existingAssign.isEmpty)
-      return CacheScope.releaseWith(emptyOut(), q)
-    val raw0 = spark.read
-      .option("basePath", s"$ivfPath/assignments")
-      .parquet(existingAssign: _*)
+    val raw0 = IvfIndex.readClusters(spark, s"$ivfPath/assignments", touched)
+      .getOrElse(return CacheScope.releaseWith(emptyOut(), q))
       .select(col("id"), col("values"))
     val raw = if (meta.nAssign > 1) raw0.dropDuplicates("id") else raw0
     val qVecs = assigned.select(col("qid"), col("qv"))

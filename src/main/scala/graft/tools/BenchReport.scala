@@ -431,9 +431,10 @@ object BenchReport {
     println(s"[bench-report] wrote $out (${benches.size} rounds)")
   }
 
-  /** Recall operating curves (measured by `graft.tools.RecallProbe` at
-    * sf0.1, 20 queries, recall@10 cosine — rerun it and paste here when
-    * index internals change). The acceptance oracles gate ONE point
+  /** Recall operating curves — static history: measured in round 5 at
+    * sf0.1, 20 queries, recall@10 cosine, by a probe main since
+    * removed. Live recall comes from perfbench's `knn_batch` (IVF and
+    * IVF-PQ recall@10 beside speed). The acceptance oracles gate ONE point
     * per index type (≥ 0.9); these curves make quality REGRESSIONS
     * visible between rounds. sf0.1 embeddings are uniform random —
     * IVF's worst case (no cluster structure), so these are floor

@@ -16,6 +16,20 @@ class KnnSpec extends AnyFunSuite {
   private lazy val all: Array[(Long, Array[Float])] =
     emb.as[(Long, Array[Float])].collect()
 
+  /** Crash-state helpers: copy a dir tree / move a dir, by hand. */
+  private def copyDir(src: String, dst: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(src), fs,
+      new org.apache.hadoop.fs.Path(dst), false, conf))
+  }
+
+  private def moveDir(src: String, dst: String): Unit =
+    Files.move(java.nio.file.Paths.get(src), java.nio.file.Paths.get(dst))
+
+  private def exists(p: String): Boolean = new java.io.File(p).exists()
+
   private def bruteTopK(q: Array[Float], k: Int): Seq[Long] = {
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -133,6 +147,11 @@ class KnnSpec extends AnyFunSuite {
       }
       assert(err.getMessage.contains("two-level routing"), err.getMessage)
       assert(err.getMessage.contains("centroid table"), err.getMessage)
+      // the single-query probe selects clusters through the same gate
+      val one = intercept[IllegalArgumentException] {
+        IvfIndex.search(spark, dir, all.head._2, 5)
+      }
+      assert(one.getMessage.contains("two-level routing"), one.getMessage)
       // the derived-artifact path (IVF-PQ build) hits the same gate
       val pqErr = intercept[IllegalArgumentException] {
         IvfPq.build(spark, dir,
@@ -188,6 +207,81 @@ class KnnSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/assignments_stage").exists())
     assert(!new java.io.File(s"$dir/assignments_old").exists())
     assert(!new java.io.File(s"$dir/centroids_stage").exists())
+    // CRASH STATE C — mid-window: the first dir is swapped in, the
+    // second is still staged, the sentinel stands
+    copyDir(s"$dir/assignments", s"$dir/assignments_stage")
+    copyDir(s"$dir/centroids", s"$dir/centroids_stage")
+    moveDir(s"$dir/assignments", s"$dir/assignments_old")
+    moveDir(s"$dir/assignments_stage", s"$dir/assignments")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$dir/assignments_old"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "ivf.rebuilding"),
+      "1".getBytes("UTF-8"))
+    val queries = all.take(2).toSeq.toDF("qid", "qvalues")
+    val readers: Seq[(String, () => Any)] = Seq(
+      "search" -> (() => IvfIndex.search(spark, dir, all.head._2, 5)),
+      "searchFiltered" -> (() => IvfIndex.searchFiltered(spark, dir,
+        all.head._2, 5, emb.select($"id"))),
+      "searchBatch" -> (() => IvfIndex.searchBatch(spark, dir, queries, 5)),
+      "similarityJoin" -> (() => IvfIndex.similarityJoin(spark, dir, 0.1)),
+      "needsRebalance" -> (() => IvfIndex.needsRebalance(spark, dir)),
+      "generationOf" -> (() => IvfIndex.generationOf(dir)))
+    readers.foreach { case (name, read) =>
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains("ivf.rebuilding"), s"$name: $e")
+    }
+    IvfIndex.build(emb, dir, nCentroids = 8, Metric.Cosine)
+    assert(IvfIndex.generationOf(dir) === 3)
+    assert(IvfIndex.search(spark, dir, all.head._2, 5, nProbe = 8)
+      .select("id").as[Long].collect().toSeq === beforeIds)
+    Seq("ivf.rebuilding", "assignments_stage", "assignments_old",
+        "centroids_stage", "centroids_old")
+      .foreach(d => assert(!exists(s"$dir/$d"), d))
+  }
+
+  test("a parked assignments/ or centroids/ dir (a crash inside " +
+      "compactAssignments' or rebalance's swap) makes readers refuse; " +
+      "the next writer heals it first") {
+    val dir = Files.createTempDirectory("ivf-parked").toString
+    IvfIndex.build(emb, dir, nCentroids = 4, Metric.Cosine)
+    def fullProbe(): Set[Long] = IvfIndex.search(spark, dir, all.head._2,
+      all.length + 1, nProbe = 4).select("id").as[Long].collect().toSet
+    val full = fullProbe()
+    assert(full.size === all.length)
+    // assignments parked: a probe would silently read zero rows
+    moveDir(s"$dir/assignments", s"$dir/assignments_old")
+    val err = intercept[IllegalArgumentException](fullProbe())
+    assert(err.getMessage.contains("CRASHED"), err.getMessage)
+    // append heals BEFORE landing its row — never into a fresh, empty
+    // assignments/ that a later compact would then keep alone
+    val extra = (99999999L, all.head._2)
+    IvfIndex.append(Seq(extra).toDF("id", "values"), dir)
+    IvfIndex.compactAssignments(spark, dir)
+    assert(fullProbe() === full + extra._1)
+    assert(!exists(s"$dir/assignments_old"))
+    // centroids parked: every probe would fail on a missing path
+    moveDir(s"$dir/centroids", s"$dir/centroids_old")
+    intercept[IllegalArgumentException](fullProbe())
+    assert(IvfIndex.deleteIds(spark, dir, Seq(extra._1)) === 1L)
+    assert(fullProbe() === full)
+    assert(!exists(s"$dir/centroids_old"))
+  }
+
+  test("rebalance ignores a leftover cluster=<c>_old beside its live " +
+      "cluster (swap garbage) and drops it") {
+    val dir = Files.createTempDirectory("ivf-old-garbage").toString
+    IvfIndex.build(emb, dir, nCentroids = 4, Metric.Cosine)
+    val c = spark.read.parquet(s"$dir/centroids").select("cluster")
+      .as[Int].collect().min
+    copyDir(s"$dir/assignments/cluster=$c",
+      s"$dir/assignments/cluster=${c}_old")
+    def fullProbe(): Set[Long] = IvfIndex.search(spark, dir, all.head._2,
+      all.length, nProbe = 1000).select("id").as[Long].collect().toSet
+    val full = fullProbe()
+    IvfIndex.rebalance(spark, dir, maxClusterFraction = 0.3)
+    assert(fullProbe() === full)
+    assert(!exists(s"$dir/assignments/cluster=${c}_old"))
   }
 
   test("crashed deleteIds rename-swap auto-heals: a cluster left " +

@@ -25,6 +25,33 @@ class PqSpec extends AnyFunSuite {
     1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  private def copyDir(src: String, dst: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(src), fs,
+      new org.apache.hadoop.fs.Path(dst), false, conf))
+  }
+
+  /** Crash state inside a rebuild's sentinel window: `codebooks` is
+    * already swapped in, `codes` still sits staged beside the live dir
+    * (staged copies of the live dirs — same content, new inodes). */
+  private def midRebuild(dir: String, sentinel: String): Unit = {
+    copyDir(s"$dir/codebooks", s"$dir/codebooks_stage")
+    copyDir(s"$dir/codes", s"$dir/codes_stage")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$dir/codebooks"))
+    Files.move(java.nio.file.Paths.get(s"$dir/codebooks_stage"),
+      java.nio.file.Paths.get(s"$dir/codebooks"))
+    Files.write(java.nio.file.Paths.get(dir, sentinel),
+      "1".getBytes("UTF-8"))
+  }
+
+  private def noRebuildDebris(dir: String, sentinel: String): Unit =
+    Seq(sentinel, "codebooks_stage", "codebooks_old", "codes_stage",
+        "codes_old")
+      .foreach(d => assert(!new java.io.File(s"$dir/$d").exists(), d))
+
   private def bruteTopK(q: Array[Float], k: Int): Seq[Long] =
     all.map { case (id, v) => (cos(v, q), id) }.sorted.take(k).map(_._2).toSeq
 
@@ -160,6 +187,15 @@ class PqSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$pqDir/pq.rebuilding").exists())
     assert(!new java.io.File(s"$pqDir/codes_stage").exists())
     assert(!new java.io.File(s"$pqDir/codebooks_old").exists())
+    // mid-window: every reader refuses, a rerun recovers cleanly
+    midRebuild(pqDir, "pq.rebuilding")
+    Seq(() => PqIndex.search(spark, pqDir, q, 5),
+        () => PqIndex.searchRefined(spark, pqDir, emb, q, 5))
+      .foreach(read => intercept[IllegalArgumentException](read()))
+    PqIndex.build(emb, pqDir, m = 8, ks = 16)
+    noRebuildDebris(pqDir, "pq.rebuilding")
+    assert(PqIndex.searchRefined(spark, pqDir, emb, q, 5)
+      .select("id").as[Long].collect().toSeq === before)
     // IVF-PQ over a parent index
     val ivfDir = Files.createTempDirectory("ivf-for-pq-rb").toString
     IvfIndex.build(emb, ivfDir, nCentroids = 8, Metric.Cosine)
@@ -181,8 +217,20 @@ class PqSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSeq === ibefore)
     assert(!new java.io.File(s"$ipqDir/ivfpq.rebuilding").exists())
     assert(!new java.io.File(s"$ipqDir/codes_stage").exists())
+    midRebuild(ipqDir, "ivfpq.rebuilding")
+    Seq(() => IvfPq.search(spark, ivfDir, ipqDir, q, 5, nProbe = 8),
+        () => IvfPq.searchRefined(spark, ivfDir, ipqDir, q, 5, nProbe = 8),
+        () => IvfPq.searchBatch(spark, ivfDir, ipqDir,
+          Seq((1L, q)).toDF("qid", "qvalues"), 5),
+        () => IvfPq.refresh(spark, ivfDir, ipqDir))
+      .foreach(read => intercept[IllegalArgumentException](read()))
+    IvfPq.build(spark, ivfDir, ipqDir, m = 8, ks = 16)
+    noRebuildDebris(ipqDir, "ivfpq.rebuilding")
+    // stamped with the parent's generation, so probes stay legal
+    assert(IvfPq.searchRefined(spark, ivfDir, ipqDir, q, 5, nProbe = 8)
+      .select("id").as[Long].collect().toSeq === ibefore)
     // a PARENT mid-rebuild refuses IvfPq.build/refresh UP FRONT at
-    // their first parent read (centroidMap's sentinel-checking
+    // their first parent read (the parent's guarded
     // readMeta) — training/encoding against a mid-swap mix of old
     // and new clusters could otherwise publish codes stamped with
     // the parent's new generation
@@ -227,6 +275,25 @@ class PqSpec extends AnyFunSuite {
     val codes = spark.read.parquet(s"$pqDir/codes")
     assert(codes.count() === (all.length + 1).toLong)
     assert(codes.select("id").distinct().count() === (all.length + 1).toLong)
+  }
+
+  test("IVF-PQ refresh ignores a leftover codes/cluster=<c>_old beside " +
+      "its live cluster (swap garbage) and drops it") {
+    val ivfDir = Files.createTempDirectory("ivfpq_old_i").toString
+    val pqDir = Files.createTempDirectory("ivfpq_old_p").toString
+    IvfIndex.build(emb, ivfDir, nCentroids = 4, Metric.Cosine)
+    IvfPq.build(spark, ivfDir, pqDir, m = 8, ks = 16)
+    val c = spark.read.parquet(s"$ivfDir/centroids").select("cluster")
+      .as[Int].collect().min
+    copyDir(s"$pqDir/codes/cluster=$c", s"$pqDir/codes/cluster=${c}_old")
+    copyDir(s"$ivfDir/assignments/cluster=$c",
+      s"$ivfDir/assignments/cluster=${c}_old")
+    assert(IvfPq.refresh(spark, ivfDir, pqDir) === 0L)
+    assert(!new java.io.File(s"$pqDir/codes/cluster=${c}_old").exists())
+    val codes = spark.read.parquet(s"$pqDir/codes")
+    assert(codes.count() === all.length.toLong)
+    assert(IvfPq.search(spark, ivfDir, pqDir, all.head._2, all.length,
+      nProbe = 4).count() === all.length.toLong)
   }
 
   test("generation stamp: deleteIds stales the artifact, probes refuse, " +
