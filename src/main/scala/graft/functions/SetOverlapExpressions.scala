@@ -260,12 +260,12 @@ object SetOverlapMilli {
     if (containment) roundMilli(inter, math.min(rawA, rawB).toLong)
     else roundMilli(inter, (dA.toLong + dB.toLong) - inter.toLong)
 
-  /** [[milliHashed]] with SORTED packed (hash, ordinal) sidecars
-    * ([[WordHashesSorted]]) — intersection by a two-cursor merge,
-    * ZERO allocation per pair (the hashed kernel still built a
-    * 2·(|A|+|B|)-slot probe table per candidate pair). Byte equality
-    * decides on every hash match, so the count is bit-identical to
-    * [[milliString]]/[[milliHashed]] on precondition-satisfying
+  /** [[milliString]] with SORTED packed (hash, ordinal) sidecars
+    * ([[WordHashesSorted]]) precomputed per document — intersection
+    * by a two-cursor merge, ZERO allocation per pair (a hashed kernel
+    * builds a 2·(|A|+|B|)-slot probe table per candidate pair). Byte
+    * equality decides on every hash match, so the count is
+    * bit-identical to [[milliString]] on precondition-satisfying
     * input (distinct strings, no null elements — which
     * [[WordHashesSorted]] verified per row while packing); a side
     * whose sidecar length mismatches its word count (the
@@ -287,8 +287,12 @@ object SetOverlapMilli {
   }
 
   /** Merge-count of byte-equal elements over two presorted packed
-    * sidecars, raw-byte comparisons in place (the [[milliHashedUnsafe]]
-    * slot-long trick, without the table). Equal-hash RUNS (murmur
+    * sidecars, raw-byte comparisons in place: an Unsafe element slot
+    * long is `(offset << 32) | size` relative to the array's base
+    * (exactly what getUTF8String decodes), so equality compares the
+    * raw bytes via ByteArrayMethods — the byte equality
+    * UTF8String.equals performs, with no wrapper objects allocated
+    * per pair. Equal-hash RUNS (murmur
     * collisions between distinct strings — rare) compare all-pairs
     * within the run; each A element matches at most one distinct B
     * element, so `inter` increments once per matched A element. */
@@ -397,280 +401,6 @@ object SetOverlapMilli {
     }
     inter
   }
-
-  /** [[milliString]] with the per-element murmur hashes PRECOMPUTED
-    * per document ([[WordHashes]], evaluated once per doc-side row
-    * before the candidate join) instead of re-hashed per candidate
-    * pair — the r18 JFR profile put the per-pair hashing at ~30% of
-    * the minhash verify stage. Equality is still decided by
-    * UTF8String BYTE comparison; the hash only routes the probe, so
-    * the count (and the milli) is bit-identical to [[milliString]]
-    * by construction. `ha`/`hb` must be [[WordHashes]] of `a`/`b` —
-    * the operators build both from the same projection. */
-  def milliHashed(a: ArrayData, ha: ArrayData, b: ArrayData,
-      hb: ArrayData, containment: Boolean): Long = (a, b) match {
-    // both sides Unsafe (the shape every shuffled/joined row yields):
-    // probe by raw element bytes in place — ZERO allocation per pair.
-    // The first cut wrapped every element in the UTF8String the
-    // getter allocates and held them in an Object probe table; the
-    // r18 full-suite bench showed the verify stage's cost tripling on
-    // reps the JIT had not yet compiled (escape analysis never
-    // applies — the wrappers are STORED), with minhash_dedup rep CPU
-    // swinging 18 vs 290 s on identical work.
-    case (ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
-          ub: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) =>
-      milliHashedUnsafe(ua, ha, ub, hb, containment)
-    case _ => milliHashedGeneric(a, ha, b, hb, containment)
-  }
-
-  /** [[milliHashed]] over two [[UnsafeArrayData]] string arrays: the
-    * element slot long is `(offset << 32) | size` relative to the
-    * array's base (exactly what getUTF8String decodes), so the probe
-    * table stores (hash, side, ordinal) primitives and equality
-    * compares the raw bytes via ByteArrayMethods — the same byte
-    * equality UTF8String.equals performs, with no wrapper objects. */
-  private def milliHashedUnsafe(
-      ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
-      ha: ArrayData,
-      ub: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
-      hb: ArrayData, containment: Boolean): Long = {
-    import org.apache.spark.unsafe.array.ByteArrayMethods
-    val na = ua.numElements()
-    val nb = ub.numElements()
-    var cap = 8
-    while (cap < (na + nb) * 2) cap <<= 1
-    val hashes = new Array[Int](cap)
-    val elems = new Array[Int](cap) // ordinal in its source array
-    val state = new Array[Byte](cap) // 0 empty, 1 A, 2 B, 3 both
-    val mask = cap - 1
-    val aBase = ua.getBaseObject
-    val aOff = ua.getBaseOffset
-    val bBase = ub.getBaseObject
-    val bOff = ub.getBaseOffset
-    var dA = 0
-    var dB = 0
-    var inter = 0
-    var nullA = false
-    var nullB = false
-    var i = 0
-    while (i < na) {
-      if (ua.isNullAt(i)) nullA = true
-      else {
-        val oas = ua.getLong(i)
-        val pAbs = aOff + (oas >> 32).toInt
-        val pLen = oas.toInt
-        val h = ha.getInt(i)
-        var p = (h & 0x7fffffff) & mask
-        var done = false
-        while (!done) {
-          if (state(p) == 0) {
-            hashes(p) = h; elems(p) = i; state(p) = 1; dA += 1
-            done = true
-          } else if (hashes(p) == h && {
-            // phase 1: every stored element is from A
-            val so = ua.getLong(elems(p))
-            so.toInt == pLen && ByteArrayMethods.arrayEquals(
-              aBase, aOff + (so >> 32).toInt, aBase, pAbs, pLen)
-          }) done = true
-          else p = (p + 1) & mask
-        }
-      }
-      i += 1
-    }
-    i = 0
-    while (i < nb) {
-      if (ub.isNullAt(i)) nullB = true
-      else {
-        val oas = ub.getLong(i)
-        val pAbs = bOff + (oas >> 32).toInt
-        val pLen = oas.toInt
-        val h = hb.getInt(i)
-        var p = (h & 0x7fffffff) & mask
-        var done = false
-        while (!done) {
-          val s = state(p)
-          if (s == 0) {
-            hashes(p) = h; elems(p) = i; state(p) = 2; dB += 1
-            done = true
-          } else if (hashes(p) == h && {
-            // stored element is from B iff state 2 (3 was stored by A)
-            val fromB = s == 2
-            val so = if (fromB) ub.getLong(elems(p)) else ua.getLong(elems(p))
-            so.toInt == pLen && ByteArrayMethods.arrayEquals(
-              if (fromB) bBase else aBase,
-              (if (fromB) bOff else aOff) + (so >> 32).toInt,
-              bBase, pAbs, pLen)
-          }) {
-            if (s == 1) { state(p) = 3; dB += 1; inter += 1 }
-            done = true
-          } else p = (p + 1) & mask
-        }
-      }
-      i += 1
-    }
-    if (nullA) dA += 1
-    if (nullB) dB += 1
-    if (nullA && nullB) inter += 1
-    finish(inter, dA, dB, na, nb, containment)
-  }
-
-  /** The wrapper-object form of [[milliHashed]] — any non-Unsafe
-    * input (literals, locally built test arrays) and the parity
-    * oracle for the Unsafe path. */
-  private[graft] def milliHashedGeneric(a: ArrayData, ha: ArrayData,
-      b: ArrayData, hb: ArrayData, containment: Boolean): Long = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var cap = 8
-    while (cap < (na + nb) * 2) cap <<= 1
-    val keys = new Array[UTF8String](cap)
-    val hashes = new Array[Int](cap)
-    val state = new Array[Byte](cap)
-    val mask = cap - 1
-    var dA = 0
-    var dB = 0
-    var inter = 0
-    var nullA = false
-    var nullB = false
-    var i = 0
-    while (i < na) {
-      if (a.isNullAt(i)) nullA = true
-      else {
-        val k = a.getUTF8String(i)
-        val h = ha.getInt(i)
-        var p = (h & 0x7fffffff) & mask
-        var done = false
-        while (!done) {
-          if (state(p) == 0) {
-            keys(p) = k; hashes(p) = h; state(p) = 1; dA += 1
-            done = true
-          } else if (hashes(p) == h && keys(p).equals(k)) done = true
-          else p = (p + 1) & mask
-        }
-      }
-      i += 1
-    }
-    i = 0
-    while (i < nb) {
-      if (b.isNullAt(i)) nullB = true
-      else {
-        val k = b.getUTF8String(i)
-        val h = hb.getInt(i)
-        var p = (h & 0x7fffffff) & mask
-        var done = false
-        while (!done) {
-          if (state(p) == 0) {
-            keys(p) = k; hashes(p) = h; state(p) = 2; dB += 1
-            done = true
-          } else if (hashes(p) == h && keys(p).equals(k)) {
-            if (state(p) == 1) { state(p) = 3; dB += 1; inter += 1 }
-            done = true
-          } else p = (p + 1) & mask
-        }
-      }
-      i += 1
-    }
-    if (nullA) dA += 1
-    if (nullB) dB += 1
-    if (nullA && nullB) inter += 1
-    finish(inter, dA, dB, na, nb, containment)
-  }
-}
-
-/** Per-element murmur hashes of a string array, as array<int> — one
-  * [[UTF8String.hashCode]] per element, computed ONCE per document
-  * row so the pair-verify kernel ([[SetOverlapMilliHashed]]) probes
-  * with cached hashes instead of re-hashing every word of both sides
-  * per candidate pair. A NULL element hashes to 0 (the kernel never
-  * reads it — it checks the word array's null bit first). NULL array
-  * → NULL. */
-case class WordHashes(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vfs_word_hashes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs an array<string> input, got ${other.sql}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    WordHashes.hashAll(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.functions.WordHashes.hashAll($a)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object WordHashes {
-  def hashAll(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      out(i) = if (a.isNullAt(i)) 0 else a.getUTF8String(i).hashCode()
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-}
-
-/** `round(1000·|A∩B| / denom)` over two string arrays with their
-  * [[WordHashes]] arrays riding alongside — the pair-verify form of
-  * [[SetOverlapMilli]] that skips per-pair hashing (see
-  * [[SetOverlapMilli.milliHashed]] for the exactness argument).
-  * Children: (words_a, hashes_a, words_b, hashes_b). */
-case class SetOverlapMilliHashed(first: Expression, second: Expression,
-    third: Expression, fourth: Expression, containment: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String =
-    if (containment) "vfs_containment_milli_h" else "vfs_jaccard_milli_h"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _),
-            ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, array<int>, " +
-            s"array<string>, array<int>), got ${children.map(_.dataType.sql)}")
-    }
-  }
-
-  override def nullSafeEval(a: Any, ha: Any, b: Any, hb: Any): Any =
-    SetOverlapMilli.milliHashed(a.asInstanceOf[ArrayData],
-      ha.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      hb.asInstanceOf[ArrayData], containment)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val cm = containment.toString
-    defineCodeGen(ctx, ev, (a, ha, b, hb) =>
-      s"graft.functions.SetOverlapMilli.milliHashed($a, $ha, $b, $hb, $cm)")
-  }
-
-  override protected def withNewChildrenInternal(a: Expression,
-      b: Expression, c: Expression, d: Expression): Expression =
-    copy(first = a, second = b, third = c, fourth = d)
 }
 
 /** Per-document SORTED (hash, ordinal) sidecar for the pair-verify
@@ -680,8 +410,8 @@ case class SetOverlapMilliHashed(first: Expression, second: Expression,
   * (hash-as-signed-int, ordinal) lexicographic — any consistent total
   * order works; both sides use this one). Computed ONCE per doc row,
   * so the per-PAIR verify is a straight two-cursor merge with ZERO
-  * allocation — the r18 hashed kernel still built a 2·(|A|+|B|)-slot
-  * probe table per candidate pair (~9 KB of short-lived arrays per
+  * allocation — a hashed kernel builds a 2·(|A|+|B|)-slot probe
+  * table per candidate pair (~9 KB of short-lived arrays per
   * pair at corpus word counts), which both dominated the steady-state
   * verify CPU and made the kernel's interpreted path (the r18 driver
   * regression's C2-compile-storm window) disproportionately slow.
@@ -769,8 +499,7 @@ object WordHashesSorted {
 /** The pair-verify overlap milli over two word arrays with their
   * [[WordHashesSorted]] sidecars riding alongside — a two-cursor
   * merge over the presorted packed arrays, byte equality deciding on
-  * every hash match (the hash only ROUTES, exactly the
-  * [[SetOverlapMilliHashed]] stance), zero allocation per pair.
+  * every hash match (the hash only ROUTES), zero allocation per pair.
   * `n > 0` side with a length-mismatched sidecar (the
   * [[WordHashesSorted]] precondition-violated signal) falls back to
   * the exact unsorted kernel — the milli is identical either way.

@@ -221,7 +221,7 @@ object IvfIndex {
     * or a post-crash corpus is double-counted (the oversized cluster's
     * vectors exist in both the old dir and its split dirs). Keeps the
     * `cluster` partition column via basePath. */
-  private[operators] def liveAssignments(spark: SparkSession,
+  private[graft] def liveAssignments(spark: SparkSession,
       path: String): DataFrame = {
     val existing = existingClusterDirs(spark, s"$path/assignments",
       clusterIds(spark, path))
@@ -242,16 +242,6 @@ object IvfIndex {
     val fs = ArtifactIo.fsOf(path)
     existingClusterDirs(spark, s"$path/assignments", clusterIds(spark, path))
       .map(p => fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength)
-  }
-
-  /** Spread a scan of few partitions across every core before a
-    * compute-bound per-row kernel (the argmin/encode passes cost
-    * |rows|·k·dim muladds; one 500k-row file measured 100 s vs 12 s
-    * spread). */
-  private[operators] def spreadToCores(df: DataFrame): DataFrame = {
-    val width = df.sparkSession.sparkContext.defaultParallelism
-    if (math.max(1, df.rdd.getNumPartitions) < width) df.repartition(width)
-    else df
   }
 
   /** In-place-free L2 normalization on the JVM side. Normalization as
@@ -446,12 +436,14 @@ object IvfIndex {
     // them inside the sentinel window
     val gen = Artifact.readMetaRaw(path).fold(1)(decodeMeta(_).generation + 1)
     Artifact.rebuild(path) { target =>
-      // ---- pass 3: assign every row (spread to all cores first),
+      // ---- pass 3: assign every row (spread to all cores first — the
+      // argmin costs |rows|·k·dim muladds; one 500k-row file measured
+      // 100 s vs 12 s spread),
       // write partitioned by cluster. repartition by cluster BEFORE
       // partitionBy: otherwise every shuffle partition writes a sliver
       // into every cluster directory (partitions × clusters small
       // files — 22k files at 500k rows) ----
-      assignRows(spreadToCores(prepared), centArr,
+      assignRows(WorkCols.spread(prepared), centArr,
         math.min(nAssign, nCentroids), normalize = spherical, eps = assignEps)
         .repartition(col("cluster"))
         .write.mode("overwrite").partitionBy("cluster")

@@ -208,7 +208,7 @@ object Dedup {
     * subtree gets isnotnull inferred on the id anyway). */
   private def lineOccurrences(docs: DataFrame, textCol: String,
       idCol: String): DataFrame =
-    spread(docs.filter(col(idCol).isNotNull))
+    WorkCols.spread(docs.filter(col(idCol).isNotNull))
       .select(col(idCol).as("__id"),
         posexplode(split(col(textCol), "\n", -1)).as(Seq("__pos", "__line")))
       .withColumn("__ln", trim(col("__line")))
@@ -322,11 +322,11 @@ object Dedup {
 
   /** Slim k-gram occurrence stream (__id, __idx, __g): gram hashed to
     * 64 bits inside the scan task — only 8-byte keys ever shuffle.
-    * Starts 0..n−k; docs shorter than k emit none. [[spread]] first:
-    * the tokenize+hash kernel is compute-bound like the minhash
-    * signature pass, and a corpus read as a few big files would run
-    * it on as few cores (the same trade documented there — real
-    * many-file inputs skip the branch). */
+    * Starts 0..n−k; docs shorter than k emit none.
+    * [[WorkCols.spread]] first: the tokenize+hash kernel is
+    * compute-bound like the minhash signature pass, and a corpus read
+    * as a few big files would run it on as few cores (the same trade
+    * documented there — real many-file inputs skip the branch). */
   private[graft] def gramOccurrences(docs: DataFrame, k: Int,
       textCol: String, idCol: String): DataFrame = {
     // one-pass kernel ([[graft.functions.WordGramHashes]]) — the
@@ -335,7 +335,7 @@ object Dedup {
     // [[gramHashesHof]] keeps it as the parity oracle
     val grams = shims.column(graft.functions.WordGramHashes(
       shims.expression(col(textCol)), k))
-    spread(docs).select(col(idCol).as("__id"),
+    WorkCols.spread(docs).select(col(idCol).as("__id"),
       posexplode(grams).as(Seq("__idx", "__g")))
   }
 
@@ -386,14 +386,6 @@ object Dedup {
 
   private def wordSet(textCol: Column): Column =
     array_distinct(split(trim(lower(textCol)), "\\s+"))
-
-  /** Signature computation is compute-bound (64 hashes × |words| per
-    * doc): a corpus read as a few big files would run it on as few
-    * cores — measured 2.2 s single-threaded vs 0.3 s spread for 5k
-    * docs. The tiny up-front shuffle is irrelevant at any scale where
-    * it triggers (real 100 TB inputs arrive in many files and skip
-    * this branch). */
-  private def spread(df: DataFrame): DataFrame = WorkCols.spread(df)
 
   /** Engine-portable 60-bit word hash: the first 15 hex chars of md5,
     * parsed base-16. Strictly slower than murmur/xxhash but computable
@@ -466,12 +458,11 @@ object Dedup {
       maxBucket: Int = 1000): DataFrame = {
     val banded = bandedRelation(docs, "id", textCol, idCol,
       bands, rowsPerBand)
-    // bucket-fold pair generation ([[foldBucketPairs]]): replaces the
-    // earlier window-capped self-join — which shuffled/recomputed the
-    // signature pipeline on BOTH sides and needed a separate window
-    // pass for the bucket cap — with a single hash agg, and pins the
-    // verify width against AQE's byte-based coalescing
-    val candidates = foldBucketPairs(banded, "id", maxBucket)
+    // bucket-fold pair generation ([[foldBandPairs]]): no self-join
+    // recomputing the signature pipeline on both sides, no separate
+    // window pass for the bucket cap, and a verify width pinned
+    // against AQE's byte-based coalescing
+    val candidates = foldBandPairs(banded, "bsig", maxBucket, None)
     verifyJaccard(candidates, docs, docs, "a", "b", textCol, idCol,
       threshold)
   }
@@ -491,7 +482,9 @@ object Dedup {
   private[graft] def bandedRelation(docs: DataFrame, idAlias: String,
       textCol: String, idCol: String, bands: Int,
       rowsPerBand: Int): DataFrame =
-    spread(docs).select(col(idCol).as(idAlias),
+    // the signature pass is compute-bound (64 hashes × |words| per
+    // doc) — spread a few-file corpus across the cores first
+    WorkCols.spread(docs).select(col(idCol).as(idAlias),
         shims.column(graft.functions.MinHashSig(
           shims.expression(col(textCol)), bands * rowsPerBand)).as("sig"))
       .select(col(idAlias), col("sig"),
@@ -504,8 +497,6 @@ object Dedup {
         slice(col("sig"), col("band") * rowsPerBand + 1,
           lit(rowsPerBand)).as("bsig"))
 
-  /** Drop rows of band-key buckets larger than `maxBucket` — bounds
-    * the worst-case self-join blowup on pathological corpora. */
   /** Over-cap bucket REPORT — the no-silent-caps observability
     * companion to [[capBuckets]]/[[emitBucketGroups]]: one row per
     * bucket the pair emitters DROP (strictly more than `maxBucket`
@@ -542,6 +533,8 @@ object Dedup {
         "id"),
       maxBucket, Seq("band", "bval"))
 
+  /** Drop rows of band-key buckets larger than `maxBucket` — bounds
+    * the worst-case self-join blowup on pathological corpora. */
   private[graft] def capBuckets(banded: DataFrame, maxBucket: Int,
       keys: Seq[String] = Seq("band", "bsig")): DataFrame = {
     val bucketW = Window.partitionBy(keys.map(col): _*)
@@ -552,15 +545,16 @@ object Dedup {
 
   /** Streaming per-bucket group fold with O(`maxBucket`) state — the
     * ONE place cap semantics live for every pair emitter (minhash/
-    * containment ids in both integral and string flavors, simhash
-    * (id, sig) payloads), so they can never diverge: consume
-    * key-sorted (key, row) pairs, buffer each bucket up to
-    * `maxBucket` + 1 rows (one element past the cap proves the bucket
-    * is over it — the buffer clears and the rest of the bucket skips,
-    * so a pathological bucket costs O(1) memory, not O(bucket)), and
-    * hand each surviving bucket's buffer to `emit` for lazy pair
-    * generation. Drop semantics match [[capBuckets]] exactly: a
-    * bucket with MORE than `maxBucket` rows contributes nothing. */
+    * containment ids and simhash (id, sig) payloads, integral or
+    * string ids — all through [[foldBandPairs]]), so they can never
+    * diverge: consume key-sorted (key, row) pairs, buffer each bucket
+    * up to `maxBucket` + 1 rows (one element past the cap proves the
+    * bucket is over it — the buffer clears and the rest of the bucket
+    * skips, so a pathological bucket costs O(1) memory, not
+    * O(bucket)), and hand each surviving bucket's buffer to `emit`
+    * for lazy pair generation. Drop semantics match [[capBuckets]]
+    * exactly: a bucket with MORE than `maxBucket` rows contributes
+    * nothing. */
   private def emitBucketGroups[K, T, R](rows: Iterator[(K, T)],
       maxBucket: Int)(
       emit: scala.collection.mutable.ArrayBuffer[T] => Iterator[R])
@@ -596,9 +590,9 @@ object Dedup {
     * order but ABOVE them in code-point/UTF-8 order. This per-compare
     * form re-encodes both sides on every comparison, so it is for
     * SMALL driver-side sorts (language labels, test fixtures); the
-    * per-bucket pair folds use [[idPairsUtf8]]/[[sigPairsUtf8]],
-    * which encode each id ONCE and sort the precomputed byte keys —
-    * same order, without O(n log n) encodings per bucket. */
+    * per-bucket pair fold ([[bucketPairs]]) encodes each id ONCE and
+    * sorts the precomputed byte keys — same order, without
+    * O(n log n) encodings per bucket. */
   private[operators] val utf8ByteOrdering: Ordering[String] =
     Ordering.comparatorToOrdering { (a: String, b: String) =>
       java.util.Arrays.compareUnsigned(
@@ -616,224 +610,162 @@ object Dedup {
   private def utf8Key(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Sorted strict a < b pair emission for one surviving bucket —
-    * the capped self-join's `a.id < b.id` exclusion (duplicate ids
-    * never self-pair), lazy so a cap-sized bucket's ~maxBucket²/2
-    * pairs never materialize at once.
-    *
-    * Cursor iterators, not `Iterator.range(...).flatMap/filter/map`:
-    * the bucket loops are O(bucket²) and the generic-Iterator form
-    * paid a boxed Int plus two closure dispatches per INNER iteration
-    * — almost all of which are misses once the emit-time hamming
-    * filter ([[sigPairs]]) dropped the pair. The r18.2 rewrite holds
-    * the sorted ids/sigs in flat arrays and advances two int cursors;
-    * emission order and pair set are bit-identical. */
-  private def idPairs[T](buf: scala.collection.mutable.ArrayBuffer[T])(
-      implicit ord: Ordering[T]): Iterator[(T, T)] =
-    idPairsPreSorted(buf.sorted)
-
-  /** [[idPairs]] with a signature riding along, hamming computed
-    * inline during emission — and FILTERED at emission: a pair's
-    * hamming is the same whichever band emits it, so dropping
-    * over-distance pairs here is row-for-row identical to the old
-    * post-dedup `filter(hamming <= maxHamming)` while never
-    * materializing, shuffling, or hash-agg-deduping the misses. The
-    * r18 JFR profile of image_neardup put ~80% of the operator's CPU
-    * in exactly that shuffle + dedup of pairs the filter then threw
-    * away (band collisions are mostly NOT near-dups). Signatures sit
-    * in a flat long[] so the xor+popcount miss path touches no boxed
-    * values (see [[idPairs]] for the cursor-iterator rationale). */
-  private def sigPairs[T](buf: scala.collection.mutable.ArrayBuffer[(T, Long)],
-      maxHamming: Int)(
-      implicit ord: Ordering[T]): Iterator[(T, T, Long)] = {
-    val xs = buf.sortBy(_._1)
+  /** One surviving bucket's strict a < b pairs — the capped
+    * self-join's `a.id < b.id` exclusion (duplicate ids never
+    * self-pair), lazy so a cap-sized bucket's ~maxBucket²/2 pairs
+    * never materialize at once. The (id, sig) members are sorted ONCE
+    * in the self-join's order — longs naturally, strings by their
+    * UTF-8 bytes with each key encoded once per element; stable, so
+    * duplicate ids keep arrival order — into the flat arrays
+    * [[BucketPairs]] walks. `maxHamming` < 0 means no signature
+    * payload (minhash/containment): the sigs are not kept and rows
+    * are (a, b). */
+  private def bucketPairs(buf: scala.collection.mutable.ArrayBuffer[(Any, Long)],
+      utf8: Boolean, maxHamming: Int): Iterator[org.apache.spark.sql.Row] = {
+    val xs =
+      if (utf8) buf.map(t => (utf8Key(t._1.asInstanceOf[String]), t))
+        .sortInPlaceBy(_._1)(utf8BytesOrd).map(_._2)
+      else buf.sortInPlaceBy(_._1.asInstanceOf[Long])
     val n = xs.length
     val ids = new Array[Any](n)
-    val sigs = new Array[Long](n)
+    val sigs = if (maxHamming < 0) null else new Array[Long](n)
     var t = 0
-    while (t < n) { ids(t) = xs(t)._1; sigs(t) = xs(t)._2; t += 1 }
-    new Iterator[(T, T, Long)] {
-      private var i = 0
-      private var j = 1
-      private var have = false
-      private var ham = 0L
-      private def advance(): Unit =
-        while (!have && i < n - 1) {
-          val si = sigs(i)
-          while (!have && j < n) {
-            val h = java.lang.Long.bitCount(si ^ sigs(j))
-            if (h <= maxHamming && ids(j) != ids(i)) { have = true; ham = h }
-            else j += 1
-          }
-          if (!have) { i += 1; j = i + 1 }
-        }
-      def hasNext: Boolean = { advance(); have }
-      def next(): (T, T, Long) = {
-        advance()
-        if (!have) throw new NoSuchElementException
-        val r = (ids(i).asInstanceOf[T], ids(j).asInstanceOf[T], ham)
-        j += 1; have = false; r
-      }
+    while (t < n) {
+      ids(t) = xs(t)._1
+      if (sigs != null) sigs(t) = xs(t)._2
+      t += 1
     }
+    new BucketPairs(ids, sigs, maxHamming)
   }
 
-  /** [[idPairs]] for STRING ids: a Schwartzian transform — each id's
-    * UTF-8 bytes are computed ONCE ([[utf8Key]]) and the sort
-    * compares the precomputed keys, instead of re-encoding both
-    * sides on every comparison inside the hot per-bucket fold. Order
-    * (and therefore pair orientation) is bit-identical to sorting
-    * with [[utf8ByteOrdering]]. */
-  private def idPairsUtf8(
-      buf: scala.collection.mutable.ArrayBuffer[String]): Iterator[(String, String)] = {
-    val keyed = buf.map(s => (utf8Key(s), s)).sortInPlaceBy(_._1)(utf8BytesOrd)
-    val ids = keyed.map(_._2)
-    idPairsPreSorted(ids)
-  }
-
-  /** Strict a < b emission over an ALREADY-SORTED id buffer — the
-    * shared cursor core of [[idPairsUtf8]]. */
-  private def idPairsPreSorted[T](
-      ids: scala.collection.mutable.ArrayBuffer[T]): Iterator[(T, T)] = {
-    val n = ids.length
-    new Iterator[(T, T)] {
-      private var i = 0
-      private var j = 1
-      private var have = false
-      private def advance(): Unit =
-        while (!have && i < n - 1) {
+  /** The pair cursor over one bucket's sorted ids: two int cursors
+    * over flat arrays, not an `Iterator.range(...).flatMap/filter`
+    * chain — the loop is O(bucket²) and the generic form paid a boxed
+    * Int plus two closure dispatches per INNER iteration.
+    *
+    * With `sigs` (a primitive long[], or null for none) the hamming
+    * is computed inline and FILTERED at emission: a pair's hamming is
+    * the same whichever band emits it, so dropping over-distance
+    * pairs here equals a post-dedup `filter(hamming <= maxHamming)`
+    * while never materializing, shuffling or hash-agg-deduping the
+    * misses. The r18 JFR profile of image_neardup put ~80% of the
+    * operator's CPU in exactly that shuffle + dedup of pairs the
+    * filter then threw away (band collisions are mostly NOT
+    * near-dups); the xor+popcount miss path touches no boxed value.
+    * Emits (a, b) rows, or (a, b, hamming) with `sigs`. */
+  private final class BucketPairs(ids: Array[Any], sigs: Array[Long],
+      maxHamming: Int) extends Iterator[org.apache.spark.sql.Row] {
+    private val n = ids.length
+    private var i = 0
+    private var j = 1
+    private var have = false
+    private var ham = 0L
+    private def advance(): Unit =
+      while (!have && i < n - 1) {
+        if (sigs == null)
           while (!have && j < n) {
             if (ids(j) != ids(i)) have = true else j += 1
           }
-          if (!have) { i += 1; j = i + 1 }
-        }
-      def hasNext: Boolean = { advance(); have }
-      def next(): (T, T) = {
-        advance()
-        if (!have) throw new NoSuchElementException
-        val r = (ids(i), ids(j)); j += 1; have = false; r
-      }
-    }
-  }
-
-  /** [[sigPairs]] for STRING ids, same precomputed-key sort as
-    * [[idPairsUtf8]] and the same emit-time hamming filter. */
-  private def sigPairsUtf8(
-      buf: scala.collection.mutable.ArrayBuffer[(String, Long)],
-      maxHamming: Int): Iterator[(String, String, Long)] = {
-    val xs = buf.map { case (s, sig) => (utf8Key(s), s, sig) }
-      .sortInPlaceBy(_._1)(utf8BytesOrd)
-    val n = xs.length
-    val ids = new Array[String](n)
-    val sigs = new Array[Long](n)
-    var t = 0
-    while (t < n) { ids(t) = xs(t)._2; sigs(t) = xs(t)._3; t += 1 }
-    new Iterator[(String, String, Long)] {
-      private var i = 0
-      private var j = 1
-      private var have = false
-      private var ham = 0L
-      private def advance(): Unit =
-        while (!have && i < n - 1) {
+        else {
           val si = sigs(i)
           while (!have && j < n) {
             val h = java.lang.Long.bitCount(si ^ sigs(j))
             if (h <= maxHamming && ids(j) != ids(i)) { have = true; ham = h }
             else j += 1
           }
-          if (!have) { i += 1; j = i + 1 }
         }
-      def hasNext: Boolean = { advance(); have }
-      def next(): (String, String, Long) = {
-        advance()
-        if (!have) throw new NoSuchElementException
-        val r = (ids(i), ids(j), ham)
-        j += 1; have = false; r
+        if (!have) { i += 1; j = i + 1 }
       }
+    def hasNext: Boolean = { advance(); have }
+    def next(): org.apache.spark.sql.Row = {
+      advance()
+      if (!have) throw new NoSuchElementException
+      val r =
+        if (sigs == null) org.apache.spark.sql.Row(ids(i), ids(j))
+        else org.apache.spark.sql.Row(ids(i), ids(j), ham)
+      j += 1; have = false; r
     }
   }
 
-  /** Bucket-fold candidate-pair generation, shared by the self-pair
-    * LSH operators ([[minHashLsh]], [[containmentPairs]]): ONE pinned
-    * hash shuffle of the slim banded triples by (band, bsig) + a
+  /** The ONE banded bucket fold behind every self-pair LSH producer:
+    * minhash/containment bands ([[bandedRelation]], key `bsig`, ids
+    * only) and the 64-bit-signature family ([[sigBands]], key `bval`,
+    * the `sig` riding along for the inline hamming filter). One
+    * pinned hash exchange of the slim banded rows on (band, key) + a
     * within-partition sort (spillable), then a single streaming pass
-    * ([[emitBucketPairs]]) that applies the `maxBucket` cap with
-    * O(maxBucket) state and emits each bucket's strict a < b pairs —
-    * the candidate set is bit-identical to a [[capBuckets]]-capped
-    * self-join's, without the window pass, the both-sides signature
-    * recompute, or an unbounded per-bucket collect buffer. The dedup
-    * exchange width is pinned too (REPARTITION_BY_NUM): the pair
-    * stream is byte-small but the stages stacked on top (final dedup
-    * agg + each caller's exact verify) are COMPUTE-bound, and AQE's
-    * byte-based coalescing would fold them onto a handful of cores
-    * (measured 2× on whole-operator time at sf0.1). */
-  private def foldBucketPairs(banded: DataFrame, idC: String,
-      maxBucket: Int): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
+    * ([[emitBucketGroups]]) that applies the `maxBucket` cap with
+    * O(maxBucket) state and emits each bucket's strict a < b pairs
+    * ([[bucketPairs]]) — the candidate set is bit-identical to a
+    * [[capBuckets]]-capped self-join's, without the window pass, the
+    * both-sides signature recompute, or an unbounded per-bucket
+    * collect buffer. The pairs end in [[WorkCols.dedupPairs]]: the
+    * pair stream is byte-small but the stages stacked on it (final
+    * dedup agg + each caller's exact verify) are COMPUTE-bound.
+    *
+    * NULL ids and NULL signatures are excluded BEFORE the typed pass —
+    * the self-join's `a.id < b.id` silently dropped NULL ids (NULL
+    * compare), and sorting a null id would instead throw an opaque
+    * NPE mid-job; NULL keys (a NULL-text doc's sig slices, a NULL
+    * caller sig's band values) go for the same join-parity reason: an
+    * equi-join never matches NULL = NULL, but tuple grouping WOULD
+    * bucket them together. Band indices are literals, never NULL.
+    *
+    * The id type is dispatched at plan time: integral ids widen to
+    * BIGINT a/b, string ids sort by UTF-8 bytes (a < b matches the
+    * self-join's UTF8String compare on every id, incl. non-BMP),
+    * anything else fails loudly here rather than as a NULL-decode
+    * crash mid-job. Output: (a, b), or (a, b, hamming ≤ maxHamming)
+    * when `maxHamming` is given. */
+  private def foldBandPairs(banded: DataFrame, key: String, maxBucket: Int,
+      maxHamming: Option[Int]): DataFrame = {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val np = spark.sparkContext.defaultParallelism
-    // NULL ids are excluded BEFORE the typed pass — the replaced
-    // self-join's `a.id < b.id` silently dropped them (NULL compare),
-    // and buf.sorted over a null element would instead throw an
-    // opaque NPE mid-job. NULL keys (a NULL-text doc's sig slices)
-    // are excluded for the same join-parity reason: an equi-join
-    // never matches NULL = NULL, but tuple grouping WOULD bucket
-    // them together.
-    def keyed(id: Column) = banded
-      .filter(col(idC).isNotNull && col("band").isNotNull &&
-        col("bsig").isNotNull)
-      .select(col("band"), col("bsig"), id.as("__id"))
-      .repartition(np, col("band"), col("bsig"))
-      .sortWithinPartitions(col("band"), col("bsig"))
-    // the id rides through a typed per-partition pass: integral ids
-    // widen to BIGINT a/b, string ids sort by UTF-8 bytes
-    // ([[idPairsUtf8]], keys encoded once per element — a < b matches
-    // the self-join's UTF8String compare on every id, incl. non-BMP);
-    // anything else fails loudly at plan time rather than as a
-    // NULL-decode crash mid-job
-    val pairs = banded.schema(idC).dataType match {
-      case StringType =>
-        keyed(col(idC))
-          .as[(Int, Seq[Long], String)]
-          .mapPartitions(it => emitBucketGroups(
-            it.map { case (band, bsig, id) => ((band, bsig), id) },
-            maxBucket)(idPairsUtf8))
-          .toDF("a", "b")
-      case ByteType | ShortType | IntegerType | LongType =>
-        keyed(col(idC).cast("long"))
-          .as[(Int, Seq[Long], Long)]
-          .mapPartitions(it => emitBucketGroups(
-            it.map { case (band, bsig, id) => ((band, bsig), id) },
-            maxBucket)(idPairs[Long]))
-          .toDF("a", "b")
+    val idType = banded.schema("id").dataType match {
+      case StringType => StringType
+      case ByteType | ShortType | IntegerType | LongType => LongType
       case other => throw new IllegalArgumentException(
         s"[GRAFT] LSH pair id column must be integral or string, " +
           s"got $other")
     }
-    pairs
-      .repartition(np, col("a"), col("b"))
-      .dropDuplicates("a", "b")
+    val utf8 = idType == StringType
+    val payload = maxHamming.map(_ => col("sig")).toSeq
+    // where a NULL signature shows: the riding sig (its band values
+    // follow from it), else the key itself
+    val sig = payload.headOption.getOrElse(col(key))
+    val keyed = WorkCols.pinned(
+        banded.filter(col("id").isNotNull && sig.isNotNull)
+          .select(Seq(col("band"), col(key),
+            col("id").cast(idType).as("__id")) ++ payload: _*),
+        "band", key)
+      .sortWithinPartitions("band", key)
+    val out = StructType(Seq("a", "b").map(StructField(_, idType, false)) ++
+      maxHamming.map(_ => StructField("hamming", LongType, false)))
+    val ham = maxHamming.getOrElse(-1)
+    val fold: Iterator[Row] => Iterator[Row] = it => emitBucketGroups(
+      it.map(r => ((r.get(0), r.get(1)),
+        (r.get(2), if (ham >= 0) r.getLong(3) else 0L))),
+      maxBucket)(bucketPairs(_, utf8, ham))
+    WorkCols.dedupPairs(
+      keyed.mapPartitions(fold)(org.apache.spark.sql.Encoders.row(out)),
+      "a", "b")
   }
 
   /** [[capBuckets]] semantics without shuffling the banded rows:
-    * bucket sizes come from one partial-agged count pass, and rows of
-    * over-cap buckets are removed by an anti-join against that
-    * hot-bucket list (tiny on any non-pathological corpus — AQE
-    * broadcasts it at runtime when it is, and falls back to a shuffled
-    * join when it is not, so the worst case degrades to
-    * [[capBuckets]]' cost, never breaks). The trade: `banded` is
-    * EVALUATED TWICE (counts + rows), so this fits inputs that are
-    * cheap to rescan — a persisted band table ([[LshTextIndex]]) —
-    * while [[capBuckets]] fits derived inputs whose recompute (a
-    * corpus-wide signature pass) costs more than its shuffle. */
+    * bucket sizes come from one partial-agged count pass
+    * ([[overCapBuckets]]), and rows of over-cap buckets are removed
+    * by an anti-join against that hot-bucket list (tiny on any
+    * non-pathological corpus — AQE broadcasts it at runtime when it
+    * is, and falls back to a shuffled join when it is not, so the
+    * worst case degrades to [[capBuckets]]' cost, never breaks). The
+    * trade: `banded` is EVALUATED TWICE (counts + rows), so this fits
+    * inputs that are cheap to rescan — a persisted band table
+    * ([[LshTextIndex]]) — while [[capBuckets]] fits derived inputs
+    * whose recompute (a corpus-wide signature pass) costs more than
+    * its shuffle. */
   private[graft] def capBucketsAnti(banded: DataFrame, maxBucket: Int,
-      keys: Seq[String] = Seq("band", "bsig")): DataFrame = {
-    val hot = banded.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(keys.map(col): _*)
-    banded.join(hot, keys, "left_anti")
-  }
+      keys: Seq[String] = Seq("band", "bsig")): DataFrame =
+    banded.join(overCapBuckets(banded, maxBucket, keys)
+      .select(keys.map(col): _*), keys, "left_anti")
 
   /** Exact-jaccard verification of candidate id pairs: join the word
     * sets back per side, apply the O(1) size prefilter (jaccard >= t
@@ -843,34 +775,37 @@ object Dedup {
   private[graft] def verifyJaccard(candidates: DataFrame, aDocs: DataFrame,
       bDocs: DataFrame, aCol: String, bCol: String, textCol: String,
       idCol: String, threshold: Double): DataFrame = {
-    // SORTED (hash, ordinal) sidecars ride the per-DOC projection
-    // (one murmur pass + one sort per document) so the per-PAIR
-    // kernel is a straight two-cursor merge with zero allocation —
-    // r19: the hashed form still built a ~2·(|A|+|B|)-slot probe
-    // table per candidate pair, which dominated the verify stage's
-    // CPU and its interpreted-window (C2-storm) cost; the milli
-    // value is bit-identical (byte equality still decides, see
-    // SetOverlapMilli.milliSorted)
-    def words(docs: DataFrame, as: String, w: String) = {
-      val ws = wordSet(col(textCol))
-      docs.select(col(idCol).as(as), ws.as(w),
-        shims.column(graft.functions.WordHashesSorted(shims.expression(ws)))
-          .as(w + "p"))
-    }
     // the kept set is rounded-milli >= round(t·1000), which admits
     // jaccard down to t − 0.0005 (round-half-up) — the prefilter must
     // use that loosened bound or it drops boundary pairs the milli
     // filter (and the oracle, which has no prefilter) keeps
     val tLoose = threshold - 0.0005
     candidates
-      .join(words(aDocs, aCol, "wa"), Seq(aCol))
-      .join(words(bDocs, bCol, "wb"), Seq(bCol))
+      .join(wordSidecars(aDocs, textCol, idCol, aCol, "wa"), Seq(aCol))
+      .join(wordSidecars(bDocs, textCol, idCol, bCol, "wb"), Seq(bCol))
       .filter(size(col("wa")).cast("double") >= size(col("wb")) * tLoose &&
         size(col("wb")).cast("double") >= size(col("wa")) * tLoose)
       .withColumn("jaccard_milli", jaccardMilliSorted(
         col("wa"), col("wap"), col("wb"), col("wbp")))
       .filter(col("jaccard_milli") >= math.round(threshold * 1000))
       .select(col(aCol), col(bCol), col("jaccard_milli"))
+  }
+
+  /** Per-doc (as, w, w + "p") verify columns: the word set and its
+    * SORTED (hash, ordinal) sidecar ([[graft.functions.WordHashesSorted]]
+    * — one murmur pass + one sort per DOCUMENT), so the per-PAIR
+    * kernel ([[jaccardMilliSorted]] / [[containmentMilliSorted]]) is
+    * a straight two-cursor merge with zero allocation. A per-pair
+    * hash table (~2·(|A|+|B|) slots per candidate pair) dominated the
+    * verify stage's CPU and its interpreted-window (C2-storm) cost;
+    * the milli value is bit-identical (byte equality still decides,
+    * see SetOverlapMilli.milliSorted). */
+  private def wordSidecars(docs: DataFrame, textCol: String, idCol: String,
+      as: String, w: String): DataFrame = {
+    val ws = wordSet(col(textCol))
+    docs.select(col(idCol).as(as), ws.as(w),
+      shims.column(graft.functions.WordHashesSorted(shims.expression(ws)))
+        .as(w + "p"))
   }
 
   /** Incremental (cross-corpus) MinHash-LSH: near-dups of `probe` docs
@@ -891,16 +826,14 @@ object Dedup {
     val cb = capBuckets(
       bandedRelation(corpus, "corpus_id", textCol, idCol, bands,
         rowsPerBand), maxBucket)
-    val candidates = bandedRelation(probe, "probe_id", textCol, idCol,
-        bands, rowsPerBand)
-      .join(cb, Seq("band", "bsig"))
-      .select(col("probe_id"), col("corpus_id"))
-      // pinned width before the compute-bound dedup + verify stages
-      // (see minHashLsh — AQE's byte-based coalescing would fold the
-      // jaccard intersections onto a handful of cores)
-      .repartition(probe.sparkSession.sparkContext.defaultParallelism,
-        col("probe_id"), col("corpus_id"))
-      .dropDuplicates("probe_id", "corpus_id")
+    // pinned width before the compute-bound dedup + verify stages
+    // (AQE's byte-based coalescing would fold the jaccard
+    // intersections onto a handful of cores)
+    val candidates = WorkCols.dedupPairs(
+      bandedRelation(probe, "probe_id", textCol, idCol, bands, rowsPerBand)
+        .join(cb, Seq("band", "bsig"))
+        .select(col("probe_id"), col("corpus_id")),
+      "probe_id", "corpus_id")
     verifyJaccard(candidates, probe, corpus, "probe_id", "corpus_id",
       textCol, idCol, threshold)
   }
@@ -1079,33 +1012,14 @@ object Dedup {
     round(size(array_intersect(wa, wb)).cast("double") * 1000.0 /
       least(size(wa), size(wb))).cast("long")
 
-  /** [[jaccardMilli]] with precomputed per-doc word hashes
-    * ([[graft.functions.WordHashes]]) — the pair-verify form (hash
-    * once per doc, probe per pair; bit-identical by construction). */
-  private[graft] def jaccardMilliHashed(wa: Column, wah: Column,
-      wb: Column, wbh: Column): Column =
-    shims.column(graft.functions.SetOverlapMilliHashed(
-      shims.expression(wa), shims.expression(wah),
-      shims.expression(wb), shims.expression(wbh),
-      containment = false))
-
-  /** [[containmentMilli]] with precomputed per-doc word hashes. */
-  private[graft] def containmentMilliHashed(wa: Column, wah: Column,
-      wb: Column, wbh: Column): Column =
-    shims.column(graft.functions.SetOverlapMilliHashed(
-      shims.expression(wa), shims.expression(wah),
-      shims.expression(wb), shims.expression(wbh),
-      containment = true))
-
   /** [[jaccardMilli]] with SORTED per-doc (hash, ordinal) sidecars
     * ([[graft.functions.WordHashesSorted]]) — the r19 pair-verify
     * form: a two-cursor merge with zero allocation per candidate
-    * pair (the hashed form still built a probe table per pair, which
-    * dominated the verify stage's steady-state CPU and its
-    * interpreted-window cost). Byte equality still decides; milli
-    * values are bit-identical (SetOverlapParitySpec pins all three
-    * forms against each other on corpus-shaped and adversarial
-    * inputs). */
+    * pair (a per-pair hash probe table dominated the verify stage's
+    * steady-state CPU and its interpreted-window cost). Byte equality
+    * still decides; milli values are bit-identical (KernelParitySpec
+    * pins the sorted and plain kernels against each other on
+    * corpus-shaped and adversarial inputs). */
   private[graft] def jaccardMilliSorted(wa: Column, wap: Column,
       wb: Column, wbp: Column): Column =
     shims.column(graft.functions.SetOverlapMilliSorted(
@@ -1147,23 +1061,14 @@ object Dedup {
     val banded = bandedRelation(docs, "id", textCol, idCol,
       bands, rowsPerBand)
     // bucket-fold pair generation + pinned dedup width
-    // ([[foldBucketPairs]]) — at this operator's LOW band threshold
-    // the candidate flood is even denser than [[minHashLsh]]'s, so
-    // the single-agg form and the AQE-proof verify width matter
-    // more, not less
-    val candidates = foldBucketPairs(banded, "id", maxBucket)
-    // per-doc SORTED sidecars for the pair-verify merge kernel (same
-    // shape as [[verifyJaccard]] — hash+sort once per doc, merge per
-    // pair)
-    def words(as: String, w: String) = {
-      val ws = wordSet(col(textCol))
-      docs.select(col(idCol).as(as), ws.as(w),
-        shims.column(graft.functions.WordHashesSorted(shims.expression(ws)))
-          .as(w + "p"))
-    }
+    // ([[foldBandPairs]]) — at this operator's LOW band threshold the
+    // candidate flood is even denser than [[minHashLsh]]'s, so the
+    // streaming fold and the AQE-proof verify width matter more, not
+    // less
+    val candidates = foldBandPairs(banded, "bsig", maxBucket, None)
     candidates
-      .join(words("a", "wa"), Seq("a"))
-      .join(words("b", "wb"), Seq("b"))
+      .join(wordSidecars(docs, textCol, idCol, "a", "wa"), Seq("a"))
+      .join(wordSidecars(docs, textCol, idCol, "b", "wb"), Seq("b"))
       .withColumn("containment_milli", containmentMilliSorted(
         col("wa"), col("wap"), col("wb"), col("wbp")))
       .filter(col("containment_milli") >= math.round(threshold * 1000))
@@ -1246,20 +1151,13 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       maxBucket: Int = 1000): DataFrame = {
     require(maxHamming <= 3, "4-band blocking covers hamming <= 3")
-    val sigs = spread(docs).select(col(idCol).as("id"),
+    val sigs = WorkCols.spread(docs).select(col(idCol).as("id"),
       simHash60Portable(col(textCol)).as("sig"))
-    // band values computed AFTER the explode from the materialized sig
-    // attribute (see minHashLsh: lambda-inlined sigs recompute ×bands)
-    val banded = sigs
-      .select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .select(col("id"), col("sig"), col("band"),
-        call_function("shiftright", col("sig"), col("band") * 15)
-          .bitwiseAND(0x7fffL).as("bval"))
-    simHashFoldPairs(banded, maxBucket, maxHamming)
+    foldBandPairs(sigBands(sigs, "id", bits = 15), "bval", maxBucket,
+      Some(maxHamming))
   }
 
-  /** SimHash near-dup pairs with hamming distance ≤ maxHamming (< 16):
+  /** SimHash near-dup pairs with hamming distance ≤ maxHamming (≤ 3):
     * 4×16-bit band blocking guarantees no false negatives for
     * maxHamming ≤ 3, subject to the same `maxBucket` cap (and the same
     * escape hatch) as [[simHashPairsPortable]]. Output: (a, b,
@@ -1267,7 +1165,7 @@ object Dedup {
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3,
       textCol: String = "text", idCol: String = "doc_id",
       maxBucket: Int = 1000): DataFrame =
-    sigBandFoldPairs(spread(docs).select(col(idCol).as("id"),
+    sigBandFoldPairs(WorkCols.spread(docs).select(col(idCol).as("id"),
       simHash64(col(textCol)).as("sig")), maxHamming, maxBucket)
 
   /** Near-dup pairs over CALLER-SUPPLIED 64-bit fingerprints — the
@@ -1290,18 +1188,22 @@ object Dedup {
       col(sigCol).cast("long").as("sig")), maxHamming, maxBucket)
   }
 
-  /** 4×16-bit band projection over (id, sig) rows — the ONE band
-    * derivation every 64-bit-signature consumer shares
-    * ([[sigBandFoldPairs]] self-pairs, [[SigIndex]]'s standing-
-    * artifact probe): (idAlias, sig, band 0..3, bval = the band's 16
-    * bits). Pure projection, no shuffle. */
-  private[graft] def sigBands(sigs: DataFrame, idAlias: String): DataFrame =
+  /** 4-band projection over (id, sig) rows — the ONE band derivation
+    * every signature consumer shares ([[sigBandFoldPairs]] self-pairs,
+    * [[SigIndex]]'s standing-artifact probe, and at `bits` = 15 the
+    * 60-bit [[simHashPairsPortable]]): (idAlias, sig, band 0..3,
+    * bval = the band's `bits` bits). Band values are sliced AFTER the
+    * explode from the materialized sig attribute (a lambda-inlined
+    * sig would recompute ×bands — see [[bandedRelation]]). Pure
+    * projection, no shuffle. */
+  private[graft] def sigBands(sigs: DataFrame, idAlias: String,
+      bits: Int = 16): DataFrame =
     sigs
       .select(col("id").as(idAlias), col("sig"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col(idAlias), col("sig"), col("band"),
-        call_function("shiftright", col("sig"), col("band") * 16)
-          .bitwiseAND(0xffffL).as("bval"))
+        call_function("shiftright", col("sig"), col("band") * bits)
+          .bitwiseAND((1L << bits) - 1).as("bval"))
 
   /** 4×16-bit band blocking + bucket fold over CALLER-SUPPLIED 64-bit
     * signatures — the signature-agnostic core of [[simHashPairs]],
@@ -1316,54 +1218,8 @@ object Dedup {
   private[graft] def sigBandFoldPairs(sigs: DataFrame,
       maxHamming: Int, maxBucket: Int): DataFrame = {
     require(maxHamming <= 3, "4-band blocking covers hamming <= 3")
-    simHashFoldPairs(sigBands(sigs, "id"), maxBucket, maxHamming)
+    foldBandPairs(sigBands(sigs, "id"), "bval", maxBucket, Some(maxHamming))
   }
-
-  /** [[foldBucketPairs]]' simhash twin — same pinned-shuffle + sorted
-    * streaming pass, with the signature riding along so hamming
-    * computes inline ([[sigPairs]]); hamming is identical
-    * for a pair whichever band emits it, so filtering after the
-    * dedup is sound. */
-  private def simHashFoldPairs(banded: DataFrame, maxBucket: Int,
-      maxHamming: Int): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val np = spark.sparkContext.defaultParallelism
-    // NULL exclusion + UTF-8 byte ordering: the same self-join-parity
-    // stance as [[foldBucketPairs]] (see the comment there)
-    def keyed(id: Column) = banded
-      .filter(col("id").isNotNull && col("sig").isNotNull)
-      .select(col("band"), col("bval"), id.as("__id"), col("sig"))
-      .repartition(np, col("band"), col("bval"))
-      .sortWithinPartitions(col("band"), col("bval"))
-    val pairs = banded.schema("id").dataType match {
-      case StringType =>
-        keyed(col("id"))
-          .as[(Int, Long, String, Long)]
-          .mapPartitions(it => emitBucketGroups(
-            it.map { case (band, bval, id, sig) => ((band, bval), (id, sig)) },
-            maxBucket)(sigPairsUtf8(_, maxHamming)))
-          .toDF("a", "b", "hamming")
-      case ByteType | ShortType | IntegerType | LongType =>
-        keyed(col("id").cast("long"))
-          .as[(Int, Long, Long, Long)]
-          .mapPartitions(it => emitBucketGroups(
-            it.map { case (band, bval, id, sig) => ((band, bval), (id, sig)) },
-            maxBucket)(sigPairs[Long](_, maxHamming)))
-          .toDF("a", "b", "hamming")
-      case other => throw new IllegalArgumentException(
-        s"[GRAFT] simhash pair id column must be integral or string, " +
-          s"got $other")
-    }
-    // hamming filtering happened at EMISSION (pair-invariant across
-    // bands, so identical to filtering here) — only survivors reach
-    // the pinned shuffle + (a, b) dedup
-    pairs
-      .repartition(np, col("a"), col("b"))
-      .dropDuplicates("a", "b")
-  }
-
 
   /** Embedding near-dup, exact within a blocking group (oracle-checkable
     * twin): pairs with cosine distance < tau. */
@@ -1401,15 +1257,12 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("a"), col("b.id").as("b"))
-      // pinned width before the compute-bound dedup + cosine verify
-      // (see foldBucketPairs' AQE argument); this operator keeps the
-      // self-join form because it is deliberately UNCAPPED — folding
-      // an unbounded bucket into one collect_list row would trade the
-      // join's streaming behavior for a memory hazard
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism,
-        col("a"), col("b"))
-      .dropDuplicates("a", "b")
-    candidates
+    // pinned width before the compute-bound dedup + cosine verify
+    // (see foldBandPairs' AQE argument); this operator keeps the
+    // self-join form because it is deliberately UNCAPPED — folding an
+    // unbounded bucket into one collect_list row would trade the
+    // join's streaming behavior for a memory hazard
+    WorkCols.dedupPairs(candidates, "a", "b")
       .join(base.select(col("id").as("a"), col("v").as("va")), Seq("a"))
       .join(base.select(col("id").as("b"), col("v").as("vb")), Seq("b"))
       .select(col("a"), col("b"),

@@ -30,8 +30,8 @@ object Metric {
   def parse(s: String): Metric = s.toLowerCase match {
     case "euclidean" | "simd_euclidean" | "" => Euclidean
     case "cosine" | "simd_cosine" => Cosine
-    case other =>
-      throw new IllegalArgumentException(s"[GRAFT] unknown distance method: $other")
+    case _ =>
+      throw new IllegalArgumentException(s"[GRAFT] unknown distance method: $s")
   }
 }
 

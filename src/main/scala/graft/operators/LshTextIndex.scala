@@ -126,17 +126,16 @@ object LshTextIndex {
         spark.read.parquet(Life.data(path))
           .withColumnRenamed("id", "corpus_id"), maxBucket)
     }
-    val candidates = Dedup.bandedRelation(delta, "probe_id", textCol,
-        idCol, m.bands, m.rowsPerBand)
-      .join(stored, Seq("band", "bsig"))
-      .select(col("probe_id"), col("corpus_id"))
-      // pin the dedup exchange's width (REPARTITION_BY_NUM): the
-      // verify's array intersections stack on top of it and are
-      // compute-bound — AQE's byte-based coalescing must not fold
-      // them onto a handful of cores (same stance as minHashLsh)
-      .repartition(spark.sparkContext.defaultParallelism,
-        col("probe_id"), col("corpus_id"))
-      .dropDuplicates("probe_id", "corpus_id")
+    // pinned dedup width (REPARTITION_BY_NUM): the verify's array
+    // intersections stack on top of it and are compute-bound — AQE's
+    // byte-based coalescing must not fold them onto a handful of
+    // cores (same stance as minHashLsh)
+    val candidates = WorkCols.dedupPairs(
+      Dedup.bandedRelation(delta, "probe_id", textCol, idCol, m.bands,
+          m.rowsPerBand)
+        .join(stored, Seq("band", "bsig"))
+        .select(col("probe_id"), col("corpus_id")),
+      "probe_id", "corpus_id")
     Dedup.verifyJaccard(candidates, delta, corpus, "probe_id",
       "corpus_id", textCol, idCol, threshold)
   }

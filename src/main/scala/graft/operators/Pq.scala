@@ -115,7 +115,7 @@ object PqIndex {
       // ---- encode pass (spread to all cores): broadcast codebooks,
       // argmin per subspace
       val bc = spark.sparkContext.broadcast(books)
-      IvfIndex.spreadToCores(prepared).as[(Long, Array[Float])]
+      WorkCols.spread(prepared).as[(Long, Array[Float])]
         .mapPartitions { it =>
           val bks = bc.value
           it.map { case (id, v0) =>
@@ -299,7 +299,7 @@ object IvfPq {
     // hold duplicate copies of split vectors — encoding them would
     // write duplicate codes. Compute-bound passes (ks·dim muladds per
     // row) — spread across the cores first
-    val spreadAssign = IvfIndex.spreadToCores(
+    val spreadAssign = WorkCols.spread(
       IvfIndex.liveAssignments(spark, ivfPath)
         .select(col("id"), col("values"), col("cluster")))
     // residual stream (id, v − centroid): the training distribution

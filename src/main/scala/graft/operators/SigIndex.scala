@@ -157,16 +157,15 @@ object SigIndex {
     }
     val probes = Dedup.sigBands(slim(delta), "probe_id")
       .withColumnRenamed("sig", "__ps")
-    probes.join(stored, Seq("band", "bval"))
-      .select(col("probe_id"), col("corpus_id"),
-        bit_count(col("__ps").bitwiseXOR(col("__cs"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      // pin the dedup exchange's width against AQE coalescing — the
-      // same stance as LshTextIndex.probe
-      .repartition(spark.sparkContext.defaultParallelism,
-        col("probe_id"), col("corpus_id"))
-      .dropDuplicates("probe_id", "corpus_id")
+    // pinned dedup width against AQE coalescing — the same stance as
+    // LshTextIndex.probe
+    WorkCols.dedupPairs(
+      probes.join(stored, Seq("band", "bval"))
+        .select(col("probe_id"), col("corpus_id"),
+          bit_count(col("__ps").bitwiseXOR(col("__cs"))).cast("long")
+            .as("hamming"))
+        .filter(col("hamming") <= maxHamming),
+      "probe_id", "corpus_id")
   }
 
   /** Hard-delete assets from the signature table — the takedown/GDPR

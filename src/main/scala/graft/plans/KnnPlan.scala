@@ -9,6 +9,7 @@ import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.{CosineDistance, EuclideanDistance}
+import graft.operators.Metric
 
 /** Logical k-NN node — the SURVEY §7.2 stretch: `knn` as a first-class
   * plan node so the optimizer (not the caller) picks the physical
@@ -45,12 +46,9 @@ object ResolveKnnSearch extends Rule[LogicalPlan] {
         throw new IllegalArgumentException(s"[GRAFT] no column $idCol"))
       val qLit = Literal(new GenericArrayData(query.toArray),
         ArrayType(FloatType, containsNull = false))
-      val distExpr = metric match {
-        case "cosine" | "simd_cosine" => CosineDistance(vecAttr, qLit)
-        case "euclidean" | "simd_euclidean" | "" =>
-          EuclideanDistance(vecAttr, qLit)
-        case other => throw new IllegalArgumentException(
-          s"[GRAFT] unknown distance method: $other")
+      val distExpr = Metric.parse(metric) match {
+        case Metric.Cosine => CosineDistance(vecAttr, qLit)
+        case Metric.Euclidean => EuclideanDistance(vecAttr, qLit)
       }
       val alias = Alias(distExpr, "distance")(exprId = distAttr.exprId)
       val proj = Project(child.output :+ alias, child)

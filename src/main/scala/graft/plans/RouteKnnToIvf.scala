@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, Metric}
 
 /** Registry of persisted IVF indexes keyed by the DATA location they
   * were built from — the engine's analog of a database's index catalog.
@@ -84,12 +84,6 @@ object IndexRegistry {
   */
 object RouteKnnToIvf extends Rule[LogicalPlan] {
 
-  private def canonMetric(m: String): String = m match {
-    case "simd_cosine" => "cosine"
-    case "simd_euclidean" | "" => "euclidean"
-    case other => other
-  }
-
   /** The scan under `child` — iff child is the scan itself or one pure
     * attribute-only Project over it (column pruning / renames) — plus
     * the output-name → scan-column-name mapping, so the caller can
@@ -126,7 +120,8 @@ object RouteKnnToIvf extends Rule[LogicalPlan] {
             nameMap.get(vecCol).contains(e.vecCol))
       } match {
         case Some(entry)
-            if IvfIndex.metricOf(entry.indexPath) == canonMetric(metric) =>
+            if IvfIndex.metricOf(entry.indexPath) ==
+              Metric.parse(metric).name =>
           val nProbe = SparkSession.active.conf
             .get("spark.graft.knn.nprobe", "4").toInt
           // plant the DEFERRED probe leaf carrying the node's own

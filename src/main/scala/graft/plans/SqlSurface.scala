@@ -910,7 +910,17 @@ object SqlSurface {
     * the views track [[graft.operators.IvfIndex.append]] /
     * `compactAssignments` instead of freezing the registration-time
     * file listing — the same staleness class the deferred [[IvfProbe]]
-    * eliminates for the routed path. */
+    * eliminates for the routed path.
+    *
+    * `<name>_assignments` reads only the LIVE cluster dirs — those
+    * whose id is in `centroids/`, the rule
+    * [[graft.operators.IvfIndex.liveAssignments]] applies — with
+    * `cluster` cast to INT. Crash debris beside a live cluster
+    * (`cluster=<c>_old`, `cluster=<c>_stage`) would otherwise be read
+    * as extra rows and turn `cluster` into a STRING partition column.
+    * A lone parked `cluster=<c>_old` with no live twin is healed by
+    * the next index writer, not by this view (until then its rows are
+    * not visible here, as they are not to probes). */
   def registerIndex(spark: SparkSession, indexPath: String,
       name: String): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
@@ -918,7 +928,10 @@ object SqlSurface {
     require(!indexPath.contains("`"),
       s"[GRAFT] index path must not contain backquotes: $indexPath")
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${name}_assignments " +
-      s"AS SELECT * FROM parquet.`$indexPath/assignments`")
+      "AS SELECT id, `values`, CAST(cluster AS INT) AS cluster " +
+      s"FROM parquet.`$indexPath/assignments` " +
+      "WHERE CAST(cluster AS STRING) IN (SELECT CAST(cluster AS STRING) " +
+      s"FROM parquet.`$indexPath/centroids`)")
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${name}_centroids " +
       s"AS SELECT * FROM parquet.`$indexPath/centroids`")
   }

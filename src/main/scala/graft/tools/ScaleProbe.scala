@@ -193,7 +193,7 @@ object ScaleProbe {
     time("append the 450k blob (no re-cluster: lands on ONE centroid)") {
       IvfIndex.append(skewBlob, skewIdx)
     }
-    val skewSizes = spark.read.parquet(s"$skewIdx/assignments")
+    val skewSizes = IvfIndex.liveAssignments(spark, skewIdx)
       .groupBy($"cluster").count().collect().map(_.getLong(1))
     println(f"[scale-probe] skewed cluster sizes: max=${skewSizes.max} " +
       f"(${100.0 * skewSizes.max / n}%.1f%% of corpus), " +
@@ -210,7 +210,7 @@ object ScaleProbe {
         maxClusterFraction = 0.05)
       println(s"[scale-probe] rebalance created $created clusters")
     }
-    val postSizes = spark.read.parquet(s"$skewIdx/assignments")
+    val postSizes = IvfIndex.liveAssignments(spark, skewIdx)
       .groupBy($"cluster").count().collect().map(_.getLong(1))
     println(f"[scale-probe] post-rebalance: max=${postSizes.max} " +
       f"(${100.0 * postSizes.max / n}%.1f%% of corpus), " +
@@ -876,7 +876,7 @@ object ScaleProbe {
       IvfIndex.build(base, closDir, nCentroids = 128, Metric.Cosine,
         nAssign = 3, assignEps = 0.5)
     }
-    val closRows = spark.read.parquet(s"$closDir/assignments").count()
+    val closRows = IvfIndex.liveAssignments(spark, closDir).count()
     println(f"[scale-probe] closure-assigned rows: $closRows " +
       f"(${closRows.toDouble / n}%.2fx corpus; unconditional would be 3.00x)")
 

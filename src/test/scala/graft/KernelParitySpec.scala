@@ -394,101 +394,7 @@ class KernelParitySpec extends AnyFunSuite {
       Int.box(inter), Long.box(denom)).asInstanceOf[Long]
   }
 
-  // ---- hashed pair-verify kernel vs the per-pair-hashing kernel ----
-
-  test("hashed set-overlap kernel matches the plain kernel over corpus cross pairs and null/dup edges") {
-    import graft.operators.Dedup
-    val docs = spark.read
-      .parquet(s"${GraftTest.sf0001}/documents.parquet")
-      .limit(60)
-      .select(col("doc_id"),
-        array_distinct(split(trim(lower(col("text"))), "\\s+")).as("w"))
-    val withH = docs.withColumn("h",
-      org.apache.spark.sql.graft.shims.column(
-        graft.functions.WordHashes(
-          org.apache.spark.sql.graft.shims.expression(col("w")))))
-    val a = withH.as("a")
-    val b = withH.as("b")
-    val joined = a.join(b, col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.w").as("wa"), col("a.h").as("wah"),
-        col("b.w").as("wb"), col("b.h").as("wbh"))
-    val diff = joined.select(
-        Dedup.jaccardMilli(col("wa"), col("wb")).as("jp"),
-        Dedup.jaccardMilliHashed(col("wa"), col("wah"),
-          col("wb"), col("wbh")).as("jh"),
-        Dedup.containmentMilli(col("wa"), col("wb")).as("cp"),
-        Dedup.containmentMilliHashed(col("wa"), col("wah"),
-          col("wb"), col("wbh")).as("ch"))
-      .filter(!(col("jp") <=> col("jh")) || !(col("cp") <=> col("ch")))
-      .count()
-    assert(diff === 0L)
-    // null elements, duplicates, empty arrays, NULL arrays
-    val edges = spark.sql(
-      """select * from values
-        (array('a','b',cast(null as string),'a'), array('b', cast(null as string))),
-        (array('x'), array()),
-        (array(), array()),
-        (cast(null as array<string>), array('a')),
-        (array('a','a','a'), array('a'))
-        as t(wa, wb)""")
-      .withColumn("wah", org.apache.spark.sql.graft.shims.column(
-        graft.functions.WordHashes(
-          org.apache.spark.sql.graft.shims.expression(col("wa")))))
-      .withColumn("wbh", org.apache.spark.sql.graft.shims.column(
-        graft.functions.WordHashes(
-          org.apache.spark.sql.graft.shims.expression(col("wb")))))
-    val got = edges.select(
-        Dedup.jaccardMilli(col("wa"), col("wb")).as("jp"),
-        Dedup.jaccardMilliHashed(col("wa"), col("wah"),
-          col("wb"), col("wbh")).as("jh"),
-        Dedup.containmentMilli(col("wa"), col("wb")).as("cp"),
-        Dedup.containmentMilliHashed(col("wa"), col("wah"),
-          col("wb"), col("wbh")).as("ch"))
-      .filter(!(col("jp") <=> col("jh")) || !(col("cp") <=> col("ch")))
-      .count()
-    assert(got === 0L)
-  }
-
-  test("milliHashed Unsafe fast path equals the generic form on hand-built UnsafeArrayData") {
-    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types.{ArrayType, StringType, IntegerType}
-    import org.apache.spark.unsafe.types.UTF8String
-    val proj = UnsafeProjection.create(
-      Array[org.apache.spark.sql.types.DataType](
-        ArrayType(StringType), ArrayType(IntegerType)))
-    def mk(ws: Seq[String]): (org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
-        org.apache.spark.sql.catalyst.util.ArrayData,
-        GenericArrayData, GenericArrayData) = {
-      val g = new GenericArrayData(ws.map(w =>
-        if (w == null) null else UTF8String.fromString(w)).toArray[Any])
-      val h = new GenericArrayData(ws.map(w =>
-        if (w == null) 0 else UTF8String.fromString(w).hashCode()).toArray[Any])
-      val u = proj.apply(InternalRow(g, h)).copy()
-      (u.getArray(0), u.getArray(1), g, h)
-    }
-    val cases = Seq(
-      (Seq("a", "b", null, "a"), Seq("b", null)),
-      (Seq("x"), Seq.empty[String]),
-      (Seq.empty[String], Seq.empty[String]),
-      (Seq("a", "a", "a"), Seq("a")),
-      (Seq("", "a"), Seq("", "b")),
-      (Seq("日本", "語", "ab"), Seq("日本", "ab", "cd")),
-      (Seq("long-shared-prefix-1", "long-shared-prefix-2"),
-        Seq("long-shared-prefix-1", "long-shared-prefix-3")))
-    for ((wa, wb) <- cases; cont <- Seq(false, true)) {
-      val (ua, uha, ga, gha) = mk(wa)
-      val (ub, uhb, gb, ghb) = mk(wb)
-      val fast = graft.functions.SetOverlapMilli
-        .milliHashed(ua, uha, ub, uhb, cont)
-      val slow = graft.functions.SetOverlapMilli
-        .milliHashedGeneric(ga, gha, gb, ghb, cont)
-      assert(fast === slow, s"wa=$wa wb=$wb containment=$cont")
-    }
-  }
-
-  // ---- sorted-merge pair-verify kernel vs plain/hashed kernels ----
+  // ---- sorted-merge pair-verify kernel vs the plain kernel ----
 
   test("sorted set-overlap merge kernel matches the plain kernel over corpus cross pairs and edges") {
     import graft.operators.Dedup

@@ -284,6 +284,21 @@ class KnnSpec extends AnyFunSuite {
     assert(!exists(s"$dir/assignments/cluster=${c}_old"))
   }
 
+  test("registerIndex's assignments view reads only live clusters: a " +
+      "cluster=<c>_old copy beside its live twin adds no rows") {
+    val dir = Files.createTempDirectory("ivf-view-debris").toString
+    IvfIndex.build(emb, dir, nCentroids = 4, Metric.Cosine)
+    val c = spark.read.parquet(s"$dir/centroids").select("cluster")
+      .as[Int].collect().min
+    copyDir(s"$dir/assignments/cluster=$c",
+      s"$dir/assignments/cluster=${c}_old")
+    graft.plans.SqlSurface.registerIndex(spark, dir, "debris_ix")
+    val view = spark.table("debris_ix_assignments")
+    assert(view.count() === IvfIndex.liveAssignments(spark, dir).count())
+    assert(view.schema("cluster").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+  }
+
   test("crashed deleteIds rename-swap auto-heals: a cluster left " +
       "only as cluster=<c>_old is renamed back on the next probe " +
       "instead of silently vanishing from results") {

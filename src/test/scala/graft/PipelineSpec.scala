@@ -422,12 +422,72 @@ class PipelineSpec extends AnyFunSuite {
       .as[(String, String, Long)].collect().toSeq
     assert(sh === Seq((idLo, idHi, 0L)))
     // and the self-join reference agrees on the orientation
-    val joined = base.as("x").join(base.as("y"),
-        col("x.text") === col("y.text") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id"), col("y.doc_id"))
-      .as[(String, String)].collect().toSeq
-    assert(joined === Seq((idLo, idHi)))
+    def reference(df: org.apache.spark.sql.DataFrame) =
+      df.as("x").join(df.as("y"),
+          col("x.text") === col("y.text") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id"), col("y.doc_id"))
+        .collect().map(_.toSeq).toSeq
+    assert(reference(base) === Seq(Seq(idLo, idHi)))
+    // every public caller of the one bucket fold, over the same frame
+    // with string ids and with integral ids (ordered opposite to the
+    // string ids, NULL kept): the self-join's pair set and orientation,
+    // each with its perfect-match score
+    val longBase = base.withColumn("doc_id",
+      when(col("doc_id") === idLo, 7L).when(col("doc_id") === idHi, 3L)
+        .when(col("doc_id") === "plain", 5L))
+    for (df <- Seq(base, longBase)) {
+      val callers = Seq(
+        "minHashLsh" -> (Dedup.minHashLsh(df, threshold = 0.9), 1000L),
+        "containmentPairs" -> (Dedup.containmentPairs(df), 1000L),
+        "simHashPairs" -> (Dedup.simHashPairs(df), 0L),
+        "simHashPairsPortable" -> (Dedup.simHashPairsPortable(df), 0L),
+        "sigPairs" -> (Dedup.sigPairs(df.select(col("doc_id").as("id"),
+          Dedup.simHash64(col("text")).as("sig"))), 0L))
+      val want = reference(df)
+      assert(want.size === 1)
+      for ((name, (pairs, score)) <- callers) {
+        val got = pairs.collect().map(_.toSeq).toSeq
+        assert(got === want.map(_ :+ score), s"$name over ${df.schema("doc_id")}")
+      }
+    }
+    val dbl = intercept[IllegalArgumentException] {
+      Dedup.sigPairs(Seq((1.5, 7L), (2.5, 7L)).toDF("id", "sig")).collect()
+    }
+    assert(dbl.getMessage.contains("integral or string"))
+  }
+
+  test("LSH pair dedups pin their exchange at defaultParallelism on " +
+      "the pair columns") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val width = spark.sparkContext.defaultParallelism
+    def pinnedOn(df: org.apache.spark.sql.DataFrame, keys: String*) =
+      df.queryExecution.analyzed.collect {
+        case r: RepartitionByExpression if r.partitionExpressions.map {
+            case a: Attribute => a.name
+            case e => e.sql
+          } == keys => r.optNumPartitions
+      }
+    val texts = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta epsilon zeta"),
+      (3L, "one two three four five six")).toDF("doc_id", "text")
+    val sigs = Seq((1L, 0L), (2L, 1L), (3L, 15L)).toDF("id", "sig")
+    val lshIdx = Files.createTempDirectory("pin-lsh").toString
+    val sigIdx = Files.createTempDirectory("pin-sig").toString
+    LshTextIndex.build(texts, lshIdx)
+    SigIndex.build(sigs, sigIdx, "pin-fam")
+    val plans = Seq(
+      "minHashLsh" -> pinnedOn(Dedup.minHashLsh(texts), "a", "b"),
+      "simHashPairs" -> pinnedOn(Dedup.simHashPairs(texts), "a", "b"),
+      "minHashLshJoin" -> pinnedOn(Dedup.minHashLshJoin(texts, texts),
+        "probe_id", "corpus_id"),
+      "LshTextIndex.probe" -> pinnedOn(LshTextIndex.probe(spark, lshIdx,
+        texts, texts), "probe_id", "corpus_id"),
+      "SigIndex.probe" -> pinnedOn(SigIndex.probe(spark, sigIdx, sigs,
+        "pin-fam"), "probe_id", "corpus_id"))
+    for ((name, widths) <- plans)
+      assert(widths === Seq(Some(width)), name)
   }
 
   test("connected components: multi-hop chains collapse to min label") {
