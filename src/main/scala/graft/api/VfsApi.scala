@@ -3,6 +3,8 @@ package graft.api
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.functions.{arrays_overlap, col, typedLit}
 
 import graft.operators.{IvfIndex, Knn, Metric}
 import graft.store.{InvalidVectorException, VfsStore}
@@ -34,13 +36,24 @@ case class ApiResponse(status: Int, body: JsonNode) {
   * not the reference's accidental top_k/ef_search parameter swap
   * (tcp.rs:403), and approximate search returns up to k results, not
   * the 1-result HNSW cap (ann.rs:756-762).
+  *
+  * Request cost. Like the reference (`rank.rs` ranks, the
+  * `storage_manager.rs` id index resolves the winners), a warm request
+  * pays a small fixed number of Spark jobs, none with a shuffle: store
+  * reads use the manifest's known schema, so an exact search or a get
+  * is ONE job; an approximate search is TWO — the probe top-k over the
+  * probed cluster dirs of a cached [[IvfIndex.Handle]] (the centroids
+  * stay in driver memory across requests), then [[VfsStore.getByIds]]'s
+  * id-pruned read of the ≤ k winners, sorted by (distance, id) on the
+  * driver.
   */
 class VfsApi(spark: SparkSession, rootDir: String) {
   import VfsApi._
 
   @volatile private var store: Option[VfsStore] = None
-  // ANN artifact cache, invalidated when the store's commit state moves
-  @volatile private var annState: Option[(Long, String)] = None
+  // opened ANN indexes, one per metric, each with the store version it
+  // was built at; dropped when the store's commit state moves
+  @volatile private var annCache = Map.empty[Metric, (Long, IvfIndex.Handle)]
 
   private def requireStore(): VfsStore = store.getOrElse(
     throw new IllegalStateException("storage not initialized"))
@@ -70,7 +83,7 @@ class VfsApi(spark: SparkSession, rootDir: String) {
         created
       }
     store = Some(s)
-    annState = None
+    annCache = Map.empty
     ok(obj(o => {
       o.put("status", "success")
       o.put("vector_dimension", s.dim)
@@ -86,7 +99,7 @@ class VfsApi(spark: SparkSession, rootDir: String) {
     val name = req.path("name").asText("")
     val tags = strings(req.path("tags"))
     val id = s.insert(values, name, tags)
-    annState = None
+    annCache = Map.empty
     ApiResponse(201, obj(o => { o.put("id", id); o.put("status", "success") }))
   }
 
@@ -107,9 +120,14 @@ class VfsApi(spark: SparkSession, rootDir: String) {
   }
 
   /** POST /search {values, top_k?, search_type?, distance_method?,
-    * ef_search?} → {results: [{id, values, name, tags, score}],
-    * query_time_ms}. Defaults follow tcp.rs:383-397: approximate,
-    * euclidean, top_k=5 (rank.rs:129), ef_search=6 → nProbe. */
+    * ef_search?, filter_tags?} → {results: [{id, values, name, tags,
+    * score}], query_time_ms}. Defaults follow tcp.rs:383-397:
+    * approximate, euclidean, top_k=5 (rank.rs:129), ef_search=6 →
+    * nProbe = max(2, ef_search / 2). `filter_tags` (an extension) keeps
+    * only records whose tags overlap it, BEFORE the top-k on both
+    * paths. Exact: one scored top-k over the store. Approximate: the
+    * cached index's probe top-k of (id, distance), then the winners'
+    * records by id, ordered by (distance, id) on the driver. */
   def search(json: String): ApiResponse = guard {
     val s = requireStore()
     val req = mapper.readTree(json)
@@ -125,36 +143,46 @@ class VfsApi(spark: SparkSession, rootDir: String) {
     // (pushed under the distance scoring)
     val filterTags = strings(req.path("filter_tags"))
     val t0 = System.nanoTime()
-    val results = searchType match {
-      case "exact" if filterTags.nonEmpty =>
-        import org.apache.spark.sql.functions.{array, arrays_overlap, col, lit, typedLit}
-        Knn.exact(s.read().filter(
-          arrays_overlap(col("tags"), typedLit(filterTags))), q, topK, metric)
-      case "exact" => Knn.search(s, q, topK, metric)
+    val tagged = if (filterTags.isEmpty) None
+      else Some(arrays_overlap(col("tags"), typedLit(filterTags)))
+    val results: Seq[Scored] = searchType match {
+      case "exact" =>
+        tagged.fold(Knn.search(s, q, topK, metric))(
+            t => Knn.exact(s.read().filter(t), q, topK, metric))
+          .collect().toSeq.map { r =>
+            Scored(r.getAs[Long]("id"),
+              r.getSeq[Float](r.fieldIndex("values")), r.getAs[String]("name"),
+              r.getSeq[String](r.fieldIndex("tags")),
+              r.getAs[Double]("distance"))
+          }
       case "approximate" =>
         val idx = ensureAnnIndex(s, metric)
-        val hits = IvfIndex.search(spark, idx, q, topK,
-          nProbe = math.max(2, efSearch / 2))
-        import org.apache.spark.sql.functions.{broadcast, col}
-        // J1 hydration: attach full records to the top-k ids
-        broadcast(hits).join(s.read(), Seq("id"), "inner")
-          .orderBy(col("distance").asc, col("id").asc)
+        val nProbe = math.max(2, efSearch / 2)
+        val hits = tagged.fold(idx.search(q, topK, nProbe))(t =>
+            idx.searchFiltered(q, topK, s.read().filter(t).select(col("id")),
+              nProbe))
+          .collect().map(r => (r.getLong(0), r.getDouble(1)))
+        val records = s.getByIds(hits.map(_._1).toSeq).map(r => r.id -> r).toMap
+        hits.toSeq.flatMap { case (id, d) =>
+          records.get(id).map(r => Scored(id, r.values.toSeq, r.name, r.tags, d))
+        }.sortWith { (a, b) =>
+          val c = SQLOrderingUtil.compareDoubles(a.distance, b.distance)
+          c < 0 || (c == 0 && a.id < b.id)
+        }
       case other => return badRequest(s"unknown search_type: $other")
     }
-    val rows = results.collect()
     val ms = (System.nanoTime() - t0) / 1e6
     ok(obj(o => {
       val arr = o.putArray("results")
-      rows.foreach { r =>
+      results.foreach { r =>
         val e = arr.addObject()
-        e.put("id", r.getAs[Long]("id"))
+        e.put("id", r.id)
         val vs = e.putArray("values")
-        r.getSeq[Float](r.fieldIndex("values")).foreach(vs.add(_))
-        e.put("name", r.getAs[String]("name"))
+        r.values.foreach(vs.add(_))
+        e.put("name", r.name)
         val ts = e.putArray("tags")
-        Option(r.getSeq[String](r.fieldIndex("tags")))
-          .getOrElse(Seq.empty).foreach(ts.add)
-        e.put("score", r.getAs[Double]("distance").toFloat)
+        Option(r.tags).getOrElse(Seq.empty).foreach(ts.add)
+        e.put("score", r.distance.toFloat)
       }
       o.put("query_time_ms", ms)
     }))
@@ -163,7 +191,7 @@ class VfsApi(spark: SparkSession, rootDir: String) {
   /** POST /flush */
   def flush(): ApiResponse = guard {
     requireStore().flush()
-    annState = None
+    annCache = Map.empty
     ok(obj(_.put("status", "success")))
   }
 
@@ -176,25 +204,26 @@ class VfsApi(spark: SparkSession, rootDir: String) {
   /** POST /restore */
   def restore(): ApiResponse = guard {
     requireStore().restore()
-    annState = None
+    annCache = Map.empty
     ok(obj(_.put("status", "success")))
   }
 
-  /** Build (or reuse) the persisted ANN artifact for the current store
-    * state — replaces the reference's per-query HNSW rebuild
-    * (rank.rs:204-239) with a cached index keyed on the store version. */
-  private def ensureAnnIndex(s: VfsStore, metric: Metric): String = {
+  /** The opened ANN index of `metric` for the current store state,
+    * built on a miss — replaces the reference's per-query HNSW rebuild
+    * (rank.rs:204-239) with one cached index per metric, keyed on the
+    * store version, so alternating metrics reuse both. */
+  private def ensureAnnIndex(s: VfsStore, metric: Metric): IvfIndex.Handle = {
     s.flush()
     val version = s.countEstimate
-    val key = metric.toString
-    val path = s"$rootDir/ann-${key.toLowerCase}"
-    annState match {
-      case Some((v, k)) if v == version && k == key => path
+    annCache.get(metric) match {
+      case Some((v, handle)) if v == version => handle
       case _ =>
+        val path = s"$rootDir/ann-${metric.toString.toLowerCase}"
         val n = math.max(1, math.min(256, math.sqrt(version.toDouble).toInt))
         IvfIndex.build(s.read(), path, n, metric)
-        annState = Some((version, key))
-        path
+        val handle = IvfIndex.open(spark, path)
+        annCache = annCache.updated(metric, (version, handle))
+        handle
     }
   }
 
@@ -219,6 +248,10 @@ class VfsApi(spark: SparkSession, rootDir: String) {
 
 object VfsApi {
   val mapper: ObjectMapper = graft.operators.ArtifactIo.mapper
+
+  /** One search result row, as the response reports it. */
+  private case class Scored(id: Long, values: Seq[Float], name: String,
+      tags: Seq[String], distance: Double)
 
   private def obj(f: ObjectNode => Unit): JsonNode = {
     val o = mapper.createObjectNode()

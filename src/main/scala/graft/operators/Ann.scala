@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Approximate k-NN as a *persisted, reusable* index artifact — the
   * deliberate replacement for the reference's per-query HNSW rebuild
@@ -181,6 +182,20 @@ object IvfIndex {
     names().toSeq.collect { case Live(c) => c.toInt }.sorted
   }
 
+  /** The schema every `assignments/cluster=<c>` file carries: [[build]],
+    * [[append]] and [[rebalance]] write (id, values) partitioned by
+    * cluster, and [[deleteIds]] / [[compactAssignments]] rewrite the
+    * same two columns. Probes read with it, so reading the probed dirs
+    * launches no footer-inference job. */
+  private[graft] val AssignmentSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("values", ArrayType(FloatType))))
+
+  /** The centroid table's schema, written by [[build]] and
+    * [[rebalance]] alone. */
+  private val CentroidSchema: StructType = StructType(Seq(
+    StructField("cluster", IntegerType),
+    StructField("centroid", ArrayType(FloatType))))
+
   /** Centroid table → driver memory, BYTE-GATED. The whole IVF design
     * leans on the centroid table being tiny relative to the corpus
     * (class doc: "tiny, driver-side"), and every probe/append/
@@ -206,8 +221,7 @@ object IvfIndex {
       "An index this wide needs two-level routing (a coarse " +
         "quantizer over the centroid table); rebuild with fewer " +
         "centroids.")
-    spark.read.parquet(s"$path/centroids")
-      .select(col("cluster"), col("centroid"))
+    spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
@@ -232,8 +246,8 @@ object IvfIndex {
   /** The routed cluster ids — an UNGATED read of the centroid table's
     * id column only (no vectors reach the driver). */
   private def clusterIds(spark: SparkSession, path: String): Seq[Int] =
-    spark.read.parquet(s"$path/centroids").select(col("cluster"))
-      .collect().map(_.getInt(0)).sorted.toIndexedSeq
+    spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
+      .select(col("cluster")).collect().map(_.getInt(0)).sorted.toIndexedSeq
 
   /** Stored bytes per live cluster dir — one content summary each, no
     * Spark job. Bytes are a faithful row proxy: every row of one index
@@ -612,34 +626,102 @@ object IvfIndex {
     cents
   }
 
-  /** Probe: exact top-k within the nProbe nearest clusters. Returns
-    * (id, distance) — distances in the *original* metric space.
-    * `.explain` shows PartitionFilters pruning the unprobed clusters. */
+  /** Open the index at `path` for probing (fails fast when no index or
+    * a rebuild stands there). See [[Handle]]. */
+  def open(spark: SparkSession, path: String): Handle = {
+    val h = new Handle(spark, path)
+    h.current()
+    h
+  }
+
+  /** An opened index, reused across probes. Each probe re-reads
+    * `ivf.json` through the guarded [[readMeta]] — a sidecar read, no
+    * Spark job — so a standing rebuild sentinel or a parked dir still
+    * refuses. The byte-gated centroid table ([[loadCentroids]]) is
+    * reloaded only when that meta moved: every write that replaces the
+    * centroids ([[build]] over an existing path, [[rebalance]]) bumps
+    * the generation. A warm probe is therefore ONE Spark job, the top-k
+    * over the probed cluster dirs. Safe to share between threads: the
+    * cache is one volatile (meta, centroids) pair. */
+  final class Handle private[IvfIndex] (spark: SparkSession,
+      val path: String) {
+    @volatile private var state: (Meta, Array[(Int, Array[Float])]) = _
+
+    private[IvfIndex] def current(): (Meta, Array[(Int, Array[Float])]) = {
+      val meta = readMeta(path)
+      val s = state
+      if (s != null && s._1 == meta) s
+      else {
+        val next = (meta, loadCentroids(spark, path, meta))
+        state = next
+        next
+      }
+    }
+
+    /** Exact top-k within the nProbe nearest clusters: (id, distance),
+      * distances in the *original* metric space. `.explain` shows only
+      * the probed `cluster=` dirs in the scan. */
+    def search(query: Array[Float], k: Int, nProbe: Int = 4): DataFrame =
+      topK(query, k, nProbe, None).select(col("id"), col("distance"))
+
+    /** [[search]] keeping the stored vector: (id, values, distance). */
+    def searchHydrated(query: Array[Float], k: Int,
+        nProbe: Int = 4): DataFrame =
+      topK(query, k, nProbe, None)
+
+    /** [[search]] over the allowed ids only — see
+      * [[IvfIndex.searchFiltered]]. Output: (id, distance). */
+    def searchFiltered(query: Array[Float], k: Int, allowed: DataFrame,
+        nProbe: Int = 4, allowedRows: Long = -1L): DataFrame =
+      topK(query, k, nProbe, Some(BroadcastGate.allowedSide(allowed,
+        allowedRows, "searchFiltered")))
+        .select(col("id"), col("distance"))
+
+    /** THE probe path: pick the nProbe nearest clusters against the
+      * cached centroids, read ONLY those dirs with the known
+      * [[AssignmentSchema]] (O(nProbe) paths, no partition discovery),
+      * dedup a multiprobe index's copies, thin to `allowed` BEFORE the
+      * top-k (pre-filter), then the exact top-k. On normalized vectors
+      * euclidean order == cosine order; the requested metric's distance
+      * values are reported. (id, values, distance). */
+    private def topK(query: Array[Float], k: Int, nProbe: Int,
+        allowed: Option[DataFrame]): DataFrame = {
+      val (meta, cents) = current()
+      val metric = Metric.parse(meta.metric)
+      val q = prepareQuery(query, meta.dim, metric)
+      val dirs = existingClusterDirs(spark, s"$path/assignments",
+        nearestClusters(cents, q, nProbe))
+      if (dirs.isEmpty)
+        spark.emptyDataFrame
+          .select(lit(0L).as("id"),
+            typedLit(Array.empty[Float]).as("values"),
+            lit(0.0).as("distance")).limit(0)
+      else {
+        val probed = spark.read.schema(AssignmentSchema).parquet(dirs: _*)
+        // a multiprobe index stores each vector in nAssign clusters: two
+        // probed clusters can both contain an id — dedup before top-k so
+        // duplicates don't shrink effective k (single-assignment indexes
+        // skip the extra shuffle)
+        val unique = if (meta.nAssign > 1) probed.dropDuplicates("id")
+          else probed
+        Knn.exact(allowed.fold(unique)(unique.join(_, Seq("id"), "left_semi")),
+          q, k, metric)
+      }
+    }
+  }
+
+  /** Probe: exact top-k within the nProbe nearest clusters — one
+    * [[open]] plus [[Handle.search]]. Returns (id, distance). */
   def search(spark: SparkSession, path: String, query: Array[Float],
       k: Int, nProbe: Int = 4): DataFrame =
-    searchHydrated(spark, path, query, k, nProbe)
-      .select(col("id"), col("distance"))
+    open(spark, path).search(query, k, nProbe)
 
   /** [[search]] keeping the stored vector alongside — the shape the
     * [[graft.plans.RouteKnnToIvf]] optimizer rewrite needs, since a
     * routed KnnSearch node must keep producing its child's columns. */
   def searchHydrated(spark: SparkSession, path: String,
-      query: Array[Float], k: Int, nProbe: Int = 4): DataFrame = {
-    val meta = readMeta(path)
-    val metric = Metric.parse(meta.metric)
-    val q = prepareQuery(query, meta.dim, metric)
-    probedCandidates(spark, path, meta, q, nProbe) match {
-      case None =>
-        spark.emptyDataFrame
-          .select(lit(0L).as("id"),
-            typedLit(Array.empty[Float]).as("values"),
-            lit(0.0).as("distance")).limit(0)
-      case Some(pruned) =>
-        // on normalized vectors euclidean order == cosine order; report
-        // the requested metric's distance values
-        Knn.exact(pruned, q, k, metric)
-    }
-  }
+      query: Array[Float], k: Int, nProbe: Int = 4): DataFrame =
+    open(spark, path).searchHydrated(query, k, nProbe)
 
   /** Metadata-constrained ("filtered") probe: [[search]] restricted to
     * an allowed-id set — the predicate + vector query combination
@@ -659,22 +741,8 @@ object IvfIndex {
     * Output: (id, distance). */
   def searchFiltered(spark: SparkSession, path: String,
       query: Array[Float], k: Int, allowed: DataFrame, nProbe: Int = 4,
-      allowedRows: Long = -1L): DataFrame = {
-    val meta = readMeta(path)
-    val metric = Metric.parse(meta.metric)
-    val q = prepareQuery(query, meta.dim, metric)
-    val allowSide = BroadcastGate.allowedSide(allowed, allowedRows,
-      "searchFiltered")
-    probedCandidates(spark, path, meta, q, nProbe) match {
-      case None =>
-        spark.emptyDataFrame
-          .select(lit(0L).as("id"), lit(0.0).as("distance")).limit(0)
-      case Some(pruned) =>
-        Knn.exact(pruned.join(allowSide, Seq("id"), "left_semi"),
-            q, k, metric)
-          .select(col("id"), col("distance"))
-    }
-  }
+      allowedRows: Long = -1L): DataFrame =
+    open(spark, path).searchFiltered(query, k, allowed, nProbe, allowedRows)
 
   /** Dimension-checked query in the stored space: cosine queries are
     * normalized to match the spherically-stored vectors (a zero vector
@@ -686,28 +754,6 @@ object IvfIndex {
       throw new graft.store.InvalidVectorException(
         s"[GRAFT] vector dimension mismatch: expected $dim, got ${query.length}")
     if (metric == Metric.Cosine) l2normalize(query) else query
-  }
-
-  /** The probed, multiprobe-deduped candidate rows (id, values,
-    * cluster) for one query — None when no probed cluster directory
-    * exists on disk. Shared by [[searchHydrated]] / [[searchFiltered]]. */
-  private def probedCandidates(spark: SparkSession, path: String,
-      meta: Meta, q: Array[Float], nProbe: Int): Option[DataFrame] = {
-    // read ONLY the probed cluster directories — skips the full
-    // partition-discovery listing (O(nProbe) paths instead of
-    // O(nCentroids) at probe time)
-    val existing = existingClusterDirs(spark, s"$path/assignments",
-      nearestClusters(loadCentroids(spark, path, meta), q, nProbe))
-    if (existing.isEmpty) None
-    else {
-      val pruned0 = spark.read.parquet(existing.toIndexedSeq: _*)
-      // a multiprobe index stores each vector in nAssign clusters: two
-      // probed clusters can both contain an id — dedup before top-k so
-      // duplicates don't shrink effective k (single-assignment indexes
-      // skip the extra shuffle)
-      Some(if (meta.nAssign > 1) pruned0.dropDuplicates("id")
-      else pruned0)
-    }
   }
 
   /** BATCH IVF probe: top-k for EVERY query row in one job — the

@@ -103,9 +103,18 @@ class VfsStore private (val spark: SparkSession, val root: String,
   /** The raw physical frame over every committed directory. */
   private def committedRaw(): DataFrame = readDirs(manifest.commits)
 
-  /** The raw physical frame over the given commit directories. */
+  /** The physical schema of every commit dir: [[writeCommitDir]]
+    * writes it and every rewrite (upsert, delete, compact) copies
+    * those rows. */
+  private def rawSchema: StructType =
+    if (manifest.quantize) quantSchema else denseSchema
+
+  /** The raw physical frame over the given commit directories, read
+    * with the known [[rawSchema]]: a plain `spark.read.parquet` would
+    * first run a footer-inference job to rediscover it, one extra Spark
+    * job on every store read. */
   private def readDirs(dirs: Seq[String]): DataFrame =
-    spark.read.parquet(dirs.map(c => s"$root/data/$c"): _*)
+    spark.read.schema(rawSchema).parquet(dirs.map(c => s"$root/data/$c"): _*)
 
   /** Provenance: the immediate parent dir of each row's file IS its
     * commit dir (commit names are engine-generated, slash-free). ONE
@@ -168,7 +177,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
       val df = spark.createDataFrame(rows)
         .select(col("id"), col("values"), col("name"), col("tags"),
           col("created_at"))
-      val (dir, _) = writeCommitDir(df)
+      val dir = writeCommitDir(df)
       commitManifest(manifest.copy(commits = manifest.commits :+ dir))
     }
   }
@@ -189,7 +198,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
   def appendBatch(input: DataFrame): Long = synchronized {
     val base = manifest.nextId
     val (df, n) = encodeBatch(input, base)
-    val (dir, _) = writeCommitDir(df, knownCount = Some(n))
+    val dir = writeCommitDir(df)
     commitManifest(manifest.copy(commits = manifest.commits :+ dir,
       nextId = base + n))
     base
@@ -276,7 +285,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
             (manifest.commits.filterNot(colliding), Some(keepDir))
           }
         }
-      val (dir, _) = writeCommitDir(df, knownCount = Some(n))
+      val dir = writeCommitDir(df)
       commitManifest(manifest.copy(
         commits = (untouched ++ survivorDir.toSeq) :+ dir,
         nextId = base + n))
@@ -338,11 +347,10 @@ class VfsStore private (val spark: SparkSession, val root: String,
 
   /** Quantize-on-write (storage_manager.rs:143-149 + vector.rs:115-123:
     * name suffix `_quantized`, tag `"quantized"`, scale 127, no clamp).
-    * Writes the data directory and returns (dir, rowCount) WITHOUT
-    * touching the manifest — callers fold the new dir plus any other
-    * state change into one atomic manifest swap. */
-  private def writeCommitDir(df: DataFrame,
-      knownCount: Option[Long] = None): (String, Long) = {
+    * Writes the data directory and returns its name WITHOUT touching
+    * the manifest — callers fold the new dir plus any other state
+    * change into one atomic manifest swap. */
+  private def writeCommitDir(df: DataFrame): String = {
     val out =
       if (manifest.quantize)
         df.select(col("id"),
@@ -357,11 +365,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
     // sort by id within partitions: parquet row-group min/max stats then
     // prune point lookups — the B-tree-index analog (SURVEY §1.5)
     out.sortWithinPartitions("id").write.mode("overwrite").parquet(target)
-    // row count: callers that already know it (appendBatch's phase-1
-    // counts) skip the footer scan; otherwise read it from the freshly
-    // written footers (metadata-only, avoids recomputing the input)
-    val cnt = knownCount.getOrElse(spark.read.parquet(target).count())
-    (dir, cnt)
+    dir
   }
 
   /** Dense logical view (dequantize-on-read, storage_manager.rs:202-210;
@@ -386,15 +390,29 @@ class VfsStore private (val spark: SparkSession, val root: String,
     } else committedRaw()
   }
 
-  /** Point lookup P1 (storage_manager.rs:235-296): memtable probe, then
-    * pushed-down parquet filter (the B-tree tier maps to row-group
-    * min/max pruning on id). */
-  def getById(id: Long): Option[VfsRecord] = synchronized {
-    memtable.get(id).orElse {
-      import org.apache.spark.sql.Encoders
-      read().filter(col("id") === id)
-        .as(Encoders.product[VfsRecord]).collect().headOption
-    }
+  /** Point lookup P1 (storage_manager.rs:235-296) — [[getByIds]] of
+    * one id. */
+  def getById(id: Long): Option[VfsRecord] = getByIds(Seq(id)).headOption
+
+  /** Batched point lookup: the memtable first, then ONE pushed-down
+    * `id IN (…)` read of the dense view over the committed dirs for the
+    * rest (the B-tree tier maps to row-group min/max pruning on the
+    * id-sorted commits) — one Spark job, none when the memtable holds
+    * every id. `ids` is a lookup batch (it rides in the plan as an IN
+    * list), not a join side. Returns each found record once, in
+    * first-occurrence order of `ids`; a missing id is skipped. */
+  def getByIds(ids: Seq[Long]): Seq[VfsRecord] = synchronized {
+    val wanted = ids.distinct
+    val rest = wanted.filterNot(memtable.contains)
+    val committed: Map[Long, VfsRecord] =
+      if (rest.isEmpty || manifest.commits.isEmpty) Map.empty
+      else {
+        import org.apache.spark.sql.Encoders
+        VfsStore.denseView(committedRaw().filter(col("id").isin(rest: _*)),
+            manifest.quantize)
+          .as(Encoders.product[VfsRecord]).collect().map(r => r.id -> r).toMap
+      }
+    wanted.flatMap(id => memtable.get(id).orElse(committed.get(id)))
   }
 
   /** Snapshot: flush + persist current state under `snapshots/<name>`
@@ -494,7 +512,7 @@ class VfsStore private (val spark: SparkSession, val root: String,
     // fully-matched hit set → no zero-row commit: the empty dir is
     // removed outright (it was never referenced), so it neither
     // lives in the manifest forever nor pollutes vacuum accounting
-    val kept = spark.read.parquet(s"$root/data/$dir").count()
+    val kept = readDirs(Seq(dir)).count()
     if (kept == 0L) {
       val hp = new org.apache.hadoop.fs.Path(s"$root/data/$dir")
       hp.getFileSystem(spark.sessionState.newHadoopConf())
@@ -647,10 +665,8 @@ class VfsStore private (val spark: SparkSession, val root: String,
     * publish. */
   def readStream(): DataFrame = {
     vacuum()
-    val schema =
-      if (manifest.quantize) VfsStore.quantSchema else VfsStore.denseSchema
     VfsStore.denseView(
-      spark.readStream.schema(schema)
+      spark.readStream.schema(rawSchema)
         .option("pathGlobFilter", "*.parquet")
         .parquet(s"$root/data/*"),
       manifest.quantize)

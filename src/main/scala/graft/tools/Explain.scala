@@ -2,8 +2,12 @@ package graft.tools
 
 import java.io.{File, FileOutputStream, PrintStream}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{Dedup, Knn, Metric}
 
@@ -218,6 +222,27 @@ object Explain {
         col("values").as("qvalues"))
       graft.operators.IvfIndex.searchBatch(spark, pqIvf, queries, 5,
         nProbe = 2)
+    }
+    // the plans ONE warm approximate API request executes, captured
+    // from the request itself so they cannot drift from VfsApi's path
+    locally {
+      val root = java.nio.file.Files.createTempDirectory("explain-api").toString
+      graft.store.VfsStore.create(spark, root, "explain", q.length)
+        .appendBatch(emb.select(col("values"),
+          concat(lit("v"), col("id").cast("string")).as("name"),
+          array(lit("t")).as("tags")))
+      val api = new graft.api.VfsApi(spark, root)
+      api.init(s"""{"vector_dimension": ${q.length}, "truncate_data": false}""")
+      val req = q.mkString("""{"values": [""", ",",
+        """], "top_k": 10, "search_type": "approximate"}""")
+      api.search(req) // cold: builds and opens the index
+      val (_, _, plans) = sparkWork(spark)(api.search(req))
+      emit("approximate_api_request", "approximate API request (expect: " +
+          "TWO plans, no Exchange in either — the probe top-k " +
+          "(TakeOrderedAndProject over ONLY the probed cluster= dirs), " +
+          "then the id-pruned hydration (PushedFilters In(id, ..)))") {
+        plans.foreach(p => println(p.explainString(ExplainMode.fromString("formatted"))))
+      }
     }
     show("semantic dedup (expect: ZERO-shuffle argmin assignment " +
         "projection; one exchange on cluster for the scoped self-join)") {
@@ -814,5 +839,36 @@ object Explain {
           }
       }
     spark.stop()
+  }
+
+  /** What `body` ran on Spark: its result, the number of Spark jobs it
+    * started and the query executions it completed (in completion
+    * order), read from listeners once the listener bus is drained. */
+  private[graft] def sparkWork[T](spark: SparkSession)(
+      body: => T): (T, Int, Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    shims.drainListenerBus(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      val out = body
+      shims.drainListenerBus(sc)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.get, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
   }
 }

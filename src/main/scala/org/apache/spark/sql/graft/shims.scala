@@ -29,6 +29,12 @@ object shims {
   def convertedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Block until every listener event posted so far has been delivered
+    * (the listener bus is private[spark]); listeners see jobs and
+    * finished queries asynchronously otherwise. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Wrap a LogicalPlan as a DataFrame (Dataset.ofRows is private[sql]). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =

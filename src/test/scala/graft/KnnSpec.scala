@@ -951,4 +951,39 @@ class KnnSpec extends AnyFunSuite {
       Knn.search(s, Array(1f, 0f), 5)
     }
   }
+
+  test("known-schema cluster reads equal inferred reads after build, " +
+      "append, deleteIds, rebalance and compactAssignments") {
+    val dim = 8
+    // a skewed corpus (a tight blob + spread rows) so rebalance splits
+    def rows(from: Long, until: Long) = (from until until).map { i =>
+      val v = new Array[Float](dim)
+      if (i % 10 < 8) { v(0) = 1f; v(1) = (i % 97).toFloat / 9700f }
+      else { v((i % (dim - 2)).toInt + 2) = 1f; v(0) = (i % 7).toFloat / 7f }
+      (i, v.toSeq)
+    }.toDF("id", "values")
+    val idx = Files.createTempDirectory("ivf-schema").toString
+    def check(stage: String): Unit = {
+      val dirs = new java.io.File(s"$idx/assignments").listFiles()
+        .filter(_.getName.matches("cluster=-?\\d+")).map(_.getPath).toSeq
+      assert(dirs.nonEmpty, stage)
+      val known = spark.read.schema(IvfIndex.AssignmentSchema).parquet(dirs: _*)
+      val inferred = spark.read.parquet(dirs: _*)
+      assert(known.schema === inferred.schema, stage)
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("id").collect().toSeq
+      assert(sorted(known) === sorted(inferred), stage)
+    }
+    IvfIndex.build(rows(0L, 800L), idx, nCentroids = 6, Metric.Cosine, seed = 7L)
+    check("build")
+    IvfIndex.append(rows(800L, 1000L), idx)
+    check("append")
+    assert(IvfIndex.deleteIds(spark, idx, Seq(3L, 804L, 999L)) === 3L)
+    check("deleteIds")
+    assert(IvfIndex.rebalance(spark, idx, maxClusterFraction = 0.25,
+      seed = 11L) > 0)
+    check("rebalance")
+    IvfIndex.compactAssignments(spark, idx)
+    check("compactAssignments")
+  }
 }

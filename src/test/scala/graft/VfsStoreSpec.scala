@@ -611,4 +611,107 @@ class VfsStoreSpec extends AnyFunSuite {
     assert(s.getById(5L).map(_.name) === Some("v5"))
     assert(s.getById(99L) === None)
   }
+
+  /** A record's comparable content (VfsRecord holds an Array). */
+  private def content(r: VfsRecord) =
+    (r.id, r.values.toSeq, r.name, Option(r.tags).map(_.toSeq), r.created_at)
+
+  /** getByIds against the read()-based lookup it replaces: the records
+    * of `ids` that read() holds, in first-occurrence order of `ids`. */
+  private def assertLookups(s: VfsStore, ids: Seq[Long], stage: String): Unit = {
+    val viaRead = s.read().filter(col("id").isin(ids: _*))
+      .as[VfsRecord].collect().map(r => r.id -> r).toMap
+    val want = ids.distinct.flatMap(viaRead.get).map(content)
+    assert(s.getByIds(ids).map(content) === want, stage)
+    ids.foreach(id => assert(s.getById(id).map(content) ===
+      viaRead.get(id).map(content), s"$stage id=$id"))
+  }
+
+  test("getByIds: memtable and committed hits, missing ids, and ids " +
+      "after upsertBatch, deleteWhere, compact and restore (dense and " +
+      "quantized)") {
+    for (quantize <- Seq(false, true)) {
+      val st = s"quantize=$quantize"
+      val s = VfsStore.create(spark, tmp(), "byids", dim = 2, quantize)
+      val all = (1L to 8L) :+ 99L
+      s.appendBatch(Seq((Seq(0.5f, -0.25f), "a", Seq("x")),
+        (Seq(0.75f, 0f), "b", Seq[String]()),
+        (Seq(-0.125f, 1f), "c", Seq("x", "y"))).toDF("values", "name", "tags"))
+      s.insert(Array(0.0625f, 0.5f), "d", Seq("y"))
+      s.insert(Array(1f, -1f), "e", null)
+      // ids 4 and 5 live in the memtable, 1-3 in a commit dir
+      assert(s.hasUnflushed)
+      assert(s.getByIds(Seq(5L, 1L, 99L, 4L, 1L)).map(_.id) ===
+        Seq(5L, 1L, 4L), st)
+      assert(s.getById(99L) === None)
+      assertLookups(s, all, s"$st memtable")
+      s.snapshot() // flushes
+      assertLookups(s, all, s"$st flushed")
+      s.upsertBatch(Seq((Seq(0.25f, 0.25f), "b", Seq("z")))
+        .toDF("values", "name", "tags"))
+      assert(s.getById(2L) === None, st) // "b" replaced under id 6
+      assert(s.getById(6L).map(_.name) === Some("b"), st)
+      assertLookups(s, all, s"$st upsert")
+      s.deleteWhere(col("id") === 3L)
+      assert(s.getById(3L) === None, st)
+      assertLookups(s, all, s"$st delete")
+      s.compact()
+      assertLookups(s, all, s"$st compact")
+      s.insert(Array(0.375f, -0.625f), "f", Seq("x"))
+      s.restore()
+      assert(s.getByIds(all).map(_.id) === (1L to 5L), st)
+      assertLookups(s, all, s"$st restore")
+    }
+  }
+
+  /** Copy a test-resource dir tree to a fresh temp dir. */
+  private def resourceCopy(name: String): String = {
+    val src = java.nio.file.Paths.get(getClass.getResource(s"/$name").toURI)
+    val dst = java.nio.file.Paths.get(tmp(), "store")
+    val w = Files.walk(src)
+    try w.iterator().asScala.foreach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally w.close()
+    dst.toString
+  }
+
+  test("known-schema store reads equal the inferred reads row for row " +
+      "and in column types, dense and quantized, including stores " +
+      "written before reads took the known schema") {
+    def writtenHere(quantize: Boolean): String = {
+      val root = tmp()
+      val s = VfsStore.create(spark, root, "schema", dim = 3, quantize)
+      s.appendBatch(Seq((Seq(0.5f, -0.25f, 0.125f), "a", Seq("x")),
+        (Seq(0.75f, 0f, -0.5f), "b", Seq[String]()))
+        .toDF("values", "name", "tags"))
+      s.insert(Array(0.0625f, 0.5f, -0.75f), "c", null)
+      s.flush()
+      s.upsertBatch(Seq((Seq(0.25f, 0.25f, 0.25f), "b", Seq("z")))
+        .toDF("values", "name", "tags"))
+      s.deleteWhere(col("id") === 1L)
+      root
+    }
+    // legacy-store/*: written by the store code from before reads took
+    // the known schema, with a commit of each kind (flush, batch,
+    // upsert, delete rewrite)
+    val roots = Seq(writtenHere(false), writtenHere(true),
+      resourceCopy("legacy-store/dense"), resourceCopy("legacy-store/quantized"))
+    roots.foreach { root =>
+      val s = VfsStore.open(spark, root)
+      val m = VfsManifest.fromJson(new String(Files.readAllBytes(
+        java.nio.file.Paths.get(root, "manifest.json")), "UTF-8"))
+      assert(m.commits.size >= 2, root)
+      val inferred = spark.read.parquet(m.commits.map(c => s"$root/data/$c"): _*)
+      val known = s.readRaw()
+      assert(known.schema === inferred.schema, root)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("id").collect().toSeq
+      assert(rows(known) === rows(inferred), root)
+      assert(rows(s.read()) ===
+        rows(VfsStore.denseView(inferred, m.quantize)), root)
+      assert(s.getByIds((1L to 8L)).map(_.id) ===
+        rows(inferred).map(_.getLong(0)), root)
+    }
+  }
 }
