@@ -174,16 +174,15 @@ object Bench {
       }
 
     def entry(name: String)(f: => Double): Unit = {
-      // SCOPE any cache the entry's operators create to the entry:
-      // composition operators persist internally (curateAndPack's
-      // gated set, by design — released only when the plan becomes
-      // unreachable), so without this the blocks of every measured
-      // plan linger until the ContextCleaner notices, pressuring
-      // later entries and spamming the tail with "Asked to cache
-      // already cached data" on every rep. Deliberate cross-entry
-      // fixtures (the cached langid model, the persisted DSIR counts)
-      // are forced OUTSIDE entry bodies via preBuild, so the diff
-      // never touches them.
+      // SCOPE any RDD blocks the entry's operators leave to the
+      // entry: operators free their own caches before returning, but
+      // the eager ones (curateAndPack, the mining family, the batch
+      // knn and IVF probes) return a localCheckpoint and Sampling's
+      // default checkpoints too, whose blocks would otherwise linger
+      // until the ContextCleaner notices, pressuring later entries.
+      // Deliberate cross-entry fixtures (the cached langid model, the
+      // persisted DSIR counts) are forced OUTSIDE entry bodies via
+      // preBuild, so the diff never touches them.
       val before = spark.sparkContext.getPersistentRDDs.keySet
       cur = Vector.empty
       try {

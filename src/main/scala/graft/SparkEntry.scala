@@ -1045,41 +1045,45 @@ object SparkEntry {
       val model = graft.operators.Bpe.trainBpe(docs, nMerges = 200)
       val enc = graft.operators.Bpe.bpeEncode(docs, model)
         .select(col("doc_id"), col("n_tokens")).cache()
-      val packed = graft.operators.Packing.packBinsNextFit(enc,
-          shard = pmod(col("doc_id"), lit(8L)),
-          orderBy = col("doc_id"),
-          nTokens = col("n_tokens"), binCapacity = 256).cache()
-      val nDocs = packed.count()
-      val encTotal = enc.agg(sum(col("n_tokens"))).head().getLong(0)
-      val packedTotal = packed.agg(sum(col("n_tokens"))).head().getLong(0)
-      // non-overflow bins never exceed capacity
-      val bins = packed.groupBy(col("shard"), col("bin_id"))
-        .agg(sum(col("n_tokens")).as("load"),
-          max(col("overflow")).as("ovf"))
-      val capViol = bins.filter(col("ovf") === 0 && col("load") > 256)
-        .count()
-      // bin ids are contiguous 0..max per shard
-      val gaps = packed.groupBy(col("shard"))
-        .agg((max(col("bin_id")) + 1 -
-          countDistinct(col("bin_id"))).as("gap"))
-        .agg(sum(col("gap"))).head().getLong(0)
-      // stream order: bin ids never decrease along doc order
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("shard")).orderBy(col("doc_id"))
-      val orderViol = packed
-        .withColumn("prev", lag(col("bin_id"), 1).over(w))
-        .filter(col("prev") > col("bin_id")).count()
-      // the overflow flag is exactly (n_tokens > capacity)
-      val flagViol = packed
-        .filter((col("overflow") === 1L) =!= (col("n_tokens") > 256L))
-        .count()
-      // release the two cache blocks — a verify session runs 300+
-      // specs in one SparkSession and these have served their six
-      // actions
-      enc.unpersist()
-      packed.unpersist()
-      Seq((nDocs, if (packedTotal == encTotal) 1L else 0L, capViol,
-        gaps, orderViol, flagViol))
+      // both caches serve the six actions below and are released in
+      // `finally` — a verify session runs 300+ queries in one
+      // SparkSession
+      val row =
+        try {
+          val packed = graft.operators.Packing.packBinsNextFit(enc,
+              shard = pmod(col("doc_id"), lit(8L)),
+              orderBy = col("doc_id"),
+              nTokens = col("n_tokens"), binCapacity = 256).cache()
+          try {
+            val nDocs = packed.count()
+            val encTotal = enc.agg(sum(col("n_tokens"))).head().getLong(0)
+            val packedTotal = packed.agg(sum(col("n_tokens"))).head().getLong(0)
+            // non-overflow bins never exceed capacity
+            val bins = packed.groupBy(col("shard"), col("bin_id"))
+              .agg(sum(col("n_tokens")).as("load"),
+                max(col("overflow")).as("ovf"))
+            val capViol = bins.filter(col("ovf") === 0 && col("load") > 256)
+              .count()
+            // bin ids are contiguous 0..max per shard
+            val gaps = packed.groupBy(col("shard"))
+              .agg((max(col("bin_id")) + 1 -
+                countDistinct(col("bin_id"))).as("gap"))
+              .agg(sum(col("gap"))).head().getLong(0)
+            // stream order: bin ids never decrease along doc order
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("shard")).orderBy(col("doc_id"))
+            val orderViol = packed
+              .withColumn("prev", lag(col("bin_id"), 1).over(w))
+              .filter(col("prev") > col("bin_id")).count()
+            // the overflow flag is exactly (n_tokens > capacity)
+            val flagViol = packed
+              .filter((col("overflow") === 1L) =!= (col("n_tokens") > 256L))
+              .count()
+            (nDocs, if (packedTotal == encTotal) 1L else 0L, capViol,
+              gaps, orderViol, flagViol)
+          } finally packed.unpersist()
+        } finally enc.unpersist()
+      Seq(row)
         .toDF("n_docs", "token_total_match", "cap_violations",
           "bin_gaps", "order_violations", "flag_violations")
     }),

@@ -47,9 +47,16 @@ object Verify {
       only: Set[String] = Set.empty): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // report-only cache accounting: which queries left CacheManager
+    // entries behind, and how many persistent RDDs the sweep left
+    def entries = org.apache.spark.sql.graft.shims.cachedEntryCount(spark)
+    def rdds = spark.sparkContext.getPersistentRDDs.size
+    val (entries0, rdds0) = (entries, rdds)
+    val leftBy = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+        val before = entries
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
@@ -57,7 +64,13 @@ object Verify {
           System.err.println(s"[verify] $name failed: $msg")
           errors(name) = msg
         }
+        if (entries > before) leftBy(name) = entries - before
       }
+    println(s"[verify] the sweep left ${entries - entries0} CacheManager " +
+      s"entries and ${rdds - rdds0} persistent RDDs" +
+      (if (leftBy.isEmpty) ""
+       else leftBy.map { case (n, c) => s"$n: $c" }
+         .mkString("; entries by query: ", ", ", "")))
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
       jsonObj(errors))
     errors.toMap

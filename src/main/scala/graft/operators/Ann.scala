@@ -783,7 +783,11 @@ object IvfIndex {
     * rows semi-join the allowed-id set BEFORE scoring and top-k, so
     * every query fills k whenever its probed clusters hold ≥ k allowed
     * vectors. Pass `allowedRows` when the set size is known to let the
-    * byte gate hint the broadcast. */
+    * byte gate hint the broadcast.
+    *
+    * EAGER: the probe job runs inside this call and the result is a
+    * `localCheckpoint()`; the query cache is unpersisted before it
+    * returns. */
   def searchBatch(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int = 4, qidCol: String = "qid",
       qvecCol: String = "qvalues", allowed: Option[DataFrame] = None,
@@ -792,54 +796,57 @@ object IvfIndex {
     val meta = readMeta(path)
     val metric = Metric.parse(meta.metric)
     val cents = loadCentroids(spark, path, meta)
-    // cache once: the batch is read by the sizing count AND the
-    // assignment kernel — caching keeps them consistent for a
-    // nondeterministic source and makes the sizing pass cheap
+    // the batch is read by the assignment kernel (whose collected
+    // touched-cluster set picks the scanned dirs), the sizing count
+    // AND the final join: cached, all three see the same rows even
+    // for a nondeterministic source. The cache lives only inside
+    // this call — the probe runs its one job here and returns a
+    // localCheckpoint, so nothing stays in the CacheManager
     val q = queries.persist()
-    val (assigned, touched) =
-      assignQueries(q, qidCol, qvecCol, cents, nProbe, metric)
-    val rows0 = readClusters(spark, s"$path/assignments", touched) match {
-      case Some(r) => r.select(col("id"), col("values"), col("cluster"))
-      case None =>
-        return CacheScope.releaseWith(spark.emptyDataFrame
-          .select(lit(0L).as("qid"), lit(0L).as("id"),
-            lit(0.0).as("distance"), lit(0).as("rank")).limit(0), q)
-    }
-    // pre-filter: thin CANDIDATES before scoring (see scaladoc)
-    val rows = allowed match {
-      case Some(a) =>
-        rows0.join(BroadcastGate.allowedSide(a, allowedRows,
-          "searchBatch"), Seq("id"), "left_semi")
-      case None => rows0
-    }
-    // broadcast only query batches that plausibly fit executor memory
-    // (the assignment side is |queries|·nProbe full vectors); above
-    // the byte budget, leave the strategy to the planner — an
-    // unconditional hint at 1M×nProbe wide queries is a multi-GB
-    // broadcast OOM in exactly the large-batch regime this method
-    // exists for. Counting the INPUT queries (not `assigned`) avoids
-    // an extra run of the assignment kernel just to size the hint;
-    // dim comes from the index centroids, not the data.
-    val p = math.min(nProbe, cents.length)
-    val dim = if (cents.isEmpty) 0 else cents(0)._2.length
-    val qSide = BroadcastGate.gated(assigned, q.count() * p, dim)
-    val scored0 = rows.join(qSide, Seq("cluster"))
-      .select(col("qid"), col("id"),
-        metric.dist(col("values"), col("qv")).as("distance"))
-    // nAssign=1 ⇒ each row lives in exactly one cluster ⇒ a (qid, id)
-    // pair can only arise once even under multi-cluster probing — the
-    // dedup shuffle is needed solely for multiprobe indexes
-    val scored = if (meta.nAssign > 1)
-      scored0.dropDuplicates("qid", "id") else scored0
-    // the query cache is GC-scoped to the result ([[CacheScope]]) —
-    // no CacheManager entry outlives the caller's use of this frame
-    CacheScope.releaseWith(scored
-      .groupBy(col("qid"))
-      .agg(topk(col("distance"), col("id"), k).as("topk"))
-      .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "r")))
-      .select(col("qid"), col("r.id").as("id"),
-        col("r.distance").as("distance"), (col("pos") + 1).as("rank")),
-      q)
+    try {
+      val (assigned, touched) =
+        assignQueries(q, qidCol, qvecCol, cents, nProbe, metric)
+      val rows0 = readClusters(spark, s"$path/assignments", touched) match {
+        case Some(r) => r.select(col("id"), col("values"), col("cluster"))
+        case None =>
+          return spark.emptyDataFrame
+            .select(lit(0L).as("qid"), lit(0L).as("id"),
+              lit(0.0).as("distance"), lit(0).as("rank")).limit(0)
+      }
+      // pre-filter: thin CANDIDATES before scoring (see scaladoc)
+      val rows = allowed match {
+        case Some(a) =>
+          rows0.join(BroadcastGate.allowedSide(a, allowedRows,
+            "searchBatch"), Seq("id"), "left_semi")
+        case None => rows0
+      }
+      // broadcast only query batches that plausibly fit executor memory
+      // (the assignment side is |queries|·nProbe full vectors); above
+      // the byte budget, leave the strategy to the planner — an
+      // unconditional hint at 1M×nProbe wide queries is a multi-GB
+      // broadcast OOM in exactly the large-batch regime this method
+      // exists for. Counting the INPUT queries (not `assigned`) avoids
+      // an extra run of the assignment kernel just to size the hint;
+      // dim comes from the index centroids, not the data.
+      val p = math.min(nProbe, cents.length)
+      val dim = if (cents.isEmpty) 0 else cents(0)._2.length
+      val qSide = BroadcastGate.gated(assigned, q.count() * p, dim)
+      val scored0 = rows.join(qSide, Seq("cluster"))
+        .select(col("qid"), col("id"),
+          metric.dist(col("values"), col("qv")).as("distance"))
+      // nAssign=1 ⇒ each row lives in exactly one cluster ⇒ a (qid, id)
+      // pair can only arise once even under multi-cluster probing — the
+      // dedup shuffle is needed solely for multiprobe indexes
+      val scored = if (meta.nAssign > 1)
+        scored0.dropDuplicates("qid", "id") else scored0
+      scored
+        .groupBy(col("qid"))
+        .agg(topk(col("distance"), col("id"), k).as("topk"))
+        .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "r")))
+        .select(col("qid"), col("r.id").as("id"),
+          col("r.distance").as("distance"), (col("pos") + 1).as("rank"))
+        .localCheckpoint()
+    } finally q.unpersist()
   }
 
   /** Batch probe selection: every query row → its `nProbe` nearest

@@ -37,14 +37,16 @@ import org.apache.spark.sql.functions._
   * stage is quadratic and nothing collects driver-side. The
   * streaming twin is [[graft.streaming.Ingest.curateIngestStream]].
   *
-  * Cache lifecycle: the two internal persists (MEMORY_AND_DISK, so
-  * oversized sets spill rather than evict the executors) exist
-  * because the composition itself scans them repeatedly; they cannot
-  * be unpersisted here without recomputing the pipeline under the
-  * caller's eventual action. They are released by Spark's
-  * ContextCleaner once the returned plan becomes unreachable — i.e.
-  * per-statement for the `vfs_curate` TVF — so repeated runs do not
-  * accumulate cache beyond the plans a caller still holds.
+  * Cache lifecycle: the two stage persists live only inside this
+  * call. The composition runs its one job here and returns
+  * `localCheckpoint()` of the packed rows; both caches are
+  * unpersisted in the `finally` of the same scope, so nothing is
+  * left in the CacheManager when the operator returns, on success or
+  * failure. A later call on the same input recomputes from scratch
+  * instead of finding an earlier call's cache. The result's blocks
+  * are freed by the ContextCleaner once the caller drops the frame.
+  * The operator is therefore EAGER: the `vfs_curate` TVF runs it
+  * when the statement is analyzed.
   *
   * Reference anchor: none (the reference is a vector store,
   * vfs/src/vfs) — this is the brief's training-data-pipeline surface
@@ -70,28 +72,28 @@ object Curation {
       TextAnalysis.qualityMilli(col(textCol)) >= minQualityMilli &&
       TextAnalysis.tokenCount(col(textCol))
         .between(minTokens, maxTokens)).persist()
-    val drops = Dedup.simHashPairsPortable(q, maxHamming = 3,
-        textCol = textCol, idCol = idCol)
-      .select(col("b").as(idCol)).distinct()
-    val surv = q.join(drops, Seq(idCol), "left_anti").persist()
-    val scored = TextAnalysis.scoreLangId(surv, model, textCol, idCol,
-      carry = Seq("__nt" -> TextAnalysis.tokenCount(col(textCol))))
-    val code: Column = langCodes.foldLeft(lit(defaultCode)) {
-      case (acc, (lang, c)) =>
-        when(col("lang_pred") === lang, c).otherwise(acc)
-    }
-    val coded = scored.select(col(idCol), code.as("lang_code"),
-      col("__nt"))
-    // both stage caches are GC-scoped to the result ([[CacheScope]]):
-    // the composition's consumers share them while the frame is
-    // reachable, and nothing lingers in the CacheManager afterwards
-    CacheScope.releaseWith(CacheScope.releaseWith(
-      Packing.packBinsNextFit(coded, col("lang_code"), col(idCol),
-          col("__nt"), binCapacity, idCol)
-        .select(col(idCol), col("shard").as("lang_code"),
-          col("n_tokens"), col("bin_id"), col("bin_off"),
-          col("overflow")),
-      q), surv)
+    try {
+      val drops = Dedup.simHashPairsPortable(q, maxHamming = 3,
+          textCol = textCol, idCol = idCol)
+        .select(col("b").as(idCol)).distinct()
+      val surv = q.join(drops, Seq(idCol), "left_anti").persist()
+      try {
+        val scored = TextAnalysis.scoreLangId(surv, model, textCol, idCol,
+          carry = Seq("__nt" -> TextAnalysis.tokenCount(col(textCol))))
+        val code: Column = langCodes.foldLeft(lit(defaultCode)) {
+          case (acc, (lang, c)) =>
+            when(col("lang_pred") === lang, c).otherwise(acc)
+        }
+        val coded = scored.select(col(idCol), code.as("lang_code"),
+          col("__nt"))
+        Packing.packBinsNextFit(coded, col("lang_code"), col(idCol),
+            col("__nt"), binCapacity, idCol)
+          .select(col(idCol), col("shard").as("lang_code"),
+            col("n_tokens"), col("bin_id"), col("bin_off"),
+            col("overflow"))
+          .localCheckpoint()
+      } finally surv.unpersist()
+    } finally q.unpersist()
   }
 
   /** The pipeline's AUDIT TRAIL — per-language-shard totals over the

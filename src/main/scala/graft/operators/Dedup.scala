@@ -861,41 +861,45 @@ object Dedup {
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
       .cache()
-    var labels = und.select(col("src").as("node"))
-      .distinct()
-      .withColumn("label", col("node"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = und
-        .join(labels, und("dst") === labels("node"))
-        .groupBy(col("src"))
-        .agg(min(col("label")).as("nlabel"))
-      // localCheckpoint BREAKS LINEAGE each round: labels feeds the
-      // next plan twice (neighbor join + carry-forward join), so
-      // without truncation the logical plan doubles per iteration —
-      // 2^rounds plan nodes, analyzer OOM near round 10. With it every
-      // round plans against a materialized leaf of constant size.
-      val next = labels.join(neighborMin,
-          labels("node") === neighborMin("src"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"))
-        .localCheckpoint(true)
-      val changed = next.alias("n")
-        .join(labels.alias("o"), col("n.node") === col("o.node"))
-        .filter(col("n.label") =!= col("o.label"))
-        .count()
-      labels = next
-      converged = changed == 0L
-      i += 1
-    }
-    und.unpersist(blocking = false)
-    if (!converged)
-      throw new IllegalStateException(
-        s"[GRAFT] connectedComponents did not converge in $maxIter rounds" +
-          " — a component with diameter > maxIter exists; raise maxIter")
-    labels.select(col("node"), col("label").as("component"))
+    // the edge cache lives only inside the label loop: released in
+    // `finally`, so a failure mid-loop leaves no CacheManager entry
+    // (the returned labels are a checkpoint and never read it)
+    try {
+      var labels = und.select(col("src").as("node"))
+        .distinct()
+        .withColumn("label", col("node"))
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        val neighborMin = und
+          .join(labels, und("dst") === labels("node"))
+          .groupBy(col("src"))
+          .agg(min(col("label")).as("nlabel"))
+        // localCheckpoint BREAKS LINEAGE each round: labels feeds the
+        // next plan twice (neighbor join + carry-forward join), so
+        // without truncation the logical plan doubles per iteration —
+        // 2^rounds plan nodes, analyzer OOM near round 10. With it every
+        // round plans against a materialized leaf of constant size.
+        val next = labels.join(neighborMin,
+            labels("node") === neighborMin("src"), "left")
+          .select(col("node"),
+            least(col("label"), coalesce(col("nlabel"), col("label")))
+              .as("label"))
+          .localCheckpoint(true)
+        val changed = next.alias("n")
+          .join(labels.alias("o"), col("n.node") === col("o.node"))
+          .filter(col("n.label") =!= col("o.label"))
+          .count()
+        labels = next
+        converged = changed == 0L
+        i += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"[GRAFT] connectedComponents did not converge in $maxIter rounds" +
+            " — a component with diameter > maxIter exists; raise maxIter")
+      labels.select(col("node"), col("label").as("component"))
+    } finally und.unpersist(blocking = false)
   }
 
   /** Leakage-safe train/val/test split: every doc gets a split label,
@@ -1439,8 +1443,8 @@ object Dedup {
     // persist before the sizing action: the gate's measuring agg and
     // the collect would otherwise each execute the caller's full
     // centroid derivation (at the documented k ≈ √N regime that is a
-    // whole clustering lineage, twice) — the Knn.exactBatch gate
-    // convention
+    // whole clustering lineage, twice); released in the finally
+    // below
     val centsSlim = centroids
       .select(col("cid").cast("long"), col("cv")).persist()
     val cents: Array[(Long, Seq[Float])] =

@@ -176,37 +176,35 @@ object Knn {
     * multi-GB broadcast OOM in exactly the regime a batch API exists
     * for — above the budget the join strategy is left to the planner
     * (the scoring is an inherent |base|×|queries| product either way;
-    * only the OOM is avoidable). The query batch is cached before the
-    * one sizing aggregate (rows + max dim), so the gate and the join
-    * see the same rows even for a nondeterministic source and the
-    * sizing pass is not a second evaluation of an expensive upstream
-    * plan. Output: (qid, id, distance, rank). */
+    * only the OOM is avoidable). The query batch is cached for the
+    * one sizing aggregate (rows + max dim) and the join, so an
+    * expensive upstream (a `limit`, a join) runs once and the gate
+    * and the join see the same rows. EAGER, like
+    * [[IvfIndex.searchBatch]]: the top-k job runs inside this call
+    * and the result is a `localCheckpoint()`; the query cache is
+    * unpersisted before it returns. Output: (qid, id, distance,
+    * rank). */
   def exactBatch(base: DataFrame, queries: DataFrame, k: Int,
       metric: Metric = Metric.Euclidean, vecCol: String = "values",
       idCol: String = "id", qidCol: String = "qid",
-      qvecCol: String = "qvalues", persistQueries: Boolean = true): DataFrame = {
+      qvecCol: String = "qvalues"): DataFrame = {
     import TopKByDistance.topk
-    // the query persist is GC-SCOPED ([[CacheScope]]): released when
-    // the caller drops the result frame, so long-lived sessions and
-    // streaming loops never accumulate CacheManager entries.
-    // persistQueries = false remains for callers whose queries are
-    // cheap to evaluate twice (the sizing pass + the join) and want
-    // no cache at all.
-    val q = if (persistQueries) queries.persist() else queries
-    val sized = q.agg(count(lit(1)).as("n"),
-      coalesce(max(size(col(qvecCol))), lit(0)).as("dim")).head()
-    val qSide = BroadcastGate.gated(q, sized.getLong(0), sized.getInt(1))
-    val scored = base.join(qSide)
-      .select(col(qidCol),
-        col(idCol),
-        metric.dist(col(vecCol), col(qvecCol)).as("distance"))
-    val result = scored
-      .groupBy(col(qidCol))
-      .agg(topk(col("distance"), col(idCol), k).as("topk"))
-      .select(col(qidCol), posexplode(col("topk")).as(Seq("pos", "r")))
-      .select(col(qidCol), col("r.id").as(idCol),
-        col("r.distance").as("distance"), (col("pos") + 1).as("rank"))
-    if (persistQueries) CacheScope.releaseWith(result, q) else result
+    val q = queries.persist()
+    try {
+      val sized = q.agg(count(lit(1)).as("n"),
+        coalesce(max(size(col(qvecCol))), lit(0)).as("dim")).head()
+      val qSide = BroadcastGate.gated(q, sized.getLong(0), sized.getInt(1))
+      base.join(qSide)
+        .select(col(qidCol),
+          col(idCol),
+          metric.dist(col(vecCol), col(qvecCol)).as("distance"))
+        .groupBy(col(qidCol))
+        .agg(topk(col("distance"), col(idCol), k).as("topk"))
+        .select(col(qidCol), posexplode(col("topk")).as(Seq("pos", "r")))
+        .select(col(qidCol), col("r.id").as(idCol),
+          col("r.distance").as("distance"), (col("pos") + 1).as("rank"))
+        .localCheckpoint()
+    } finally q.unpersist()
   }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) of result lists —

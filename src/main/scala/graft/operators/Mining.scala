@@ -170,18 +170,13 @@ object Mining {
     // STREAMING-SAFE: this method runs once per micro-batch inside
     // marginMineStream's foreachBatch, where a leaked DataFrame-level
     // persist would register one CacheManager plan entry per batch
-    // FOREVER. mineCore's candidate persist is GC-scoped to the
-    // result ([[CacheScope]]) AND the foreachBatch body drops it
-    // deterministically after the sink write (releaseNow), so
-    // nothing outlives the batch; the backward exactBatch skips its
-    // query persist for the same reason (candTgt derives from the
-    // cached candidates — cheap to evaluate twice while cached).
+    // FOREVER. mineCore unpersists its candidate cache before it
+    // returns, so nothing outlives the call.
     mineCore(
       rescore(IvfIndex.searchBatch(spark, tgtPath, srcQ, k, nProbe),
         tgtBase, srcQ),
       tgtBase,
-      q => simMicro(Knn.exactBatch(srcBase, q, k, Metric.Cosine,
-        persistQueries = false)),
+      q => simMicro(Knn.exactBatch(srcBase, q, k, Metric.Cosine)),
       finish = bestPairs(_, minMarginMilli))
   }
 
@@ -193,40 +188,37 @@ object Mining {
     * that surfaced as forward candidates — at scale that is the slim
     * candidate set, never the whole target side.
     *
-    * Cache lifetime — GC-SCOPED, leak-free ([[CacheScope]]): the
-    * candidate persist is released exactly when the caller drops the
-    * result frame. A bare persist would accumulate one CacheManager
-    * entry per call forever in a long-lived session (and one per
-    * micro-batch on the streaming path); the alternatives that avoid
-    * CacheManager outright all measured 1.5-1.8× slower
-    * whole-operator at sf0.1 (eager localCheckpoint adds a job on
-    * the hot path; RDD-level caches lose InMemoryRelation's columnar
-    * scan). `finish` is each entry point's final projection
-    * (bestPairs for the pair APIs, identity for the all-candidates
-    * API). */
-  // fwd0 is BY-NAME: the forward search is constructed inside the
-  // scoped block, so the query cache its exactBatch registers lands
-  // on this operator's result too (one releaseNow drains everything)
-  private def mineCore(fwd0: => DataFrame, tgtBase: DataFrame,
+    * Cache lifetime: the candidate persist lives only inside this
+    * call. The pipeline runs its one job here and returns
+    * `localCheckpoint()` of the finished rows; the candidates are
+    * unpersisted in the `finally` of the same scope, so nothing is
+    * left in the CacheManager when the operator returns, on success
+    * or failure. The operator is therefore EAGER (the mining TVFs run
+    * it when the statement is analyzed). The candidate searches are
+    * eager too ([[Knn.exactBatch]] and [[IvfIndex.searchBatch]] return
+    * their checkpointed top-k); the candidates derived from them stay
+    * a plain persist for the three consumers above. `finish` is each
+    * entry point's final projection (bestPairs for the pair APIs,
+    * identity for the all-candidates API). */
+  private def mineCore(fwd0: DataFrame, tgtBase: DataFrame,
       bwdScore: DataFrame => DataFrame,
-      finish: DataFrame => DataFrame = identity): DataFrame =
-    CacheScope.scoped {
-    // defer the persist into the scope IMMEDIATELY: a failure before
-    // the final releaseWith must release it, not leak it
-    val fwd = CacheScope.defer(fwd0.persist())
-    val fwdSum = fwd.groupBy(col("qid"))
-      .agg(sum(col("sim_micro")).as("fwd_sum"),
-        count(lit(1)).as("fwd_n"))
-    val candTgt = fwd.select(col("id")).distinct()
-      .join(tgtBase, "id")
-      .select(col("id").as("qid"), col("values").as("qvalues"))
-    val bwdSum = bwdScore(candTgt)
-      .groupBy(col("qid"))
-      .agg(sum(col("sim_micro")).as("bwd_sum"),
-        count(lit(1)).as("bwd_n"))
-      .select(col("qid").as("bwd_id"), col("bwd_sum"), col("bwd_n"))
-    CacheScope.releaseWith(finish(withMargin(fwd, fwdSum, bwdSum)), fwd)
-    }
+      finish: DataFrame => DataFrame = identity): DataFrame = {
+    val fwd = fwd0.persist()
+    try {
+      val fwdSum = fwd.groupBy(col("qid"))
+        .agg(sum(col("sim_micro")).as("fwd_sum"),
+          count(lit(1)).as("fwd_n"))
+      val candTgt = fwd.select(col("id")).distinct()
+        .join(tgtBase, "id")
+        .select(col("id").as("qid"), col("values").as("qvalues"))
+      val bwdSum = bwdScore(candTgt)
+        .groupBy(col("qid"))
+        .agg(sum(col("sim_micro")).as("bwd_sum"),
+          count(lit(1)).as("bwd_n"))
+        .select(col("qid").as("bwd_id"), col("bwd_sum"), col("bwd_n"))
+      finish(withMargin(fwd, fwdSum, bwdSum)).localCheckpoint()
+    } finally fwd.unpersist()
+  }
 
   /** The margin arithmetic is cosine — probing an artifact built
     * with another metric would silently mine wrong neighborhoods. */

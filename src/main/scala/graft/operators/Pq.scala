@@ -426,12 +426,15 @@ object IvfPq {
       }
       .toDF("id", "code", "cluster")
       .persist()
-    val n = newCodes.count()
-    if (n > 0)
-      newCodes.repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster")
-        .parquet(s"$path/codes")
-    newCodes.unpersist()
+    val n =
+      try {
+        val c = newCodes.count()
+        if (c > 0)
+          newCodes.repartition(col("cluster"))
+            .write.mode("append").partitionBy("cluster")
+            .parquet(s"$path/codes")
+        c
+      } finally newCodes.unpersist()
     // ---- healed: re-stamp to the generation the repairs read ----
     Artifact.writeMeta(path, metaFields(meta.copy(
       nAssign = parentMeta.nAssign, gen = parentMeta.generation)): _*)
@@ -623,7 +626,10 @@ object IvfPq {
     *
     * `allowed` pre-filters the scanned code rows before ADC scoring
     * (semantics of [[IvfIndex.searchBatch]]'s filter); the refine
-    * stage re-ranks only the resulting allowed candidates. */
+    * stage re-ranks only the resulting allowed candidates.
+    *
+    * EAGER, as [[IvfIndex.searchBatch]]: the probe job runs inside
+    * this call and the result is a `localCheckpoint()`. */
   def searchBatch(spark: SparkSession, ivfPath: String, path: String,
       queries: DataFrame, k: Int, nProbe: Int = 16, overfetch: Int = 8,
       qidCol: String = "qid", qvecCol: String = "qvalues",
@@ -640,99 +646,102 @@ object IvfPq {
     val emptyOut = () => spark.range(0)
       .select(col("id").as("qid"), col("id"),
         lit(0.0).as("distance"), lit(0).as("rank"))
-    // cache once: the batch is read by the sizing count AND the
-    // assignment kernel — caching keeps them consistent for a
-    // nondeterministic source and makes the sizing pass cheap
+    // cached for the IvfIndex.searchBatch reason: the assignment
+    // kernel's collected touched-cluster set, the sizing count and
+    // the joins all see the same rows. The cache lives only inside
+    // this call, which runs the one probe job and returns a
+    // localCheckpoint
     val q = queries.persist()
-    val (assigned, touched) = IvfIndex.assignQueries(q, qidCol, qvecCol,
-      centArr, nProbe, metric)
-    val codeRows0 = IvfIndex.readClusters(spark, s"$path/codes", touched)
-      .getOrElse(return CacheScope.releaseWith(emptyOut(), q))
-      .select(col("id"), col("code"), col("cluster"))
-    // one count sizes all three broadcast gates (the searchBatch
-    // stance: hint only what plausibly fits executor memory, leave the
-    // rest to the planner); bytes, not rows — dim from the index meta
-    // ([[BroadcastGate]]), so a wide-vector batch can't slip a
-    // multi-GB broadcast past a row-count threshold
-    val qCount = q.count()
-    val qSide = BroadcastGate.gated(assigned,
-      qCount * math.min(nProbe, centArr.length), meta.dim)
-    val books = PqIndex.loadCodebooks(spark, path, meta.m, meta.ks)
-    val bcBooks = spark.sparkContext.broadcast(books)
-    val bcCents = spark.sparkContext.broadcast(centArr.toMap)
-    // pre-filter: thin code rows before the query join + ADC kernel
-    val codeRows = allowed match {
-      case Some(a) =>
-        codeRows0.join(BroadcastGate.allowedSide(a, allowedRows,
-          "searchBatch"), Seq("id"), "left_semi")
-      case None => codeRows0
-    }
-    val scored0 = codeRows.join(qSide, Seq("cluster"))
-      .select(col("qid"), col("qv"), col("id"), col("code"),
-        col("cluster"))
-      .as[(Long, Array[Float], Long, Array[Byte], Int)]
-      .mapPartitions { it =>
-        val bks = bcBooks.value; val cm = bcCents.value
-        it.map { case (qid, qv, id, code, c) =>
-          // bit-identical to the adcTable(sub(q, centroid)) path: the
-          // residual lane is float-subtracted (like sub()), each
-          // subspace accumulates into its OWN double (like a table
-          // entry), and the per-subspace sums are then added in j
-          // order (like the table scan) — same rounding sequence
-          val cent = cm(c)
-          var d = 0.0; var j = 0
-          while (j < bks.length) {
-            val bc = bks(j)(code(j) & 0xff)
-            val off = j * dsub
-            var s = 0.0
-            var i = 0
-            while (i < dsub) {
-              val r = qv(off + i) - cent(off + i)
-              val diff = r.toDouble - bc(i)
-              s += diff * diff
-              i += 1
-            }
-            d += s
-            j += 1
-          }
-          (qid, id, d)
-        }
+    try {
+      val (assigned, touched) = IvfIndex.assignQueries(q, qidCol, qvecCol,
+        centArr, nProbe, metric)
+      val codeRows0 = IvfIndex.readClusters(spark, s"$path/codes", touched)
+        .getOrElse(return emptyOut())
+        .select(col("id"), col("code"), col("cluster"))
+      // one count sizes all three broadcast gates (the searchBatch
+      // stance: hint only what plausibly fits executor memory, leave the
+      // rest to the planner); bytes, not rows — dim from the index meta
+      // ([[BroadcastGate]]), so a wide-vector batch can't slip a
+      // multi-GB broadcast past a row-count threshold
+      val qCount = q.count()
+      val qSide = BroadcastGate.gated(assigned,
+        qCount * math.min(nProbe, centArr.length), meta.dim)
+      val books = PqIndex.loadCodebooks(spark, path, meta.m, meta.ks)
+      val bcBooks = spark.sparkContext.broadcast(books)
+      val bcCents = spark.sparkContext.broadcast(centArr.toMap)
+      // pre-filter: thin code rows before the query join + ADC kernel
+      val codeRows = allowed match {
+        case Some(a) =>
+          codeRows0.join(BroadcastGate.allowedSide(a, allowedRows,
+            "searchBatch"), Seq("id"), "left_semi")
+        case None => codeRows0
       }
-      .toDF("qid", "id", "adist")
-    // multiprobe parent: one id can score in several probed clusters
-    // of the same query — identical codes, but keep the min like
-    // [[adcTopK]] before the top-k
-    val scored = if (meta.nAssign > 1)
-      scored0.groupBy(col("qid"), col("id"))
-        .agg(min(col("adist")).as("adist"))
-    else scored0
-    val cands = scored
-      .groupBy(col("qid"))
-      .agg(topk(col("adist"), col("id"), k * overfetch).as("topk"))
-      .select(col("qid"), explode(col("topk.id")).as("id"))
-    // ---- refine: raw vectors for candidates only, from the touched
-    // parent partitions (candidates are |Q|·k·overfetch rows — the
-    // broadcast side of the id join by construction) ----
-    val raw0 = IvfIndex.readClusters(spark, s"$ivfPath/assignments", touched)
-      .getOrElse(return CacheScope.releaseWith(emptyOut(), q))
-      .select(col("id"), col("values"))
-    val raw = if (meta.nAssign > 1) raw0.dropDuplicates("id") else raw0
-    val qVecs = assigned.select(col("qid"), col("qv"))
-      .dropDuplicates("qid")
-    val qv2 = BroadcastGate.gated(qVecs, qCount, meta.dim)
-    // candidate rows are (qid, id) pairs — dim 0, overhead-sized
-    val candSide = BroadcastGate.gated(cands,
-      qCount * k * overfetch, 0)
-    // the query cache is GC-scoped to the result ([[CacheScope]])
-    CacheScope.releaseWith(raw.join(candSide, Seq("id"))
-      .join(qv2, Seq("qid"))
-      .select(col("qid"), col("id"),
-        metric.dist(col("values"), col("qv")).as("distance"))
-      .groupBy(col("qid"))
-      .agg(topk(col("distance"), col("id"), k).as("topk"))
-      .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "r")))
-      .select(col("qid"), col("r.id").as("id"),
-        col("r.distance").as("distance"), (col("pos") + 1).as("rank")),
-      q)
+      val scored0 = codeRows.join(qSide, Seq("cluster"))
+        .select(col("qid"), col("qv"), col("id"), col("code"),
+          col("cluster"))
+        .as[(Long, Array[Float], Long, Array[Byte], Int)]
+        .mapPartitions { it =>
+          val bks = bcBooks.value; val cm = bcCents.value
+          it.map { case (qid, qv, id, code, c) =>
+            // bit-identical to the adcTable(sub(q, centroid)) path: the
+            // residual lane is float-subtracted (like sub()), each
+            // subspace accumulates into its OWN double (like a table
+            // entry), and the per-subspace sums are then added in j
+            // order (like the table scan) — same rounding sequence
+            val cent = cm(c)
+            var d = 0.0; var j = 0
+            while (j < bks.length) {
+              val bc = bks(j)(code(j) & 0xff)
+              val off = j * dsub
+              var s = 0.0
+              var i = 0
+              while (i < dsub) {
+                val r = qv(off + i) - cent(off + i)
+                val diff = r.toDouble - bc(i)
+                s += diff * diff
+                i += 1
+              }
+              d += s
+              j += 1
+            }
+            (qid, id, d)
+          }
+        }
+        .toDF("qid", "id", "adist")
+      // multiprobe parent: one id can score in several probed clusters
+      // of the same query — identical codes, but keep the min like
+      // [[adcTopK]] before the top-k
+      val scored = if (meta.nAssign > 1)
+        scored0.groupBy(col("qid"), col("id"))
+          .agg(min(col("adist")).as("adist"))
+      else scored0
+      val cands = scored
+        .groupBy(col("qid"))
+        .agg(topk(col("adist"), col("id"), k * overfetch).as("topk"))
+        .select(col("qid"), explode(col("topk.id")).as("id"))
+      // ---- refine: raw vectors for candidates only, from the touched
+      // parent partitions (candidates are |Q|·k·overfetch rows — the
+      // broadcast side of the id join by construction) ----
+      val raw0 = IvfIndex.readClusters(spark, s"$ivfPath/assignments", touched)
+        .getOrElse(return emptyOut())
+        .select(col("id"), col("values"))
+      val raw = if (meta.nAssign > 1) raw0.dropDuplicates("id") else raw0
+      val qVecs = assigned.select(col("qid"), col("qv"))
+        .dropDuplicates("qid")
+      val qv2 = BroadcastGate.gated(qVecs, qCount, meta.dim)
+      // candidate rows are (qid, id) pairs — dim 0, overhead-sized
+      val candSide = BroadcastGate.gated(cands,
+        qCount * k * overfetch, 0)
+      raw.join(candSide, Seq("id"))
+        .join(qv2, Seq("qid"))
+        .select(col("qid"), col("id"),
+          metric.dist(col("values"), col("qv")).as("distance"))
+        .groupBy(col("qid"))
+        .agg(topk(col("distance"), col("id"), k).as("topk"))
+        .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "r")))
+        .select(col("qid"), col("r.id").as("id"),
+          col("r.distance").as("distance"), (col("pos") + 1).as("rank"))
+        .localCheckpoint()
+    } finally q.unpersist()
   }
 }

@@ -441,9 +441,8 @@ object Sampling {
         // once the checkpoint holds the blocks
         val rdd = slim0.rdd
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-        rdd.count()
-        rdd.unpersist(blocking = false)
+        try { rdd.checkpoint(); rdd.count() }
+        finally rdd.unpersist(blocking = false)
         spark.createDataFrame(rdd, slim0.schema)
       } else slim0.localCheckpoint()
     if (checkIds) {
@@ -748,67 +747,72 @@ object Sampling {
       .withColumn("__ctie", tiebreak)
       .sort(col("__csrc").asc, score.desc, col("__ctie").asc)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val srcPos = tagged.schema.fieldIndex("__csrc")
-    // per-partition contiguous (source, count) runs, in row order
-    val runs: Array[(Int, Seq[(String, Long)])] =
-      tagged.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        it.foreach { r =>
+    // the sorted input copy lives only until the ranked output is
+    // checkpointed: released in `finally`, on failure too
+    try {
+      val srcPos = tagged.schema.fieldIndex("__csrc")
+      // per-partition contiguous (source, count) runs, in row order
+      val runs: Array[(Int, Seq[(String, Long)])] =
+        tagged.rdd.mapPartitionsWithIndex { (pid, it) =>
+          val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+          it.foreach { r =>
+            val s = r.getString(srcPos)
+            acc.update(s, acc.getOrElse(s, 0L) + 1L)
+          }
+          Iterator.single(pid -> acc.toSeq)
+        }.collect()
+      val offsets: Map[(Int, String), Long] = {
+        val perSrc = scala.collection.mutable.HashMap.empty[String, Long]
+        val b = Map.newBuilder[(Int, String), Long]
+        runs.sortBy(_._1).foreach { case (pid, rs) =>
+          rs.foreach { case (s, c) =>
+            val off = perSrc.getOrElse(s, 0L)
+            b += ((pid, s) -> off)
+            perSrc.update(s, off + c)
+          }
+        }
+        b.result()
+      }
+      val bc = spark.sparkContext.broadcast(offsets)
+      val outSchema = tagged.schema.add("rank", LongType, nullable = false)
+      val rankedRdd = tagged.rdd.mapPartitionsWithIndex { (pid, it) =>
+        val local = scala.collection.mutable.HashMap.empty[String, Long]
+        it.map { r =>
           val s = r.getString(srcPos)
-          acc.update(s, acc.getOrElse(s, 0L) + 1L)
-        }
-        Iterator.single(pid -> acc.toSeq)
-      }.collect()
-    val offsets: Map[(Int, String), Long] = {
-      val perSrc = scala.collection.mutable.HashMap.empty[String, Long]
-      val b = Map.newBuilder[(Int, String), Long]
-      runs.sortBy(_._1).foreach { case (pid, rs) =>
-        rs.foreach { case (s, c) =>
-          val off = perSrc.getOrElse(s, 0L)
-          b += ((pid, s) -> off)
-          perSrc.update(s, off + c)
+          val i = local.getOrElse(s, 0L)
+          local.update(s, i + 1L)
+          Row.fromSeq(r.toSeq :+ (bc.value((pid, s)) + i + 1L))
         }
       }
-      b.result()
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val outSchema = tagged.schema.add("rank", LongType, nullable = false)
-    val rankedRdd = tagged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val local = scala.collection.mutable.HashMap.empty[String, Long]
-      it.map { r =>
-        val s = r.getString(srcPos)
-        val i = local.getOrElse(s, 0L)
-        local.update(s, i + 1L)
-        Row.fromSeq(r.toSeq :+ (bc.value((pid, s)) + i + 1L))
+      // pin the RANKED output (lineage truncated) and release the
+      // input-sized intermediate NOW: without this, the sorted input
+      // copy stays cached for the whole session (the result can't
+      // recompute without it, so it could never be freed later). The
+      // checkpointed blocks are freed by the ContextCleaner when the
+      // caller drops the returned DataFrame. The offsets broadcast is
+      // only unpersisted (executor copies dropped, re-broadcastable):
+      // the checkpointed RDD's closure still references it, so destroy()
+      // would poison later task serialization.
+      // reliable mode persists BEFORE checkpoint(): Spark's checkpoint
+      // writer is a SEPARATE job after the materializing action, and an
+      // unpersisted RDD would recompute every partition for it (the
+      // localCheckpoint branch gets the cache implicitly)
+      if (reliable) {
+        rankedRdd.persist(StorageLevel.MEMORY_AND_DISK)
+        try { rankedRdd.checkpoint(); rankedRdd.count() }
+        finally rankedRdd.unpersist(blocking = false)
+      } else {
+        rankedRdd.localCheckpoint()
+        rankedRdd.count() // materialize the checkpoint
       }
-    }
-    // pin the RANKED output (lineage truncated) and release the
-    // input-sized intermediate NOW: without this, the sorted input
-    // copy stays cached for the whole session (the result can't
-    // recompute without it, so it could never be freed later). The
-    // checkpointed blocks are freed by the ContextCleaner when the
-    // caller drops the returned DataFrame. The offsets broadcast is
-    // only unpersisted (executor copies dropped, re-broadcastable):
-    // the checkpointed RDD's closure still references it, so destroy()
-    // would poison later task serialization.
-    // reliable mode persists BEFORE checkpoint(): Spark's checkpoint
-    // writer is a SEPARATE job after the materializing action, and an
-    // unpersisted RDD would recompute every partition for it (the
-    // localCheckpoint branch gets the cache implicitly)
-    if (reliable) {
-      rankedRdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rankedRdd.checkpoint()
-    } else rankedRdd.localCheckpoint()
-    rankedRdd.count() // materialize the checkpoint
-    if (reliable) rankedRdd.unpersist(blocking = false)
-    tagged.unpersist(blocking = false)
-    bc.unpersist(blocking = false)
-    // order by the CARRIED columns: the rebuilt frame has fresh
-    // exprIds, so a caller-resolved `source`/`tiebreak` (e.g.
-    // df("src")) would fail analysis here — __csrc/__ctie resolve by
-    // name against this frame by construction
-    spark.createDataFrame(rankedRdd, outSchema)
-      .orderBy(col("rank").asc, col("__csrc").asc, col("__ctie").asc)
-      .drop("__csrc", "__ctie")
+      bc.unpersist(blocking = false)
+      // order by the CARRIED columns: the rebuilt frame has fresh
+      // exprIds, so a caller-resolved `source`/`tiebreak` (e.g.
+      // df("src")) would fail analysis here — __csrc/__ctie resolve by
+      // name against this frame by construction
+      spark.createDataFrame(rankedRdd, outSchema)
+        .orderBy(col("rank").asc, col("__csrc").asc, col("__ctie").asc)
+        .drop("__csrc", "__ctie")
+    } finally tagged.unpersist(blocking = false)
   }
 }

@@ -569,7 +569,7 @@ object TextAnalysis {
     import spark.implicits._
     // persist the distinct workload before the gate's count: the
     // sizing action and the collect would otherwise each run the
-    // distinct shuffle (the Knn.exactBatch gate convention)
+    // distinct shuffle (released in the finally below)
     val wlDf = queries
       .select(col(qidCol).cast("long").as("qid"), col(termCol).as("term"))
       .distinct().persist()

@@ -364,7 +364,10 @@ object SqlSurface {
     * With a `modelPath` the language scorer uses that STANDING model
     * parquet (any (gram, lang, weight_milli) frame — the production
     * form); with one argument it trains on the built-in seed fixture
-    * (the zero-setup form, like `vfs_langid`). */
+    * (the zero-setup form, like `vfs_langid`). The pipeline runs at
+    * analysis time (curateAndPack is eager and frees its stage
+    * caches before it returns); the returned plan scans its
+    * checkpointed rows. */
   private[graft] def vfsCurateBuilder(es: Seq[Expression]): LogicalPlan = {
     def fail(msg: String) = throw new IllegalArgumentException(
       s"[GRAFT] vfs_curate(docsPath[, modelPath, minQuality, " +
@@ -458,7 +461,10 @@ object SqlSurface {
     * Schwenk ratio margin over brute-force cosine top-k both ways)
     * from pure SQL text, over two stored (id, vector) tables:
     * {{{ SELECT src_id, tgt_id, margin_milli
-    *     FROM vfs_margin_pairs('/data/en', '/data/fr', 4, 1050) }}} */
+    *     FROM vfs_margin_pairs('/data/en', '/data/fr', 4, 1050) }}}
+    * The mining runs at analysis time (marginPairs is eager and
+    * frees its candidate cache before it returns); the returned plan
+    * scans its checkpointed rows. */
   private[graft] def vfsMarginPairsBuilder(es: Seq[Expression]): LogicalPlan = {
     def fail(msg: String) = throw new IllegalArgumentException(
       s"[GRAFT] vfs_margin_pairs(srcPath, tgtPath[, k, minMarginMilli, " +

@@ -1269,13 +1269,10 @@ object Ingest {
     // the backward brute-force base — an un-persisted source subtree
     // would re-read the batch per pass. It is unpersisted in finally
     // (a DataFrame-level unpersist, which also drops the CacheManager
-    // plan entry). The pipeline's INTERNAL caches are GC-scoped
-    // ([[graft.operators.CacheScope]]); after the sink write — the
-    // frame's last action — releaseNow drops the candidate cache
-    // deterministically instead of waiting for a driver GC, so a
-    // long-running stream holds at most one batch's blocks. Nothing
-    // here touches caches owned by concurrent queries sharing the
-    // SparkContext.
+    // plan entry). The pipeline's INTERNAL caches are released
+    // inside marginPairsDelta before it returns, so a long-running
+    // stream holds at most one batch's blocks. Nothing here touches
+    // caches owned by concurrent queries sharing the SparkContext.
     val batch = batch0.persist()
     try {
       if (batch.isEmpty) return
@@ -1284,13 +1281,10 @@ object Ingest {
       require(batch.groupBy(col(idCol)).count()
           .filter(col("count") > 1).isEmpty,
         s"[GRAFT] marginMineBatch: $idCol must be unique within a batch")
-      val pairs = graft.operators.Mining.marginPairsDelta(
-        batch.sparkSession, tgtPath, tgt, batch, k, nProbe,
-        minMarginMilli, idCol, vecCol)
-      try {
-        pairs.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      } finally graft.operators.CacheScope.releaseNow(pairs)
+      graft.operators.Mining.marginPairsDelta(batch.sparkSession,
+          tgtPath, tgt, batch, k, nProbe, minMarginMilli, idCol, vecCol)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     } finally batch.unpersist()
     ()
   }

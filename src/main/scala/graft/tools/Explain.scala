@@ -51,10 +51,19 @@ object Explain {
             new FileOutputStream(new File(d, s"$name.txt")), true, "UTF-8")
           try Console.withOut(ps)(body) finally ps.close()
       }
-    def show(title: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      val name = title.takeWhile(_ != '(').trim.toLowerCase
-        .replaceAll("[^a-z0-9]+", "_").stripSuffix("_")
-      emit(name, title)(df.explain("formatted"))
+    def nameOf(title: String) = title.takeWhile(_ != '(').trim.toLowerCase
+      .replaceAll("[^a-z0-9]+", "_").stripSuffix("_")
+    def show(title: String)(df: org.apache.spark.sql.DataFrame): Unit =
+      emit(nameOf(title), title)(df.explain("formatted"))
+    // the executed plans of every query `body` runs, in completion
+    // order — for the eager operators, whose returned frame is only a
+    // scan of their checkpointed result
+    def showWork(title: String)(body: => Any): Unit = {
+      val (_, _, plans) = sparkWork(spark)(body)
+      emit(nameOf(title), title) {
+        plans.foreach(p =>
+          println(p.explainString(ExplainMode.fromString("formatted"))))
+      }
     }
 
     show("exact knn (expect: scan->project->TakeOrderedAndProject, codegen)") {
@@ -66,7 +75,9 @@ object Explain {
     show("column pruning (expect: ReadSchema id only)") {
       emb.select(col("id")).filter(col("id") < 10)
     }
-    show("batch knn (expect: broadcast join + partial vfs_topk)") {
+    showWork("batch knn (expect: the sizing aggregate over the cached " +
+        "query batch, then the checkpoint job: broadcast join + " +
+        "partial vfs_topk)") {
       val queries = emb.limit(3).select(col("id").as("qid"),
         col("values").as("qvalues"))
       Knn.exactBatch(emb, queries, 5, Metric.Cosine)
@@ -191,9 +202,11 @@ object Explain {
       graft.operators.IvfPq.searchRefined(spark, pqIvf, pqDir, q, 10,
         nProbe = 2)
     }
-    show("ivf-pq BATCH search (expect: codes scan of touched cluster= " +
-        "dirs only, broadcast hash join on cluster, partial vfs_topk " +
-        "candidates, broadcast id-join refine, partial vfs_topk final)") {
+    showWork("ivf-pq BATCH search (expect: the probe-assignment and " +
+        "sizing jobs over the cached query batch, then the checkpoint " +
+        "job: codes scan of touched cluster= dirs only, broadcast hash " +
+        "join on cluster, partial vfs_topk candidates, broadcast " +
+        "id-join refine, partial vfs_topk final)") {
       val queries = emb.limit(3).select(col("id").as("qid"),
         col("values").as("qvalues"))
       graft.operators.IvfPq.searchBatch(spark, pqIvf, pqDir, queries,
@@ -216,8 +229,10 @@ object Explain {
       spark.sql(s"SELECT vec_id, distance FROM vfs_knn(" +
         s"'$dir/embeddings.parquet', 5, 'cosine', $qLit, 'embedding', 'vec_id')")
     }
-    show("batch IVF probe (expect: scan of ONLY touched cluster= dirs " +
-        "+ broadcast cluster-scoped join + partial vfs_topk)") {
+    showWork("batch IVF probe (expect: the probe-assignment and sizing " +
+        "jobs over the cached query batch, then the checkpoint job: " +
+        "scan of ONLY touched cluster= dirs + broadcast cluster-scoped " +
+        "join + partial vfs_topk)") {
       val queries = emb.limit(8).select(col("id").as("qid"),
         col("values").as("qvalues"))
       graft.operators.IvfIndex.searchBatch(spark, pqIvf, queries, 5,
@@ -236,12 +251,11 @@ object Explain {
       val req = q.mkString("""{"values": [""", ",",
         """], "top_k": 10, "search_type": "approximate"}""")
       api.search(req) // cold: builds and opens the index
-      val (_, _, plans) = sparkWork(spark)(api.search(req))
-      emit("approximate_api_request", "approximate API request (expect: " +
+      showWork("approximate API request (expect: " +
           "TWO plans, no Exchange in either — the probe top-k " +
           "(TakeOrderedAndProject over ONLY the probed cluster= dirs), " +
           "then the id-pruned hydration (PushedFilters In(id, ..)))") {
-        plans.foreach(p => println(p.explainString(ExplainMode.fromString("formatted"))))
+        api.search(req)
       }
     }
     show("semantic dedup (expect: ZERO-shuffle argmin assignment " +
@@ -403,7 +417,8 @@ object Explain {
         "lo2", "hi2", binWidth = 0.5)
     }
     show("PACKAGED hybrid batch search (expect: the BM25 half's fused " +
-        "top-k scan and the IVF half's cluster-scoped probe UNIONed " +
+        "top-k scan and the IVF half's checkpointed probe result " +
+        "(Scan ExistingRDD — searchBatch runs eagerly) UNIONed " +
         "with NO extra shuffle into ONE (qid, doc_id) hash aggregate " +
         "— integer RRF weights summed map-side)") {
       import spark.implicits._
@@ -422,9 +437,10 @@ object Explain {
       graft.operators.Knn.hybridSearchBatch(docs, idx, termWl, vecWl,
         kEach = 20, nProbe = 4)
     }
-    show("filtered batch IVF probe (expect: allowed-id semi-join " +
-        "THINNING the assignment scan BEFORE distance scoring and " +
-        "top-k — a BroadcastHashJoin LeftSemi under the byte gate)") {
+    showWork("filtered batch IVF probe (expect: in the checkpoint " +
+        "job, an allowed-id semi-join THINNING the assignment scan " +
+        "BEFORE distance scoring and top-k — a BroadcastHashJoin " +
+        "LeftSemi under the byte gate)") {
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id").as("id"), col("embedding").as("values"))
       val idx = java.nio.file.Files
@@ -639,7 +655,8 @@ object Explain {
         .write.mode("overwrite").parquet(pd)
       spark.sql(s"SELECT * FROM vfs_sig_pairs('$pd', 3)")
     }
-    show("e2e curation pipeline (expect: the four stages pipelined — " +
+    showWork("e2e curation pipeline (expect: in the checkpoint job, " +
+        "the four stages pipelined — " +
         "persisted quality gate (InMemoryRelation reused by the pair " +
         "fold, anti-join, and langid scans), simhash bucket fold, " +
         "broadcast langid model join + one doc-keyed aggregate, " +
@@ -708,11 +725,13 @@ object Explain {
         "doc-keyed mean — identical tail to the unigram plan)") {
       graft.SparkEntry.queries("text_dsir_importance_ngram")(spark, dir)
     }
-    show("margin pair mining (expect: TWO broadcast-gated batch " +
-        "top-k passes — vfs_cosine in codegen + bounded TopKByDistance " +
-        "partial aggs, InMemoryTableScan where the persisted forward " +
-        "candidates fan out to the sums and the backward query list — " +
-        "then integer sums and one window row_number; NO cartesian)") {
+    showWork("margin pair mining (expect: TWO broadcast-gated batch " +
+        "top-k passes, each a sizing aggregate then a checkpoint job — " +
+        "vfs_cosine in codegen + bounded TopKByDistance partial aggs; " +
+        "then the final checkpoint job: InMemoryTableScan where the " +
+        "persisted forward candidates fan out to the sums and the " +
+        "backward query list, integer sums and one window row_number; " +
+        "NO cartesian)") {
       graft.SparkEntry.queries("mining_margin_pairs")(spark, dir)
     }
     show("html extraction (expect: ONE codegen projection over the " +

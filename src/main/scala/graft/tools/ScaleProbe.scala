@@ -865,6 +865,7 @@ object ScaleProbe {
         Seq(lexRanked, lexRanked.withColumn("rank", lit(1))),
         idCol = "doc_id").count()
     }
+    lexRanked.unpersist()
 
     // closure assignment at 500k vectors: conditional replication must
     // cost one assignment pass like the unconditional path, and the

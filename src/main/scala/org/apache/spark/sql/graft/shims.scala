@@ -49,25 +49,13 @@ object shims {
     spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
 
-  /** The ALREADY-MATERIALIZED cache-buffer RDDs backing `df`'s plan
-    * (cache substitution applied; never triggers a build — only
-    * loaded buffers are returned). CacheScope.releaseNow sweeps
-    * these: a non-cascading uncache that triggers an AQE recache of
-    * a dependent entry can leave the dependent's old buffer RDD
-    * persistent in the SparkContext with NO CacheManager entry left
-    * to release it — reachable only by the ContextCleaner, i.e. a GC
-    * wait, exactly what the deterministic release exists to avoid. */
-  def loadedCacheBufferRdds(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.rdd.RDD[_]] = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    // the CacheManager entry is the authority — the frame's own
-    // queryExecution.withCachedData is a LAZY VAL that goes
-    // permanently stale when forced before persist()
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
-      .toSeq.map(_.cachedRepresentation.cacheBuilder)
-      .filter(_.isCachedColumnBuffersLoaded)
-      .map(_.cachedColumnBuffers)
-  }
+  /** How many plans the session's CacheManager holds (a DataFrame
+    * `persist()` adds one; only `unpersist()` on a frame with the
+    * same plan removes it). Read-only — specs and `graft.Verify`
+    * use it to show an operator left no cache behind. */
+  def cachedEntryCount(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 
   /** Build a session with the given extensions on an EXISTING
     * SparkContext. `spark.sql.extensions` is a static conf, so the

@@ -61,10 +61,15 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
+  // exactBatch is eager (its top-k job runs inside the call), so its
+  // plan shape is read from the queries the call executed
+  private def executedPlans(op: => Any): String =
+    graft.tools.Explain.sparkWork(spark)(op)._3
+      .map(_.executedPlan.toString).mkString("\n")
+
   test("exactBatch plan: broadcast join + partial topk aggregation") {
     val queries = all.take(2).toSeq.toDF("qid", "qvalues")
-    val plan = Knn.exactBatch(emb, queries, 5, Metric.Cosine)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlans(Knn.exactBatch(emb, queries, 5, Metric.Cosine))
     assert(plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("partial_vfs_topk"), plan)
   }
@@ -78,10 +83,12 @@ class KnnSpec extends AnyFunSuite {
     val big = spark.range(500001L)
       .select($"id".as("qid"),
         array_repeat(lit(0.1f), 128).as("qvalues"))
-    val base2 = Seq((1L, Array(0.1f, 0.2f)), (2L, Array(0.9f, 0.1f)))
+    // the base matches the query dim: exactBatch runs its job, so the
+    // rows must be scoreable, not just plannable
+    val base2 = Seq((1L, Array.fill(128)(0.1f)), (2L, Array.fill(128)(0.9f)))
       .toDF("id", "values")
-    val plan = Knn.exactBatch(base2, big, 1, Metric.Euclidean)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlans(Knn.exactBatch(base2, big, 1,
+      Metric.Euclidean))
     // ungated, the hint would force the 500k QUERY side into the
     // broadcast (BuildRight); with the gate the planner is free and
     // picks the 2-row base (BuildLeft) — the query side must not be

@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IvfIndex, Mining}
+import graft.operators.{Curation, IvfIndex, IvfPq, Knn, Metric, Mining,
+  TextAnalysis}
 
 /** Margin-based pair mining: the mutual-NN margin identity, hubness
   * suppression (the semantic reason the operator exists), exact
@@ -230,87 +232,74 @@ class MiningSpec extends AnyFunSuite {
     }
   }
 
-  test("batch mining's candidate cache is GC-scoped: the CacheManager entry releases once the result is unreachable") {
-    val spark = GraftTest.spark
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    def runAndDrop(): Unit = {
-      val src = vecs(1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0))
-      val tgt = vecs(9L -> Seq(1.0, 0.1))
-      val result = Mining.marginPairs(spark, src, tgt, k = 1)
-      assert(result.count() >= 0)
-      // the candidate persist is live while the result is reachable
-      assert(spark.sparkContext.getPersistentRDDs.keySet
-        .diff(before).nonEmpty, "cache must be materialized")
-    }
-    runAndDrop() // result goes unreachable here
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    var released = false
-    while (!released && System.nanoTime() < deadline) {
-      System.gc()
-      Thread.sleep(200)
-      released = spark.sparkContext.getPersistentRDDs.keySet
-        .diff(before).isEmpty
-    }
-    assert(released,
-      "the Cleaner must unpersist the candidate cache after the " +
-        "result frame is dropped (no CacheManager leak)")
-  }
-
-  test("CacheScope.releaseNow drains a batch result's scoped caches immediately — no GC wait — and is idempotent/no-op-safe") {
-    val spark = GraftTest.spark
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val src = vecs(1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0))
-    val tgt = vecs(9L -> Seq(1.0, 0.1))
-    val result = Mining.marginPairs(spark, src, tgt, k = 1)
-    assert(result.count() >= 0)
-    assert(spark.sparkContext.getPersistentRDDs.keySet
-      .diff(before).nonEmpty, "cache must be materialized")
-    // the PUBLIC deterministic path: no System.gc, no Cleaner wait
-    graft.operators.CacheScope.releaseNow(result)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var drained = false
-    while (!drained && System.nanoTime() < deadline) {
-      // unpersist(blocking=false) completes asynchronously; poll
-      // WITHOUT provoking GC — the hook itself must do the release
-      drained = spark.sparkContext.getPersistentRDDs.keySet
-        .diff(before).isEmpty
-      if (!drained) Thread.sleep(50)
-    }
-    assert(drained, "releaseNow must drain the persistent-RDD set " +
-      "without waiting for a driver GC; leftover: " +
-      spark.sparkContext.getPersistentRDDs.filterKeys(
-        k => !before.contains(k)).values.map(r =>
-        s"${r.id}:${r.name.linesIterator.next()}").mkString(", "))
-    // second call and a cache-less frame are both no-ops
-    graft.operators.CacheScope.releaseNow(result)
-    graft.operators.CacheScope.releaseNow(src)
-    // the result stays USABLE after release (cache was a hint):
-    // re-evaluation recomputes
-    assert(result.count() >= 0)
-  }
-
-  test("a failed scoped composition releases its captured caches instead of leaking them untracked") {
+  test("operator caches live only inside the call: no CacheManager " +
+      "entry survives success or failure, and a repeated " +
+      "curateAndPack recomputes instead of reusing a cache") {
     val spark = GraftTest.spark
     import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[RuntimeException] {
-      graft.operators.CacheScope.scoped {
-        val c = graft.operators.CacheScope.defer(
-          Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v").persist())
-        assert(c.count() === 2L) // materialize the cache
-        throw new RuntimeException("boom mid-composition")
-      }
+    val entries = () =>
+      org.apache.spark.sql.graft.shims.cachedEntryCount(spark)
+    val e = spark.read.parquet(s"${GraftTest.sf0001}/embeddings.parquet")
+    val src = e.filter(col("vec_id") % 2 === 0)
+      .select(col("vec_id").as("id"), col("embedding").as("values"))
+    val tgt = e.filter(col("vec_id") % 2 === 1)
+      .select(col("vec_id").as("id"), col("embedding").as("values"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("mining-cache").toString
+    IvfIndex.build(src, s"$dir/src", nCentroids = 4)
+    IvfIndex.build(tgt, s"$dir/tgt", nCentroids = 4)
+    IvfPq.build(spark, s"$dir/tgt", s"$dir/pq", m = 16, ks = 16)
+    val model = TextAnalysis.trainLangId(
+      TextAnalysis.LangIdSeedCorpus.toDF("lang", "text"))
+    val docs = spark.read.parquet(s"${GraftTest.sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    // every operator, over inputs that either work or throw once the
+    // operator's first job evaluates them (inside its cache scope
+    // wherever it has one)
+    def calls(d: DataFrame, t: DataFrame, q: DataFrame) = Seq(
+      "curateAndPack" -> (() => Curation.curateAndPack(d, model)),
+      "marginPairs" -> (() => Mining.marginPairs(spark, src, t, k = 4)),
+      "marginPairsIvf" -> (() => Mining.marginPairsIvf(spark,
+        s"$dir/src", s"$dir/tgt", src, t, k = 4)),
+      "marginPairsDelta" -> (() => Mining.marginPairsDelta(spark,
+        s"$dir/tgt", t, src, k = 4)),
+      "exactBatch" -> (() => Knn.exactBatch(t, q, 4, Metric.Cosine)),
+      "IvfIndex.searchBatch" -> (() =>
+        IvfIndex.searchBatch(spark, s"$dir/tgt", q, 4)),
+      "IvfPq.searchBatch" -> (() =>
+        IvfPq.searchBatch(spark, s"$dir/tgt", s"$dir/pq", q, 4)))
+    val qs = src.select(col("id").as("qid"), col("values").as("qvalues"))
+    for ((name, call) <- calls(docs, tgt, qs)) {
+      val before = entries()
+      assert(call().count() > 0L, name)
+      assert(entries() === before, s"$name left a CacheManager entry")
     }
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var drained = false
-    while (!drained && System.nanoTime() < deadline) {
-      drained = spark.sparkContext.getPersistentRDDs.keySet
-        .diff(before).isEmpty
-      if (!drained) Thread.sleep(50)
+    val boomVec = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("boom")
+      else Seq.empty[Float] }
+    val boomText = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("boom") else "" }
+    for ((name, call) <- calls(
+        docs.select(col("doc_id"), boomText(col("doc_id")).as("text")),
+        tgt.select(col("id"), boomVec(col("id")).as("values")),
+        qs.select(col("qid"), boomVec(col("qid")).as("qvalues")))) {
+      val before = entries()
+      val err = intercept[Exception](call().count())
+      assert(Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).exists(_.getMessage == "boom"), name)
+      assert(entries() === before,
+        s"$name left a CacheManager entry after a failure")
     }
-    assert(drained, "a throw inside scoped must unpersist the " +
-      "captured caches NOW — they have no Cleaner and no pending " +
-      "entry to release them later")
+    // the same input twice: the first call leaves no cache for the
+    // second to find, and both compute the same rows
+    val before = entries()
+    val first = Curation.curateAndPack(docs, model)
+      .collect().map(_.toSeq).toSet
+    assert(entries() === before)
+    val second = Curation.curateAndPack(docs, model)
+      .collect().map(_.toSeq).toSet
+    assert(first.nonEmpty)
+    assert(second === first)
   }
 
   test("guards: k must be positive") {

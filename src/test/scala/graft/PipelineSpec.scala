@@ -524,6 +524,25 @@ class PipelineSpec extends AnyFunSuite {
       .collect().toMap.values.toSet === Set(0L))
   }
 
+  test("connected components: a failure mid-loop leaves no " +
+      "CacheManager entry behind") {
+    val entries = () =>
+      org.apache.spark.sql.graft.shims.cachedEntryCount(spark)
+    val before = entries()
+    // the edge column throws when the loop's first job evaluates it
+    // (a range, not a local Seq: the optimizer would fold the UDF
+    // over a LocalRelation at planning time, before any cache exists)
+    val boom = udf { (a: Long) =>
+      if (a >= 0L) throw new IllegalStateException("boom edge") else a }
+    val edges = spark.range(1L, 3L)
+      .select(boom(col("id")).as("a"), (col("id") + 1L).as("b"))
+    val e = intercept[Exception](Dedup.connectedComponents(edges))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom edge")))
+    assert(entries() === before,
+      "the edge cache must be unpersisted in finally")
+  }
+
   test("near-dup survivors: best score per component, ties -> min id, " +
       "singletons survive trivially") {
     val docs = Seq((1L, 5L), (2L, 9L), (3L, 9L), (4L, 7L), (5L, 1L),
