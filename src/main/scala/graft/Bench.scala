@@ -284,7 +284,7 @@ object Bench {
       }
 
     // ---- the warm pass: every entry once, untimed, over sf0.001 ----
-    val warmData = SparkEntry.siblingSf(sfDir, "sf0.001")
+    val warmData = graft.queries.Shared.siblingSf(sfDir, "sf0.001")
     val warmRoot = s"$root/warm"
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val warm = new Pass(spark, warm = true, () => ())

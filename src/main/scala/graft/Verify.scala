@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws is recorded in `$outDir/_errors.json` (name → exception) — a
   * red query must never be indistinguishable from a never-declared one
@@ -76,10 +76,28 @@ object Verify {
     errors.toMap
   }
 
+  /** `<sfDir> <outDir> [query ...]`: the directories and the queries
+    * to run (none named = all). A wrong argument count or an unknown
+    * query name is refused before any Spark work, so a typo cannot
+    * pass as an empty, green sweep. */
+  private[graft] def parseArgs(args: Seq[String])
+      : (String, String, Set[String]) = args match {
+    case Seq(sfDir, outDir, only @ _*) =>
+      val unknown = only.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty,
+        s"unknown queries: ${unknown.mkString(", ")}")
+      (sfDir, outDir, only.toSet)
+    case _ => throw new IllegalArgumentException(
+      "usage: graft.Verify <sfDir> <outDir> [query ...]")
+  }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, rest @ _*) = args
-    // optional extra args: run only the named queries (dev loop)
-    val only = rest.toSet
+    val (sfDir, outDir, only) =
+      try parseArgs(args.toSeq)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(e.getMessage)
+        sys.exit(2)
+      }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -91,7 +109,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     runAll(spark, sfDir, outDir, SparkEntry.queries, only)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      jsonObj(SparkEntry.oracleSql))
+      jsonObj(SparkEntry.registry.map(q => q.name -> q.oracle)))
     spark.stop()
   }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{Dedup, Knn, Metric}
+import graft.queries.{QuerySpec, Shared}
 
 /** Prints formatted physical plans for the engine's key operators so
   * plan regressions (lost pushdown, missing broadcast, codegen breaks)
@@ -17,9 +18,11 @@ import graft.operators.{Dedup, Knn, Metric}
   *
   * Given `outDir`, nothing goes to stdout: each section's plan is
   * written to `outDir/<section>.txt` (the section title up to its
-  * "(expect" note, lower-cased, non-alphanumerics as `_`) and the plan
-  * of every `SparkEntry.queries` entry to `outDir/query_<name>.txt`,
-  * so plan-shape claims stay checkable without running Spark. */
+  * "(expect" note, lower-cased, non-alphanumerics as `_`) and the plans
+  * of every declared query ([[dumpQuery]]) to `outDir/query_<name>.txt`,
+  * so plan-shape claims stay checkable without running Spark. The
+  * expected shapes of the declared queries are noted beside their
+  * specs in `graft/queries`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -60,10 +63,7 @@ object Explain {
     // scan of their checkpointed result
     def showWork(title: String)(body: => Any): Unit = {
       val (_, _, plans) = sparkWork(spark)(body)
-      emit(nameOf(title), title) {
-        plans.foreach(p =>
-          println(p.explainString(ExplainMode.fromString("formatted"))))
-      }
+      emit(nameOf(title), title)(printExecuted(plans))
     }
 
     show("exact knn (expect: scan->project->TakeOrderedAndProject, codegen)") {
@@ -81,12 +81,6 @@ object Explain {
       val queries = emb.limit(3).select(col("id").as("qid"),
         col("values").as("qvalues"))
       Knn.exactBatch(emb, queries, 5, Metric.Cosine)
-    }
-    show("q1_agg (expect: partial+final hashagg)") {
-      graft.SparkEntry.queries("q1_agg")(spark, dir)
-    }
-    show("join topk (expect: hash join, partial agg, TakeOrdered)") {
-      graft.SparkEntry.queries("q3_join_topk")(spark, dir)
     }
     show("minhash lsh (expect: ONE slim pinned exchange on band/bsig + " +
         "within-partition sort into the streaming bucket-pair scan " +
@@ -147,13 +141,13 @@ object Explain {
       import spark.implicits._
       val bins = (0 until 10).map(i => (i.toLong, i * 50.0, (i + 1) * 50.0))
         .toDF("bin_id", "lo", "hi")
-      val ev = graft.SparkEntry.events(spark, dir)
+      val ev = Shared.events(spark, dir)
         .select(col("event_id"), col("value"))
       graft.operators.RangeJoin
         .pointInInterval(ev, bins, "value", "lo", "hi", 20.0)
     }
     show("as-of join (expect: ONE exchange by key + Window, no broadcast)") {
-      val ev = graft.SparkEntry.events(spark, dir)
+      val ev = Shared.events(spark, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -263,14 +257,10 @@ object Explain {
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
       Dedup.semanticDedup(e, Dedup.seedCentroids(e, 8), tauMilli = 600L)
     }
-    show("matryoshka rerank (expect: TWO TakeOrderedAndProject stages, " +
-        "prefix scoring inside codegen)") {
-      graft.SparkEntry.queries("q_matryoshka_rerank")(spark, dir)
-    }
     show("hll registers (expect: partial+final hashagg over slim " +
         "(bucket, rho) pairs, O(2^p) result)") {
       graft.operators.Sketches.hllRegisters(
-        graft.SparkEntry.events(spark, dir).select(col("user_id")),
+        Shared.events(spark, dir).select(col("user_id")),
         col("user_id").cast("string"), p = 6)
     }
     show("mixture sample via hash-threshold (expect: below-threshold " +
@@ -390,24 +380,24 @@ object Explain {
     }
     show("OHLC downsample (expect: ONE partial+final hash aggregate " +
         "keyed (k, bucket), struct min/max partials, no window)") {
-      graft.operators.TimeSeries.ohlc(graft.SparkEntry.events(spark, dir),
+      graft.operators.TimeSeries.ohlc(Shared.events(spark, dir),
         col("event_type"), col("ts"), col("value"), stepSec = 3600L)
     }
     show("rolling trailing window (expect: ONE Exchange by key + Sort " +
         "+ Window with a RANGE frame — no join, no second exchange)") {
-      graft.operators.TimeSeries.rolling(graft.SparkEntry.events(spark, dir),
+      graft.operators.TimeSeries.rolling(Shared.events(spark, dir),
         col("event_id"), col("user_id"), col("ts"), col("value"), 3600L)
     }
     show("cohort retention (expect: distinct hash agg over slim " +
         "(k, bucket) pairs feeding key-sized aggregates + ONE join — " +
         "raw events scanned once)") {
-      graft.operators.TimeSeries.retention(graft.SparkEntry.events(spark, dir),
+      graft.operators.TimeSeries.retention(Shared.events(spark, dir),
         col("user_id"), col("ts"), bucketSec = 86400L)
     }
     show("interval overlap join (expect: equi-join on the bin with " +
         "NO BroadcastNestedLoop and NO dedup exchange — the " +
         "first-shared-bin filter replaces dropDuplicates)") {
-      val ev = graft.SparkEntry.events(spark, dir)
+      val ev = Shared.events(spark, dir)
       val l = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("value").as("lo1"),
           (col("value") + 0.5).as("hi1"))
@@ -458,14 +448,14 @@ object Explain {
         "projection feeding the agg, state bounded by the funnel's " +
         "time range, not key cardinality)") {
       graft.operators.TimeSeries.funnelLatency(
-        graft.SparkEntry.events(spark, dir), col("user_id"), col("ts"),
+        Shared.events(spark, dir), col("user_id"), col("ts"),
         col("event_type"), Seq("signup", "view", "purchase"))
     }
     show("windowed funnel (expect: q_funnel's shrinking key-sized " +
         "joins with the conversion-window bound FUSED into each " +
         "step's join filter — no extra stage)") {
       graft.operators.TimeSeries.funnelWindowed(
-        graft.SparkEntry.events(spark, dir), col("user_id"), col("ts"),
+        Shared.events(spark, dir), col("user_id"), col("ts"),
         col("event_type"), Seq("signup", "view", "purchase"),
         maxStepGapSec = 86400L)
     }
@@ -473,7 +463,7 @@ object Explain {
         "exchange+sort+Window carries — backward then forward — and " +
         "a pure projection choosing the in-tolerance closer side; " +
         "the tolerance adds NO stage)") {
-      val ev = graft.SparkEntry.events(spark, dir)
+      val ev = Shared.events(spark, dir)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -488,7 +478,7 @@ object Explain {
         "(k, bucket) pairs — state is the distinct bucket set per " +
         "key; the count rollup is a normal hash agg downstream)") {
       graft.streaming.Ingest.retentionStream(
-        graft.SparkEntry.events(spark, dir), batchMode = true)
+        Shared.events(spark, dir), batchMode = true)
     }
     show("ExactSubstr duplicate spans (expect: the shuffle carries " +
         "only (xxhash64, id, idx) triples — gram TEXT never leaves " +
@@ -529,7 +519,7 @@ object Explain {
         "exchange by key into FlatMapGroupsWithState carrying (k, ts, " +
         "us) — O(1) open-session state per key)") {
       graft.streaming.Ingest.sessionizeStream(
-        graft.SparkEntry.events(spark, dir), batchMode = true)
+        Shared.events(spark, dir), batchMode = true)
     }
     show("incremental ExactSubstr probe vs standing gram set (expect: " +
         "delta-only gram kernel, LeftSemi against the stored 8-byte " +
@@ -655,15 +645,6 @@ object Explain {
         .write.mode("overwrite").parquet(pd)
       spark.sql(s"SELECT * FROM vfs_sig_pairs('$pd', 3)")
     }
-    showWork("e2e curation pipeline (expect: in the checkpoint job, " +
-        "the four stages pipelined — " +
-        "persisted quality gate (InMemoryRelation reused by the pair " +
-        "fold, anti-join, and langid scans), simhash bucket fold, " +
-        "broadcast langid model join + one doc-keyed aggregate, " +
-        "shard-keyed packing exchange + within-partition sort; NO " +
-        "extra doc-keyed counts join — __nt rides the carry hook)") {
-      graft.SparkEntry.queries("pipeline_curate_e2e")(spark, dir)
-    }
     show("corpus boilerplate-line strip (expect: the two-pass shape — " +
         "a count pass (distinct + count hash aggs, partial combine on " +
         "the trimmed-line key) and a strip pass (occurrence join on " +
@@ -673,23 +654,6 @@ object Explain {
       Dedup.stripBoilerplate(
         spark.read.parquet(s"$dir/documents.parquet"), minDocFreq = 5L)
     }
-    show("URL-keyed dedup (expect: ONE partial+final hash aggregate " +
-        "on the normalized-url key — the regex canonicalization chain " +
-        "codegen'd into the map-side partial, nothing else)") {
-      graft.SparkEntry.queries("web_url_dedup")(spark, dir)
-    }
-    show("per-domain cap (expect: the rankedTopN threshold path — " +
-        "band Filter via element_at on MAP LITERALS (one domain-" +
-        "expression occurrence per predicate, never an OR chain), " +
-        "window only over the bounded band)") {
-      graft.SparkEntry.queries("web_domain_cap")(spark, dir)
-    }
-    show("weight-budget sample (expect: the same map-literal band " +
-        "shape with a RUNNING-SUM window (rowsBetween preceding) " +
-        "over the band only; whole-budget strata pass as a pure " +
-        "filter union)") {
-      graft.SparkEntry.queries("q_budget_sample")(spark, dir)
-    }
     val urlIdxDir = java.nio.file.Files
       .createTempDirectory("explain-urlidx").toString
     graft.operators.UrlIndex.build(
@@ -697,12 +661,6 @@ object Explain {
         .select(col("doc_id"),
           concat(lit("https://"), col("source"), lit(".com/d/"),
             col("doc_id").cast("string")).as("url")), urlIdxDir)
-    show("DSIR importance scoring (expect: one Generate over the " +
-        "token split, TWO left joins against the slim (word, count) " +
-        "models, partial+final doc-keyed mean — the div chain " +
-        "codegen'd, no floats)") {
-      graft.SparkEntry.queries("text_dsir_importance")(spark, dir)
-    }
     show("incremental URL-dedup probe (expect: LEFT ANTI hash join of " +
         "the delta against the slim stored key column — ReadSchema " +
         "url only on the artifact side, no corpus rescan)") {
@@ -712,153 +670,30 @@ object Explain {
             concat(lit("https://"), col("source"), lit(".com/d/"),
               col("doc_id").cast("string")).as("url")))
     }
-    show("PSL per-domain cap (expect: the selection over an eager " +
-        "localCheckpoint barrier — Scan ExistingRDD on the slim " +
-        "(id, stratum, rank, tiebreak) frame, so the vfs_psl_domain " +
-        "suffix walk NEVER re-inlines into a refinement pass — then " +
-        "a LEFT SEMI join of survivors back by doc_id)") {
-      graft.SparkEntry.queries("web_domain_cap_psl")(spark, dir)
-    }
-    show("hashed-bigram DSIR importance (expect: one Generate over " +
-        "the codegen'd vfs_ngram_buckets array, TWO left joins " +
-        "against the slim (bucket, count) models, partial+final " +
-        "doc-keyed mean — identical tail to the unigram plan)") {
-      graft.SparkEntry.queries("text_dsir_importance_ngram")(spark, dir)
-    }
-    showWork("margin pair mining (expect: TWO broadcast-gated batch " +
-        "top-k passes, each a sizing aggregate then a checkpoint job — " +
-        "vfs_cosine in codegen + bounded TopKByDistance partial aggs; " +
-        "then the final checkpoint job: InMemoryTableScan where the " +
-        "persisted forward candidates fan out to the sums and the " +
-        "backward query list, integer sums and one window row_number; " +
-        "NO cartesian)") {
-      graft.SparkEntry.queries("mining_margin_pairs")(spark, dir)
-    }
-    show("html extraction (expect: ONE codegen projection over the " +
-        "scan — vfs_html_text/title/links are pure per-row kernels, " +
-        "no shuffle)") {
-      graft.SparkEntry.queries("web_html_extract")(spark, dir)
-    }
-    show("warc -> records -> html chain (expect: MapPartitions " +
-        "record-explode kernel under the per-doc record-count " +
-        "aggregate + one doc_id join; the html kernel rides the " +
-        "response projection — no second pass over the archive " +
-        "bytes)") {
-      graft.SparkEntry.queries("web_warc_extract")(spark, dir)
-    }
-    show("robots gate (expect: ONE left join on the lowercased host " +
-        "(AQE broadcasts the KB-sized per-domain rules side) + the " +
-        "codegen'd vfs_robots_allowed filter — no other exchange)") {
-      graft.SparkEntry.queries("web_robots_filter")(spark, dir)
-    }
-    show("main-content html extraction (expect: the same ONE codegen " +
-        "projection shape as the full extraction — the chrome " +
-        "suppression is a depth counter inside the kernel, not a " +
-        "second pass)") {
-      graft.SparkEntry.queries("web_html_extract_main")(spark, dir)
-    }
-    show("warc non-identity bodies (expect: the records() " +
-        "MapPartitions kernel unchanged — dechunk + gunzip happen " +
-        "inside the per-record parse, zero extra operators)") {
-      graft.SparkEntry.queries("web_warc_transfer_codings")(spark, dir)
-    }
-    show("robots crawl-delay + sitemaps (expect: ONE codegen " +
-        "projection — both expressions are pure per-row kernels " +
-        "over the rules literal)") {
-      graft.SparkEntry.queries("web_robots_crawl_delay")(spark, dir)
-    }
-    show("mp4 box walk (expect: spread exchange then ONE " +
-        "MapPartitions parse kernel — the synthesize + trackMeta " +
-        "chain stays a scan, zero shuffle after the spread)") {
-      graft.SparkEntry.queries("multimodal_mp4_meta")(spark, dir)
-    }
-    show("pdf extraction (expect: the synthesize kernel feeding ONE " +
-        "codegen vfs_pdf_text projection — inflate + text-operator " +
-        "walk per row, no shuffle after the spread)") {
-      graft.SparkEntry.queries("web_pdf_extract")(spark, dir)
-    }
-    show("link resolution (expect: ONE codegen projection — " +
-        "vfs_url_resolve is a pure per-row kernel; normalization " +
-        "stays a separate downstream step)") {
-      graft.SparkEntry.queries("web_link_resolve")(spark, dir)
-    }
-    show("politeness schedule (expect: one left join on host + ONE " +
-        "host-keyed window sort for the per-host ordinals — the " +
-        "honest per-host sequence; cap the frontier first)") {
-      graft.SparkEntry.queries("web_politeness_schedule")(spark, dir)
-    }
-    show("charset-sniffed decode (expect: ONE codegen projection — " +
-        "detect + decode are pure per-row kernels over the " +
-        "encoder-twin bodies; the UTF-8 fast path returns bytes " +
-        "zero-copy inside the same kernel, no plan change)") {
-      graft.SparkEntry.queries("web_charset_decode")(spark, dir)
-    }
-    show("warc quarantine walk (expect: spread exchange, ONE " +
-        "MapPartitions parse kernel emitting err rows, then one " +
-        "hash agg for the per-archive counts — damage routing adds " +
-        "zero operators over the strict walk)") {
-      graft.SparkEntry.queries("web_warc_quarantine")(spark, dir)
-    }
-    show("crawl frontier end to end (expect: link explode + resolve " +
-        "codegen, robots left join, ONE host window — no cartesian, " +
-        "no extra exchange between the gate and the schedule)") {
-      graft.SparkEntry.queries("pipeline_crawl_frontier")(spark, dir)
-    }
-    show("sitemap two-hop frontier (expect: two sitemap-locs " +
-        "explodes, the child fetch as a hash join on the hop-1 URL, " +
-        "LEFT ANTI against the UrlIndex stored keys, robots left " +
-        "join, ONE host window — the whole discovery path without a " +
-        "cartesian)") {
-      graft.SparkEntry.queries("pipeline_crawl_frontier_sitemap")(spark, dir)
-    }
-    show("warc -> wet -> curate, the full CC flow (expect: the " +
-        "records() MapPartitions kernel + ONE codegen " +
-        "charset+html projection feeding the curate stages' " +
-        "persisted-gate pipeline — the front end adds zero " +
-        "exchanges)") {
-      graft.SparkEntry.queries("pipeline_warc_curate")(spark, dir)
-    }
-    show("streaming politeness fold in batchMode (expect: the " +
-        "politeness stage join feeding ONE FlatMapGroupsWithState — " +
-        "per-host state replaces the window sort; no second " +
-        "exchange)") {
-      graft.SparkEntry.queries("stream_politeness_schedule")(spark, dir)
-    }
-    show("redirect-chain resolution (expect: the WARC records kernel " +
-        "feeding maxHops+1 LEFT joins against the slim edge table — " +
-        "a STATIC plan, edge side broadcast under AQE, no iteration)") {
-      graft.SparkEntry.queries("web_redirect_resolve")(spark, dir)
-    }
-    show("opt-out compliance gate (expect: ONE codegen projection — " +
-        "vfs_html_meta + the token-list overlap fold directly in the " +
-        "filter, zero shuffle)") {
-      graft.SparkEntry.queries("web_optout_filter")(spark, dir)
-    }
-    show("canonical consolidation (expect: the canonical extraction " +
-        "as codegen, then urlKeepFirst's ONE window over the " +
-        "normalized effective key)") {
-      graft.SparkEntry.queries("web_html_canonical")(spark, dir)
-    }
-    show("sitemap recrawl scheduling (expect: ONE codegen projection " +
-        "for the loc/lastmod pair explode, one hash agg folding the " +
-        "ledger, one left join — the whole daily schedule in two " +
-        "exchanges)") {
-      graft.SparkEntry.queries("pipeline_recrawl")(spark, dir)
-    }
-    // the declared queries, in output-dir mode only (a failure to plan
-    // one is written in its place, the rest still run)
-    if (outDir.isDefined)
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach {
-        case (name, query) =>
-          emit(s"query_$name", name) {
-            try query(spark, dir).explain("formatted")
-            catch { case scala.util.control.NonFatal(e) =>
-              println(s"EXPLAIN FAILED: ${graft.Verify.errHead(e)}")
-            }
-          }
-      }
+    // every declared query (a failure to plan one is printed in its
+    // place, the rest still run)
+    graft.SparkEntry.registry.sortBy(_.name).foreach(q =>
+      emit(s"query_${q.name}", q.name)(dumpQuery(spark, dir, q)))
     spark.stop()
   }
+
+  /** One declared query's plans: first the executed plan of every
+    * query its build ran (an eager operator's own work, which its
+    * returned frame, a scan of the checkpointed result, does not
+    * show), then the returned frame's formatted plan. */
+  private[graft] def dumpQuery(spark: SparkSession, dir: String,
+      q: QuerySpec): Unit =
+    try {
+      val (df, _, plans) = sparkWork(spark)(q.build(spark, dir))
+      printExecuted(plans)
+      df.explain("formatted")
+    } catch { case scala.util.control.NonFatal(e) =>
+      println(s"EXPLAIN FAILED: ${graft.Verify.errHead(e)}")
+    }
+
+  private def printExecuted(plans: Seq[QueryExecution]): Unit =
+    plans.foreach(p =>
+      println(p.explainString(ExplainMode.fromString("formatted"))))
 
   /** What `body` ran on Spark: its result, the number of Spark jobs it
     * started and the query executions it completed (in completion

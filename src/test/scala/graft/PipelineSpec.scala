@@ -3777,7 +3777,7 @@ class PipelineSpec extends AnyFunSuite {
     } finally q.stop()
     // batch mode over the REAL events table: the greedy pointer scan
     // equals TimeSeries.funnel exactly, windowed and unwindowed
-    val ev = SparkEntry.events(spark, GraftTest.sf0001)
+    val ev = graft.queries.Shared.events(spark, GraftTest.sf0001)
     val real = Seq("signup", "view", "click", "purchase")
     def rollup(df: org.apache.spark.sql.DataFrame) =
       df.groupBy($"step", $"event_type").count()
@@ -3883,7 +3883,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     // batch mode over the REAL events table equals the batch
     // w_sessionize window derivation exactly
-    val ev = SparkEntry.events(spark, GraftTest.sf0001)
+    val ev = graft.queries.Shared.events(spark, GraftTest.sf0001)
     val streamed = graft.streaming.Ingest
       .sessionizeStream(ev, batchMode = true)
       .orderBy($"user_id", $"session_id").collect()
@@ -3947,7 +3947,7 @@ class PipelineSpec extends AnyFunSuite {
     // ("u-<id>") is a bijection, so the string-keyed run must equal
     // the long-keyed run key-for-key (sessionize) and row-for-row
     // (retention/funnel — their outputs are key-free)
-    val ev = SparkEntry.events(spark, GraftTest.sf0001)
+    val ev = graft.queries.Shared.events(spark, GraftTest.sf0001)
     val evStr = ev.withColumn("user_id",
       concat(lit("u-"), $"user_id".cast("string")))
     val sesStr = graft.streaming.Ingest

@@ -209,7 +209,7 @@ class TimeSeriesSpec extends AnyFunSuite {
 
   test("funnelWindowed with a window wider than the data span equals " +
       "the unwindowed funnel (real events table)") {
-    val ev = SparkEntry.events(spark, GraftTest.sf0001)
+    val ev = graft.queries.Shared.events(spark, GraftTest.sf0001)
     val steps = Seq("signup", "view", "click", "purchase")
     def run(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"step").collect()

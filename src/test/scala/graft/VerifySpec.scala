@@ -50,11 +50,12 @@ class VerifySpec extends AnyFunSuite {
     val n = SparkEntry.queries.size
     // the driver records a weaker rows-only check for oracle-less
     // queries; this repo's contract is stronger — every declared query
-    // is oracle-gated, and a dangling oracle would silently never run
-    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
-      "queries and oracleSql must declare the same keys; diff: " +
-        (SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet) +
-        " / " + (SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet))
+    // is oracle-gated. Each QuerySpec carries its oracle, so the one
+    // way to lose it is a family helper `val` read before it is
+    // initialised (a null oracle string)
+    val blank = SparkEntry.registry
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries without oracle SQL: $blank")
     // round 7's verdict found a hand-maintained "132/132" against 131
     // real keys — pin every doc statement of the count to the source
     // of truth (docs state it as "<n> declared queries")
@@ -68,6 +69,30 @@ class VerifySpec extends AnyFunSuite {
             s"$doc states '${m.matched}' but SparkEntry declares $n"))
       }
     }
+  }
+
+  test("the registry refuses a query name declared twice") {
+    val q1 = SparkEntry.registry.head
+    val q2 = SparkEntry.registry(1)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registryOf(Seq(q1, q2, q1.copy(oracle = "SELECT 1"))))
+    assert(e.getMessage.contains(q1.name))
+    assert(!e.getMessage.contains(q2.name))
+    assert(SparkEntry.registryOf(Seq(q1, q2)) == Seq(q1, q2))
+  }
+
+  test("Verify refuses unknown query names and a short argument list " +
+      "before any Spark work") {
+    val e = intercept[IllegalArgumentException](
+      Verify.parseArgs(Seq("sf", "out", "q1_agg", "q1_agx")))
+    assert(e.getMessage.contains("q1_agx"))
+    assert(!e.getMessage.contains("q1_agg"))
+    val usage = intercept[IllegalArgumentException](
+      Verify.parseArgs(Seq("sf")))
+    assert(usage.getMessage.startsWith("usage: graft.Verify"))
+    assert(Verify.parseArgs(Seq("sf", "out", "q1_agg")) ==
+      (("sf", "out", Set("q1_agg"))))
+    assert(Verify.parseArgs(Seq("sf", "out")) == (("sf", "out", Set.empty)))
   }
 
   test("an ANALYSIS-time failure (lazy plan) is still caught and recorded") {

@@ -2,8 +2,12 @@
 """Local emulation of the driver's t2 correctness gate: run
 graft.Verify output parquet against DuckDB oracle SQL on the same
 tables. Usage: check_oracle.py <sfDir> <verifyOutDir>
-(dev tool only — the engine itself is pure Scala/Spark)."""
-import json, sys, glob, os
+(dev tool only — the engine itself is pure Scala/Spark).
+
+Also writes <verifyOutDir>/_hashes.json: query name -> SHA-256 of its
+Spark result, stringified with columns sorted and rows sorted, so two
+Verify runs (two commits, two widths) compare with a plain diff."""
+import hashlib, json, sys, glob, os
 import duckdb
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -14,6 +18,7 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fail = 0
+hashes = {}
 for name, sql in sorted(oracle.items()):
     res_dir = f"{out_dir}/{name}"
     if not os.path.isdir(res_dir):
@@ -21,6 +26,9 @@ for name, sql in sorted(oracle.items()):
         fail += 1
         continue
     got = con.sql(f"SELECT * FROM read_parquet('{res_dir}/*.parquet')").df()
+    rows = sorted(got[sorted(got.columns)].astype(str).values.tolist())
+    hashes[name] = hashlib.sha256(
+        json.dumps([sorted(got.columns)] + rows).encode()).hexdigest()
     try:
         exp = con.sql(sql).df()
     except Exception as e:
@@ -48,5 +56,7 @@ for name, sql in sorted(oracle.items()):
         fail += 1
     else:
         print(f"OK       {name} ({len(got)} rows)")
+with open(f"{out_dir}/_hashes.json", "w") as f:
+    json.dump(hashes, f, indent=1, sort_keys=True)
 print("FAILED" if fail else "ALL OK", file=sys.stderr)
 sys.exit(1 if fail else 0)
